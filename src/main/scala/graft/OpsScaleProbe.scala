@@ -154,7 +154,7 @@ object OpsScaleProbe {
   *     checkpointed labels / no jump) — each variant validated against
   *     the current loop's output before its timing counts. */
 object ProbeLegs {
-  import graft.operators.Dedup
+  import graft.operators.{Dedup, LakeMaintenance}
 
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -270,9 +270,8 @@ object ProbeLegs {
         .withColumn("fp_pfx", substring(col("band_fp"), 1,
           Dedup.bandPfxWidthOf(spark, idxPath)))
         .select(col("fp_pfx"), col("band_fp"), col("doc_id").as("d1"))
-      val idx = spark.read.parquet(s"$idxPath/bands")
-        .select(col("fp_pfx").cast("string").as("fp_pfx"),
-          col("band_fp"), col("doc_id").as("d2"))
+      val idx = LakeMaintenance.readPartitionedString(spark, s"$idxPath/bands", "fp_pfx")
+        .select(col("fp_pfx"), col("band_fp"), col("doc_id").as("d2"))
       val hot = idx.join(qb.select("fp_pfx", "band_fp").distinct(),
           Seq("fp_pfx", "band_fp"), "left_semi")
         .groupBy("fp_pfx", "band_fp").agg(count(lit(1)).as("plen"))

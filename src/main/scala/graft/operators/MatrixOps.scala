@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import dev.ludovic.netlib.blas.BLAS
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Distributed matrix algebra over coordinate-form DataFrames.
   *
@@ -214,128 +218,265 @@ object MatrixOps {
   }
 
   /** `matmul_blocked` (`mm_opt.py:57-73`, `mm_opt.c:63-78`, `MMOpt.java:64-82`):
-    * the reference's 3-level cache tiling with block size BS as a
-    * DataFrame-native SUMMA — cells densified into BS×BS row-major
-    * blocks, one equi-join on the contraction BLOCK index, a primitive
-    * ikj GEMM per block pair, then a skinny grouped sum across
-    * contraction blocks. Same logical result as [[multiply]]; this is
-    * the physical path for dense×dense at scale where per-cell
-    * coordinate join cardinality (n³ partial-product ROWS) would
-    * dominate: block form joins (n/BS)³ block pairs and keeps the n³
-    * multiply-adds inside tight per-row array loops.
+    * the reference's cache tiling with block size BS, as a cuboid-
+    * partitioned product (FuseME, SIGMOD'22). Same logical result as
+    * [[multiply]]; this is the physical path for dense×dense at scale,
+    * where the coordinate join's n³ partial-product rows would dominate.
     *
+    * The (n/BS)³ block products form a cube, cut into a `pr×pc×pk` grid
+    * of cuboids ([[Grid]]), one Spark task each:
+    *   1. every input partition folds its cells into partial dense
+    *      row-major BS×BS blocks and sends each straight to the cuboids
+    *      that read it — an A block to the `pc` cuboids of its row
+    *      group, a B block to the `pr` cuboids of its column group;
+    *   2. ONE exchange, `repartition(T, key)` with keys that hash to
+    *      distinct partitions ([[cuboidKeys]]): one cuboid per task;
+    *   3. each task sums its partial blocks and multiplies its A and B
+    *      strips block by block with BLAS `dgemm`, then emits the nonzero
+    *      cells of each output block. With `pk > 1` it emits partial
+    *      output blocks instead, summed per output block after a second
+    *      exchange.
+    *
+    * Memory: [[chooseGrid]] picks the grid that replicates the fewest
+    * bytes among those with at least one task per core whose resident set
+    * per task — A strip + B strip + one output block — fits half of one
+    * core's share of executor memory. Past that bound it splits the
+    * contraction (`pk > 1`), so per-task memory is bounded at any n. A
+    * map task sends its partial blocks on every [[FlushBytes]] (at least
+    * one block).
+    *
+    * Semantics: duplicate coordinates sum; absent (all-zero) blocks cost
+    * no GEMM and emit nothing; `n` need not be a multiple of BS (the last
+    * block is zero-padded); cell indices must lie in `[0, n)`.
     * Known asymmetry: a cell whose contraction cancels to EXACTLY 0.0 is
     * dropped here (indistinguishable from a never-touched cell of a dense
     * block) but kept by [[multiply]] (the join matched). Equivalent for
     * non-negative inputs — all of this engine's derivations — and only
     * reachable under sign cancellation.
-    *
-    * `n` bounds the index space (kept in the signature for parity with
-    * the dense generators); block indices derive from the cells
-    * themselves, so absent (all-zero) blocks cost nothing.
     */
   def multiplyBlocked(spark: SparkSession, a: DataFrame, b: DataFrame,
-                      n: Long, blockSize: Int = 64): DataFrame = {
-    val bs = blockSize
-    // densify: sparse (pos, v) cells → row-major bs×bs dense block
-    val densify = udf { cells: Seq[org.apache.spark.sql.Row] =>
-      val block = new Array[Double](bs * bs)
-      cells.foreach(r => block(r.getInt(0)) += r.getDouble(1))
-      block
-    }
-    def toBlocks(df: DataFrame) = df.select(
-        expr(s"i div $bs").as("bi"),
-        expr(s"j div $bs").as("bj"),
-        ((col("i") % bs) * bs + (col("j") % bs)).cast("int").as("pos"),
-        col("v"))
-      .groupBy("bi", "bj")
-      .agg(collect_list(struct(col("pos"), col("v"))).as("cells"))
-      .select(col("bi"), col("bj"), densify(col("cells")).as("block"))
-    val ab = toBlocks(a).select(col("bi").as("ci"), col("bj").as("k"), col("block").as("ablk"))
-      .join(toBlocks(b).select(col("bi").as("k"), col("bj").as("cj"), col("block").as("bblk")),
-        "k")
-      // block tables are tiny in BYTES, so AQE coalesces them to ~one
-      // partition — which would serialize the O(n³) GEMM work onto one
-      // core. Re-spread by output block; this hash clustering also
-      // satisfies the (ci, cj, pos) grouping below, so the per-pair
-      // GEMM, explode, and reduction all run in this one exchange.
-      // range-partition + partition-local sort: every contraction pair
-      // of an output block arrives contiguously, so the fused pass
-      // below holds exactly ONE bs×bs accumulator at a time — per-task
-      // memory is O(block), independent of how many output blocks land
-      // in a partition (a hash-map of all local blocks would grow with
-      // n²/numPartitions and OOM at the 100 TB target).
-      .repartitionByRange(col("ci"), col("cj"))
-      .sortWithinPartitions("ci", "cj")
-    // Fused per-partition GEMM + cross-block accumulation: one
-    // imperative pass (the genuine per-partition case from the build
-    // ladder — this IS the reference's cache-tiled kernel,
-    // `mm_opt.c:63-78`, with blocks for tiles) multiplies straight into
-    // the current block's accumulator and emits its nonzero cells when
-    // the (ci, cj) key changes. The declarative alternative (explode
-    // partials + per-cell groupBy) puts n²·(n/BS) rows through a hash
-    // aggregate — measured 2× slower at n=1024 — and a udaf block-sum
-    // falls off the object-agg fast path entirely. Sums stay exact
-    // (integral-valued derivations), so accumulation order is free.
-    import spark.implicits._
-    ab.select(col("ci"), col("cj"), col("ablk"), col("bblk"))
-      .as[(Long, Long, Array[Double], Array[Double])]
-      .mapPartitions { it =>
-        new Iterator[Iterator[(Long, Long, Double)]] {
-          private val out = new Array[Double](bs * bs)
-          private var cur: (Long, Long) = null
+                      n: Long, blockSize: Int = 64): DataFrame =
+    multiplyCuboid(spark, a, b, n, blockSize,
+      chooseGrid(blocksPerSide(n, blockSize), blockSize,
+        spark.sparkContext.defaultParallelism, taskBudget(spark)))
 
-          private def gemmInto(x: Array[Double], y: Array[Double]): Unit = {
-            var i = 0
-            while (i < bs) {
-              var k = 0
-              while (k < bs) {
-                val xv = x(i * bs + k)
-                if (xv != 0.0) {
-                  val rowOff = k * bs
-                  val outOff = i * bs
-                  var j = 0
-                  while (j < bs) {
-                    out(outOff + j) += xv * y(rowOff + j)
-                    j += 1
-                  }
-                }
-                k += 1
-              }
-              i += 1
-            }
-          }
+  /** A `pr×pc×pk` grid over the block cube: cuboid `(r, c, k)` computes
+    * the output blocks of row group `r` × column group `c`, contracted
+    * over the blocks of group `k`. */
+  private[graft] final case class Grid(pr: Int, pc: Int, pk: Int) {
+    def tasks: Int = pr * pc * pk
+    def id(r: Int, c: Int, k: Int): Int = (r * pc + c) * pk + k
+  }
 
-          private def flush(): Iterator[(Long, Long, Double)] = {
-            val (ci, cj) = cur
-            val snapshot = out.clone()
-            java.util.Arrays.fill(out, 0.0)
-            Iterator.range(0, bs * bs).filter(snapshot(_) != 0.0).map { pos =>
-              (ci * bs + pos / bs, cj * bs + pos % bs, snapshot(pos))
-            }
-          }
+  /** Partial blocks a map task holds before it sends them on. */
+  private val FlushBytes = 32L << 20
 
-          def hasNext: Boolean = it.hasNext || cur != null
+  private def blocksPerSide(n: Long, bs: Int): Int = {
+    require(n >= 1 && bs >= 1, s"multiplyBlocked needs n >= 1 and blockSize >= 1, got $n, $bs")
+    val nb = (n + bs - 1) / bs
+    require(nb <= Int.MaxValue, s"$nb blocks per side exceed the block index range")
+    nb.toInt
+  }
 
-          def next(): Iterator[(Long, Long, Double)] = {
-            while (it.hasNext) {
-              val (ci, cj, x, y) = it.next()
-              val key = (ci, cj)
-              if (cur == null) { cur = key; gemmInto(x, y) }
-              else if (cur == key) gemmInto(x, y)
-              else {
-                val emitted = flush()
-                cur = key
-                gemmInto(x, y)
-                return emitted
-              }
-            }
-            val emitted = flush()
-            cur = null
-            emitted
-          }
-        }.flatten
+  /** Group of block index `b` when `nb` blocks split into `p` groups
+    * whose sizes differ by at most one. */
+  private def group(b: Int, p: Int, nb: Int): Int = (b.toLong * p / nb).toInt
+
+  /** FuseME's cost model. Replicated bytes: A goes to `pc` cuboids, B to
+    * `pr`, and with `pk > 1` each output block is written `pk` times
+    * before its partials are summed; A, B and C are all `nb²` blocks.
+    * Among grids with at least `cores` tasks (as far as the `nb³` block
+    * products allow) whose resident set per task fits `budget` bytes,
+    * the least replication wins, then the fewest tasks. For each group
+    * size only the smallest group count is tried: more groups of the same
+    * size hold as much and replicate more. When nothing fits, the finest
+    * grid is the best there is. */
+  private[graft] def chooseGrid(nb: Int, bs: Int, cores: Int, budget: Long): Grid = {
+    val blockBytes = bs.toLong * bs * 8
+    def span(p: Int): Long = (nb + p - 1) / p
+    def resident(g: Grid): Long =
+      (span(g.pr) * span(g.pk) + span(g.pk) * span(g.pc) + 1) * blockBytes
+    def replicated(g: Grid): Long = g.pc.toLong + g.pr + (if (g.pk > 1) g.pk else 0)
+    val counts = (1 to nb).map(s => (nb + s - 1) / s).distinct.sorted
+    val minTasks = math.min(cores.toLong, nb.toLong * nb * nb)
+    // per (pr, pc) the smallest feasible pk: replication grows with pk
+    val fits = for {
+      pr <- counts; pc <- counts
+      pk <- counts.find { pk =>
+        val t = pr.toLong * pc * pk
+        t >= minTasks && t <= Int.MaxValue && resident(Grid(pr, pc, pk)) <= budget
       }
-      .toDF("i", "j", "v")
+    } yield Grid(pr, pc, pk)
+    if (fits.isEmpty) Grid(nb, nb, nb) else fits.minBy(g => (replicated(g), g.tasks))
+  }
+
+  /** Half of one core's share of an executor's unified memory; the other
+    * half is left to the exchange's buffers and the deserialized rows. */
+  private def taskBudget(spark: SparkSession): Long = {
+    val sc = spark.sparkContext
+    val executorBytes = sc.getExecutorMemoryStatus.values.map(_._1).max
+    val cores =
+      if (sc.isLocal) sc.defaultParallelism else sc.getConf.getInt("spark.executor.cores", 1)
+    executorBytes / cores / 2
+  }
+
+  /** Keys for `repartition(tasks, key)` under which key `t` lands on
+    * partition `t`. Spark hash-partitions an int key to
+    * `pmod(murmur3(key, seed 42), tasks)`, so the cuboid ids themselves
+    * collide; scanning the non-negative ints and keeping the first that
+    * hits each partition makes placement a bijection (pinned by
+    * MatrixOpsSpec against the real exchange). */
+  private[graft] def cuboidKeys(tasks: Int): Array[Int] = {
+    val keys = Array.fill(tasks)(-1)
+    var found = 0
+    var k = 0
+    while (found < tasks) {
+      val p = Math.floorMod(Murmur3_x86_32.hashInt(k, 42), tasks)
+      if (keys(p) < 0) { keys(p) = k; found += 1 }
+      k += 1
+    }
+    keys
+  }
+
+  /** The cuboid product under a given grid; [[multiplyBlocked]] picks the
+    * grid, specs force one. */
+  private[graft] def multiplyCuboid(spark: SparkSession, a: DataFrame, b: DataFrame,
+                                    n: Long, bs: Int, grid: Grid): DataFrame = {
+    import spark.implicits._
+    val nb = blocksPerSide(n, bs)
+    val keys = cuboidKeys(grid.tasks)
+    val flushAt = math.max(1L, FlushBytes / (bs.toLong * bs * 8)).toInt
+    def side(m: DataFrame, isA: Boolean): Dataset[BlockPart] =
+      m.select(col("i").cast("long"), col("j").cast("long"), col("v").cast("double"))
+        .filter(col("v").isNotNull)
+        .as[(Long, Long, Double)]
+        .mapPartitions(partialBlocks(_, n, bs, flushAt).flatMap { case (r, c, blk) =>
+          val cuboids =
+            if (isA) Iterator.range(0, grid.pc)
+              .map(cg => grid.id(group(r, grid.pr, nb), cg, group(c, grid.pk, nb)))
+            else Iterator.range(0, grid.pr)
+              .map(rg => grid.id(rg, group(c, grid.pc, nb), group(r, grid.pk, nb)))
+          cuboids.map(t => BlockPart(keys(t), t, isA, r, c, blk))
+        })
+    val parts = side(a, isA = true).union(side(b, isA = false))
+      .repartition(grid.tasks, col("key"))
+    val cells =
+      if (grid.pk == 1) parts.mapPartitions(cuboidProducts(_, bs).flatMap(blockCells(bs)))
+      else parts.mapPartitions(cuboidProducts(_, bs))
+        .repartition(grid.tasks, col("_1"), col("_2"))
+        .sortWithinPartitions("_1", "_2")
+        .mapPartitions(sumPartials(_).flatMap(blockCells(bs)))
+    cells.toDF("i", "j", "v")
+  }
+
+  /** Folds a partition's cells into partial row-major bs×bs blocks and
+    * yields them as (row block, column block, block), `flushAt` blocks at
+    * a time; the cuboid tasks sum the partials. */
+  private def partialBlocks(cells: Iterator[(Long, Long, Double)], n: Long, bs: Int,
+                            flushAt: Int): Iterator[(Int, Int, Array[Double])] =
+    new Iterator[(Int, Int, Array[Double])] {
+      private val held = mutable.LongMap.empty[Array[Double]]
+      private var out: Iterator[(Int, Int, Array[Double])] = Iterator.empty
+
+      def hasNext: Boolean = out.hasNext || { fill(); out.hasNext }
+
+      def next(): (Int, Int, Array[Double]) = { hasNext; out.next() }
+
+      private def fill(): Unit = {
+        while (held.size < flushAt && cells.hasNext) {
+          val (i, j, v) = cells.next()
+          require(i >= 0 && i < n && j >= 0 && j < n, s"cell ($i, $j) outside the ${n}x$n index space")
+          val blk = held.getOrElseUpdate((i / bs) << 32 | (j / bs), new Array[Double](bs * bs))
+          val pos = (i % bs * bs + j % bs).toInt
+          blk(pos) += v
+        }
+        out = held.toArray.iterator.map { case (key, blk) => ((key >>> 32).toInt, key.toInt, blk) }
+        held.clear()
+      }
+    }
+
+  /** Products of every cuboid in a partition, as (row block, column block,
+    * block) per output block with at least one block product. Placement
+    * puts one cuboid in each partition; keying by cuboid keeps the result
+    * right even if it did not. */
+  private def cuboidProducts(parts: Iterator[BlockPart], bs: Int): Iterator[(Int, Int, Array[Double])] = {
+    val cuboids = mutable.LongMap.empty[Cuboid]
+    parts.foreach(p => cuboids.getOrElseUpdate(p.cuboid, new Cuboid(bs)).add(p))
+    cuboids.valuesIterator.flatMap(_.products)
+  }
+
+  /** One cuboid's A and B strips, partials summed on arrival. */
+  private final class Cuboid(bs: Int) {
+    private val aRows = mutable.LongMap.empty[mutable.LongMap[Array[Double]]] // bi → bk → block
+    private val bBlocks = mutable.LongMap.empty[Array[Double]] // (bk, bj) → block
+    private val bCols = mutable.Set.empty[Int]
+
+    private def pack(r: Int, c: Int): Long = r.toLong << 32 | c
+
+    def add(p: BlockPart): Unit =
+      if (p.isA) sumInto(aRows.getOrElseUpdate(p.r, mutable.LongMap.empty), p.c, p.block)
+      else { sumInto(bBlocks, pack(p.r, p.c), p.block); bCols += p.c }
+
+    def products: Iterator[(Int, Int, Array[Double])] = for {
+      (bi, row) <- aRows.iterator
+      bj <- bCols.iterator
+      out <- product(row, bj)
+    } yield (bi.toInt, bj, out)
+
+    private def product(row: mutable.LongMap[Array[Double]], bj: Int): Option[Array[Double]] = {
+      var out: Array[Double] = null
+      row.foreachEntry { (bk, x) =>
+        bBlocks.get(pack(bk.toInt, bj)).foreach { y =>
+          if (out == null) out = new Array[Double](bs * bs)
+          gemm(bs, x, y, out)
+        }
+      }
+      Option(out)
+    }
+  }
+
+  private def sumInto(m: mutable.LongMap[Array[Double]], key: Long, blk: Array[Double]): Unit =
+    m.get(key) match {
+      case Some(acc) => addInto(acc, blk)
+      case None => m.update(key, blk)
+    }
+
+  private def addInto(acc: Array[Double], x: Array[Double]): Unit = {
+    var p = 0
+    while (p < acc.length) { acc(p) += x(p); p += 1 }
+  }
+
+  /** out += x·y on row-major bs×bs blocks. A row-major product is the
+    * transposed product in column-major order, hence y before x. Kept a
+    * small method of its own so the JIT compiles it apart from the
+    * partition loop. */
+  private def gemm(bs: Int, x: Array[Double], y: Array[Double], out: Array[Double]): Unit =
+    BLAS.getInstance().dgemm("N", "N", bs, bs, bs, 1.0, y, bs, x, bs, 1.0, out, bs)
+
+  /** Sums runs of partial blocks of the same output block; the input is
+    * sorted by (row block, column block). */
+  private def sumPartials(parts: Iterator[(Int, Int, Array[Double])]): Iterator[(Int, Int, Array[Double])] = {
+    val in = parts.buffered
+    new Iterator[(Int, Int, Array[Double])] {
+      def hasNext: Boolean = in.hasNext
+
+      def next(): (Int, Int, Array[Double]) = {
+        val (bi, bj, acc) = in.next()
+        while (in.hasNext && in.head._1 == bi && in.head._2 == bj) addInto(acc, in.next()._3)
+        (bi, bj, acc)
+      }
+    }
+  }
+
+  /** The nonzero cells of output block (bi, bj). */
+  private def blockCells(bs: Int)(out: (Int, Int, Array[Double])): Iterator[(Long, Long, Double)] = {
+    val (bi, bj, blk) = out
+    Iterator.range(0, blk.length).filter(blk(_) != 0.0)
+      .map(pos => (bi.toLong * bs + pos / bs, bj.toLong * bs + pos % bs, blk(pos)))
   }
 }
+
+/** A partial block on its way to cuboid `cuboid`: `key` routes it there,
+  * `(r, c)` is its block position in A (`isA`) or B. */
+private[operators] final case class BlockPart(key: Int, cuboid: Int, isA: Boolean,
+                                              r: Int, c: Int, block: Array[Double])

@@ -208,8 +208,9 @@ object Similarity {
     * engine's matmul shape (contract on vec_id, sum products).
     *
     * Scale design: partition-local dense outer-product accumulation
-    * (the [[graft.operators.MatrixOps.multiplyBlocked]] GEMM idiom) —
-    * each task folds its vectors into ONE dim×dim long accumulator and
+    * (the map-side partial-block fold of
+    * [[graft.operators.MatrixOps.multiplyBlocked]]) — each task folds
+    * its vectors into ONE dim×dim long accumulator and
     * emits dim·(dim+1)/2 upper-triangle partials, so shuffle input is
     * partitions·dim²/2 rows regardless of corpus size. The declarative
     * alternative (posexplode + self-join on vec_id) moves N·dim²/2

@@ -37,15 +37,82 @@ class MatrixOpsSpec extends SparkSpec {
     assert(cells(MatrixOps.multiplyTransposed(A, bt)) === golden)
   }
 
+  private def intify(m: DataFrame) = m.withColumn("v", floor(col("v") * 10).cast("double"))
+
   test("multiplyBlocked equals multiply on an integral random matrix") {
     // Integral values so block-wise and row-wise summation orders agree
     // bit-for-bit (SURVEY §7 R2/R3).
-    def intify(m: DataFrame) = m.withColumn("v", floor(col("v") * 10).cast("double"))
     val a = intify(MatrixOps.genDense(spark, 24, seed = 1))
     val b = intify(MatrixOps.genSparse(spark, 24, density = 0.3, seed = 2))
     val viaJoin = cells(MatrixOps.multiply(a, b)).filter(_._3 != 0.0)
     val viaBlocks = cells(MatrixOps.multiplyBlocked(spark, a, b, 24, blockSize = 8))
     assert(viaBlocks === viaJoin)
+  }
+
+  /** multiplyBlocked against the coordinate join, which keeps cells that
+    * cancel to 0.0 (the documented asymmetry). */
+  private def assertBlockedMatches(a: DataFrame, b: DataFrame, n: Long, bs: Int): Unit =
+    assert(cells(MatrixOps.multiplyBlocked(spark, a, b, n, bs)) ===
+      cells(MatrixOps.multiply(a, b)).filter(_._3 != 0.0))
+
+  test("multiplyBlocked handles a ragged last block (n % blockSize != 0)") {
+    assertBlockedMatches(intify(MatrixOps.genDense(spark, 23, seed = 3)),
+      intify(MatrixOps.genSparse(spark, 23, density = 0.4, seed = 4)), 23, 8)
+  }
+
+  test("multiplyBlocked sums duplicate coordinates") {
+    val a = mat((0, 0, 1.0), (0, 0, 2.0), (0, 9, 3.0), (9, 9, 4.0), (9, 9, -1.0))
+    val b = mat((0, 0, 5.0), (9, 0, 6.0), (9, 0, 1.0), (9, 9, 2.0))
+    assertBlockedMatches(a, b, 10, 4)
+  }
+
+  test("multiplyBlocked skips absent blocks: block-diagonal inputs stay block-diagonal") {
+    // 4x4 grid of 8-blocks, only the diagonal blocks stored on each side
+    def blockDiag(seed: Long) = intify(MatrixOps.genDense(spark, 32, seed))
+      .filter(expr("i div 8 = j div 8"))
+    val out = cells(MatrixOps.multiplyBlocked(spark, blockDiag(5), blockDiag(6), 32, 8))
+    assert(out.nonEmpty && out.forall { case (i, j, _) => i / 8 == j / 8 })
+    assertBlockedMatches(blockDiag(5), blockDiag(6), 32, 8)
+  }
+
+  test("multiplyBlocked drops a cell whose contraction cancels to 0.0") {
+    val a = mat((0, 0, 1.0), (0, 1, 1.0), (1, 0, 2.0))
+    val b = mat((0, 0, 3.0), (1, 0, -3.0), (0, 1, 1.0))
+    assert(cells(MatrixOps.multiply(a, b)).contains((0L, 0L, 0.0)))
+    assertBlockedMatches(a, b, 2, 2)
+  }
+
+  test("every cuboid grid gives the same product, including a split contraction") {
+    val n = 30L // 4 blocks of 8 per side, the last one ragged
+    val a = intify(MatrixOps.genDense(spark, n, seed = 7))
+    val b = intify(MatrixOps.genSparse(spark, n, density = 0.5, seed = 8))
+    val want = cells(MatrixOps.multiply(a, b)).filter(_._3 != 0.0)
+    for (g <- Seq(MatrixOps.Grid(1, 1, 1), MatrixOps.Grid(3, 1, 1),
+        MatrixOps.Grid(2, 2, 1), MatrixOps.Grid(2, 2, 2)))
+      assert(cells(MatrixOps.multiplyCuboid(spark, a, b, n, 8, g)) === want, s"grid $g")
+  }
+
+  test("cuboid cost model: 2x2x1 for 6 blocks a side on 4 cores, split k when memory is tight") {
+    val bs = 256
+    assert(MatrixOps.chooseGrid(6, bs, 4, 1L << 30) === MatrixOps.Grid(2, 2, 1))
+    // 10 blocks per task cannot hold two full strips of 6 at pk = 1
+    val tight = MatrixOps.chooseGrid(6, bs, 4, 10L * bs * bs * 8)
+    assert(tight.pk > 1 && tight.tasks >= 4, s"tight budget chose $tight")
+    // fewer block products than cores: every product gets its own task
+    assert(MatrixOps.chooseGrid(1, bs, 4, 1L << 30) === MatrixOps.Grid(1, 1, 1))
+  }
+
+  test("cuboid keys land on distinct partitions of repartition(T, key)") {
+    import spark.implicits._
+    // the kernel's one-cuboid-per-task placement rests on Spark's hash
+    // partitioning; a change to it must fail here, not silently pile two
+    // cuboids onto one core
+    for (t <- Seq(1, 2, 3, 4, 8, 12, 27, 64)) {
+      val keys = MatrixOps.cuboidKeys(t)
+      val placed = keys.toSeq.toDF("key").repartition(t, col("key"))
+        .select(col("key"), spark_partition_id()).as[(Int, Int)].collect().toMap
+      assert(keys.indices.forall(c => placed(keys(c)) == c), s"T=$t placed $placed")
+    }
   }
 
   test("3x3 golden product (FIXTURES B.1)") {

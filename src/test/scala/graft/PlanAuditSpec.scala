@@ -464,25 +464,17 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("incremental threshold splits build one plan — no driver action in the lambda") {
-    // the r7 verdict's last everything-is-one-plan deviation: the
-    // corpus/batch split point must ride the plan as a broadcast 1-row
-    // aggregate (the q22_idle_customers scalar-subquery idiom), not a
-    // driver-side .first() that costs an extra full-column scan job per
-    // invocation at 100 TB
+  /** Descriptions of the jobs `body` submits. spark.read.parquet itself
+    * submits a footer/schema-inference job per call ("parquet at
+    * Tables.scala") — every declared query pays that at construction;
+    * these audits are about EXTRA actions, so reads are excluded. */
+  private def jobsDuring(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        // spark.read.parquet itself submits a footer/schema-inference
-        // job per call ("parquet at Tables.scala") — every declared
-        // query pays that at construction; this audit is about EXTRA
-        // actions (the old threshold .first() scan), so reads are
-        // excluded from the count
         if (!js.stageInfos.forall(_.name.startsWith("parquet at Tables"))) {
-          jobs.incrementAndGet()
           descs.add(js.stageInfos.map(si => si.name + " @ " +
             si.details.linesIterator.take(8).mkString(" | ")).mkString("\n"))
         }
@@ -491,17 +483,65 @@ class PlanAuditSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      for (q <- Seq("dedup_incremental", "dedup_incremental_simhash",
-          "dedup_incremental_containment", "dedup_incremental_embedding")) {
-        val p = plan(q)
-        assert(p.contains("max(doc_id") || p.contains("max(vec_id"),
-          s"$q split threshold must be an in-plan scalar agg, plan:\n$p")
-        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc, 10000L)
-        assert(jobs.get() == 0,
-          s"constructing $q must submit no jobs, got ${jobs.get()}:\n" +
-            descs.toArray.mkString("\n---\n"))
-      }
+      body
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc, 10000L)
+      descs.toArray.toSeq.map(_.toString)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("incremental threshold splits build one plan — no driver action in the lambda") {
+    // the r7 verdict's last everything-is-one-plan deviation: the
+    // corpus/batch split point must ride the plan as a broadcast 1-row
+    // aggregate (the q22_idle_customers scalar-subquery idiom), not a
+    // driver-side .first() that costs an extra full-column scan job per
+    // invocation at 100 TB
+    for (q <- Seq("dedup_incremental", "dedup_incremental_simhash",
+        "dedup_incremental_containment", "dedup_incremental_embedding")) {
+      var p = ""
+      val jobs = jobsDuring { p = plan(q) }
+      assert(p.contains("max(doc_id") || p.contains("max(vec_id"),
+        s"$q split threshold must be an in-plan scalar agg, plan:\n$p")
+      assert(jobs.isEmpty,
+        s"constructing $q must submit no jobs, got ${jobs.size}:\n" + jobs.mkString("\n---\n"))
+    }
+  }
+
+  test("blocked matmul declares without jobs and plans one cuboid exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // exchanges between the kernel and the map-side block folds (the
+    // MapPartitions below it), whose inputs are the callers' own plans
+    def blockedExchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case _: MapPartitionsExec => Nil
+      case e: ShuffleExchangeExec => e +: e.children.flatMap(blockedExchanges)
+      case other => other.children.flatMap(blockedExchanges)
+    }
+    for (q <- Seq("matmul_blocked", "matmul_large")) {
+      var exec: SparkPlan = null
+      val jobs = jobsDuring {
+        exec = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      }
+      assert(jobs.isEmpty,
+        s"constructing $q must submit no jobs, got ${jobs.size}:\n" + jobs.mkString("\n---\n"))
+      val p = exec.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
+      val kernel = p.collectFirst { case m: MapPartitionsExec => m }
+        .getOrElse(fail(s"$q has no MapPartitions kernel, plan:\n$p"))
+      // 4 cores and 4 (matmul_blocked) or 8 (matmul_large) blocks a side
+      // choose a 2x2x1 grid, so no second exchange sums partial blocks
+      val ex = kernel.children.flatMap(blockedExchanges)
+      assert(ex.size == 1 && (ex.head.outputPartitioning match {
+        case h: HashPartitioning => h.numPartitions == 4
+        case _ => false
+      }), s"$q must route blocks through one hash exchange of 4 cuboids, plan:\n$p")
+      assert(kernel.collect { case j: BaseJoinExec => j }.isEmpty,
+        s"$q must not join blocks, plan:\n$p")
+      assert(kernel.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.isEmpty, s"$q must not range-partition blocks, plan:\n$p")
+    }
   }
 
   test("token zipf ranks through partitioned windows with an in-plan total") {
