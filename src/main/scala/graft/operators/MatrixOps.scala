@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable
 
 import dev.ludovic.netlib.blas.BLAS
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -225,8 +226,9 @@ object MatrixOps {
     *
     * The (n/BS)³ block products form a cube, cut into a `pr×pc×pk` grid
     * of cuboids ([[Grid]]), one Spark task each:
-    *   1. every input partition folds its cells into partial dense
-    *      row-major BS×BS blocks and sends each straight to the cuboids
+    *   1. every input partition folds its cells into partial BS×BS
+    *      blocks ([[Partial]]: sparse cells until they would outweigh the
+    *      dense block, then dense) and sends each straight to the cuboids
     *      that read it — an A block to the `pc` cuboids of its row
     *      group, a B block to the `pr` cuboids of its column group;
     *   2. ONE exchange, `repartition(T, key)` with keys that hash to
@@ -242,8 +244,17 @@ object MatrixOps {
     * per task — A strip + B strip + one output block — fits half of one
     * core's share of executor memory. Past that bound it splits the
     * contraction (`pk > 1`), so per-task memory is bounded at any n. A
-    * map task sends its partial blocks on every [[FlushBytes]] (at least
-    * one block).
+    * map task holds at most about [[FlushBytes]] of partial blocks before
+    * it sends them on.
+    *
+    * Shuffle: a partial block goes out sparse unless it holds as many
+    * cells as the dense block weighs, so the exchange carries at most
+    * about 12 bytes per input cell and copy before compression, whatever
+    * the order of the cells in a partition. When each partition holds
+    * whole blocks (row-major dense input) the parts are dense and A and
+    * B cross the exchange `pc` and `pr` times at 8 bytes a cell; when
+    * partitions scatter their cells over the blocks (`fromTable`'s
+    * hash-aggregate output) the parts are sparse.
     *
     * Semantics: duplicate coordinates sum; absent (all-zero) blocks cost
     * no GEMM and emit nothing; `n` need not be a multiple of BS (the last
@@ -314,10 +325,11 @@ object MatrixOps {
     * half is left to the exchange's buffers and the deserialized rows. */
   private def taskBudget(spark: SparkSession): Long = {
     val sc = spark.sparkContext
-    val executorBytes = sc.getExecutorMemoryStatus.values.map(_._1).max
-    val cores =
-      if (sc.isLocal) sc.defaultParallelism else sc.getConf.getInt("spark.executor.cores", 1)
-    executorBytes / cores / 2
+    val all = sc.getExecutorMemoryStatus
+    // the driver's block manager is listed too; it runs tasks only in local mode
+    val executors = if (all.size > 1) all - SparkEnv.get.blockManager.blockManagerId.hostPort else all
+    val cores = math.max(1, sc.defaultParallelism / executors.size)
+    executors.values.map(_._1).min / cores / 2
   }
 
   /** Keys for `repartition(tasks, key)` under which key `t` lands on
@@ -343,23 +355,7 @@ object MatrixOps {
   private[graft] def multiplyCuboid(spark: SparkSession, a: DataFrame, b: DataFrame,
                                     n: Long, bs: Int, grid: Grid): DataFrame = {
     import spark.implicits._
-    val nb = blocksPerSide(n, bs)
-    val keys = cuboidKeys(grid.tasks)
-    val flushAt = math.max(1L, FlushBytes / (bs.toLong * bs * 8)).toInt
-    def side(m: DataFrame, isA: Boolean): Dataset[BlockPart] =
-      m.select(col("i").cast("long"), col("j").cast("long"), col("v").cast("double"))
-        .filter(col("v").isNotNull)
-        .as[(Long, Long, Double)]
-        .mapPartitions(partialBlocks(_, n, bs, flushAt).flatMap { case (r, c, blk) =>
-          val cuboids =
-            if (isA) Iterator.range(0, grid.pc)
-              .map(cg => grid.id(group(r, grid.pr, nb), cg, group(c, grid.pk, nb)))
-            else Iterator.range(0, grid.pr)
-              .map(rg => grid.id(rg, group(c, grid.pc, nb), group(r, grid.pk, nb)))
-          cuboids.map(t => BlockPart(keys(t), t, isA, r, c, blk))
-        })
-    val parts = side(a, isA = true).union(side(b, isA = false))
-      .repartition(grid.tasks, col("key"))
+    val parts = blockParts(spark, a, b, n, bs, grid).repartition(grid.tasks, col("key"))
     val cells =
       if (grid.pk == 1) parts.mapPartitions(cuboidProducts(_, bs).flatMap(blockCells(bs)))
       else parts.mapPartitions(cuboidProducts(_, bs))
@@ -369,31 +365,108 @@ object MatrixOps {
     cells.toDF("i", "j", "v")
   }
 
-  /** Folds a partition's cells into partial row-major bs×bs blocks and
-    * yields them as (row block, column block, block), `flushAt` blocks at
-    * a time; the cuboid tasks sum the partials. */
-  private def partialBlocks(cells: Iterator[(Long, Long, Double)], n: Long, bs: Int,
-                            flushAt: Int): Iterator[(Int, Int, Array[Double])] =
-    new Iterator[(Int, Int, Array[Double])] {
-      private val held = mutable.LongMap.empty[Array[Double]]
-      private var out: Iterator[(Int, Int, Array[Double])] = Iterator.empty
+  /** The partial blocks of A and B, one copy per cuboid that reads them:
+    * what the cuboid exchange carries. */
+  private[graft] def blockParts(spark: SparkSession, a: DataFrame, b: DataFrame,
+                                n: Long, bs: Int, grid: Grid): Dataset[BlockPart] = {
+    import spark.implicits._
+    val nb = blocksPerSide(n, bs)
+    val keys = cuboidKeys(grid.tasks)
+    def side(m: DataFrame, isA: Boolean): Dataset[BlockPart] =
+      m.select(col("i").cast("long"), col("j").cast("long"), col("v").cast("double"))
+        .filter(col("v").isNotNull)
+        .as[(Long, Long, Double)]
+        .mapPartitions(partialBlocks(_, n, bs, FlushBytes).flatMap { case (r, c, part) =>
+          val cuboids =
+            if (isA) Iterator.range(0, grid.pc)
+              .map(cg => grid.id(group(r, grid.pr, nb), cg, group(c, grid.pk, nb)))
+            else Iterator.range(0, grid.pr)
+              .map(rg => grid.id(rg, group(c, grid.pc, nb), group(r, grid.pk, nb)))
+          val (pos, vals) = part.payload
+          cuboids.map(t => BlockPart(keys(t), t, isA, r, c, pos, vals))
+        })
+    side(a, isA = true).union(side(b, isA = false))
+  }
+
+  /** Folds a partition's cells into partial blocks and yields them as
+    * (row block, column block, partial), all it holds each time that
+    * reaches `flushBytes`; the cuboid tasks sum the partials. */
+  private[graft] def partialBlocks(cells: Iterator[(Long, Long, Double)], n: Long, bs: Int,
+                                   flushBytes: Long): Iterator[(Int, Int, Partial)] =
+    new Iterator[(Int, Int, Partial)] {
+      private val held = mutable.LongMap.empty[Partial]
+      private var out: Iterator[(Int, Int, Partial)] = Iterator.empty
 
       def hasNext: Boolean = out.hasNext || { fill(); out.hasNext }
 
-      def next(): (Int, Int, Array[Double]) = { hasNext; out.next() }
+      def next(): (Int, Int, Partial) = { hasNext; out.next() }
 
       private def fill(): Unit = {
-        while (held.size < flushAt && cells.hasNext) {
+        var bytes = 0L
+        while (bytes < flushBytes && cells.hasNext) {
           val (i, j, v) = cells.next()
           require(i >= 0 && i < n && j >= 0 && j < n, s"cell ($i, $j) outside the ${n}x$n index space")
-          val blk = held.getOrElseUpdate((i / bs) << 32 | (j / bs), new Array[Double](bs * bs))
-          val pos = (i % bs * bs + j % bs).toInt
-          blk(pos) += v
+          val key = (i / bs) << 32 | (j / bs)
+          var part = held.getOrNull(key)
+          if (part == null) {
+            part = new Partial(bs)
+            held.update(key, part)
+            bytes += part.bytes
+          }
+          bytes += part.add((i % bs * bs + j % bs).toInt, v)
         }
-        out = held.toArray.iterator.map { case (key, blk) => ((key >>> 32).toInt, key.toInt, blk) }
+        out = held.toArray.iterator.map { case (key, part) => ((key >>> 32).toInt, key.toInt, part) }
         held.clear()
       }
     }
+
+  /** A partial bs×bs block on the map side: a list of (row-major
+    * position, value) cells, duplicates included, until that list would
+    * weigh more than the dense block; from then on the dense block. */
+  private[graft] final class Partial(bs: Int) {
+    private val area = bs * bs
+    // sparse cells that weigh as much as the dense block: 12 bytes vs 8 per cell
+    private val sparseMax = (area.toLong * 8 / 12).toInt
+    private var pos: Array[Int] = if (sparseMax == 0) null else new Array[Int](math.min(4, sparseMax))
+    private var vals = new Array[Double](if (pos == null) area else pos.length)
+    private var size = 0
+
+    /** Heap held, with about 64 bytes of object and map-entry headers. */
+    def bytes: Long = 64 + (if (pos == null) vals.length * 8L else pos.length * 12L)
+
+    /** Adds `v` at position `p`; returns the bytes the partial grew by. */
+    def add(p: Int, v: Double): Long =
+      if (pos == null) { vals(p) += v; 0L }
+      else {
+        val before = bytes
+        if (size == pos.length) grow()
+        if (pos == null) vals(p) += v
+        else { pos(size) = p; vals(size) = v; size += 1 }
+        bytes - before
+      }
+
+    private def grow(): Unit =
+      if (size == sparseMax) {
+        val dense = new Array[Double](area)
+        var q = 0
+        while (q < size) { dense(pos(q)) += vals(q); q += 1 }
+        pos = null
+        vals = dense
+      } else {
+        val cap = math.min(size * 2, sparseMax)
+        pos = java.util.Arrays.copyOf(pos, cap)
+        vals = java.util.Arrays.copyOf(vals, cap)
+      }
+
+    /** The positions, each minus the one before (empty for a dense
+      * block), and the values to send. Cells that arrive in row order
+      * give runs of equal steps, which the shuffle's compression all but
+      * removes. */
+    def payload: (Array[Int], Array[Double]) =
+      if (pos == null) (Array.emptyIntArray, vals)
+      else (Array.tabulate(size)(q => if (q == 0) pos(0) else pos(q) - pos(q - 1)),
+        java.util.Arrays.copyOf(vals, size))
+  }
 
   /** Products of every cuboid in a partition, as (row block, column block,
     * block) per output block with at least one block product. Placement
@@ -414,8 +487,19 @@ object MatrixOps {
     private def pack(r: Int, c: Int): Long = r.toLong << 32 | c
 
     def add(p: BlockPart): Unit =
-      if (p.isA) sumInto(aRows.getOrElseUpdate(p.r, mutable.LongMap.empty), p.c, p.block)
-      else { sumInto(bBlocks, pack(p.r, p.c), p.block); bCols += p.c }
+      if (p.isA) sumInto(aRows.getOrElseUpdate(p.r, mutable.LongMap.empty), p.c, p)
+      else { sumInto(bBlocks, pack(p.r, p.c), p); bCols += p.c }
+
+    private def sumInto(m: mutable.LongMap[Array[Double]], key: Long, p: BlockPart): Unit =
+      if (p.pos.isEmpty) m.get(key) match {
+        case Some(acc) => addInto(acc, p.vals)
+        case None => m.update(key, p.vals)
+      } else {
+        val acc = m.getOrElseUpdate(key, new Array[Double](bs * bs))
+        var q = 0
+        var at = 0
+        while (q < p.pos.length) { at += p.pos(q); acc(at) += p.vals(q); q += 1 }
+      }
 
     def products: Iterator[(Int, Int, Array[Double])] = for {
       (bi, row) <- aRows.iterator
@@ -434,12 +518,6 @@ object MatrixOps {
       Option(out)
     }
   }
-
-  private def sumInto(m: mutable.LongMap[Array[Double]], key: Long, blk: Array[Double]): Unit =
-    m.get(key) match {
-      case Some(acc) => addInto(acc, blk)
-      case None => m.update(key, blk)
-    }
 
   private def addInto(acc: Array[Double], x: Array[Double]): Unit = {
     var p = 0
@@ -477,6 +555,8 @@ object MatrixOps {
 }
 
 /** A partial block on its way to cuboid `cuboid`: `key` routes it there,
-  * `(r, c)` is its block position in A (`isA`) or B. */
-private[operators] final case class BlockPart(key: Int, cuboid: Int, isA: Boolean,
-                                              r: Int, c: Int, block: Array[Double])
+  * `(r, c)` is its block position in A (`isA`) or B. It holds the cells
+  * `vals` at the row-major positions whose successive differences are
+  * `pos`, or the dense block `vals` when `pos` is empty. */
+private[graft] final case class BlockPart(key: Int, cuboid: Int, isA: Boolean,
+                                          r: Int, c: Int, pos: Array[Int], vals: Array[Double])

@@ -115,6 +115,71 @@ class MatrixOpsSpec extends SparkSpec {
     }
   }
 
+  test("map-side fold: scattered cells flush as sparse parts that sum back to the input") {
+    val (n, bs) = (96L, 8) // 144 blocks, 64 cells each
+    val rnd = new scala.util.Random(11)
+    // about 4 cells a block in random order: consecutive cells rarely share a block
+    val in = Seq.fill(600)((rnd.nextInt(n.toInt).toLong, rnd.nextInt(n.toInt).toLong,
+      rnd.nextInt(9) - 4.0))
+    // a budget of a few blocks forces many flushes
+    val parts = MatrixOps.partialBlocks(in.iterator, n, bs, 2048).map { case (r, c, p) =>
+      val (pos, vals) = p.payload
+      (r, c, pos, vals)
+    }.toSeq
+    assert(parts.size > parts.map(p => (p._1, p._2)).distinct.size, "expected repeated flushes")
+    // the parts weigh at most 12 bytes per input cell whatever the order
+    assert(parts.map(p => p._3.length * 4L + p._4.length * 8L).sum <= 12L * in.size)
+    val summed = parts.flatMap { case (r, c, pos, vals) =>
+      val at = if (pos.isEmpty) vals.indices else pos.toSeq.scanLeft(0)(_ + _).tail
+      at.zip(vals).map { case (q, v) => ((r.toLong * bs + q / bs, c.toLong * bs + q % bs), v) }
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+    val want = in.groupMapReduce(c => (c._1, c._2))(_._3)(_ + _)
+    assert(summed === want)
+  }
+
+  test("map-side fold: a partition holding whole blocks sends them dense") {
+    val (n, bs) = (16L, 8)
+    val in = for (i <- 0L until n; j <- 0L until n) yield (i, j, 1.0)
+    val parts = MatrixOps.partialBlocks(in.iterator, n, bs, 1L << 20).map(_._3.payload).toSeq
+    assert(parts.size == 4 && parts.forall { case (pos, vals) => pos.isEmpty && vals.length == 64 })
+  }
+
+  test("hash-partitioned fromTable input: the cuboid exchange carries sparse cells, not dense blocks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    // ~20k cells over 64x64 blocks of 32, in fromTable's hash-aggregate
+    // order: every partition touches most blocks with a handful of cells
+    val (n, bs) = (2048L, 32)
+    val ids = spark.range(20000).toDF().repartition(8)
+    // checkpointed with its layout, so the listener sees only the product's exchange
+    val a = MatrixOps.fromTable(ids, pmod(hash(col("id")), lit(n)),
+      pmod(hash(col("id"), lit(1)), lit(n)), col("id") % 5 + 1).localCheckpoint()
+    val b = intify(MatrixOps.genDense(spark, bs, seed = 12)) // block (0, 0) only
+    val (aCells, bCells) = (a.count(), b.count())
+    val grid = MatrixOps.Grid(2, 2, 1)
+    val copies = (aCells + bCells) * 2
+    val payload = MatrixOps.blockParts(spark, a, b, n, bs, grid)
+      .select(sum(size(col("pos")) * 4 + size(col("vals")) * 8)).first().getLong(0)
+    // sparse parts carry 12 bytes per cell copy; dense partial blocks
+    // would carry 8 KB per partition and block, about 130 times more here
+    assert(payload <= 12 * copies, s"payload $payload B for $copies cell copies")
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val got = try {
+      val out = cells(MatrixOps.multiplyCuboid(spark, a, b, n, bs, grid))
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc, 10000L)
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(got === cells(MatrixOps.multiply(a, b)).filter(_._3 != 0.0))
+    // with part headers and compression the exchange writes less than a
+    // raw (i, j, v) row of 24 bytes per cell copy
+    assert(written.get <= 24 * copies, s"shuffle wrote ${written.get} B for $copies cell copies")
+  }
+
   test("3x3 golden product (FIXTURES B.1)") {
     // [[1,2,3],[4,5,6],[7,8,9]] · [[9,8,7],[6,5,4],[3,2,1]]
     val a3 = mat((0, 0, 1.0), (0, 1, 2.0), (0, 2, 3.0),
