@@ -1519,7 +1519,7 @@ object SparkEntry {
         .orderBy("d1", "d2")),
     // Pairs are evidence; the unit of removal is the transitive
     // CLUSTER. Components over the J≥0.9 pair graph, id = min reachable
-    // doc_id (min-label propagation; oracle = recursive CTE closure).
+    // doc_id (union-find-seeded; oracle = recursive CTE closure).
     "dedup_components" -> ((s, dir) =>
       Dedup.jaccardComponents(Tables.documents(s, dir), thresholdTenths = 9)
         .orderBy("doc_id")),
@@ -1662,7 +1662,7 @@ object SparkEntry {
         thresholdHundredths = SemDedupHundredths, pct = ProtoPrunePct,
         k = SemK, rounds = SemLloydRounds).orderBy("cluster")),
     // Transitive semantic duplicate clusters: components over the
-    // qualifying semdedup pair graph (min-label + pointer jumping).
+    // qualifying semdedup pair graph (union-find-seeded).
     "semdedup_components" -> ((s, dir) =>
       Similarity.semDedupComponents(s, Tables.embeddings(s, dir),
         thresholdHundredths = SemDedupHundredths,

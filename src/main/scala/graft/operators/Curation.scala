@@ -159,6 +159,13 @@ object Curation {
       .distinct()
       .localCheckpoint(eager = false)
     val sketch = grams
+      // the docs table is one input split and AQE coalesces the gram
+      // distinct to ~one partition on its BYTES, so without this the
+      // m-way explode (m md5-based hashes per gram) runs on ONE core.
+      // Explicit count (REPARTITION_BY_NUM), as in jaccardPairs: the
+      // cost here is the m-fold hashing, not the input size
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
+        col("gram"))
       // gram hash + its string form computed ONCE per gram, BEFORE the
       // m-way component explode (r18 optimization round: the cast sat
       // after the explode, re-run m times per gram) — component i then

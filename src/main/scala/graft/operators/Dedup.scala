@@ -570,92 +570,139 @@ object Dedup {
     * step every dedup pipeline runs after pair generation: pairs are
     * only evidence; the unit of removal is the transitive CLUSTER
     * (A≈B, B≈C ⇒ keep one of {A,B,C} even if A,C never paired).
-    * Returns `(doc_id, component)` for every doc appearing in a pair,
-    * where `component` is the minimum doc_id reachable — a canonical,
-    * deterministic cluster id.
+    * Returns `(doc_id, component)` for every doc appearing in a pair
+    * (self-loops included), where `component` is the minimum doc_id
+    * reachable — a canonical, deterministic cluster id — in the input
+    * id type. Duplicate edges are harmless.
     *
-    * Min-label propagation: every node starts as its own label; each
-    * round takes the min of its neighbors' labels; fixpoint in
-    * O(cluster diameter) rounds. Near-dup clusters are shallow (dozens
-    * of docs tightly interlinked, diameter 2-4), so the loop runs a
-    * handful of rounds regardless of corpus size — the iteration count
-    * scales with GRAPH SHAPE, not data volume. Per round: one shuffle
-    * join (labels to edge endpoints) + one min-aggregation, both on
-    * skinny (long, long) rows. Convergence is detected by the sum of
-    * labels (strictly decreasing until fixpoint — one scalar action per
-    * round, the legitimate driver-side use). `localCheckpoint` truncates
-    * the growing lineage each round so round N's plan doesn't replay
-    * rounds 1..N-1 (on a cluster: `checkpoint` to reliable storage). */
+    * Union-find-seeded: the pairs hash-partition by `d1` into as many
+    * partitions as AQE sizes from their BYTES (no count), and each
+    * partition runs a local union-find ([[unionFind]]) that labels every
+    * node it saw with its local component's minimum. Grouping by node
+    * gives the seed label `min(root)` and, on the SAME job as the seed's
+    * checkpoint (an `observe` side-metric), the number of nodes that saw
+    * two different roots. When that count is 0 the seed is EXACT: every
+    * edge sits in one partition, where its endpoints share a root, so
+    * labels are constant on each component — and the component minimum
+    * labels itself, so every label is that minimum. That is the common
+    * case (a near-dup graph of a few thousand edges is one partition)
+    * and it costs one checkpoint job instead of a job loop.
+    *
+    * Otherwise min-label propagation runs FROM the seed; it converges
+    * from any labelling whose labels lie in the node's component and
+    * are ≤ the node (the seed's are). Each round takes the min of a
+    * node's own and its neighbors' labels, hooks each label's own node
+    * to the least of those minima over the nodes it labels (Liu–Tarjan
+    * parent-connect), then pointer jumping follows each label to its
+    * own label, so label depth halves. Without the hook a long path
+    * with shuffled ids walks its minimum a few hops per round (a
+    * 300-node path did not converge in 20 rounds); with it, 8. Per
+    * round: one shuffle join (labels to edge endpoints), two
+    * min-aggregations and two label self-joins, all on skinny
+    * (long, long) rows. Convergence is detected by the sum of labels
+    * (strictly decreasing until fixpoint — one scalar per round,
+    * observed on the round's checkpoint job). `localCheckpoint`
+    * truncates the growing lineage each round so round N's plan doesn't
+    * replay rounds 1..N-1 (on a cluster: `checkpoint` to reliable
+    * storage).
+    *
+    * Scale: AQE only coalesces, so the seed has at most
+    * `spark.sql.shuffle.partitions` partitions however large the graph
+    * is. The partition count therefore bounds nothing; a fixed node
+    * budget does ([[SeedNodes]]). A union-find task that has seen that
+    * many nodes stops growing its map and labels each further edge's
+    * endpoints with the edge's smaller end. Those labels are valid seeds
+    * too, and the exactness check still holds (when no node saw two
+    * labels, every edge's endpoints share one), so an oversized
+    * partition's inexact seed falls through to the rounds, whose joins
+    * and aggregations spill. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponentsWithRounds(pairs, maxIter)._1
+    seededComponents(pairs, maxIter, seedParts = 0)._1
+
+  /** Nodes one seed task holds in its union-find map: at most about
+    * 16 MB of heap (up to four 12-byte `LongMap` slots per node plus a
+    * 16-byte boxed value), so a full set of concurrent tasks stays
+    * small. */
+  private[graft] val SeedNodes = 1 << 18
 
   /** [[connectedComponents]] plus the number of propagation rounds it
-    * ran — the probe surface (FUZZY_PROBE) that prices the loop. */
-  private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
+    * ran (0 when the seed was exact). `seedParts > 0` forces the seed's
+    * partition count and `seedNodes` the per-task node budget, so specs
+    * can start the rounds from an inexact seed; `seedParts = 0` lets AQE
+    * size it. */
+  private[graft] def seededComponents(pairs: DataFrame, maxIter: Int,
+                                      seedParts: Int,
+                                      seedNodes: Int = SeedNodes): (DataFrame, Int) = {
     import org.apache.spark.sql.Observation
-    // Every per-round scalar the loop needs (edge count for partition
-    // sizing, the label-sum convergence check) rides the SAME job that
-    // materializes the round's checkpoint, as an `observe` side-metric
-    // — the r7 loop paid a second driver action per round (plus two at
-    // setup) just to re-read a relation it had just materialized.
+    import pairs.sparkSession.implicits._
+    val idType = pairs.schema("d1").dataType
+    def result(labels: DataFrame) =
+      labels.select(col("id").cast(idType).as("doc_id"),
+        col("comp").cast(idType).as("component"))
     // decimal(38,0) sum: billions of 64-bit ids would overflow a long.
-    // coalesce: sum/count over ZERO rows is null (an empty pair
-    // relation — a clean corpus — must converge instantly, not NPE).
+    // coalesce: a sum over ZERO rows is null (an empty pair relation —
+    // a clean corpus — must converge instantly, not NPE).
     def sumMetric = coalesce(
       org.apache.spark.sql.functions.sum(col("comp").cast("decimal(38,0)")),
       lit(0).cast("decimal(38,0)")).as("lsum")
-    // undirected: propagate along both directions of every edge.
-    // ONE materialization (r18 optimization round): the r11 form
-    // checkpointed the distinct edge list just to COUNT it, sized a
-    // manual repartition from the count, and checkpointed again — two
-    // edge-list materializations plus an observe round-trip before the
-    // first propagation round. A bare repartition(dst) under AQE
-    // coalescing sizes the same relation from its measured BYTES
-    // (skinny (long,long) rows — bytes are the right proxy), so the
-    // distinct's exchange and the dst keying land in one plan and one
-    // checkpoint. Keyed by dst once: each round's join then shuffles
-    // only the (tiny, shrinking-entropy) label relation, never the
-    // edges.
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+    // lazy: the seed's job materializes the pairs, so an inexact seed's
+    // edge list reads them back instead of generating them again
+    val e = pairs.select(col("d1").cast("long").as("d1"),
+      col("d2").cast("long").as("d2"))
+      .localCheckpoint(eager = false)
+    val keyed =
+      if (seedParts > 0) e.repartition(seedParts, col("d1"))
+      else e.repartition(col("d1"))
+    // a node has more than one root iff min(root) ≠ max(root): one
+    // aggregation, where counting distinct roots would plan two
+    val obs0 = new Observation()
+    val seed = keyed.as[(Long, Long)].mapPartitions(unionFind(seedNodes))
+      .toDF("id", "root")
+      .groupBy("id").agg(min("root").as("comp"), max("root").as("max_root"))
+      .observe(obs0, sumMetric,
+        count(when(col("comp") =!= col("max_root"), 1)).as("split"))
+      .select("id", "comp")
+      .localCheckpoint()
+    if (obs0.get("split") == 0L) return (result(seed), 0)
+    // undirected: propagate along both directions of every edge. A bare
+    // repartition(dst) under AQE coalescing sizes the relation from its
+    // measured BYTES, so the distinct's exchange and the dst keying land
+    // in one plan and one checkpoint. Keyed by dst once: each round's
+    // join then shuffles only the label relation, never the edges.
+    val edges = e.select(col("d1").as("src"), col("d2").as("dst"))
+      .unionByName(e.select(col("d2").as("src"), col("d1").as("dst")))
       .distinct()
       .repartition(col("dst"))
       .localCheckpoint()
-    // initial label = min(self, direct neighbors): the first
-    // propagation round as ONE aggregation over the (bidirectional)
-    // edge list — no join, and cliques converge here immediately
-    val obs0 = new Observation()
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("min_nbr"))
-      .select(col("id"), least(col("id"), col("min_nbr")).as("comp"))
-      .observe(obs0, sumMetric)
-      .localCheckpoint()
+    var labels = seed
     var sum = obs0.get("lsum").asInstanceOf[java.math.BigDecimal]
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      // neighbor-min INCLUDING self, as one union + aggregation: the
-      // r7 form computed neighbor-min then LEFT-joined it back onto
-      // labels to take the least — a third shuffle join per round; the
-      // union feeds the same min aggregation with the node's own label,
-      // so the join disappears (every node is its own src in the
-      // bidirectional edge list, so key coverage is identical)
+      // neighbor-min INCLUDING self, as one union + aggregation (every
+      // node is its own src in the bidirectional edge list, so key
+      // coverage is identical to a join back onto the labels); `old`
+      // carries the node's label from the round before
       val stepped = edges
         .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("comp"))
-        .unionByName(labels)
-        .groupBy("id").agg(min("comp").as("comp"))
+        .select(col("src").as("id"), col("comp"),
+          lit(null).cast("long").as("old"))
+        .unionByName(labels.select(col("id"), col("comp"),
+          col("comp").as("old")))
+        .groupBy("id").agg(min("comp").as("comp"), max("old").as("old"))
+      // hooking: a label's own node takes the least new label of the
+      // nodes it labelled, so a whole labelled tree moves in one round
+      // rather than only the nodes next to a smaller label
+      val hooks = stepped.groupBy(col("old").as("hid"))
+        .agg(min("comp").as("hcomp"))
+      val hooked = stepped.join(hooks, col("id") === col("hid"), "left")
+        .select(col("id"),
+          least(col("comp"), coalesce(col("hcomp"), col("comp"))).as("comp"))
       // pointer jumping: follow one's label to ITS label (every comp is
-      // a node id, so the lookup is a self-join). Neighbor-min alone
-      // walks a borderline chain one hop per round (O(diameter));
-      // compressing pointers each round makes label depth halve —
-      // O(log diameter) rounds, the same trick large-star/small-star
-      // CC algorithms rely on. Measured: 8 rounds → 4 on the sf0.1
-      // near-dup graph.
-      val jump = stepped.select(col("id").as("jid"), col("comp").as("jcomp"))
+      // a node id, so the lookup is a self-join), so label depth halves
+      val jump = hooked.select(col("id").as("jid"), col("comp").as("jcomp"))
       val obsR = new Observation()
-      labels = stepped.join(jump, col("comp") === col("jid"), "left")
+      labels = hooked.join(jump, col("comp") === col("jid"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp"))
         .observe(obsR, sumMetric)
@@ -667,7 +714,42 @@ object Dedup {
     }
     require(converged, s"connectedComponents did not converge in $maxIter " +
       "rounds — raise maxIter (cluster diameter exceeds the bound)")
-    (labels.select(col("id").as("doc_id"), col("comp").as("component")), i)
+    (result(labels), i)
+  }
+
+  /** One partition's union-find over its edges: every node it saw, with
+    * the minimum node of its local component (the larger root always
+    * links under the smaller, so each root is its component's minimum).
+    * Once the map holds `budget` nodes the remaining edges are streamed
+    * instead: each labels both its endpoints with its smaller end. Kept
+    * a small method of its own so the JIT compiles it apart from the
+    * partition loop. */
+  private def unionFind(budget: Int)(
+      edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent(x)
+      while (p != x) {
+        val gp = parent(p)
+        parent(x) = gp // path halving
+        x = gp
+        p = parent(x)
+      }
+      x
+    }
+    while (parent.size < budget && edges.hasNext) {
+      val (a, b) = edges.next()
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(k => (k, find(k))) ++
+      edges.flatMap { case (a, b) =>
+        val m = math.min(a, b)
+        Iterator((a, m), (b, m))
+      }
   }
 
   /** Incremental dedup: drop new documents whose content already exists
@@ -2370,7 +2452,7 @@ object Dedup {
     * one canonical id for {A,B,C} even if A,C never paired; pairs are
     * only evidence, the unit of merge is the transitive cluster).
     * Keys map to a canonical long id (min `idCol` per distinct key) so
-    * the shared pointer-jump [[connectedComponents]] machinery runs
+    * the shared union-find-seeded [[connectedComponents]] runs
     * unchanged; `component` is the minimum reachable id. Only keys
     * that paired appear — singletons need no canonicalization. */
   def editDistanceComponents(df: DataFrame, keyCol: String,

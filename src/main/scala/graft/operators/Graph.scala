@@ -28,10 +28,11 @@ object Graph {
     *
     * Scale shape: each round is one co-partitioned join of the rank
     * relation onto the edge list plus one aggregation on dst — the
-    * label-propagation shape of [[Dedup.connectedComponents]], which at
-    * cluster scale would pre-partition the edges once and checkpoint
-    * per round; the plan here chains iterations directly because the
-    * declared query runs a fixed small `iters`.
+    * shape of the label-propagation rounds [[Dedup.connectedComponents]]
+    * falls back to when its union-find seed is not exact, which
+    * pre-partition the edges once and checkpoint per round; the plan
+    * here chains iterations directly because the declared query runs a
+    * fixed small `iters`.
     */
   def pagerankInt(edges: DataFrame, iters: Int,
                   scale: Long = 1000000000000L,

@@ -489,9 +489,10 @@ object Similarity {
     * (A≈B, B≈C ⇒ one of {A,B,C} even when A and C never qualify as a
     * pair). Exactly [[graft.operators.Dedup.jaccardComponents]]'s
     * pairs→components step lifted to embedding space: the qualifying
-    * pair relation feeds the shared min-label + pointer-jumping
-    * machinery ([[graft.operators.Dedup.connectedComponents]] —
-    * O(log diameter) rounds, graph-sized partitioning). Returns
+    * pair relation feeds the shared union-find-seeded components
+    * ([[graft.operators.Dedup.connectedComponents]] — one partition-
+    * local union-find, propagation rounds only when the seed is not
+    * exact). Returns
     * `(vec_id, component)` for every vector in at least one pair;
     * blocking guarantees components never span clusters. */
   def semDedupComponents(spark: SparkSession, emb: DataFrame,

@@ -1769,8 +1769,8 @@ object TextOps {
     * word count), one weighted global top-1 (TakeOrderedAndProject),
     * one broadcast of the single winning pair onto the vocabulary; the
     * winning pair materializes via localCheckpoint so round r's plan
-    * never re-executes rounds 1..r−1 (the
-    * [[Dedup.connectedComponents]] iteration idiom). At 100 TB the
+    * never re-executes rounds 1..r−1 (the iteration idiom of
+    * [[Dedup.connectedComponents]]'s propagation rounds). At 100 TB the
     * corpus pass is one word-count shuffle; every round after it costs
     * |vocab|, exactly how production BPE trainers scale. */
   def bpeMerges(docs: DataFrame, rounds: Int): DataFrame = {

@@ -645,11 +645,19 @@ class PipelineOpsSpec extends SparkSpec {
     import graft.operators.Dedup
     // seeded random graph: chains, a cycle, isolated pairs
     val rnd = new scala.util.Random(7)
-    val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L),      // chain (diam 3)
+    val base = (Seq((1L, 2L), (2L, 3L), (3L, 4L),      // chain (diam 3)
       (10L, 11L), (11L, 12L), (12L, 10L),               // cycle
       (20L, 21L)) ++                                    // isolated pair
       Seq.fill(40)((rnd.nextInt(30).toLong + 100L, rnd.nextInt(30).toLong + 100L)))
       .filter(e => e._1 != e._2)
+    // a 300-node path over shuffled ids (diameter 299: without the
+    // hooking step the rounds do not converge within 20), self-loops (on
+    // a lone node and inside the chain) and duplicate edges in both
+    // orientations
+    val ids = rnd.shuffle((1000L until 1300L).toVector)
+    val path = ids.zip(ids.tail)
+    val edges = base ++ path ++
+      Seq((500L, 500L), (2L, 2L), (1L, 2L), (2L, 1L), (1L, 2L))
     // union-find oracle
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
@@ -661,14 +669,50 @@ class PipelineOpsSpec extends SparkSpec {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expected = parent.keys.map(k => (k, find(k))).toSet
-    val got = Dedup.connectedComponents(edges.toDF("d1", "d2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === expected)
-    // a CLEAN corpus produces zero pairs — the loop must converge on
+    val df = edges.toDF("d1", "d2")
+    def rows(c: org.apache.spark.sql.DataFrame) =
+      c.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // a graph this small seeds in one partition: exact, no rounds
+    val (auto, autoRounds) = Dedup.seededComponents(df, 20, seedParts = 0)
+    assert(rows(auto) === expected)
+    assert(autoRounds === 0)
+    // a forced 4-way seed splits components across partitions, so the
+    // propagation rounds start from an inexact seed
+    val (split, splitRounds) = Dedup.seededComponents(df, 20, seedParts = 4)
+    assert(rows(split) === expected)
+    assert(splitRounds > 0)
+    // one oversized partition: past a 16-node budget the union-find
+    // streams edge-local labels, so the seed is inexact without any
+    // split across partitions
+    val (over, overRounds) =
+      Dedup.seededComponents(df, 20, seedParts = 1, seedNodes = 16)
+    assert(rows(over) === expected)
+    assert(overRounds > 0)
+    // int ids stay int on every path; a 0-node budget streams every edge
+    val intDf = df.select(col("d1").cast("int").as("d1"), col("d2").cast("int").as("d2"))
+    for ((parts, budget) <- Seq((0, Dedup.SeedNodes), (4, Dedup.SeedNodes), (1, 0))) {
+      val c = Dedup.seededComponents(intDf, 20, parts, budget)._1
+      assert(c.schema.map(_.dataType).toSet ===
+        Set(org.apache.spark.sql.types.IntegerType))
+      assert(c.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toSet
+        === expected)
+    }
+    // a CLEAN corpus produces zero pairs — every path must converge on
     // the empty graph (null label sum), not NPE
-    val empty = Dedup.connectedComponents(
-      edges.toDF("d1", "d2").filter(col("d1") < lit(-1L)))
-    assert(empty.count() === 0L)
+    val none = df.filter(col("d1") < lit(-1L))
+    for ((parts, budget) <- Seq((0, Dedup.SeedNodes), (4, Dedup.SeedNodes), (1, 0)))
+      assert(Dedup.seededComponents(none, 20, parts, budget)._1.count() === 0L)
+  }
+
+  test("connected components over a small edge relation submit at most 3 jobs") {
+    import graft.operators.Dedup
+    // the exact seed is one checkpoint job plus the stages AQE submits
+    // ahead of it; a per-round job loop would need more
+    val df = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
+      .toDF("d1", "d2")
+    val jobs = jobsDuring { Dedup.connectedComponents(df) }
+    assert(jobs.size <= 3,
+      s"components submitted ${jobs.size} jobs:\n" + jobs.mkString("\n---\n"))
   }
 
   test("quotient-graph components equal full-graph components") {

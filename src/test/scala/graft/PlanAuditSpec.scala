@@ -464,31 +464,6 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  /** Descriptions of the jobs `body` submits. spark.read.parquet itself
-    * submits a footer/schema-inference job per call ("parquet at
-    * Tables.scala") — every declared query pays that at construction;
-    * these audits are about EXTRA actions, so reads are excluded. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        if (!js.stageInfos.forall(_.name.startsWith("parquet at Tables"))) {
-          descs.add(js.stageInfos.map(si => si.name + " @ " +
-            si.details.linesIterator.take(8).mkString(" | ")).mkString("\n"))
-        }
-        ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc, 10000L)
-      descs.toArray.toSeq.map(_.toString)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("incremental threshold splits build one plan — no driver action in the lambda") {
     // the r7 verdict's last everything-is-one-plan deviation: the
     // corpus/batch split point must ride the plan as a broadcast 1-row

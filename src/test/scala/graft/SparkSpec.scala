@@ -13,6 +13,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.select("i", "j", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSeq.sorted
+
+  /** Descriptions of the jobs `body` submits. spark.read.parquet itself
+    * submits a footer/schema-inference job per call ("parquet at
+    * Tables.scala") — every declared query pays that at construction;
+    * job audits are about EXTRA actions, so reads are excluded. */
+  def jobsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        if (!js.stageInfos.forall(_.name.startsWith("parquet at Tables"))) {
+          descs.add(js.stageInfos.map(si => si.name + " @ " +
+            si.details.linesIterator.take(8).mkString(" | ")).mkString("\n"))
+        }
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc, 10000L)
+      descs.toArray.toSeq.map(_.toString)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
