@@ -12,8 +12,10 @@ even pairs, change first on odd ones), so a drifting host load does not
 favour one side. Each tree builds into its own directory, passed to run.py
 as `CARGO_TARGET_DIR`, so neither rebuilds the other's classes. Every run's
 host record is printed as it ends; then, for `setup_s` and `pass_s`, the
-medians and quartiles (`statistics.quantiles(n=4)`) of both sides and the
-number of pairs the change won (lower is better). A pair in which either
+medians and quartiles (`statistics.quantiles(n=4)`) of both sides, the
+number of pairs the change won (lower is better), the relative change of
+the medians, and whether the gap between the medians exceeds the parent's
+interquartile range. A pair in which either
 run is incorrect or has failed operations is left out of the medians,
 quartiles and win counts; the summary says how many were left out and the
 script then exits with status 1. The trees are only read; the script writes
@@ -44,9 +46,22 @@ def run(tree, build_dir, workload, seed, seconds):
     return json.loads(lines[-2])["host"], json.loads(lines[-1])
 
 
+def quartiles(vals):
+    return statistics.quantiles(vals, n=4) if len(vals) > 1 else vals * 3
+
+
 def summary(vals):
-    q1, q2, q3 = statistics.quantiles(vals, n=4) if len(vals) > 1 else vals * 3
+    q1, _, q3 = quartiles(vals)
     return f"{statistics.median(vals):.3f} s (q1-q3 {q1:.3f}-{q3:.3f})"
+
+
+def verdict(parent, change):
+    """Relative change of the medians, and whether the gap between them
+    exceeds the parent's interquartile range."""
+    mp, mc = statistics.median(parent), statistics.median(change)
+    q1, _, q3 = quartiles(parent)
+    beyond = "exceeds" if abs(mc - mp) > q3 - q1 else "within"
+    return f"median {(mc - mp) / mp:+.1%}; gap {abs(mc - mp):.3f} s {beyond} parent IQR {q3 - q1:.3f} s"
 
 
 def main():
@@ -93,7 +108,7 @@ def main():
     if kept:
         for m in METRICS:
             print(f"{m}: parent {summary(vals['parent'][m])} -> change {summary(vals['change'][m])}, "
-                  f"change won {wins[m]}/{kept}")
+                  f"change won {wins[m]}/{kept}; {verdict(vals['parent'][m], vals['change'][m])}")
     if bad:
         sys.exit(1)
 

@@ -81,9 +81,12 @@ object Bench {
     // SETTLED min-of-3 (r11): the PRE anchor runs ~30 s into the
     // JVM's life, the POST anchor ~10 min — and three refused r11
     // captures on an idle host (loadavg_pre 0.72/0.89, pre/post
-    // 1.50-1.64x, same direction every time) showed one codegen
-    // warm-up + min-of-3 still reads the C2 compile tier and the
-    // cpu-governor ramp, not host throughput. Warm until two
+    // 1.50-1.64x, same direction every time) showed one warm-up +
+    // min-of-3 does not read host throughput. Generated code is not
+    // the gap: at sf0.01 on 4 cores the PRE anchors compile 15
+    // classes and the POST anchors 0 (9 at Spark's 100-entry codegen
+    // cache), all in the untimed warm-up call, yet POST still read
+    // 0.126 s against PRE 0.321 s. Warm until two
     // consecutive samples agree within 10% (cap 8 extra runs, ~3 s)
     // so BOTH ends of the run measure the same settled state; a real
     // mid-run host shift still moves the settled post anchor and
@@ -156,26 +159,34 @@ object Bench {
         Thread.sleep(15000L)
       }
     }
+    // Codegen compiles per stage of the run, to stderr: a pass that
+    // recompiles what an earlier one compiled shows here, not in stdout.
+    def compiling[A](stage: String)(body: => A): A = {
+      val before = CodegenStats.now()
+      val out = body
+      System.err.println(s"[bench] codegen $stage: ${CodegenStats.now() - before}")
+      out
+    }
     val loadPre = loadavg()
-    val calibPre = calibrate()
-    val calibStrPre = calibrateStr()
+    val (calibPre, calibStrPre) =
+      compiling("pre anchors")((calibrate(), calibrateStr()))
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    suite.foreach { case (name, _) => best(name) = once(name) }
+    compiling("pass 1")(suite.foreach { case (name, _) => best(name) = once(name) })
     // pass 2: every non-failed query (don't re-run failures — a slow
     // failure would double the wall cost with no effect on the -1.0)
-    suite.foreach { case (name, _) =>
+    compiling("pass 2")(suite.foreach { case (name, _) =>
       if (best(name) >= 0) once(name) match {
         case t if t >= 0 => best(name) = math.min(best(name), t)
         case _ =>
       }
-    }
+    })
     // pass 3: sub-second queries only
-    suite.foreach { case (name, _) =>
+    compiling("pass 3")(suite.foreach { case (name, _) =>
       if (best(name) >= 0 && best(name) < 1.0) once(name) match {
         case t if t >= 0 => best(name) = math.min(best(name), t)
         case _ =>
       }
-    }
+    })
     // MECHANICAL RE-ADJUDICATION (r11, the verdict ask): the r10
     // artifact of record shipped dedup_components 10.05 s and
     // dedup_containment 6.31 s that measured 5.96/2.85 s solo — suite-
@@ -334,8 +345,8 @@ object Bench {
     // total counts successful queries only — summing the -1.0 failure
     // sentinels would make a broken run look faster than a clean one
     val total = best.values.filter(_ >= 0).sum
-    val calibPost = calibrate()
-    val calibStrPost = calibrateStr()
+    val (calibPost, calibStrPost) =
+      compiling("post anchors")((calibrate(), calibrateStr()))
     val loadPost = loadavg()
     val readj = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
     // field ORDER is load-bearing (r14, the r13 verdict's top ask): the
@@ -361,12 +372,14 @@ object Bench {
         " capture must not become the artifact of record; stdout line above" +
         " still reports this run)")
     // CROSS-CAPTURE anchor gate (r16, the r15 verdict #2 — replaces
-    // the within-run pre-vs-post comparison): this host's cpufreq /
-    // boost state RAMPS under the full suite, so a same-code capture's
+    // the within-run pre-vs-post comparison): a same-code capture's
     // post anchors read ~0.28-0.34 → ~0.20 s faster than its pre
-    // anchors on a GENUINELY QUIET host — the within-run gate refused
-    // 4 of 6 clean r15 captures, and AnchorCurve refuted the warm-up
-    // fix (a fresh JVM plateaus at ~0.27-0.29 s; ~90 s of diverse
+    // anchors on a GENUINELY QUIET host. Not from codegen: the timed
+    // anchor samples compile nothing at either end (the `[bench]
+    // codegen` lines: PRE 15 and POST 0 compiles, all in the untimed
+    // warm-up); the cpufreq ramp remains a guess. The within-run gate
+    // refused 4 of 6 clean r15 captures, and AnchorCurve refuted the
+    // warm-up fix (a fresh JVM plateaus at ~0.27-0.29 s; ~90 s of diverse
     // warm-up jobs never reaches the post-suite fast state). The sound
     // start-state comparison is LIKE-STATE vs LIKE-STATE across
     // captures: this run's PRE anchors (fresh-JVM, pre-ramp) against
@@ -425,6 +438,16 @@ object Bench {
         System.err.println(s"[bench] $benchOut write failed: ${e.getMessage}")
       }
     }
+    // memory the run retains after a full GC; runs at two codegen cache
+    // sizes differ by what the compiled-class cache holds
+    System.gc()
+    import java.lang.management.ManagementFactory
+    import scala.jdk.CollectionConverters._
+    val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
+    val metaMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / 1e6
+    System.err.println(f"[bench] retained after GC: heap $heapMb%.0f MB, " +
+      f"metaspace $metaMb%.0f MB")
     spark.stop()
   }
 }

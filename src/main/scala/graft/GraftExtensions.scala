@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.StaticSQLConf
 import graft.functions.{Fnv64, Md5TokenIds, NgramFnv, SortedLongIntersectCount, ZipLongEqualCount}
 
 /** Engine extension point (`spark.sql.extensions=graft.GraftExtensions`):
@@ -10,8 +12,20 @@ import graft.functions.{Fnv64, Md5TokenIds, NgramFnv, SortedLongIntersectCount, 
   * registry so they are callable from SQL and `call_function` alike —
   * `fnv64(binary)`, `sorted_intersect_count(array<bigint>, array<bigint>)`,
   * `zip_equal_count(array<bigint>, array<bigint>)`.
-  * Custom Rules/Strategies would be injected here too; reference parity
-  * needs none (SURVEY.md §4) — Catalyst's rewrite set covers it.
+  *
+  * Every engine session passes through here, so this is also where the
+  * engine defaults Spark's static `spark.sql.codegen.cache.maxEntries`
+  * to [[GraftExtensions.CodegenCacheEntries]] on the active context's
+  * conf. Extensions are applied before the session's `SharedState`
+  * clones that conf, and `CodeGenerator` sizes its compiled-class cache
+  * from it on first use. At Spark's default of 100 entries a pass of the
+  * pair tier evicts and recompiles nearly all of its generated classes.
+  * Limits:
+  *  - the cache is JVM-wide, and the first `CodeGenerator` use fixes its
+  *    size for the life of the JVM;
+  *  - in a JVM whose `CodeGenerator` was initialized before any graft
+  *    session existed, the default has no effect;
+  *  - a value the user sets (builder, `--conf`, `-D`) always wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -38,6 +52,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    Bridge.defaultConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.CodegenCacheEntries.toString)
     ext.injectFunction(unary("fnv64", classOf[Fnv64], Fnv64))
     ext.injectFunction(unary("md5_token_ids", classOf[Md5TokenIds], Md5TokenIds))
     ext.injectFunction(binary("sorted_intersect_count",
@@ -82,4 +98,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.functions.WinnowMins(hashes, w.asInstanceOf[Int])
     }))
   }
+}
+
+object GraftExtensions {
+  /** Default size of Spark's compiled-class cache: holds a full registry
+    * pass with headroom (working sets in docs/THROUGHPUT.md, "Generated-
+    * code reuse"). */
+  val CodegenCacheEntries: Int = 4096
 }

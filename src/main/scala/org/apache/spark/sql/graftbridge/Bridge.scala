@@ -19,4 +19,12 @@ object Bridge {
     * private[spark]). */
   def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** Sets `key` on the active SparkContext's conf unless it is already
+    * set there, so a value the user gave always wins (`getActive` and
+    * `conf` are private[spark]). No-op without an active context. */
+  def defaultConf(key: String, value: String): Unit =
+    org.apache.spark.SparkContext.getActive.foreach { sc =>
+      if (!sc.conf.contains(key)) sc.conf.set(key, value)
+    }
 }

@@ -1,11 +1,57 @@
 package graft
 
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
+
 /** Driver-contract invariants: every oracle entry has a query, the
   * flagship smoke query returns rows, and every declared query runs
-  * non-empty at the smoke scale factor with a sane schema. */
+  * non-empty at the smoke scale factor with a sane schema. The engine's
+  * session keeps the code it generates: a second pass of the pair tier
+  * hits Spark's compiled-class cache instead of recompiling. */
 class SparkEntrySpec extends SparkSpec {
 
   private val smokeDir = "/root/testdata/sf0.001"
+
+  /** The ten pair-tier queries of graftbench's `Pipelines.Pairs`. */
+  private val pairs = Seq(
+    "dedup_jaccard_pairs", "dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_containment", "dedup_winnow_pairs", "tfidf_cosine_pairs",
+    "dedup_components", "fuzzy_components",
+    "dedup_components_incremental_banded", "source_overlap")
+
+  test("the shared session sizes the codegen cache to the engine's default") {
+    spark // SQLConf.get reads the active session's conf
+    assert(SQLConf.get.codegenCacheMaxEntries === GraftExtensions.CodegenCacheEntries)
+  }
+
+  test("Bridge.defaultConf sets an unset key and leaves a user-set one unchanged") {
+    val sc = spark.sparkContext
+    // SparkSpec's builder set the time zone on the context conf
+    Bridge.defaultConf("spark.sql.session.timeZone", "America/Chicago")
+    assert(sc.getConf.get("spark.sql.session.timeZone") === "UTC")
+    val unset = "spark.graft.spec.defaultConf"
+    Bridge.defaultConf(unset, "on")
+    assert(sc.getConf.get(unset) === "on")
+  }
+
+  test("a warm pass of the pair tier does not recompile its generated code") {
+    val registry = SparkEntry.queries
+    def pass(): (Seq[Int], CodegenStats) = {
+      val before = CodegenStats.now()
+      val rows = pairs.map(q => registry(q)(spark, smokeDir).collect().length)
+      (rows, CodegenStats.now() - before)
+    }
+    val (rows1, first) = pass()
+    val (rows2, second) = pass()
+    assert(rows1 === rows2)
+    // measured on 4 cores, compiles in the first / second pass: 505 / 24
+    // alone, 318 / 16 in the full suite, 203 / 22 after PipelineOpsSpec
+    // and the registry-wide test below; 681 / 465 at Spark's 100-entry
+    // cache. The cache is JVM-wide, so earlier suites warm the first
+    // pass; a quarter keeps a 2x margin over the warmest order measured.
+    assert(second.compiles * 4 <= first.compiles,
+      s"first pass: $first; second pass: $second")
+  }
 
   test("oracleSql keys are a subset of queries keys") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
