@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
-# Dump `.explain("formatted")` for a list of declared queries into
-# per-query files: scripts/dump_plans.sh <outdir> <suffix> <query...>
-# Runs graft.Explain once (sf from SPARK_GRAFT_SF_DIR, default sf0.001)
-# and splits the "========== name ==========" sections.
+# Dump `.explain("formatted")` for declared queries into per-query
+# files: scripts/dump_plans.sh <outdir> <suffix> [query...]
+# With no query names it dumps every declared query. Runs graft.Explain
+# once (sf from SPARK_GRAFT_SF_DIR, default sf0.001) and splits the
+# "========== name ==========" sections into <outdir>/<name>_<suffix>.txt.
 set -euo pipefail
 out="$1"; suffix="$2"; shift 2
 mkdir -p "$out"

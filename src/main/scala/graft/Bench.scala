@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line (driver contract).
   * An untimed warm-up action absorbs JVM/session/parquet-footer startup
@@ -11,17 +9,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(cpus.toInt)
 
     // Warm-up (untimed): JVM classloading, codegen, parquet footers.
     Tables.All.foreach(t => Tables.load(spark, sfDir, t).count())
@@ -378,9 +366,10 @@ object Bench {
     // anchor samples compile nothing at either end (the `[bench]
     // codegen` lines: PRE 15 and POST 0 compiles, all in the untimed
     // warm-up); the cpufreq ramp remains a guess. The within-run gate
-    // refused 4 of 6 clean r15 captures, and AnchorCurve refuted the
-    // warm-up fix (a fresh JVM plateaus at ~0.27-0.29 s; ~90 s of diverse
-    // warm-up jobs never reaches the post-suite fast state). The sound
+    // refused 4 of 6 clean r15 captures, and a 40-sample anchor curve
+    // refuted the warm-up fix (a fresh JVM plateaus at ~0.27-0.29 s;
+    // ~90 s of diverse warm-up jobs never reaches the post-suite fast
+    // state; docs/THROUGHPUT.md). The sound
     // start-state comparison is LIKE-STATE vs LIKE-STATE across
     // captures: this run's PRE anchors (fresh-JVM, pre-ramp) against
     // the previous artifact's PRE anchors. Band stays 1.25×; the old

@@ -168,18 +168,6 @@ object Cli {
     stage1 ++ stage2 ++ stage3
   }
 
-  private def session(cores: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def renderReportMain(args: Seq[String]): Unit = {
     var threadsList = Seq(1, 2, 4)
     val rest = Vector.newBuilder[String]
@@ -201,14 +189,14 @@ object Cli {
     // reference's one process per `-p`; Spark can't resize a local
     // master in place
     threadsList.foreach { p =>
-      val s = session(p.toString)
+      val s = GraftExtensions.session(p)
       try BenchHarness.writeNamedCsv(
         BenchHarness.run(s, cfg.bench.copy(algos = Seq("basic"))),
         resultsDir, s"results_spark_parallel_${p}threads.csv")
       finally s.stop()
     }
     // Stage-2 grid at full width
-    val s = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val s = GraftExtensions.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try {
       BenchHarness.writeNamedCsv(
         BenchHarness.run(s, cfg.bench.copy(
@@ -225,16 +213,9 @@ object Cli {
     }
     val cfg = parse(args.toIndexedSeq)
     val cores =
-      if (cfg.threads > 0) cfg.threads.toString
-      else sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      if (cfg.threads > 0) cfg.threads
+      else sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftExtensions.session(cores)
     val results = BenchHarness.run(spark, cfg.bench)
     BenchHarness.writeCsv(results, cfg.out)
     results.show(numRows = 1000, truncate = false)

@@ -1,38 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan auditor: prints the formatted physical plan of selected declared
-  * queries so scan pruning (ReadSchema), filter pushdown (PushedFilters),
-  * join strategies (Broadcast vs SortMerge) and WholeStageCodegen spans
-  * can be inspected and iterated on — the "is this the plan you'd want at
-  * 100 TB" loop.
+/** Plan auditor: prints the formatted physical plan of declared queries
+  * so scan pruning (ReadSchema), filter pushdown (PushedFilters), join
+  * strategies (Broadcast vs SortMerge) and WholeStageCodegen spans can
+  * be inspected and iterated on — the "is this the plan you'd want at
+  * 100 TB" loop. With no names it explains every declared query, in
+  * name order.
   *
   *   sbt "runMain graft.Explain [queryName ...]"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val names =
-      if (args.nonEmpty) args.toSeq
-      else Seq("matmul_basic", "spmm_sparse", "q3_revenue", "doc_stats",
-        "knn_brute_force", "dedup_exact_groups", "q5_local_supplier",
-        "dedup_embedding", "dedup_minhash_lsh", "matmul_large",
-        "doc_repetition", "contamination_hits", "corpus_ngrams",
-        "pagerank3", "embedding_gram", "tfidf_cosine_pairs",
-        "dedup_winnow_pairs", "gram_power_iteration", "kmeans_round",
-        "dedup_incremental_simhash", "pack_chunks")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val qmap = SparkEntry.queries
+    val names = if (args.nonEmpty) args.toSeq else qmap.keys.toSeq.sorted
+    val spark = GraftExtensions.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
-      SparkEntry.queries.get(name) match {
+      qmap.get(name) match {
         case Some(fn) => fn(spark, sfDir).explain("formatted")
         case None     => println(s"unknown query: $name")
       }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -105,4 +105,24 @@ object GraftExtensions {
     * pass with headroom (working sets in docs/THROUGHPUT.md, "Generated-
     * code reuse"). */
   val CodegenCacheEntries: Int = 4096
+
+  /** The engine session every main builds: `local[cores]` with as many
+    * shuffle partitions, AQE with partition coalescing, UTC session
+    * time, `nanosAsLong` (events.ts), these extensions, no UI, and WARN
+    * logging. `getOrCreate`, so a second call in one JVM returns the
+    * live session. */
+  def session(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

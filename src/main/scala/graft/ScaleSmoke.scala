@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Dedup, EventOps, Graph, MatrixOps, Multimodal,
@@ -38,8 +38,8 @@ import graft.streaming.{DocStream, EventStream}
   * Dev subset: SPARK_GRAFT_ONLY=op1,op2 (same contract as Bench).
   */
 object ScaleSmoke {
-  // private[graft]: OpsScaleProbe/MinhashScaleProbe reuse the exact
-  // replica constructions so probe corpora match the smoke's
+  // private[graft]: OpsScaleProbe reuses the exact replica
+  // constructions so probe corpora match the smoke's
   private[graft] def scaledDocs(docs: DataFrame, factor: Int, stride: Long): DataFrame =
     (0 until factor).map { k =>
       val d = docs.withColumn("doc_id", col("doc_id") + lit(k * stride))
@@ -98,15 +98,7 @@ object ScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(cpus.toInt)
 
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -633,7 +625,8 @@ object ScaleSmoke {
     // D (1600 ≈ p50) was measured at 19.7×/×10 here — the hot-mass
     // worst case recorded in TFIDF_CAPSCALE_r13.json and PLANS.md,
     // exactly what the siting rule exists to avoid. The heavy-tail WIN
-    // is the TfidfShardProbe growth leg, where postings DO grow. ----
+    // is the `growth` leg of TFIDF_SHARD_r13.json, where
+    // postings DO grow. ----
     val perturbedOps: Seq[Op] = Seq(
       Op("tfidf_cosine_pairs", d => TextOps.tfidfCosinePairs(d, 10, 60),
         "pdoc", cand = Some(d => TextOps.tfidfCosinePairs(d, 10, 0))),

@@ -70,7 +70,7 @@ object Dedup {
     * on the frequency-weighted fingerprint, not for token-SET Jaccard:
     * two docs with J = 0.9 but different term frequencies can sit far
     * apart in simhash space. On the sf0.1 rep graph (4266 reps, 26 885
-    * true J ≥ 0.9 pairs; `graft.HybridProbe`): k = 4 misses 22 858 of
+    * true J ≥ 0.9 pairs): k = 4 misses 22 858 of
     * the true pairs (85%), k = 12 still misses 606, and the first
     * full-recall width is k = 20 — where the 3-bit bands emit 61.9 M
     * candidates, 2300× the true pair count, so the verify stage alone
@@ -174,7 +174,10 @@ object Dedup {
     * corpus (junk pairs at J≈0.3 collide a band at J²≈0.09 vs
     * J⁴≈0.008) — recall insurance priced in candidate verify work. The index at
     * `bandIndexPath` must have been saved with the SAME
-    * (numHashes, bands).
+    * (numHashes, bands), and must exist before the first serve: a
+    * missing, empty or mixed-width index fails loudly
+    * ([[bandPfxWidthOf]]) — a first-ever batch bootstraps the index
+    * with [[saveLshBandIndex]] rather than serving against nothing.
     *
     * HOT-BAND BOUND (r18, the r17 verdict #1 — the classic LSH
     * hot-key blowup): without a cap, one degenerate band fingerprint
@@ -202,8 +205,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, corpus: DataFrame, bandIndexPath: String,
       thresholdTenths: Int, numHashes: Int = 32,
-      bands: Int = 8, maxBandPostings: Long = 100000L,
-      skinnyVerify: Boolean = false): DataFrame = {
+      bands: Int = 8, maxBandPostings: Long = 100000L): DataFrame = {
     val t = thresholdTenths
     val width = bandPfxWidthOf(spark, bandIndexPath)
     val qb = lshBandFpRows(minhashSignatures(batch, numHashes),
@@ -242,44 +244,26 @@ object Dedup {
         Seq("doc_id"), "left_semi"))
       .select(col("lang").as("lang2"), col("doc_id").as("d2"),
         col("toks").as("toks2"), col("n").as("n2"))
-    def verdict(pairs: DataFrame): DataFrame = pairs
+    // single-pass verify: arrays attach once, lang/length filters
+    // evaluate before the intersect kernel (Catalyst keeps the
+    // predicate order), each relation consumed exactly once. A
+    // skinny-first shape (lang/length prune on small rows, arrays
+    // attached to survivors only) measured a tie on the self-similar
+    // fixture — most candidates pass the prune, so the second pair
+    // join re-pays itself (2.84 s single-pass vs 2.65 s skinny,
+    // OPTIMIZATION_r19.md §5b); it only pays on length-heterogeneous
+    // corpora where the prune is selective.
+    cand.join(b0, "d1").join(c0, "d2")
+      // lang blocking, as the exact tier's join-on-lang enforces
+      .filter(col("lang") === col("lang2"))
+      .filter(col("n1") * t <= col("n2") * 10 &&
+        col("n2") * t <= col("n1") * 10)
       .withColumn("inter", graft.functions.VectorFunctions
         .sortedIntersectCount(col("toks1"), col("toks2")))
       .withColumn("uni", col("n1") + col("n2") - col("inter"))
       .filter(col("inter") * 10 >= col("uni") * t)
       .select(col("d1"), col("d2"), col("inter"), col("uni"),
         (col("inter").cast("double") / col("uni")).as("jaccard"))
-    if (!skinnyVerify) {
-      // single-pass verify: arrays attach once, lang/length filters
-      // evaluate before the intersect kernel (Catalyst keeps the
-      // predicate order), each relation consumed exactly once
-      verdict(cand.join(b0, "d1").join(c0, "d2")
-        // lang blocking, as the exact tier's join-on-lang enforces
-        .filter(col("lang") === col("lang2"))
-        .filter(col("n1") * t <= col("n2") * 10 &&
-          col("n2") * t <= col("n1") * 10))
-    } else {
-      // SKINNY-FIRST probe shape (guide §2.3/§8: decide with small
-      // rows, attach arrays only to lang/length survivors; arrays pin
-      // because both passes consume them). MEASURED NOT PAYING on the
-      // fixture (`OpsScaleProbe banded`): the self-similar corpus
-      // passes most candidates through the lang/length prune, so the
-      // second pass re-pays the pair join for no byte savings. Kept as
-      // the probe-selectable shape because its win condition —
-      // length-heterogeneous corpora where the prune is selective —
-      // is the 100 TB crawl shape, and the accounting (keep vs cand
-      // counts) is what sizes that decision.
-      val b = b0.localCheckpoint(eager = false)
-      val c = c0.localCheckpoint(eager = false)
-      val keep = cand
-        .join(b.select(col("d1"), col("lang"), col("n1")), "d1")
-        .join(c.select(col("d2"), col("lang2"), col("n2")), "d2")
-        .filter(col("lang") === col("lang2"))
-        .filter(col("n1") * t <= col("n2") * 10 &&
-          col("n2") * t <= col("n1") * 10)
-        .select("d1", "d2")
-      verdict(keep.join(b, "d1").join(c, "d2"))
-    }
   }
 
   /** The skip ACCOUNTING for [[jaccardPairsAgainstCorpusBanded]]'s
@@ -954,8 +938,7 @@ object Dedup {
     *     e.g. incremental batches with few dups against a huge gram
     *     universe. */
   private[graft] def jaccardPairsOf(tok: DataFrame, thresholdTenths: Int,
-                             rankByFrequency: Boolean = true,
-                             pinDocTokens: Boolean = false): DataFrame = {
+                             rankByFrequency: Boolean = true): DataFrame = {
     val t = thresholdTenths
     // (r18 optimization round: a lazy localCheckpoint of `tok` was
     // measured here and REJECTED — the postings relation is cheap to
@@ -965,21 +948,17 @@ object Dedup {
     // word tier flat-to-worse. The win of that shape belongs to
     // SMALL-after-expensive relations.
     // r19 re-measured the AGGREGATED docTokens relation the same way
-    // and it is ALSO REJECTED on the declared input shape —
-    // `OpsScaleProbe pairspin`, one JVM, min-of-2 over the raw parquet
-    // scan: word tier 2.77 s both ways, ngram tier 2.80 → 4.15 s
-    // pinned. The pin only wins when the INPUT relation is itself a
-    // materialized checkpoint (word tier 5.74 → 2.66 s on a
-    // checkpointed docs input, where every re-run re-reads the
-    // checkpoint's collapsed partitioning) — the declared queries scan
-    // parquet, so the knob stays off and is kept for the probe.)
+    // and it is ALSO REJECTED on the declared input shape — one JVM,
+    // min-of-2 over the raw parquet scan (OPTIMIZATION_r19.md §4): word
+    // tier 2.77 s both ways, ngram tier 2.80 → 4.15 s pinned. The pin
+    // only wins when the INPUT relation is itself a materialized
+    // checkpoint (word tier 5.74 → 2.66 s on a checkpointed docs
+    // input, where every re-run re-reads the checkpoint's collapsed
+    // partitioning) — the declared queries scan parquet.)
     // Per-doc SORTED id arrays + counts (verification side): sorted so
     // the verify kernel is a linear primitive merge, not a hash probe.
-    val docTokens0 = tok.groupBy("doc_id", "lang")
+    val docTokens = tok.groupBy("doc_id", "lang")
       .agg(sort_array(collect_list(col("tid"))).as("toks"), count(lit(1)).as("n"))
-    val docTokens =
-      if (pinDocTokens) docTokens0.localCheckpoint(eager = false)
-      else docTokens0
     // prefix length = n − ⌈t·n⌉ + 1  (integer ceil: (t·n + 9) div 10)
     val prefixLen = col("n") - ((col("n") * t + 9) / 10).cast("long") + 1
     val prefix = if (rankByFrequency) {
@@ -1274,8 +1253,7 @@ object Dedup {
     * the decision needs memo-stable plans, which the checkpointed rep
     * relation this method receives cannot key). */
   private[graft] def containmentPairsOf(docs: DataFrame, thresholdTenths: Int,
-                                 bruteVerify: Boolean = false,
-                                 spreadProbe: Boolean = true): DataFrame = {
+                                 bruteVerify: Boolean = false): DataFrame = {
     val t = thresholdTenths
     if (bruteVerify) {
       // all ordered same-lang rep pairs, arrays INLINE in the join (a
@@ -1294,11 +1272,10 @@ object Dedup {
       // intersect fan-out (9.1 M pairs at sf0.1), not the input size
       // — so the whole verify ran on one core. Explicit count
       // disables AQE's byte-based coalescing, exactly as the prefix
-      // path already does for its candidate fan-out. `spreadProbe`
-      // false is the probe's A/B knob (`OpsScaleProbe containment`).
-      (if (spreadProbe) probeSide.repartition(
+      // path already does for its candidate fan-out. One JVM, outputs
+      // equal: verify 2.22 → 0.98 s (OPTIMIZATION_r19.md §7).
+      probeSide.repartition(
           docs.sparkSession.sparkContext.defaultParallelism, col("d1"))
-       else probeSide)
         .join(broadcast(docTokens.select(col("lang"),
           col("doc_id").as("d2"), col("toks").as("toks2"))), "lang")
         .filter(col("d1") =!= col("d2"))
@@ -1712,8 +1689,14 @@ object Dedup {
     * `numHashes` minhashes agreeing, the same estimate the batch LSH
     * tier thresholds. Per batch doc: candidate count, best overlap,
     * twin count at `minMatches`, and the keep verdict (no candidate ⇒
-    * fail open, novel content must survive). Corpus vectors of the
-    * lake: signatures only — the index IS the serving relation.
+    * keep, novel content must survive). Corpus vectors of the lake:
+    * signatures only — the index IS the serving relation.
+    *
+    * PRECONDITION: the index must exist ([[saveLshBandIndex]]) before
+    * the first serve. "No candidate ⇒ keep" covers novel docs against
+    * an existing index, not a first-ever ingest: a missing, empty or
+    * mixed-width index fails loudly ([[bandPfxWidthOf]]) instead of
+    * serving an empty match set.
     *
     * REGIME RULE (the `buildShards` contract, one module over): a
     * point/small-batch probe broadcast-joins — the batch's band rows

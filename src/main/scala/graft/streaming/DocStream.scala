@@ -245,9 +245,13 @@ object DocStream {
     * QUARANTINE feed (docs with ≥1 corpus twin at `minMatches`), the
     * [[contaminationStream]] convention — novel docs flow through the
     * pipeline unflagged, which is the streaming spelling of the batch
-    * op's fail-open arm. The batch tier's static prefix pruning has no
-    * stream analog (an `isin` literal cannot adapt per micro-batch);
-    * the static side is still the signature-width index, never text.
+    * op's "no candidate ⇒ keep" arm. That arm assumes an index: it must
+    * exist ([[graft.operators.Dedup.saveLshBandIndex]]) before the
+    * stream is declared, and a missing one fails at declaration rather
+    * than passing every doc through. The batch tier's static prefix
+    * pruning has no stream analog (an `isin` literal cannot adapt per
+    * micro-batch); the static side is still the signature-width index,
+    * never text.
     */
   def lshIndexIngestStream(spark: org.apache.spark.sql.SparkSession,
                            docs: DataFrame, path: String,

@@ -105,8 +105,8 @@ object VecStream {
     * No rank window (illegal on an unbounded stream), no state
     * store. Per-row cost is dim·cw multiplies plus one m-length
     * index lookup — constant, the line-rate shape; steady-state
-    * ingest rows/s measured in STREAM_PROBE_r13.json
-    * ([[graft.VecStreamProbe]] `pq_encode` leg). Output: (vec_id, ts,
+    * ingest rows/s measured in STREAM_PROBE_r13.json (`pq_encode`
+    * leg). Output: (vec_id, ts,
     * subspace, code, dist) append rows — the [[Similarity.pqCodes]]
     * contract plus the event time. The persisted book has
     * caller-owned lifecycle ([[DocStream.fuzzyIngestStream]]'s

@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Mechanical pin of the docs ledger (the r8/r9 verdicts' repeated
   * doc-drift ask): the query and test counts README.md and ENGINE.md
   * claim must equal what the code actually declares, so the claims
-  * can never silently lag a round's additions again. No SparkSession —
-  * the registry is a pure Map and the test census is a source grep. */
+  * can never silently lag a round's additions again; likewise the
+  * mains ENGINE.md lists and the single session builder. No
+  * SparkSession — the registry is a pure Map and the censuses are
+  * source greps. */
 class DocsLedgerSpec extends AnyFunSuite {
 
   private def read(p: String): String = Files.readString(Paths.get(p))
@@ -51,5 +53,28 @@ class DocsLedgerSpec extends AnyFunSuite {
     assert(claim.nonEmpty, "README must state the ScalaTest count")
     assert(claim.get.group(1).toInt === testCount,
       s"README claims ${claim.get.group(1)} tests; census counts $testCount")
+  }
+
+  test("src/main mains match ENGINE's Running block; one session builder") {
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map(Files.readString).toSeq
+    // a main belongs to the last `object` declared before it
+    val objectDecl = raw"\bobject\s+(\w+)".r
+    val mains = sources.flatMap { src =>
+      raw"\bdef main\(".r.findAllMatchIn(src).map { m =>
+        objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+      }
+    }
+    val running = read("ENGINE.md").split("\n## Running", 2)(1)
+      .split("\n## ", 2)(0)
+    val documented = raw"runMain graft\.(\w+)".r.findAllMatchIn(running)
+      .map(_.group(1)).toSet
+    assert(mains.toSet === documented,
+      "every main in src/main is listed in ENGINE.md's Running block, " +
+        "and every listed main exists")
+    val builders = sources.map(raw"SparkSession\.builder\(\)".r
+      .findAllIn(_).size).sum
+    assert(builders === 1,
+      "sessions are built only by GraftExtensions.session")
   }
 }
