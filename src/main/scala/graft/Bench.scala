@@ -29,23 +29,12 @@ object Bench {
     // repeat costs <1 s each by construction.
     // Dev-only subset filter (SPARK_GRAFT_ONLY=q1,q2) for tuning a hot
     // query without paying for the whole suite; driver sets it never.
-    // Trimmed + validated: a typo'd name would otherwise bench an empty
-    // suite and print a suspiciously fast "clean" total.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not declared: " +
-        unknown.toSeq.sorted.mkString(", "))
-    }
-    // capture the query map ONCE: `queries` is a def that rebuilds the
-    // full 100+-entry Map per lookup — inside the timed region that
-    // construction cost would fold into every sample
-    val qmap = SparkEntry.queries
-    val suite = qmap.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // An undeclared name fails: a typo'd name would otherwise bench an
+    // empty suite and print a suspiciously fast "clean" total.
+    val only = SparkEntry.onlyNames
+    val suite = SparkEntry.select(only).map(_.name)
     def once(name: String): Double = {
-      val fn = qmap(name)
+      val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -159,17 +148,17 @@ object Bench {
     val (calibPre, calibStrPre) =
       compiling("pre anchors")((calibrate(), calibrateStr()))
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    compiling("pass 1")(suite.foreach { case (name, _) => best(name) = once(name) })
+    compiling("pass 1")(suite.foreach { name => best(name) = once(name) })
     // pass 2: every non-failed query (don't re-run failures — a slow
     // failure would double the wall cost with no effect on the -1.0)
-    compiling("pass 2")(suite.foreach { case (name, _) =>
+    compiling("pass 2")(suite.foreach { name =>
       if (best(name) >= 0) once(name) match {
         case t if t >= 0 => best(name) = math.min(best(name), t)
         case _ =>
       }
     })
     // pass 3: sub-second queries only
-    compiling("pass 3")(suite.foreach { case (name, _) =>
+    compiling("pass 3")(suite.foreach { name =>
       if (best(name) >= 0 && best(name) < 1.0) once(name) match {
         case t if t >= 0 => best(name) = math.min(best(name), t)
         case _ =>
@@ -312,7 +301,7 @@ object Bench {
     def regressed(cur: Double, p: Double): Boolean =
       p > 0 && cur - p > 0.3 &&
         (cur > 1.5 * p || (p > 2.0 && cur > 1.3 * p))
-    val flagged = suite.collect { case (name, _)
+    val flagged = suite.collect { case name
       if best(name) >= 0 && prevQ.get(name).exists(p =>
         regressed(best(name), p)) && floorQ.get(name).exists(p =>
         regressed(best(name), p)) => name }

@@ -4,24 +4,20 @@ package graft
   * so scan pruning (ReadSchema), filter pushdown (PushedFilters), join
   * strategies (Broadcast vs SortMerge) and WholeStageCodegen spans can
   * be inspected and iterated on — the "is this the plan you'd want at
-  * 100 TB" loop. With no names it explains every declared query, in
-  * name order.
+  * 100 TB" loop. It explains the named queries, or every declared
+  * query with no names, in name order; an undeclared name fails.
   *
   *   sbt "runMain graft.Explain [queryName ...]"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val qmap = SparkEntry.queries
-    val names = if (args.nonEmpty) args.toSeq else qmap.keys.toSeq.sorted
+    val suite = SparkEntry.select(args.toSeq)
     val spark = GraftExtensions.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
-      println(s"\n========== $name ==========")
-      qmap.get(name) match {
-        case Some(fn) => fn(spark, sfDir).explain("formatted")
-        case None     => println(s"unknown query: $name")
-      }
+    suite.foreach { q =>
+      println(s"\n========== ${q.name} ==========")
+      q.build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

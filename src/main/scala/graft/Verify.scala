@@ -1,30 +1,23 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registry query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`scripts/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftExtensions.session(cpus.toInt)
-    new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (same contract as Bench's): verify one hot
     // query without paying for the whole suite. Driver sets it never —
     // oracle_sql.json is filtered identically so check_oracle.py sees a
     // consistent dump.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .map(_.filter { n =>
-        val ok = SparkEntry.queries.contains(n)
-        if (!ok) System.err.println(s"[verify] no such query: $n")
-        ok
-      })
-    def wanted(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val suite = SparkEntry.select(SparkEntry.onlyNames)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftExtensions.session(cpus.toInt)
+    new java.io.File(outDir).mkdirs()
+    suite.foreach { row =>
+      try row.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${row.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${row.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -39,8 +32,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = suite.map(row => s"${q(row.name)}: ${q(row.oracle)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

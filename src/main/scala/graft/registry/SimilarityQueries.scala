@@ -1,0 +1,966 @@
+package graft
+package registry
+
+import org.apache.spark.sql.functions._
+import graft.operators.{Curation, Similarity}
+
+import graft.SparkEntry._
+
+/** Similarity search (north star; [[graft.operators.Similarity]]):
+  * exact, IVF, PQ and sign-sketch ANN tiers over `embeddings`. */
+private[graft] object SimilarityQueries {
+  /** `ann_srp` sign-sketch width in bits (⌈bits/62⌉ long words);
+    * `ann_srp_rerank`'s Hamming prefilter depth (query + oracle).
+    * r11, chosen from ANN_QUANT_PROBE_r11.json: 32 bits / prefilter 20
+    * measured 120 milli mean recall@5 — this corpus's cosine spectrum
+    * (rank-5 ≈ 0.30 vs rank-50 ≈ 0.16) needs production-width
+    * sketches; 256/50 is the knee of the sweep. */
+  private val SrpBits = 256
+  private val SrpPrefilter = 50
+
+  /** `ann_ivf_pq_rerank` two-stage serving knobs (query + oracle),
+    * chosen from ANN_QUANT_PROBE_r13.json `ivfpq_rerank` (prefilter
+    * 10/25/50 × probes 1/2/3 at the declared PqM/PqCw book):
+    * prefilter 25 / probes 3 measures 960 mean / 800 min milli
+    * recall@5 — EQUAL to the `ivf_exact` coarse ceiling at the same
+    * probes (880/880/960 at p1/p2/p3), i.e. the exact re-rank fully
+    * recovers the ADC quantization loss (raw ivfpq tier: 600-680) and
+    * deepening past 25 buys nothing (pre50 ≡ pre25 at every probe). */
+  private val PqRerankPrefilter = 25
+  private val PqRerankProbes = 3
+
+  /** `pq_incremental_codes` frozen-book width: the id-lower corpus
+    * HALF at the verify SF holds ~250 vectors, so the production
+    * PqCw = 256 would seed more codewords than training rows
+    * (memorization, dist ≡ 0); 64 keeps the incremental book's
+    * training honest at every test SF. In production the ingest path
+    * reads whatever width the versioned offline book was trained at. */
+  private val PqIncCw = 64
+
+  /** `pq_residual_codes`/`ann_ivf_rpq`: residual subspace count and
+    * Lloyd-trained residual codewords per subspace (query + oracle,
+    * chosen from ANN_QUANT_PROBE_r11.json). */
+  private val RpqM = 32
+  private val RpqGroups = 128
+
+  /** `qclf_*` perceptron shape: hashed feature buckets + full-batch
+    * rounds (query + oracle — the oracle replays every round). */
+  private val QclfCfg = graft.operators.Curation.PerceptronConfig(
+    buckets = 64, rounds = 3)
+
+  /** Generated oracle for the batch-perceptron queries: round r's
+    * weights are a CTE chain (margins under w_{r-1} → misclassified
+    * set → Σ y·x delta → w_r), the same all-integer recurrence the
+    * Spark loop runs — `which` selects the final-weights or the
+    * per-doc score projection. */
+  private def qclfSql(which: String): String = {
+    val f = QclfCfg.buckets
+    val rounds = QclfCfg.rounds
+    val minStop = Gopher.minStopHits
+    val stop = graft.operators.Curation.GopherStopWords
+      .map(w => s"'$w'").mkString(", ")
+    val base =
+      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+         |  FROM documents),
+         |fx AS (SELECT doc_id,
+         |    CAST(concat('0x', substr(md5(token), 1, 15)) AS BIGINT) % $f AS b,
+         |    CAST(COUNT(*) AS BIGINT) AS x
+         |  FROM tok GROUP BY 1, 2),
+         |f AS (SELECT * FROM fx
+         |  UNION ALL
+         |  SELECT doc_id, CAST($f AS BIGINT), CAST(1 AS BIGINT) FROM documents),
+         |l AS (SELECT doc_id,
+         |    CASE WHEN len(list_filter(string_split(text, ' '),
+         |      w -> w IN ($stop))) >= $minStop
+         |    THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS y
+         |  FROM documents),
+         |w1 AS (SELECT f.b, CAST(SUM(l.y * f.x) AS BIGINT) AS w
+         |  FROM f JOIN l USING (doc_id) GROUP BY 1)""".stripMargin
+    val roundCtes = (2 to rounds).map { r =>
+      s"""m$r AS (SELECT f.doc_id, CAST(SUM(w.w * f.x) AS BIGINT) AS margin
+         |  FROM f JOIN w${r - 1} w ON f.b = w.b GROUP BY 1),
+         |mis$r AS (SELECT m.doc_id, l.y FROM m$r m JOIN l USING (doc_id)
+         |  WHERE l.y * m.margin <= 0),
+         |d$r AS (SELECT f.b, CAST(SUM(mis.y * f.x) AS BIGINT) AS dw
+         |  FROM f JOIN mis$r mis USING (doc_id) GROUP BY 1),
+         |w$r AS (SELECT w.b, CAST(w.w + COALESCE(d.dw, 0) AS BIGINT) AS w
+         |  FROM w${r - 1} w LEFT JOIN d$r d ON w.b = d.b)""".stripMargin
+    }
+    val ctes = (base +: roundCtes).mkString(",\n")
+    val tail = which match {
+      case "weights" => s"SELECT b, w FROM w$rounds ORDER BY b"
+      case "score" =>
+        s"""fm AS (SELECT f.doc_id, CAST(SUM(w.w * f.x) AS BIGINT) AS margin
+           |  FROM f JOIN w$rounds w ON f.b = w.b GROUP BY 1)
+           |SELECT fm.doc_id, l.y, fm.margin,
+           |  CASE WHEN fm.margin >= 0 THEN CAST(1 AS BIGINT)
+           |       ELSE CAST(-1 AS BIGINT) END AS pred,
+           |  (CASE WHEN fm.margin >= 0 THEN 1 ELSE -1 END) = l.y AS correct
+           |FROM fm JOIN l USING (doc_id) ORDER BY fm.doc_id""".stripMargin
+    }
+    if (which == "score") s"$ctes,\n$tail" else s"$ctes\n$tail"
+  }
+
+  /** RESIDUAL per-subspace slices: `sv` carries q = quantized value
+    * minus the vector's assigned Lloyd-cell centroid dim (requires
+    * [[sqlCellCtes]] in scope). */
+  private def sqlSvResidual(m: Int): String =
+    s"""sv AS (SELECT v.vec_id, CAST((v.d - 1) // ${64 / m} AS BIGINT) AS sub,
+       |  v.d, v.q - c.cqd AS q
+       |  FROM qv v JOIN casg a ON a.vec_id = v.vec_id
+       |  JOIN ccq c ON c.cluster = a.cluster AND c.d = v.d)""".stripMargin
+
+  /** Residual IVF-ADC oracle: Lloyd cells + residual slices + trained
+    * residual book, then per-(query, probed cell) residual distance
+    * tables — multi-probe in residual space carries one table per
+    * cell, each its own residual frame. */
+  private def sqlAnnIvfRpq(probes: Int): String =
+    s"""WITH $SqlQv,
+       |${sqlCellCtes(IvfCells, IvfCellRounds)},
+       |${sqlSvResidual(RpqM)},
+       |${sqlPqTrainCtes(RpqGroups, PqRounds)},
+       |best AS (SELECT vec_id AS qid, cluster AS cell FROM (
+       |    SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY dist, cluster) AS crn
+       |    FROM cdist WHERE vec_id < 5) t WHERE crn <= $probes),
+       |qres AS (SELECT b.qid, b.cell, v.d,
+       |    CAST((v.d - 1) // ${64 / RpqM} AS BIGINT) AS sub,
+       |    v.q - c.cqd AS r
+       |  FROM best b JOIN qv v ON v.vec_id = b.qid
+       |  JOIN ccq c ON c.cluster = b.cell AND c.d = v.d),
+       |qd AS (SELECT q.qid, q.cell, q.sub, b.code,
+       |    CAST(SUM((q.r - b.cs) * (q.r - b.cs)) AS BIGINT) AS qdist
+       |  FROM qres q JOIN pbook b ON q.sub = b.sub AND q.d = b.d
+       |  GROUP BY 1, 2, 3, 4),
+       |cand AS (SELECT b.qid, b.cell, a.vec_id
+       |         FROM best b JOIN casg a
+       |           ON a.cluster = b.cell AND a.vec_id <> b.qid),
+       |ad AS (
+       |  SELECT cand.qid, cand.cell, cand.vec_id, SUM(qd.qdist) AS adist
+       |  FROM cand JOIN pcodes c ON c.vec_id = cand.vec_id
+       |  JOIN qd ON qd.qid = cand.qid AND qd.cell = cand.cell
+       |    AND qd.sub = c.sub AND qd.code = c.code
+       |  GROUP BY 1, 2, 3),
+       |rr AS (SELECT qid, cell, vec_id, CAST(adist AS BIGINT) AS adist,
+       |    row_number() OVER (PARTITION BY qid ORDER BY adist, vec_id) AS rn
+       |  FROM ad)
+       |SELECT qid, cell, vec_id, adist, CAST(rn AS BIGINT) AS rn
+       |FROM rr WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+
+  /** IVF-PQ oracle, parameterized by probe count and depth (mirrors
+    * [[Similarity.annIvfPq]]: Lloyd cells probed by exact
+    * query-to-centroid squared-L2, trained-book ADC rank inside; `k`
+    * generalizes the cut so the rerank oracle can reuse the chain at
+    * shortlist depth). */
+  private def sqlAnnIvfPq(probes: Int, k: Int = 5): String =
+    s"""WITH $SqlQv,
+       |${sqlCellCtes(IvfCells, IvfCellRounds)},
+       |${sqlSvRaw(PqM)},
+       |${sqlPqTrainCtes(PqCw, PqRounds)},
+       |qd AS (SELECT vec_id AS qid, sub, code, dist AS qdist
+       |       FROM pdist WHERE vec_id < 5),
+       |best AS (SELECT vec_id AS qid, cluster AS cell FROM (
+       |    SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY dist, cluster) AS crn
+       |    FROM cdist WHERE vec_id < 5) t WHERE crn <= $probes),
+       |cand AS (SELECT b.qid, b.cell, a.vec_id
+       |         FROM best b JOIN casg a
+       |           ON a.cluster = b.cell AND a.vec_id <> b.qid),
+       |ad AS (
+       |  SELECT cand.qid, cand.cell, cand.vec_id, SUM(qd.qdist) AS adist
+       |  FROM cand JOIN pcodes c ON c.vec_id = cand.vec_id
+       |  JOIN qd ON qd.qid = cand.qid AND qd.sub = c.sub
+       |    AND qd.code = c.code
+       |  GROUP BY 1, 2, 3),
+       |rr AS (SELECT qid, cell, vec_id, CAST(adist AS BIGINT) AS adist,
+       |    row_number() OVER (PARTITION BY qid ORDER BY adist, vec_id) AS rn
+       |  FROM ad)
+       |SELECT qid, cell, vec_id, adist, CAST(rn AS BIGINT) AS rn
+       |FROM rr WHERE rn <= $k ORDER BY qid, rn""".stripMargin
+
+  /** Two-stage IVFADC oracle (mirrors [[Similarity.annIvfPqRerank]]):
+    * the [[sqlAnnIvfPq]] chain cut at `prefilter` depth as the
+    * candidate list (nested WITH stays scoped), then exact quantized
+    * squared-L2 of query vs candidate over the raw embeddings, top-5
+    * per query — dist EXACT, directly comparable to the brute-L2
+    * truth. */
+  private def sqlAnnIvfPqRerank(probes: Int, prefilter: Int): String = {
+    val qf = "CAST(FLOOR(CAST(q.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    val ef = "CAST(FLOOR(CAST(e.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    s"""WITH cand AS (SELECT qid, vec_id FROM (
+       |${sqlAnnIvfPq(probes, prefilter)}) c),
+       |ex AS (
+       |  SELECT cand.qid, cand.vec_id,
+       |    CAST(SUM(($qf - $ef) * ($qf - $ef)) AS BIGINT) AS dist
+       |  FROM cand JOIN embeddings q ON q.vec_id = cand.qid
+       |  JOIN embeddings e ON e.vec_id = cand.vec_id
+       |  CROSS JOIN generate_series(1, 64) g(k)
+       |  GROUP BY 1, 2),
+       |rr AS (SELECT qid, vec_id, dist,
+       |    row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
+       |  FROM ex)
+       |SELECT qid, vec_id, dist, CAST(rn AS BIGINT) AS rn
+       |FROM rr WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+  }
+
+  /** PQ/ADC oracle, parameterized by k (mirrors [[Similarity.annPq]]:
+    * per-subspace Lloyd-trained codebook, codes by exact integer
+    * squared-L2 argmin, approximate distance = sum of m query-table
+    * lookups). */
+  private def sqlAnnPq(k: Int): String =
+    s"""WITH $SqlQv,
+       |${sqlSvRaw(PqM)},
+       |${sqlPqTrainCtes(PqCw, PqRounds)},
+       |qd AS (SELECT vec_id AS qid, sub, code, dist AS qdist
+       |       FROM pdist WHERE vec_id < 5),
+       |ad AS (
+       |  SELECT qd.qid, c.vec_id, SUM(qd.qdist) AS adist
+       |  FROM pcodes c JOIN qd ON c.sub = qd.sub AND c.code = qd.code
+       |  WHERE c.vec_id <> qd.qid GROUP BY 1, 2),
+       |rr AS (SELECT qid, vec_id, CAST(adist AS BIGINT) AS adist,
+       |    row_number() OVER (PARTITION BY qid ORDER BY adist, vec_id) AS rn
+       |  FROM ad)
+       |SELECT qid, vec_id, adist, CAST(rn AS BIGINT) AS rn
+       |FROM rr WHERE rn <= $k ORDER BY qid, rn""".stripMargin
+
+  /** Round 1 of the k-means oracles: quantized vectors `q`, label-
+    * centroid seeds `cq`, and the nearest-seed assignment `asg`. */
+  private val SqlKmeansRound1Ctes: String =
+    """q AS (
+      |  SELECT vec_id, label, CAST(s.k AS BIGINT) AS d,
+      |    CAST(FLOOR(CAST(embedding[s.k] AS DOUBLE) * 1000) AS BIGINT) AS q
+      |  FROM embeddings CROSS JOIN generate_series(1, 64) s(k)),
+      |cent AS (SELECT label AS cluster, d, SUM(q) AS sq, COUNT(*) AS n
+      |         FROM q GROUP BY 1, 2),
+      |cq AS (SELECT cluster, d, sq // n AS cq FROM cent),
+      |dist AS (
+      |  SELECT v.vec_id, c.cluster,
+      |    SUM((v.q - c.cq) * (v.q - c.cq)) AS dist
+      |  FROM q v JOIN cq c ON v.d = c.d GROUP BY 1, 2),
+      |asg AS (
+      |  SELECT vec_id, cluster FROM (
+      |    SELECT vec_id, cluster,
+      |      row_number() OVER (PARTITION BY vec_id
+      |        ORDER BY dist, cluster) AS rn
+      |    FROM dist) r WHERE rn = 1)""".stripMargin
+
+  /** The seeded sign-sketch planes as `planes(p, k, w)` VALUES and each
+    * vector's quantized dot per plane, `dots(vec_id, p, s)` — the prefix
+    * of every SRP/LSH oracle (same seed as the Spark side). */
+  private def sqlPlaneDotCtes(bits: Int): String = {
+    val rows = Similarity.lshPlanesQuantized(bits, 64).zipWithIndex
+      .flatMap { case (row, p) =>
+        row.zipWithIndex.map { case (w, d) => s"($p, ${d + 1}, $w)" }
+      }.mkString(", ")
+    s"""planes(p, k, w) AS (VALUES $rows),
+       |dots AS (
+       |  SELECT e.vec_id, pl.p,
+       |    CAST(SUM(pl.w * CAST(FLOOR(CAST(e.embedding[pl.k] AS DOUBLE) * 1000) AS BIGINT)) AS BIGINT) AS s
+       |  FROM embeddings e CROSS JOIN planes pl GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** SRP prefilter + exact-cosine rerank oracle (mirrors
+    * [[Similarity.annSrpRerank]]: seeded plane constants, Hamming
+    * prefilter to [[SrpPrefilter]] candidates, quantized-cosine
+    * top-5). A helper because the quantized recall audit reuses the
+    * chain as its SRP candidate arm. */
+  private def sqlAnnSrpRerank: String = {
+    val qf = "CAST(FLOOR(CAST(c.qe[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    val ef = "CAST(FLOOR(CAST(e.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    s"""WITH ${sqlPlaneDotCtes(SrpBits)},
+       |code AS (
+       |  SELECT vec_id, p // 62 AS word,
+       |    CAST(SUM(CASE WHEN s >= 0 THEN (CAST(1 AS BIGINT) << (p % 62)) ELSE 0 END) AS BIGINT) AS code
+       |  FROM dots GROUP BY 1, 2),
+       |q AS (SELECT vec_id AS qid, word, code AS qcode FROM code WHERE vec_id < 5),
+       |h AS (SELECT q.qid, c.vec_id,
+       |    CAST(SUM(bit_count(xor(c.code, q.qcode))) AS BIGINT) AS hamming
+       |  FROM q JOIN code c ON c.vec_id <> q.qid AND c.word = q.word
+       |  GROUP BY 1, 2),
+       |pre AS (SELECT qid, vec_id, hamming FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY qid
+       |      ORDER BY hamming, vec_id) AS prn FROM h) x
+       |  WHERE prn <= $SrpPrefilter),
+       |qe AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+       |       WHERE vec_id < 5),
+       |pair AS (
+       |  SELECT pre.qid, pre.vec_id, pre.hamming,
+       |    CAST(SUM($qf * $ef) AS BIGINT) AS dot,
+       |    CAST(SUM($qf * $qf) AS BIGINT) AS nq,
+       |    CAST(SUM($ef * $ef) AS BIGINT) AS ne
+       |  FROM pre JOIN qe c ON c.qid = pre.qid
+       |  JOIN embeddings e ON e.vec_id = pre.vec_id
+       |  CROSS JOIN generate_series(1, 64) g(k)
+       |  GROUP BY 1, 2, 3),
+       |r AS (SELECT qid, vec_id, hamming,
+       |    CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ne AS DOUBLE))) AS cos
+       |  FROM pair),
+       |rr AS (SELECT *, CAST(row_number() OVER (PARTITION BY qid
+       |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rn FROM r)
+       |SELECT qid, vec_id, hamming, cos, rn FROM rr WHERE rn <= 5
+       |ORDER BY qid, rn""".stripMargin
+  }
+
+  /** `ann_recall_quantized` oracle: one fully self-contained subquery
+    * per quantized tier (each tier's existing top-k oracle chain reused
+    * verbatim as a derived table — nested WITHs stay scoped, so CTE
+    * names never collide across tiers), joined against the exact brute
+    * top-5 in the metric that tier serves: integer squared-L2 for the
+    * ADC family, quantized cosine for SRP. */
+  private def sqlAnnRecallQuantized: String = {
+    val k = 5
+    val qf = "CAST(FLOOR(CAST(q.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    val ef = "CAST(FLOOR(CAST(e.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    // exact brute top-k, no WITH (usable as a plain derived table)
+    val truthL2 =
+      s"""SELECT qid, vec_id FROM (
+         |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
+         |      ORDER BY dist, vec_id) AS rn
+         |  FROM (
+         |    SELECT q.vec_id AS qid, e.vec_id,
+         |      CAST(SUM(($qf - $ef) * ($qf - $ef)) AS BIGINT) AS dist
+         |    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
+         |    CROSS JOIN generate_series(1, 64) g(k)
+         |    WHERE q.vec_id < 5 GROUP BY 1, 2) p) t
+         |WHERE rn <= $k""".stripMargin
+    val truthCos =
+      s"""SELECT qid, vec_id FROM (
+         |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
+         |      ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ne AS DOUBLE))) DESC,
+         |        vec_id) AS rn
+         |  FROM (
+         |    SELECT q.vec_id AS qid, e.vec_id,
+         |      CAST(SUM($qf * $ef) AS BIGINT) AS dot,
+         |      CAST(SUM($qf * $qf) AS BIGINT) AS nq,
+         |      CAST(SUM($ef * $ef) AS BIGINT) AS ne
+         |    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
+         |    CROSS JOIN generate_series(1, 64) g(k)
+         |    WHERE q.vec_id < 5 GROUP BY 1, 2) p) t
+         |WHERE rn <= $k""".stripMargin
+    def leg(tier: String, truthSql: String, tierSql: String): String =
+      s"""SELECT '$tier' AS tier, qs.vec_id AS qid,
+         |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
+         |  CAST(1000 * COALESCE(h.hits, 0) // $k AS BIGINT) AS recall_milli
+         |FROM (SELECT vec_id FROM embeddings WHERE vec_id < 5) qs
+         |LEFT JOIN (
+         |  SELECT t.qid, COUNT(*) AS hits
+         |  FROM ($truthSql) t
+         |  JOIN (SELECT qid, vec_id FROM ($tierSql) zz) i
+         |    ON t.qid = i.qid AND t.vec_id = i.vec_id
+         |  GROUP BY 1) h ON qs.vec_id = h.qid""".stripMargin
+    Seq(
+      leg("ivfpq", truthL2, sqlAnnIvfPq(probes = 2)),
+      leg("ivfpq_rr", truthL2,
+        sqlAnnIvfPqRerank(probes = 2, prefilter = PqRerankPrefilter)),
+      leg("pq", truthL2, sqlAnnPq(k = 5)),
+      leg("rpq", truthL2, sqlAnnIvfRpq(probes = 2)),
+      leg("srp", truthCos, sqlAnnSrpRerank)
+    ).mkString("SELECT * FROM (\n", ")\nUNION ALL\nSELECT * FROM (\n",
+      ")\nORDER BY tier, qid")
+  }
+
+  private def sqlAnnRecall: String = {
+    def chain(p: Int) =
+      s"""best$p AS (SELECT vec_id AS qid, cluster AS cell FROM (
+         |    SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY dist, cluster) AS crn
+         |    FROM cdist WHERE vec_id < 5) t WHERE crn <= $p),
+         |pair$p AS (
+         |  SELECT b.qid, a.vec_id,
+         |    CAST(SUM(q1.q * q2.q) AS BIGINT) AS dot,
+         |    CAST(SUM(q1.q * q1.q) AS BIGINT) AS nq,
+         |    CAST(SUM(q2.q * q2.q) AS BIGINT) AS ne
+         |  FROM best$p b JOIN casg a ON a.cluster = b.cell AND a.vec_id <> b.qid
+         |  JOIN qv q1 ON q1.vec_id = b.qid
+         |  JOIN qv q2 ON q2.vec_id = a.vec_id AND q2.d = q1.d
+         |  GROUP BY 1, 2),
+         |ivf$p AS (SELECT qid, vec_id FROM (
+         |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
+         |      ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ne AS DOUBLE))) DESC, vec_id) AS rn
+         |    FROM pair$p) t WHERE rn <= 5),
+         |hit$p AS (SELECT t.qid, CAST(COUNT(*) AS BIGINT) AS hits
+         |  FROM truth t JOIN ivf$p i ON t.qid = i.qid AND t.vec_id = i.vec_id
+         |  GROUP BY 1)"""
+    s"""WITH $SqlQv,
+       |${sqlCellCtes(IvfCells, IvfCellRounds)},
+       |qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 5),
+       |tp AS (
+       |  SELECT q1.vec_id AS qid, q2.vec_id,
+       |    CAST(SUM(q1.q * q2.q) AS BIGINT) AS dot,
+       |    CAST(SUM(q1.q * q1.q) AS BIGINT) AS nq,
+       |    CAST(SUM(q2.q * q2.q) AS BIGINT) AS ne
+       |  FROM qv q1 JOIN qv q2 ON q2.vec_id <> q1.vec_id AND q2.d = q1.d
+       |  WHERE q1.vec_id < 5
+       |  GROUP BY 1, 2),
+       |truth AS (SELECT qid, vec_id FROM (
+       |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
+       |      ORDER BY CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ne AS DOUBLE))) DESC, vec_id) AS rn
+       |    FROM tp) t WHERE rn <= 5),
+       |${chain(1)},
+       |${chain(2)}
+       |SELECT qs.qid, CAST(1 AS BIGINT) AS probes,
+       |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
+       |  CAST(1000 * COALESCE(h.hits, 0) // 5 AS BIGINT) AS recall_milli
+       |FROM qs LEFT JOIN hit1 h ON qs.qid = h.qid
+       |UNION ALL
+       |SELECT qs.qid, CAST(2 AS BIGINT) AS probes,
+       |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
+       |  CAST(1000 * COALESCE(h.hits, 0) // 5 AS BIGINT) AS recall_milli
+       |FROM qs LEFT JOIN hit2 h ON qs.qid = h.qid
+       |ORDER BY qid, probes""".stripMargin
+  }
+
+  /** IVF ANN oracle, parameterized by probe count (mirrors
+    * [[Similarity.annIvf]]: Lloyd cells ranked by exact integer
+    * query-to-centroid squared L2, quantized-cosine rerank inside the
+    * `probes` best). */
+  private def sqlAnnIvf(probes: Int): String =
+    s"""WITH $SqlQv,
+       |${sqlCellCtes(IvfCells, IvfCellRounds)},
+       |best AS (SELECT vec_id AS qid, cluster AS cell FROM (
+       |    SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY dist, cluster) AS crn
+       |    FROM cdist WHERE vec_id < 5) t WHERE crn <= $probes),
+       |cand AS (SELECT b.qid, b.cell, a.vec_id
+       |         FROM best b JOIN casg a
+       |           ON a.cluster = b.cell AND a.vec_id <> b.qid),
+       |pair AS (
+       |  SELECT c.qid, c.cell, c.vec_id,
+       |    CAST(SUM(q1.q * q2.q) AS BIGINT) AS dot,
+       |    CAST(SUM(q1.q * q1.q) AS BIGINT) AS nq,
+       |    CAST(SUM(q2.q * q2.q) AS BIGINT) AS ne
+       |  FROM cand c JOIN qv q1 ON q1.vec_id = c.qid
+       |  JOIN qv q2 ON q2.vec_id = c.vec_id AND q2.d = q1.d
+       |  GROUP BY 1, 2, 3),
+       |r AS (SELECT qid, cell, vec_id,
+       |        CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ne AS DOUBLE))) AS cos FROM pair),
+       |rr AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
+       |       FROM r)
+       |SELECT qid, cell, vec_id, cos, rn FROM rr WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+
+  /** `hard_negatives` oracle: [[sqlAnnIvf]]'s CTE chain with the
+    * centroid scoring and member join restricted to FOREIGN cells
+    * (label ≠ the anchor's own). */
+  private def sqlHardNegatives(probes: Int): String = {
+    val qf = "CAST(FLOOR(CAST(q.qe[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    val ef = "CAST(FLOOR(CAST(e.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+    s"""WITH cent AS (
+       |  SELECT label, g.k AS dim,
+       |    CAST(SUM(CAST(FLOOR(CAST(embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)) AS BIGINT) AS sum_q,
+       |    CAST(COUNT(*) AS BIGINT) AS n
+       |  FROM embeddings CROSS JOIN generate_series(1, 64) g(k) GROUP BY 1, 2),
+       |q AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel
+       |      FROM embeddings WHERE vec_id < 5),
+       |score AS (
+       |  SELECT q.qid, MAX(q.qlabel) AS qlabel, c.label,
+       |    CAST(CAST(SUM(CAST(FLOOR(CAST(q.qe[c.dim] AS DOUBLE) * 1000) AS BIGINT) * c.sum_q) AS BIGINT) AS DOUBLE)
+       |      / MAX(c.n) AS cscore
+       |  FROM q CROSS JOIN cent c WHERE c.label <> q.qlabel GROUP BY 1, 3),
+       |best AS (SELECT qid, qlabel, label FROM (
+       |    SELECT qid, qlabel, label,
+       |      row_number() OVER (PARTITION BY qid ORDER BY cscore DESC, label) AS crn
+       |    FROM score) t WHERE crn <= $probes),
+       |pair AS (
+       |  SELECT b.qid, MAX(b.qlabel) AS qlabel, e.label, e.vec_id,
+       |    CAST(SUM($qf * $ef) AS BIGINT) AS dot,
+       |    CAST(SUM($qf * $qf) AS BIGINT) AS nq,
+       |    CAST(SUM($ef * $ef) AS BIGINT) AS ne
+       |  FROM best b JOIN q ON q.qid = b.qid
+       |  JOIN embeddings e ON e.label = b.label AND e.vec_id <> b.qid
+       |  CROSS JOIN generate_series(1, 64) g(k)
+       |  GROUP BY 1, 3, 4),
+       |r AS (SELECT qid, qlabel, label, vec_id,
+       |        CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ne AS DOUBLE))) AS cos FROM pair),
+       |rr AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
+       |       FROM r)
+       |SELECT qid, CAST(qlabel AS BIGINT) AS qlabel,
+       |  CAST(label AS BIGINT) AS neg_label, vec_id, cos, rn
+       |FROM rr WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+  }
+
+  val specs: Seq[QuerySpec] = Seq(
+    // Quantized Gram matrix XᵀX of the embedding corpus (PCA input;
+    // upper triangle) — integer products, order-proof sums.
+    QuerySpec("embedding_gram", (s, dir) =>
+      Similarity.gramMatrix(Tables.embeddings(s, dir)).orderBy("di", "dj"),
+      oracle =
+      """WITH q AS (
+        |  SELECT vec_id, CAST(s.k AS BIGINT) AS d,
+        |    CAST(FLOOR(CAST(embedding[s.k] AS DOUBLE) * 1000) AS BIGINT) AS q
+        |  FROM embeddings CROSS JOIN generate_series(1, 64) s(k))
+        |SELECT a.d AS di, b.d AS dj, CAST(SUM(a.q * b.q) AS BIGINT) AS gram
+        |FROM q a JOIN q b ON a.vec_id = b.vec_id AND a.d <= b.d
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // first PCA direction: 3 declarative power-iteration rounds on the
+    // Gram matrix, integer matvec + truncating-div L∞ rescale.
+    QuerySpec("gram_power_iteration", (s, dir) =>
+      Similarity.gramPowerIteration(Tables.embeddings(s, dir), rounds = 3),
+      oracle =
+      """WITH q AS (
+        |  SELECT vec_id, CAST(s.k AS BIGINT) AS d,
+        |    CAST(FLOOR(CAST(embedding[s.k] AS DOUBLE) * 1000) AS BIGINT) AS q
+        |  FROM embeddings CROSS JOIN generate_series(1, 64) s(k)),
+        |g AS (SELECT a.d AS di, b.d AS dj, SUM(a.q * b.q) AS gram
+        |      FROM q a JOIN q b ON a.vec_id = b.vec_id GROUP BY 1, 2),
+        |v0 AS (SELECT CAST(s.k AS BIGINT) AS d, CAST(1000 AS BIGINT) AS val
+        |       FROM generate_series(1, 64) s(k)),
+        |u1 AS (SELECT g.di AS d, SUM(g.gram * v0.val) AS u
+        |       FROM g JOIN v0 ON g.dj = v0.d GROUP BY 1),
+        |m1 AS (SELECT MAX(ABS(u)) AS m FROM u1),
+        |v1 AS (SELECT d, (u * 1000) // m AS val FROM u1 CROSS JOIN m1),
+        |u2 AS (SELECT g.di AS d, SUM(g.gram * v1.val) AS u
+        |       FROM g JOIN v1 ON g.dj = v1.d GROUP BY 1),
+        |m2 AS (SELECT MAX(ABS(u)) AS m FROM u2),
+        |v2 AS (SELECT d, (u * 1000) // m AS val FROM u2 CROSS JOIN m2),
+        |u3 AS (SELECT g.di AS d, SUM(g.gram * v2.val) AS u
+        |       FROM g JOIN v2 ON g.dj = v2.d GROUP BY 1),
+        |m3 AS (SELECT MAX(ABS(u)) AS m FROM u3),
+        |v3 AS (SELECT d, (u * 1000) // m AS val FROM u3 CROSS JOIN m3)
+        |SELECT d, CAST(val AS BIGINT) AS val FROM v3 ORDER BY d""".stripMargin),
+    // one k-means Lloyd round from the label-centroid seed: integer
+    // squared-distance reassignment + per-cluster (sum, n) update.
+    QuerySpec("kmeans_round", (s, dir) =>
+      Similarity.kmeansRound(s, Tables.embeddings(s, dir))
+        .orderBy("cluster", "d"),
+      oracle =
+      s"""WITH $SqlKmeansRound1Ctes
+        |SELECT a.cluster, v.d, CAST(SUM(v.q) AS BIGINT) AS sum_q,
+        |  CAST(COUNT(*) AS BIGINT) AS n
+        |FROM asg a JOIN q v ON a.vec_id = v.vec_id
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // second Lloyd round chained through the (sum, n) state of the
+    // first — assignment against round-1's truncated centroids.
+    QuerySpec("kmeans_round2", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      Similarity.kmeansRoundFrom(emb, Similarity.kmeansRound(s, emb))
+        .orderBy("cluster", "d")
+    },
+      oracle =
+      s"""WITH $SqlKmeansRound1Ctes,
+        |r1 AS (
+        |  SELECT a.cluster, v.d, SUM(v.q) AS sum_q, COUNT(*) AS n
+        |  FROM asg a JOIN q v ON a.vec_id = v.vec_id GROUP BY 1, 2),
+        |cq2 AS (SELECT cluster, d, sum_q // n AS cq FROM r1),
+        |dist2 AS (
+        |  SELECT v.vec_id, c.cluster,
+        |    SUM((v.q - c.cq) * (v.q - c.cq)) AS dist
+        |  FROM q v JOIN cq2 c ON v.d = c.d GROUP BY 1, 2),
+        |asg2 AS (
+        |  SELECT vec_id, cluster FROM (
+        |    SELECT vec_id, cluster,
+        |      row_number() OVER (PARTITION BY vec_id
+        |        ORDER BY dist, cluster) AS rn
+        |    FROM dist2) r WHERE rn = 1)
+        |SELECT a.cluster, v.d, CAST(SUM(v.q) AS BIGINT) AS sum_q,
+        |  CAST(COUNT(*) AS BIGINT) AS n
+        |FROM asg2 a JOIN q v ON a.vec_id = v.vec_id
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QuerySpec("knn_brute_force", (s, dir) =>
+      Similarity.knnBruteForce(Tables.embeddings(s, dir), numQueries = 5, k = 10)
+        .select(col("qid"), col("vec_id"), col("score"), col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle =
+      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5),
+        |prod AS (
+        |  SELECT q.qid, e.vec_id,
+        |    SUM(CAST(FLOOR(CAST(q.qe[g.k] AS DOUBLE) * 1000) AS BIGINT)
+        |      * CAST(FLOOR(CAST(e.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)) AS score
+        |  FROM q CROSS JOIN embeddings e CROSS JOIN generate_series(1, 64) g(k)
+        |  WHERE e.vec_id <> q.qid GROUP BY 1, 2),
+        |r AS (SELECT qid, vec_id, CAST(score AS BIGINT) AS score,
+        |        row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
+        |      FROM prod)
+        |SELECT qid, vec_id, score, rn FROM r WHERE rn <= 10 ORDER BY qid, rn""".stripMargin),
+    // Product-quantization codes: PqM subspaces over the 64-dim space,
+    // PqCw Lloyd-trained codewords each, exact integer argmin.
+    QuerySpec("pq_codes", (s, dir) =>
+      Similarity.pqCodes(s, Tables.embeddings(s, dir), m = PqM, cw = PqCw,
+          rounds = PqRounds)
+        .orderBy("vec_id", "subspace"),
+      oracle =
+      s"""WITH $SqlQv,
+         |${sqlSvRaw(PqM)},
+         |${sqlPqTrainCtes(PqCw, PqRounds)}
+         |SELECT vec_id, sub AS subspace, CAST(code AS BIGINT) AS code,
+         |  CAST(dist AS BIGINT) AS dist
+         |FROM pcodes ORDER BY vec_id, subspace""".stripMargin),
+    // Frozen-book incremental encode — the PQ index's INGEST path:
+    // the id-upper batch half coded against the id-lower corpus
+    // half's trained codebook, no retraining (retraining on ingest
+    // would re-code the whole store; books are versioned artifacts).
+    QuerySpec("pq_incremental_codes", (s, dir) => {
+      val (batch, corpus) = halvesByMaxId(Tables.embeddings(s, dir), "vec_id")
+      Similarity.pqIncrementalCodes(batch, corpus, m = PqM, cw = PqIncCw,
+          rounds = PqRounds)
+        .orderBy("vec_id", "subspace")
+    },
+      // sv (the training slices) restricts to the id-lower corpus half,
+      // so sqlPqTrainCtes trains the frozen book on corpus only; the
+      // batch half slices as svb and encodes against pbook. DuckDB only
+      // evaluates referenced CTEs, so the chain's corpus-side pcodes is
+      // never computed here.
+      oracle =
+      s"""WITH half AS (SELECT MAX(vec_id) // 2 AS h FROM embeddings),
+         |$SqlQv,
+         |sv AS (SELECT vec_id, CAST((d - 1) // ${64 / PqM} AS BIGINT) AS sub,
+         |  d, q FROM qv, half WHERE qv.vec_id <= half.h),
+         |${sqlPqTrainCtes(PqIncCw, PqRounds)},
+         |svb AS (SELECT vec_id, CAST((d - 1) // ${64 / PqM} AS BIGINT) AS sub,
+         |  d, q FROM qv, half WHERE qv.vec_id > half.h),
+         |bdist AS (SELECT v.vec_id, v.sub, b.code,
+         |    CAST(SUM((v.q - b.cs) * (v.q - b.cs)) AS BIGINT) AS dist
+         |  FROM svb v JOIN pbook b ON v.sub = b.sub AND v.d = b.d
+         |  GROUP BY 1, 2, 3)
+         |SELECT vec_id, sub AS subspace, CAST(code AS BIGINT) AS code,
+         |  CAST(dist AS BIGINT) AS dist
+         |FROM (SELECT vec_id, sub, code, dist, row_number() OVER (
+         |    PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
+         |  FROM bdist) t
+         |WHERE rn = 1 ORDER BY vec_id, subspace""".stripMargin),
+    // RESIDUAL PQ codes (IVFADC's actual encoding): quantize each
+    // vector's offset from its assigned Lloyd cell, not the vector.
+    QuerySpec("pq_residual_codes", (s, dir) =>
+      Similarity.pqResidualCodes(s, Tables.embeddings(s, dir), m = RpqM,
+          groups = RpqGroups, rounds = PqRounds, cells = IvfCells,
+          cellRounds = IvfCellRounds)
+        .orderBy("vec_id", "subspace"),
+      oracle =
+      s"""WITH $SqlQv,
+         |${sqlCellCtes(IvfCells, IvfCellRounds)},
+         |${sqlSvResidual(RpqM)},
+         |${sqlPqTrainCtes(RpqGroups, PqRounds)}
+         |SELECT vec_id, sub AS subspace, CAST(code AS BIGINT) AS code,
+         |  CAST(dist AS BIGINT) AS dist
+         |FROM pcodes ORDER BY vec_id, subspace""".stripMargin),
+    // The PQ family's OTHER standard quality audit (beside recall):
+    // per-subspace reconstruction MSE — the quantization error the
+    // codebook training minimizes, as an oracle-checked integer
+    // (pqCodes' dist column aggregated; `mse` by exact integer div).
+    QuerySpec("pq_mse_by_subspace", (s, dir) =>
+      Similarity.pqCodes(s, Tables.embeddings(s, dir), m = PqM,
+          cw = PqCw, rounds = PqRounds)
+        .groupBy("subspace")
+        .agg(count(lit(1)).as("n"), sum("dist").as("sum_dist"))
+        .select(col("subspace"), col("n"), col("sum_dist"),
+          expr("sum_dist div n").as("mse"))
+        .orderBy("subspace"),
+      oracle =
+      s"""WITH $SqlQv,
+         |${sqlSvRaw(PqM)},
+         |${sqlPqTrainCtes(PqCw, PqRounds)}
+         |SELECT sub AS subspace, CAST(COUNT(*) AS BIGINT) AS n,
+         |  CAST(SUM(dist) AS BIGINT) AS sum_dist,
+         |  CAST(SUM(dist) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS mse
+         |FROM pcodes GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Residual-book twin: quantizing residuals (vector minus its Lloyd
+    // centroid) should measure LOWER per-subspace MSE than raw-space
+    // PQ at comparable bit budget — the point of the RPQ tier, shipped
+    // as a checked number rather than a narrative.
+    QuerySpec("rpq_mse_by_subspace", (s, dir) =>
+      Similarity.pqResidualCodes(s, Tables.embeddings(s, dir), m = RpqM,
+          groups = RpqGroups, rounds = PqRounds, cells = IvfCells,
+          cellRounds = IvfCellRounds)
+        .groupBy("subspace")
+        .agg(count(lit(1)).as("n"), sum("dist").as("sum_dist"))
+        .select(col("subspace"), col("n"), col("sum_dist"),
+          expr("sum_dist div n").as("mse"))
+        .orderBy("subspace"),
+      oracle =
+      s"""WITH $SqlQv,
+         |${sqlCellCtes(IvfCells, IvfCellRounds)},
+         |${sqlSvResidual(RpqM)},
+         |${sqlPqTrainCtes(RpqGroups, PqRounds)}
+         |SELECT sub AS subspace, CAST(COUNT(*) AS BIGINT) AS n,
+         |  CAST(SUM(dist) AS BIGINT) AS sum_dist,
+         |  CAST(SUM(dist) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS mse
+         |FROM pcodes GROUP BY 1 ORDER BY 1""".stripMargin),
+    // IVF-ADC over residual codes: query residual taken against the
+    // PROBED cell's centroid — both sides quantize in one frame.
+    QuerySpec("ann_ivf_rpq", (s, dir) =>
+      Similarity.annIvfRpq(s, Tables.embeddings(s, dir), numQueries = 5,
+          k = 5, m = RpqM, groups = RpqGroups, rounds = PqRounds,
+          cells = IvfCells, cellRounds = IvfCellRounds)
+        .select(col("qid"), col("cell"), col("vec_id"), col("adist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnIvfRpq(probes = 1)),
+    // Multi-probe residual IVF-ADC: one residual distance table PER
+    // (query, probed cell) — each cell is its own residual frame.
+    QuerySpec("ann_ivf_rpq_probe2", (s, dir) =>
+      Similarity.annIvfRpq(s, Tables.embeddings(s, dir), numQueries = 5,
+          k = 5, m = RpqM, groups = RpqGroups, probes = 2,
+          rounds = PqRounds, cells = IvfCells, cellRounds = IvfCellRounds)
+        .select(col("qid"), col("cell"), col("vec_id"), col("adist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnIvfRpq(probes = 2)),
+    // ADC search over the codes: query-to-codeword distance table,
+    // approximate distance = sum of m table lookups, top-10 per query.
+    QuerySpec("ann_pq", (s, dir) =>
+      Similarity.annPq(s, Tables.embeddings(s, dir), numQueries = 5, k = 10,
+          m = PqM, cw = PqCw, rounds = PqRounds)
+        .select(col("qid"), col("vec_id"), col("adist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnPq(k = 10)),
+    // The composed IVF-PQ serving path: coarse prune to the nearest
+    // Lloyd cells, ADC rank inside them over stored codes only.
+    QuerySpec("ann_ivf_pq", (s, dir) =>
+      Similarity.annIvfPq(s, Tables.embeddings(s, dir), numQueries = 5,
+          k = 5, m = PqM, cw = PqCw, rounds = PqRounds, cells = IvfCells,
+          cellRounds = IvfCellRounds)
+        .select(col("qid"), col("cell"), col("vec_id"), col("adist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnIvfPq(probes = 1)),
+    // Multi-probe IVF-PQ: ADC rank across the TWO nearest coarse
+    // cells - nprobe, THE serving recall knob (single-probe is the
+    // recall-broken configuration every production paper warns about).
+    QuerySpec("ann_ivf_pq_probe2", (s, dir) =>
+      Similarity.annIvfPq(s, Tables.embeddings(s, dir), numQueries = 5,
+          k = 5, m = PqM, probes = 2, cw = PqCw, rounds = PqRounds,
+          cells = IvfCells, cellRounds = IvfCellRounds)
+        .select(col("qid"), col("cell"), col("vec_id"), col("adist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnIvfPq(probes = 2)),
+    // IVF operational audit (r13): posting-list sizes per Lloyd cell —
+    // the skew metric every IVF deployment watches (a hot cell bounds
+    // probe latency; a starved one wastes a partition). Metadata-scale
+    // output from the memoized assignment relation.
+    QuerySpec("ivf_cell_sizes", (s, dir) =>
+      Similarity.ivfCellSizes(s, Tables.embeddings(s, dir),
+          cells = IvfCells, cellRounds = IvfCellRounds)
+        .orderBy("cell"),
+      oracle =
+      s"""WITH $SqlQv,
+         |${sqlCellCtes(IvfCells, IvfCellRounds)}
+         |SELECT CAST(cluster AS BIGINT) AS cell,
+         |  CAST(COUNT(*) AS BIGINT) AS n
+         |FROM casg GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Serving FROM the persisted lake index (r13): savePqIndex writes
+    // book/cells/cell-PARTITIONED postings as plain parquet, the serve
+    // reads them back with the probed cells pruning index partitions —
+    // declared against the SAME oracle as ann_ivf_pq, so the hash
+    // match proves persistence round-trips the search bit-for-bit.
+    // The index BUILDS ONCE PER (JVM, corpus) into a unique temp dir
+    // (r14, the r13 verdict item: the old fixed java.io.tmpdir path
+    // let two concurrent runs clobber each other's postings mid-read,
+    // and every invocation re-timed build+write+serve): repeat
+    // invocations — bench passes 2+, the min-of-passes number of
+    // record — measure the PRUNED SERVE alone, which is what the
+    // query exists to demonstrate (build-vs-serve split measured in
+    // PQINDEX_PROBE_r14.json).
+    QuerySpec("ann_ivf_pq_indexed", (s, dir) => {
+      val path = pqIndexFor(s, dir)
+      Similarity.annIvfPqFromIndex(s,
+          Tables.embeddings(s, dir).filter(col("vec_id") < 5), path,
+          k = 5, probes = 1, m = PqM)
+        .select(col("qid"), col("cell"), col("vec_id"), col("adist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn")
+    },
+      // the persistence round-trip shares ann_ivf_pq's oracle text: the
+      // hash match IS the equivalence proof (the tfidf_cosine_sharded
+      // rule)
+      oracle = sqlAnnIvfPq(probes = 1)),
+    // Multi-probe serving from the SAME persisted index (r14): nprobe=2
+    // against the cell-partitioned postings — the production recall
+    // configuration, whose dynamic pruning must now admit TWO
+    // partitions per query instead of one. Shares ann_ivf_pq_probe2's
+    // oracle: the hash match proves the pruned multi-cell scan
+    // reproduces the in-memory multi-probe search bit-for-bit.
+    QuerySpec("ann_ivf_pq_indexed_probe2", (s, dir) => {
+      val path = pqIndexFor(s, dir)
+      Similarity.annIvfPqFromIndex(s,
+          Tables.embeddings(s, dir).filter(col("vec_id") < 5), path,
+          k = 5, probes = 2, m = PqM)
+        .select(col("qid"), col("cell"), col("vec_id"), col("adist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn")
+    },
+      // nprobe=2 from the persisted index — same oracle as the in-memory
+      // multi-probe tier (the round-trip-equivalence rule)
+      oracle = sqlAnnIvfPq(probes = 2)),
+    // Two-stage IVFADC serving (r13): prefilter-deep ADC shortlist
+    // inside the probed cells, then EXACT integer-L2 re-rank of just
+    // those candidates — the production shape that recovers the ADC
+    // tier's quantization loss while touching only `prefilter` wide
+    // rows per query (knobs from ANN_QUANT_PROBE_r13.json).
+    QuerySpec("ann_ivf_pq_rerank", (s, dir) =>
+      Similarity.annIvfPqRerank(s, Tables.embeddings(s, dir),
+          numQueries = 5, k = 5, prefilter = PqRerankPrefilter, m = PqM,
+          probes = PqRerankProbes, cw = PqCw, rounds = PqRounds,
+          cells = IvfCells, cellRounds = IvfCellRounds)
+        .select(col("qid"), col("vec_id"), col("dist"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnIvfPqRerank(probes = PqRerankProbes,
+      prefilter = PqRerankPrefilter)),
+    QuerySpec("embedding_nearest_pairs", (s, dir) =>
+      Similarity.nearestPairsPerLabel(Tables.embeddings(s, dir), pairsPerLabel = 3)
+        .select(col("label"), col("id_a"), col("id_b"), col("cos"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("label", "rn"),
+      oracle =
+      """WITH prod AS (
+        |  SELECT a.label, a.vec_id AS id_a, b.vec_id AS id_b,
+        |    SUM(CAST(FLOOR(CAST(a.embedding[g.k] AS DOUBLE) * 100) AS BIGINT)
+        |      * CAST(FLOOR(CAST(b.embedding[g.k] AS DOUBLE) * 100) AS BIGINT)) AS dot,
+        |    SUM(CAST(FLOOR(CAST(a.embedding[g.k] AS DOUBLE) * 100) AS BIGINT)
+        |      * CAST(FLOOR(CAST(a.embedding[g.k] AS DOUBLE) * 100) AS BIGINT)) AS na,
+        |    SUM(CAST(FLOOR(CAST(b.embedding[g.k] AS DOUBLE) * 100) AS BIGINT)
+        |      * CAST(FLOOR(CAST(b.embedding[g.k] AS DOUBLE) * 100) AS BIGINT)) AS nb
+        |  FROM embeddings a JOIN embeddings b
+        |    ON a.label = b.label AND a.vec_id < b.vec_id
+        |  CROSS JOIN generate_series(1, 64) g(k)
+        |  GROUP BY 1, 2, 3),
+        |p AS (SELECT label, id_a, id_b,
+        |        CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS cos FROM prod),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY label ORDER BY cos DESC, id_a, id_b) AS rn
+        |      FROM p)
+        |SELECT label, id_a, id_b, cos, rn FROM r WHERE rn <= 3 ORDER BY label, rn""".stripMargin),
+    // IVF codebook (typed QuantizedCentroid Aggregator), exploded to
+    // (label, dim, sum_q, n) rows for the oracle.
+    QuerySpec("label_centroids", (s, dir) =>
+      Similarity.labelCentroids(s, Tables.embeddings(s, dir))
+        .select(col("label"), posexplode(col("sum_q")), col("n"))
+        .select(col("label"), (col("pos") + 1).cast("long").as("dim"),
+          col("col").as("sum_q"), col("n"))
+        .orderBy("label", "dim"),
+      oracle =
+      """SELECT label, CAST(g.k AS BIGINT) AS dim,
+        |  CAST(SUM(CAST(FLOOR(CAST(embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)) AS BIGINT) AS sum_q,
+        |  CAST(COUNT(*) AS BIGINT) AS n
+        |FROM embeddings CROSS JOIN generate_series(1, 64) g(k)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // IVF probe: nearest Lloyd cells -> exact rerank inside them.
+    QuerySpec("ann_ivf", (s, dir) =>
+      Similarity.annIvf(s, Tables.embeddings(s, dir), numQueries = 5, k = 5,
+          cells = IvfCells, cellRounds = IvfCellRounds)
+        .select(col("qid"), col("cell"), col("vec_id"), col("cos"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnIvf(probes = 1)),
+    // Multi-probe IVF: rerank across the TWO nearest cells — the
+    // recall knob for boundary queries.
+    QuerySpec("ann_ivf_probe2", (s, dir) =>
+      Similarity.annIvf(s, Tables.embeddings(s, dir), numQueries = 5, k = 5,
+        probes = 2, cells = IvfCells, cellRounds = IvfCellRounds)
+        .select(col("qid"), col("cell"), col("vec_id"), col("cos"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnIvf(probes = 2)),
+    // Measured recall@5 of the IVF tier vs exact-cosine ground truth,
+    // per query and probe count — the retrieval self-audit (the probe
+    // knob's recall gain as an in-engine number, not a narrative).
+    QuerySpec("ann_recall_ivf", (s, dir) =>
+      Similarity.annRecallAudit(s, Tables.embeddings(s, dir),
+        numQueries = 5, k = 5, probesList = Seq(1, 2), cells = IvfCells,
+        cellRounds = IvfCellRounds)
+        .orderBy("qid", "probes"),
+      oracle = sqlAnnRecall),
+    // Measured recall@5 of every QUANTIZED tier (SRP rerank, PQ/ADC,
+    // IVF-PQ, residual IVF-ADC) against the exact brute top-5 in the
+    // metric each tier serves — the tiers where quantization loss
+    // actually bites, each shipping its loss as an oracle-checked
+    // number (the r8/r9 verdict ask; knobs re-declared r11 from
+    // ANN_QUANT_PROBE_r11.json after the audit measured 80-160 milli
+    // at the r10 settings).
+    QuerySpec("ann_recall_quantized", (s, dir) =>
+      Similarity.annRecallQuantized(s, Tables.embeddings(s, dir),
+        numQueries = 5, k = 5, pqM = PqM, pqCw = PqCw, rpqM = RpqM,
+        rpqCw = RpqGroups, rounds = PqRounds, prefilter = SrpPrefilter,
+        bits = SrpBits, probes = 2, cells = IvfCells,
+        cellRounds = IvfCellRounds, rerankPrefilter = PqRerankPrefilter)
+        .orderBy("tier", "qid"),
+      oracle = sqlAnnRecallQuantized),
+    // Hard-negative mining (contrastive training): top-k most-similar
+    // DIFFERENT-label vectors per anchor, via foreign-cell IVF probing.
+    QuerySpec("hard_negatives", (s, dir) =>
+      Similarity.hardNegatives(s, Tables.embeddings(s, dir),
+        numQueries = 5, k = 5, probes = 2)
+        .select(col("qid"), col("qlabel").cast("long").as("qlabel"),
+          col("neg_label").cast("long").as("neg_label"), col("vec_id"),
+          col("cos"), col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlHardNegatives(probes = 2)),
+    QuerySpec("ann_lsh", (s, dir) =>
+      Similarity.annLshBucketed(s, Tables.embeddings(s, dir), numQueries = 5, k = 5)
+        .select(col("qid"), col("vec_id"), col("bucket"), col("cos"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = {
+      // plane constants generated from the same seed as the Spark query
+      val qf = "CAST(FLOOR(CAST(c.qe[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+      val ef = "CAST(FLOOR(CAST(e.embedding[g.k] AS DOUBLE) * 1000) AS BIGINT)"
+      s"""WITH ${sqlPlaneDotCtes(6)},
+         |bucket AS (
+         |  SELECT vec_id,
+         |    CAST(SUM(CASE WHEN s >= 0 THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS BIGINT) AS bucket
+         |  FROM dots GROUP BY 1),
+         |q AS (SELECT b.vec_id AS qid, e.embedding AS qe, b.bucket AS qbucket
+         |      FROM bucket b JOIN embeddings e ON e.vec_id = b.vec_id WHERE b.vec_id < 5),
+         |cand AS (SELECT c.qid, c.qe, b.vec_id, b.bucket
+         |         FROM q c JOIN bucket b ON b.bucket = c.qbucket AND b.vec_id <> c.qid),
+         |pair AS (
+         |  SELECT c.qid, c.vec_id, c.bucket,
+         |    CAST(SUM($qf * $ef) AS BIGINT) AS dot,
+         |    CAST(SUM($qf * $qf) AS BIGINT) AS nq,
+         |    CAST(SUM($ef * $ef) AS BIGINT) AS ne
+         |  FROM cand c JOIN embeddings e ON e.vec_id = c.vec_id
+         |  CROSS JOIN generate_series(1, 64) g(k)
+         |  GROUP BY 1, 2, 3),
+         |r AS (SELECT qid, vec_id, bucket,
+         |        CAST(dot AS DOUBLE) / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(ne AS DOUBLE))) AS cos FROM pair),
+         |rr AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
+         |       FROM r)
+         |SELECT qid, vec_id, bucket, cos, rn FROM rr WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+    }),
+    // SRP Hamming search: whole-corpus top-k served from 1-long-per-
+    // vector sign sketches (the bit-code complement of ann_pq's ADC).
+    QuerySpec("ann_srp", (s, dir) =>
+      Similarity.annSrpHamming(Tables.embeddings(s, dir),
+        numQueries = 5, k = 5, bits = SrpBits)
+        .select(col("qid"), col("vec_id"), col("hamming"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = {
+      // same seeded plane constants as the Spark query; the code is
+      // ⌈bits/62⌉ sign words, ranking is the summed per-word Hamming
+      s"""WITH ${sqlPlaneDotCtes(SrpBits)},
+         |code AS (
+         |  SELECT vec_id, p // 62 AS word,
+         |    CAST(SUM(CASE WHEN s >= 0 THEN (CAST(1 AS BIGINT) << (p % 62)) ELSE 0 END) AS BIGINT) AS code
+         |  FROM dots GROUP BY 1, 2),
+         |q AS (SELECT vec_id AS qid, word, code AS qcode FROM code WHERE vec_id < 5),
+         |h AS (SELECT q.qid, c.vec_id,
+         |    CAST(SUM(bit_count(xor(c.code, q.qcode))) AS BIGINT) AS hamming
+         |  FROM q JOIN code c ON c.vec_id <> q.qid AND c.word = q.word
+         |  GROUP BY 1, 2),
+         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY qid
+         |    ORDER BY hamming, vec_id) AS BIGINT) AS rn FROM h)
+         |SELECT qid, vec_id, hamming, rn FROM r WHERE rn <= 5
+         |ORDER BY qid, rn""".stripMargin
+    }),
+    // SRP prefilter + exact rerank: codes prune to 20 candidates per
+    // query, only those read raw vectors for the cosine top-5.
+    QuerySpec("ann_srp_rerank", (s, dir) =>
+      Similarity.annSrpRerank(Tables.embeddings(s, dir),
+        numQueries = 5, k = 5, prefilter = SrpPrefilter, bits = SrpBits)
+        .select(col("qid"), col("vec_id"), col("hamming"), col("cos"),
+          col("rn").cast("long").as("rn"))
+        .orderBy("qid", "rn"),
+      oracle = sqlAnnSrpRerank),
+    // In-engine trainable quality classifier: full-batch integer
+    // perceptron over hashed bag-of-words features.
+    QuerySpec("qclf_weights", (s, dir) =>
+      Curation.perceptronWeights(Tables.documents(s, dir), QclfCfg)
+        .orderBy("b"),
+      oracle = qclfSql("weights")),
+    QuerySpec("qclf_score", (s, dir) =>
+      Curation.perceptronScore(Tables.documents(s, dir), QclfCfg)
+        .orderBy("doc_id"),
+      oracle = qclfSql("score")),
+  )
+}

@@ -27,4 +27,10 @@ object Bridge {
     org.apache.spark.SparkContext.getActive.foreach { sc =>
       if (!sc.conf.contains(key)) sc.conf.set(key, value)
     }
+
+  /** A fresh directory under `java.io.tmpdir` that Spark's shutdown
+    * hook deletes, with its contents, when the JVM exits
+    * (`Utils.createTempDir` is private[spark]). */
+  def tempDirDeletedOnExit(namePrefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
 }

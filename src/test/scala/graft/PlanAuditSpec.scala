@@ -481,6 +481,92 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("declaring a registry query submits no job outside the named exceptions") {
+    // query -> why its declaration may run Spark jobs; a memo a
+    // previous suite already built makes the declaration jobless, so
+    // the check is "jobful ⊆ exceptions", never equality
+    val exceptions: Map[String, String] = Map(
+      "doc_lm_score" -> "localCheckpoint pins of the bigram rows and model (TextOps.lmBigramRows, lmModelOfRows)",
+      "dsir_weights" -> "localCheckpoint pins of the bigram relation and model (TextOps.dsirWeights)",
+      "ppl_buckets" -> "the doc_lm_score pins plus a pin of the scores (Curation.pplBuckets)",
+      "source_overlap" -> "a localCheckpoint pin (Curation.sourceOverlap)",
+      "dedup_substring_spans" -> "a localCheckpoint pin (TextOps.substringSpans)",
+      "dedup_spans_rewrite" -> "a localCheckpoint pin (TextOps.dedupSpansRewrite)",
+      "cdc_chunks" -> "a localCheckpoint pin (TextOps.cdcChunks)",
+      "doc_top_terms" -> "a count (TextOps.topTerms)",
+      "dedup_winnow_pairs" -> "a localCheckpoint pin (TextOps.winnowPairs)",
+      "tfidf_cosine_pairs" -> "the per-session (docs, k) memoCount sizing plus a pin (TextOps.tfidfCosinePairs)",
+      "tfidf_cosine_sharded" -> "the (docs, k) sizing, once per session (Bench's min-of-k drops that first repetition), plus a pin",
+      "tfidf_cosine_capped" -> "localCheckpoint pins (TextOps.tfidfCosinePairsCapped)",
+      "tfidf_cosine_capped_auto" -> "localCheckpoint pins (TextOps.tfidfCosinePairsCapped)",
+      "tfidf_cosine_capped_auto_hot" -> "localCheckpoint pins (TextOps.tfidfCosinePairsCapped)",
+      "contamination_hits" -> "a localCheckpoint pin (TextOps.contaminationHits)",
+      "corpus_ngrams" -> "a localCheckpoint pin (TextOps.corpusNgrams)",
+      "doc_novelty" -> "a localCheckpoint pin (TextOps.docNovelty)",
+      "ctfidf_keywords" -> "a localCheckpoint pin (TextOps.ctfidfKeywords)",
+      "hybrid_rrf_indexed" -> "lex and PQ serve-index builds, index footer reads and pins",
+      "bm25_indexed" -> "lex serve-index build and the probe-vocabulary collect (TextOps.bm25DocAsQueryFromIndex)",
+      "hybrid_recall" -> "the probe-vocabulary collect, index footer reads and a pin (TextOps.hybridRecallAudit)",
+      "doc_familiarity" -> "a localCheckpoint pin (TextOps.corpusNgrams)",
+      "bpe_merges" -> "a localCheckpoint pin per merge round (BPE training)",
+      "bpe_encode" -> "BPE training pins plus an encode pin (TextOps.bpeEncode)",
+      "bpe_fertility" -> "BPE training pins plus an encode pin (TextOps.bpeEncode)",
+      "token_zipf" -> "a localCheckpoint pin (TextOps.tokenZipf)",
+      "pipeline_curate_v4" -> "localCheckpoint pins of its stages",
+      "pipeline_curate_v3" -> "localCheckpoint pins of its stages",
+      "pipeline_curate_v2" -> "a localCheckpoint pin (TextOps.contaminationHits)",
+      "heavy_hitters" -> "a localCheckpoint pin (Sketches.heavyHitters)",
+      "dedup_components" -> "the components seed (Dedup.seededComponents)",
+      "dedup_components_best" -> "the components seed, pinned by componentsFor's eager checkpoint",
+      "dedup_components_incremental" -> "standing-assignment build plus the components seed",
+      "dedup_components_incremental_banded" -> "band-index and assignment builds plus the components seed",
+      "dedup_incremental_lsh_indexed" -> "band-index build and a head (Dedup.dedupAgainstCorpusLshIndexed)",
+      "dedup_incremental_indexed" -> "PQ half-index build, its footer reads and pins",
+      "fuzzy_join_names" -> "a localCheckpoint pin (Dedup.editDistancePairs)",
+      "fuzzy_components" -> "a pin plus the components seed (Dedup.editDistanceComponents)",
+      "dedup_incremental_fuzzy" -> "a localCheckpoint pin (Dedup.fuzzyMatchAgainstCorpus)",
+      "dedup_containment" -> "bag-quotient pins and memoCount sizing (Dedup.bagQuotient, RelationStats)",
+      "dedup_minhash_lsh" -> "memoCount sizing (RelationStats)",
+      "dedup_recall_lsh" -> "memoCount sizing (RelationStats)",
+      "dedup_recall_shingle" -> "memoCount sizing (RelationStats)",
+      "dedup_minhash_shingle" -> "memoCount sizing (RelationStats)",
+      "semdedup" -> "a localCheckpoint pin of the semantic tier (Similarity)",
+      "semdedup_components" -> "the components seed (Dedup.seededComponents)",
+      "pipeline_d4" -> "a localCheckpoint pin (Similarity.d4Funnel)",
+      "gram_power_iteration" -> "a localCheckpoint pin (Similarity.gramPowerIteration)",
+      "pq_incremental_codes" -> "codebook pins (RelationStats.pinnedWide)",
+      "pq_residual_codes" -> "codebook pins (RelationStats.pinnedWide)",
+      "ann_pq" -> "a codebook pin (RelationStats.pinnedWide)",
+      "ann_ivf_pq_indexed" -> "PQ serve-index build and footer reads",
+      "ann_ivf_pq_indexed_probe2" -> "PQ serve-index build and footer reads",
+      "ann_recall_ivf" -> "a localCheckpoint pin (Similarity.annRecallAudit)",
+      "ann_recall_quantized" -> "localCheckpoint pins (Similarity.annRecallQuantized)",
+      "qclf_weights" -> "a localCheckpoint pin per perceptron round (Curation.trainRounds)",
+      "qclf_score" -> "a localCheckpoint pin per perceptron round (Curation.trainRounds)",
+      "results_union_clean" -> "CSV schema inference (ResultsCsv)",
+      "results_extra_parsed" -> "CSV schema inference (ResultsCsv)",
+      "bloom_semijoin" -> "the Bloom filter build (BloomJoin.buildBloom)",
+      "manifest_pruned_scan" -> "lake and manifest build plus the manifest read (Layout.manifestPrunedRead)",
+      "media_ann_ivf" -> "codebook pins (Multimodal.mediaIvfIndex)",
+      "media_ann_ivf_probe2" -> "codebook pins (Multimodal.mediaIvfIndex)",
+      "media_ann_ivf_indexed" -> "media IVF index build plus codebook pins",
+      "media_recall_ivf" -> "codebook pins plus an audit pin (Multimodal.mediaRecallAudit)",
+      "pipeline_media" -> "localCheckpoint pins (Multimodal.mediaPipeline)")
+    assert(exceptions.keySet.subsetOf(SparkEntry.queries.keySet),
+      s"exceptions name undeclared queries: ${exceptions.keySet -- SparkEntry.queries.keySet}")
+    val jobful = SparkEntry.registry.flatMap { q =>
+      val jobs = jobsDuring { q.build(spark, dir) }
+      if (jobs.isEmpty) None else Some(q.name -> jobs)
+    }
+    val unexpected = jobful.filterNot { case (name, _) => exceptions.contains(name) }
+    // a job's stage names carry its call sites ("count at Dedup.scala:…")
+    def sites(jobs: Seq[String]): String = jobs.flatMap(_.linesIterator
+      .map(_.split(" @ ")(0))).distinct.mkString("; ")
+    assert(unexpected.isEmpty, unexpected.map { case (name, jobs) =>
+      s"$name: ${jobs.size} jobs at ${sites(jobs)}"
+    }.mkString("declaring these queries submits jobs:\n", "\n", ""))
+  }
+
   test("blocked matmul declares without jobs and plans one cuboid exchange") {
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
     import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}

@@ -87,14 +87,13 @@ class SparkEntrySpec extends SparkSpec {
 
   test("indexed serve memoizes its build: repeat invocations reuse one index dir") {
     // the r14 contract behind the serve-only bench number: the first
-    // invocation builds the persisted index into a unique temp dir;
-    // later invocations (and the probe2 sibling on the same corpus)
-    // must SERVE from it, not rebuild — observable as exactly one new
-    // graft_pq_index_* directory across three invocations
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def indexDirs(): Set[String] = tmp.listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("graft_pq_index_"))
-      .map(_.getName).toSet
+    // invocation builds the persisted index into a fresh directory
+    // under the JVM's serve-state root; later invocations (and the
+    // probe2 sibling on the same corpus) must SERVE from it, not
+    // rebuild — observable as exactly one new directory under
+    // SparkEntry.memoRoot across three invocations
+    def indexDirs(): Set[String] = SparkEntry.memoRoot.listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
     val before = indexDirs()
     val a = SparkEntry.queries("ann_ivf_pq_indexed")(spark, smokeDir).count()
     val mid = indexDirs()
@@ -105,6 +104,37 @@ class SparkEntrySpec extends SparkSpec {
     assert((mid -- before).size <= 1, "first invocation builds at most one dir")
     assert(after === mid,
       "repeat and probe2 invocations must serve from the memoized index")
+  }
+
+  test("a JVM that builds every persisted serve state leaves no graft_ temp dir") {
+    import scala.jdk.CollectionConverters._
+    // these eight declarations build all nine persisted memos (PQ full
+    // and half, LSH half and decile, both standing assignments, lex,
+    // media IVF, manifest); the child exits normally after explaining
+    val memoQueries = Seq("ann_ivf_pq_indexed", "dedup_incremental_indexed",
+      "dedup_incremental_lsh_indexed", "dedup_components_incremental",
+      "dedup_components_incremental_banded", "bm25_indexed",
+      "media_ann_ivf_indexed", "manifest_pruned_scan")
+    val tmp = java.nio.file.Files.createTempDirectory("leakcheck_").toFile
+    val log = new java.io.File(tmp.getParentFile, tmp.getName + ".log")
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Djava.io.tmpdir="))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
+      Seq(s"-Djava.io.tmpdir=$tmp", "-cp", System.getProperty("java.class.path"),
+        "graft.Explain") ++ memoQueries
+    val pb = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
+      .redirectOutput(log)
+    pb.environment().put("SPARK_GRAFT_SF_DIR", smokeDir)
+    val exit = pb.start().waitFor()
+    val plans = scala.io.Source.fromFile(log).getLines()
+      .count(_.startsWith("========== "))
+    assert(exit === 0 && plans === memoQueries.size,
+      s"graft.Explain exited $exit after $plans plans; see $log")
+    val left = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_"))
+    assert(left.isEmpty, s"left behind in $tmp: ${left.sorted.mkString(", ")}")
+    log.delete()
+    java.nio.file.Files.walk(tmp.toPath).iterator().asScala.toSeq.reverse
+      .foreach(java.nio.file.Files.delete)
   }
 
   test("every declared query runs non-empty at sf0.001 with unique columns") {
