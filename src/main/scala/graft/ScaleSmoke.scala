@@ -469,8 +469,7 @@ object ScaleSmoke {
         // threshold 0 keeps every candidate: tf·idf weights are
         // non-negative, so cos ≥ 0 admits the whole dot relation
         cand = Some(d => TextOps.tfidfCosinePairs(d, 10, 0))),
-      Op("tfidf_cosine_sharded",
-        d => TextOps.tfidfCosinePairs(d, 10, 60, buildShards = 4), "pair"),
+      Op("tfidf_cosine_sharded", registry.TextQueries.tfidfCosineSharded, "pair"),
       Op("dedup_components", d => Dedup.jaccardComponents(d, 9), "pair"),
       Op("dedup_containment", d => Dedup.containmentPairs(d, 9), "pair",
         cand = Some(d => Dedup.containmentCandidates(d, 9))),
@@ -630,8 +629,7 @@ object ScaleSmoke {
     val perturbedOps: Seq[Op] = Seq(
       Op("tfidf_cosine_pairs", d => TextOps.tfidfCosinePairs(d, 10, 60),
         "pdoc", cand = Some(d => TextOps.tfidfCosinePairs(d, 10, 0))),
-      Op("tfidf_cosine_sharded",
-        d => TextOps.tfidfCosinePairs(d, 10, 60, buildShards = 4), "pdoc"),
+      Op("tfidf_cosine_sharded", registry.TextQueries.tfidfCosineSharded, "pdoc"),
       Op("tfidf_cosine_capped", d => TextOps.tfidfCosinePairsCapped(d, 10,
         60, maxPostings = 2300L), "pdoc"),
       // the shipped DEFAULT (r14): ceiling auto-sited at the salient-

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import TokenSetKernel._
 
 /** Deduplication family over the `documents` table (north-star
   * training-data-pipeline extension; the reference has no dedup —
@@ -78,8 +79,6 @@ object Dedup {
     * and every sound-in-practice width is slower. The prefix filter
     * stays. */
   def jaccardComponents(docs: DataFrame, thresholdTenths: Int): DataFrame = {
-    val bagFp = md5(concat_ws("\u0000", col("lang"),
-      concat_ws(" ", sort_array(array_distinct(split(col("text"), " "))))))
     // SKINNY + pinned bag relation (r18 optimization round): the md5
     // over the sorted distinct token bag is the heaviest row-wise op
     // in the quotient and it was re-executed for every consumer (the
@@ -87,13 +86,10 @@ object Dedup {
     // subtree (lang is folded into the fp; repDocs re-joins `docs` for
     // text), so the pinned relation is (long, 32-char) rows. Lazy: the
     // declaration stays jobless.
-    val bagged = docs.select(col("doc_id"), bagFp.as("bag_fp"))
+    val bagged = docs.select(col("doc_id"), bagLangKey.as("bag_fp"))
       .localCheckpoint(eager = false)
-    val reps = bagged.groupBy("bag_fp")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("grp_size"))
-    val members = bagged.join(reps, "bag_fp")
-    val repDocs = members.filter(col("doc_id") === col("rep"))
-      .select("doc_id").join(docs, "doc_id")
+    val (members, repDocs) = quotient(bagged, "bag_fp", docs,
+      count(lit(1)).as("grp_size"))
     val repComp = connectedComponents(jaccardPairs(repDocs, thresholdTenths))
       .select(col("doc_id").as("rep"), col("component").as("rep_comp"))
     members.join(repComp, Seq("rep"), "left")
@@ -119,30 +115,16 @@ object Dedup {
   def jaccardPairsAgainstCorpus(batch: DataFrame, corpus: DataFrame,
       thresholdTenths: Int,
       maxBroadcastRows: Long = 100000L): DataFrame = {
-    val rows = batch.count()
-    require(rows <= maxBroadcastRows,
-      s"batch has $rows docs > maxBroadcastRows=$maxBroadcastRows: the " +
-        "broadcast-verify cross tier must hold every batch id array in " +
-        "one executor; route unbounded streams through the banded index")
+    requireBroadcastable(batch, maxBroadcastRows, "batch",
+      "route unbounded streams through the banded index")
     val t = thresholdTenths
-    def arrays(d: DataFrame) = tokenPostings(d)
-      .select(col("doc_id"), col("lang"), xxhash64(col("token")).as("tid"))
-      .groupBy("doc_id", "lang")
-      .agg(sort_array(collect_list(col("tid"))).as("toks"),
-        count(lit(1)).as("n"))
+    def arrays(d: DataFrame) = idArrays(idPostings(d), "doc_id", "lang")
     val b = arrays(batch).select(col("lang"), col("doc_id").as("d1"),
       col("toks").as("toks1"), col("n").as("n1"))
     val c = arrays(corpus).select(col("lang"), col("doc_id").as("d2"),
       col("toks").as("toks2"), col("n").as("n2"))
-    c.join(broadcast(b), "lang")
-      .filter(col("n1") * t <= col("n2") * 10 &&
-        col("n2") * t <= col("n1") * 10)
-      .withColumn("inter", graft.functions.VectorFunctions
-        .sortedIntersectCount(col("toks1"), col("toks2")))
-      .withColumn("uni", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * 10 >= col("uni") * t)
-      .select(col("d1"), col("d2"), col("inter"), col("uni"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
+    jaccardVerify(c.join(broadcast(b), "lang")
+      .filter(lengthBound(col("n1"), col("n2"), t)), t)
   }
 
   /** [[jaccardPairsAgainstCorpus]] PAST the broadcast cap (r17, the
@@ -232,11 +214,7 @@ object Dedup {
     // the banded equi-join twice; the pair-id relation is delta-scale
     val cand = qb.join(cold, Seq("fp_pfx", "band_fp"))
       .select("d1", "d2").distinct().localCheckpoint(eager = true)
-    def arrays(d: DataFrame) = tokenPostings(d)
-      .select(col("doc_id"), col("lang"), xxhash64(col("token")).as("tid"))
-      .groupBy("doc_id", "lang")
-      .agg(sort_array(collect_list(col("tid"))).as("toks"),
-        count(lit(1)).as("n"))
+    def arrays(d: DataFrame) = idArrays(idPostings(d), "doc_id", "lang")
     val b0 = arrays(batch).select(col("lang"), col("doc_id").as("d1"),
       col("toks").as("toks1"), col("n").as("n1"))
     // candidate corpus docs only: text loads for the delta, not the lake
@@ -253,17 +231,10 @@ object Dedup {
     // join re-pays itself (2.84 s single-pass vs 2.65 s skinny,
     // OPTIMIZATION_r19.md §5b); it only pays on length-heterogeneous
     // corpora where the prune is selective.
-    cand.join(b0, "d1").join(c0, "d2")
+    jaccardVerify(cand.join(b0, "d1").join(c0, "d2")
       // lang blocking, as the exact tier's join-on-lang enforces
       .filter(col("lang") === col("lang2"))
-      .filter(col("n1") * t <= col("n2") * 10 &&
-        col("n2") * t <= col("n1") * 10)
-      .withColumn("inter", graft.functions.VectorFunctions
-        .sortedIntersectCount(col("toks1"), col("toks2")))
-      .withColumn("uni", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * 10 >= col("uni") * t)
-      .select(col("d1"), col("d2"), col("inter"), col("uni"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
+      .filter(lengthBound(col("n1"), col("n2"), t)), t)
   }
 
   /** The skip ACCOUNTING for [[jaccardPairsAgainstCorpusBanded]]'s
@@ -414,9 +385,7 @@ object Dedup {
     * [[dedupAgainstCorpusLshIndexed]]-style per-doc verdict serving,
     * whose candidate/twin COUNTS are per corpus doc. */
   def bagClassReps(docs: DataFrame): DataFrame = {
-    val bagFp = md5(concat_ws("\u0000", col("lang"),
-      concat_ws(" ", sort_array(array_distinct(split(col("text"), " "))))))
-    val reps = docs.select(col("doc_id"), bagFp.as("bag_fp"))
+    val reps = docs.select(col("doc_id"), bagLangKey.as("bag_fp"))
       .groupBy("bag_fp").agg(min("doc_id").as("doc_id"))
     docs.join(reps.select("doc_id"), Seq("doc_id"), "left_semi")
   }
@@ -810,10 +779,6 @@ object Dedup {
     docs.select(col("doc_id"), col("lang"),
       explode(array_distinct(split(col("text"), " "))).as("token"))
 
-  /** Token-set Jaccard pairs ≥ threshold, blocked by `lang` so the
-    * self-join stays partition-local after one shuffle on (lang, token).
-    * Threshold compare kept integral (inter·10 ≥ t·10·union) so the
-    * oracle agrees bit-for-bit. */
   /** Prefix-filtered all-pairs (Bayardo et al., WWW'07 "Scaling Up All
     * Pairs Similarity Search") — the 100 TB-shaped plan:
     *
@@ -836,9 +801,7 @@ object Dedup {
     // Set cardinalities are preserved (xxhash64 collisions across a
     // corpus vocabulary are ~2^-40-improbable; a collision would only
     // nudge one pair's intersection count).
-    jaccardPairsOf(tokenPostings(docs)
-      .select(col("doc_id"), col("lang"), xxhash64(col("token")).as("tid")),
-      thresholdTenths)
+    jaccardPairsOf(idPostings(docs), thresholdTenths)
 
   /** Distinct character n-gram ids per document — the sub-token
     * postings tier: catches near-dups that word tokenization misses
@@ -863,10 +826,9 @@ object Dedup {
     * prefix buckets tiny. For a bounded batch (e.g. a daily ingest
     * verified against itself) the broadcast-verify variant
     * [[ngramJaccardPairsBroadcast]] trades a guard for zero shuffles. */
-  def ngramJaccardPairs(docs: DataFrame, n: Int, thresholdTenths: Int,
-                        rankByFrequency: Boolean = true): DataFrame =
-    jaccardPairsOf(ngramIdPostings(docs, n), thresholdTenths,
-      rankByFrequency)
+  def ngramJaccardPairs(docs: DataFrame, n: Int,
+                        thresholdTenths: Int): DataFrame =
+    jaccardPairsOf(ngramIdPostings(docs, n), thresholdTenths)
 
   /** Broadcast-verify n-gram Jaccard for BOUNDED batches: verifies all
     * intra-lang pairs directly against a broadcast corpus of sorted id
@@ -877,12 +839,8 @@ object Dedup {
   def ngramJaccardPairsBroadcast(docs: DataFrame, n: Int,
                                  thresholdTenths: Int,
                                  maxBroadcastRows: Long = 100000L): DataFrame = {
-    val rows = docs.count()
-    require(rows <= maxBroadcastRows,
-      s"corpus has $rows docs > maxBroadcastRows=$maxBroadcastRows: the " +
-        "broadcast-verify plan must hold every sorted id array in one " +
-        "executor; use ngramJaccardPairs (prefix-filtered postings) for " +
-        "an unbounded corpus")
+    requireBroadcastable(docs, maxBroadcastRows, "corpus",
+      "use ngramJaccardPairs (prefix-filtered postings) for an unbounded corpus")
     import org.apache.spark.sql.graftbridge.Bridge
     val t = thresholdTenths
     // the id array is row-local — sort/distinct it in place rather than
@@ -907,38 +865,22 @@ object Dedup {
         col("d1"))
     val b = docTokens.select(col("lang"), col("doc_id").as("d2"),
       col("toks").as("toks2"), col("n").as("n2"))
-    a.join(broadcast(b), "lang").filter(col("d1") < col("d2"))
-      // length bound before the merge: |a∩b| ≤ min(n1,n2), so J ≥ t
-      // needs t·|b| ≤ |a| ≤ |b|/t — prunes most pairs integer-cheaply
-      .filter(col("n1") * t <= col("n2") * 10 && col("n2") * t <= col("n1") * 10)
-      .withColumn("inter", graft.functions.VectorFunctions
-        .sortedIntersectCount(col("toks1"), col("toks2")))
-      .withColumn("uni", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * 10 >= col("uni") * t)
-      .select(col("d1"), col("d2"), col("inter"), col("uni"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
+    // length bound before the merge prunes most pairs integer-cheaply
+    jaccardVerify(a.join(broadcast(b), "lang").filter(col("d1") < col("d2"))
+      .filter(lengthBound(col("n1"), col("n2"), t)), t)
   }
 
   /** Prefix-filtered Jaccard over any `(doc_id, lang, tid)` id-postings
     * relation (see [[jaccardPairs]] for the algorithm notes).
     *
     * The Bayardo prefix theorem holds for ANY fixed global token order;
-    * rare-first ordering only minimizes candidates. `rankByFrequency`
-    * picks the order:
-    *   - `true` (default): global per-lang rare-first order, costing a
-    *     tf aggregation, a postings join, and a per-doc window (three
-    *     extra postings-sized shuffles). Measured FASTER even on
-    *     near-unique char 12-grams (sf0.1: 2.73 s vs 2.98 s): dup
-    *     clusters make exactly the shared grams non-rare, so rare-first
-    *     pushes them out of prefixes and candidates collapse.
-    *   - `false`: plain id order — the prefix becomes a row-local
-    *     SLICE of the already-sorted id array and the three ranking
-    *     shuffles vanish. The escape hatch for when the postings
-    *     shuffles (O(corpus grams) each) dominate the candidate join,
-    *     e.g. incremental batches with few dups against a huge gram
-    *     universe. */
-  private[graft] def jaccardPairsOf(tok: DataFrame, thresholdTenths: Int,
-                             rankByFrequency: Boolean = true): DataFrame = {
+    * the per-lang rare-first order costs a tf aggregation, a postings
+    * join and a per-doc window, and was measured FASTER than plain id
+    * order even on near-unique char 12-grams (sf0.1: 2.73 s vs 2.98 s):
+    * dup clusters make exactly the shared grams non-rare, so rare-first
+    * pushes them out of prefixes and candidates collapse. */
+  private[graft] def jaccardPairsOf(tok: DataFrame,
+                                    thresholdTenths: Int): DataFrame = {
     val t = thresholdTenths
     // (r18 optimization round: a lazy localCheckpoint of `tok` was
     // measured here and REJECTED — the postings relation is cheap to
@@ -955,45 +897,21 @@ object Dedup {
     // checkpoint (word tier 5.74 → 2.66 s on a checkpointed docs
     // input, where every re-run re-reads the checkpoint's collapsed
     // partitioning) — the declared queries scan parquet.)
-    // Per-doc SORTED id arrays + counts (verification side): sorted so
-    // the verify kernel is a linear primitive merge, not a hash probe.
-    val docTokens = tok.groupBy("doc_id", "lang")
-      .agg(sort_array(collect_list(col("tid"))).as("toks"), count(lit(1)).as("n"))
-    // prefix length = n − ⌈t·n⌉ + 1  (integer ceil: (t·n + 9) div 10)
-    val prefixLen = col("n") - ((col("n") * t + 9) / 10).cast("long") + 1
-    val prefix = if (rankByFrequency) {
-      // Global (per-lang) rare-first token order; ties broken by id.
-      val freq = tok.groupBy("lang", "tid").agg(count(lit(1)).as("tf"))
-      val ranked = tok.join(freq, Seq("lang", "tid"))
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("doc_id").orderBy(col("tf"), col("tid"))))
-      ranked.join(docTokens.select("doc_id", "n"), "doc_id")
-        .filter(col("pos") <= prefixLen)
-        .select(col("lang"), col("tid"), col("doc_id"), col("n"))
-    } else {
-      docTokens.select(col("lang"), col("doc_id"), col("n"),
-        explode(slice(col("toks"), lit(1), prefixLen.cast("int"))).as("tid"))
-        .select(col("lang"), col("tid"), col("doc_id"), col("n"))
-    }
+    val docTokens = idArrays(tok, "doc_id", "lang")
+    val prefix = rareFirstPrefix(tok, docTokens.select("doc_id", "n"), t)
+      .select(col("lang"), col("tid"), col("doc_id"), col("n"))
     val candidates = prefix.as("p1")
       .join(prefix.as("p2"),
         col("p1.tid") === col("p2.tid") && col("p1.lang") === col("p2.lang") &&
           col("p1.doc_id") < col("p2.doc_id") &&
-          col("p1.n") * t <= col("p2.n") * 10 &&
-          col("p2.n") * t <= col("p1.n") * 10)
+          lengthBound(col("p1.n"), col("p2.n"), t))
       .select(col("p1.doc_id").as("d1"), col("p2.doc_id").as("d2"))
       .distinct()
-    candidates
+    jaccardVerify(candidates
       .join(docTokens.select(col("doc_id").as("d1"), col("toks").as("toks1"),
         col("n").as("n1")), "d1")
       .join(docTokens.select(col("doc_id").as("d2"), col("toks").as("toks2"),
-        col("n").as("n2")), "d2")
-      .withColumn("inter", graft.functions.VectorFunctions
-        .sortedIntersectCount(col("toks1"), col("toks2")))
-      .withColumn("uni", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * 10 >= col("uni") * t)
-      .select(col("d1"), col("d2"), col("inter"), col("uni"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
+        col("n").as("n2")), "d2"), t)
   }
 
   /** ASYMMETRIC containment pairs: C(a→b) = |A∩B| / |A| ≥ t over
@@ -1064,17 +982,8 @@ object Dedup {
     * auto-switch's sizing stats memoizable across invocations
     * ([[RelationStats]]; a checkpointed relation canonicalizes to a
     * fresh RDD scan every call, so memo keys on it never hit). */
-  private[graft] def bagQuotientPlans(docs: DataFrame): (DataFrame, DataFrame) = {
-    val bagFp = md5(concat_ws("\u0000", col("lang"),
-      concat_ws(" ", sort_array(array_distinct(split(col("text"), " "))))))
-    val bagged = docs.select(col("doc_id"), col("lang"), col("text"),
-      bagFp.as("bag_fp"))
-    val classes = bagged.groupBy("bag_fp").agg(min("doc_id").as("rep"))
-    val members = bagged.select("doc_id", "bag_fp").join(classes, "bag_fp")
-    val repDocs = members.filter(col("doc_id") === col("rep"))
-      .select("doc_id").join(docs, "doc_id")
-    (members, repDocs)
-  }
+  private[graft] def bagQuotientPlans(docs: DataFrame): (DataFrame, DataFrame) =
+    quotient(docs.select(col("doc_id"), bagLangKey.as("bag_fp")), "bag_fp", docs)
 
   def containmentPairs(docs: DataFrame, thresholdTenths: Int): DataFrame = {
     val (members, repDocs) = bagQuotient(docs)
@@ -1114,15 +1023,10 @@ object Dedup {
     * dup mass already collapsed). On a cluster: `checkpoint` to
     * reliable storage instead. */
   private def containmentTokenRels(docs: DataFrame): (DataFrame, DataFrame) = {
-    val tok = tokenPostings(docs)
-      .select(col("doc_id"), col("lang"), xxhash64(col("token")).as("tid"))
-      .localCheckpoint(eager = false)
+    val tok = idPostings(docs).localCheckpoint(eager = false)
     // same trade for the per-doc arrays: consumed by the prefix-length
     // join and both verify sides
-    val docTokens = tok.groupBy("doc_id", "lang")
-      .agg(sort_array(collect_list(col("tid"))).as("toks"),
-        count(lit(1)).as("n"))
-      .localCheckpoint(eager = false)
+    val docTokens = idArrays(tok, "doc_id", "lang").localCheckpoint(eager = false)
     (tok, docTokens)
   }
 
@@ -1134,13 +1038,7 @@ object Dedup {
                                       thresholdTenths: Int): (DataFrame, DataFrame) = {
     val t = thresholdTenths
     val (tok, docTokens) = containmentTokenRels(docs)
-    val prefixLen = col("n") - ((col("n") * t + 9) / 10).cast("long") + 1
-    val freq = tok.groupBy("lang", "tid").agg(count(lit(1)).as("tf"))
-    val ranked = tok.join(freq, Seq("lang", "tid"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("tf"), col("tid"))))
-    val prefix = ranked.join(docTokens.select("doc_id", "n"), "doc_id")
-      .filter(col("pos") <= prefixLen)
+    val prefix = rareFirstPrefix(tok, docTokens.select("doc_id", "n"), t)
       .select(col("lang"), col("tid"), col("doc_id"), col("n"))
       // Spread the PROBE side (the tfidfCosinePairs trap, measured
       // here too): the prefix relation is tiny (~prefixLen rows per
@@ -1224,8 +1122,7 @@ object Dedup {
                                    thresholdTenths: Int): Boolean = {
     val t = thresholdTenths
     val rep = bagQuotientPlans(rawDocs)._2
-    val tok = tokenPostings(rep)
-      .select(col("doc_id"), col("lang"), xxhash64(col("token")).as("tid"))
+    val tok = idPostings(rep)
     val tokCount = RelationStats.memoCount(tok)
     tokCount <= BruteVerifyTokenBound && {
       val allPairs = RelationStats.memoScalar(
@@ -1233,14 +1130,8 @@ object Dedup {
           .agg(coalesce(sum(col("m") * (col("m") - 1)), lit(0L))
             .cast("long").as("v")))
       val n = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val prefixLen = col("n") - ((col("n") * t + 9) / 10).cast("long") + 1
-      val freq = tok.groupBy("lang", "tid").agg(count(lit(1)).as("tf"))
       val rawHits = RelationStats.memoScalar(
-        tok.join(freq, Seq("lang", "tid"))
-          .withColumn("pos", row_number().over(
-            Window.partitionBy("doc_id").orderBy(col("tf"), col("tid"))))
-          .join(n, "doc_id")
-          .filter(col("pos") <= prefixLen)
+        rareFirstPrefix(tok, n, t)
           .agg(coalesce(sum(col("tf") - 1), lit(0L)).cast("long").as("v")))
       rawHits * 4 >= allPairs
     }
@@ -1274,27 +1165,17 @@ object Dedup {
       // disables AQE's byte-based coalescing, exactly as the prefix
       // path already does for its candidate fan-out. One JVM, outputs
       // equal: verify 2.22 → 0.98 s (OPTIMIZATION_r19.md §7).
-      probeSide.repartition(
+      containmentVerify(probeSide.repartition(
           docs.sparkSession.sparkContext.defaultParallelism, col("d1"))
         .join(broadcast(docTokens.select(col("lang"),
           col("doc_id").as("d2"), col("toks").as("toks2"))), "lang")
-        .filter(col("d1") =!= col("d2"))
-        .withColumn("inter", graft.functions.VectorFunctions
-          .sortedIntersectCount(col("toks1"), col("toks2")))
-        .filter(col("inter") * 10 >= col("n1") * t)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"),
-          (col("inter").cast("double") / col("n1")).as("containment"))
+        .filter(col("d1") =!= col("d2")), t)
     } else {
       val (docTokens, candidates) = containmentCandidatesOf(docs, t)
-      candidates
+      containmentVerify(candidates
         .join(docTokens.select(col("doc_id").as("d1"), col("toks").as("toks1"),
           col("n").as("n1")), "d1")
-        .join(docTokens.select(col("doc_id").as("d2"), col("toks").as("toks2")), "d2")
-        .withColumn("inter", graft.functions.VectorFunctions
-          .sortedIntersectCount(col("toks1"), col("toks2")))
-        .filter(col("inter") * 10 >= col("n1") * t)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"),
-          (col("inter").cast("double") / col("n1")).as("containment"))
+        .join(docTokens.select(col("doc_id").as("d2"), col("toks").as("toks2")), "d2"), t)
     }
   }
 
@@ -1306,10 +1187,10 @@ object Dedup {
     * → corpus: the batch doc is always the contained side, so the
     * Bayardo prefix bound applies to the BATCH side only — and here
     * the prefix is a row-local SLICE of each batch doc's sorted id
-    * array (the `rankByFrequency = false` idiom: the bound holds under
-    * ANY fixed token order, and the id-order prefix costs zero ranking
-    * shuffles — the right trade for an ingestion batch, which is small
-    * next to the corpus and re-runs per delivery). Corpus side: full
+    * array (the bound holds under ANY fixed token order, and the
+    * id-order prefix costs zero ranking shuffles — the right trade for
+    * an ingestion batch, which is small next to the corpus and re-runs
+    * per delivery). Corpus side: full
     * postings, as [[containmentPairs]] explains no container-side
     * bound exists; at 100 TB those postings persist bucketed by
     * (lang, tid) like [[saveCorpusDigests]] and each batch probes the
@@ -1324,8 +1205,7 @@ object Dedup {
     val bt = newDocs.select(col("doc_id"), col("lang"), ids.as("toks"))
       .select(col("doc_id"), col("lang"), col("toks"),
         size(col("toks")).cast("long").as("n"))
-    val prefLen = (col("n") - ((col("n") * t + 9) / 10).cast("long") + 1)
-      .cast("int")
+    val prefLen = prefixLength(col("n"), t).cast("int")
     val probe = bt.select(col("doc_id").as("d1"), col("lang"),
       explode(slice(col("toks"), lit(1), prefLen)).as("tid"))
     val corpusPost = corpus.select(col("doc_id").as("d2"), col("lang"),
@@ -1341,8 +1221,7 @@ object Dedup {
       .join(bt.select(col("doc_id").as("d1"), col("toks").as("toks1"),
         col("n").as("n1")), "d1")
       .join(corpusTokens, "d2")
-      .filter(graft.functions.VectorFunctions
-        .sortedIntersectCount(col("toks1"), col("toks2")) * 10 >= col("n1") * t)
+      .filter(containmentAtLeast(intersection, col("n1"), t))
       .select(col("d1").as("doc_id")).distinct()
     newDocs.join(matched, Seq("doc_id"), "left_anti")
   }
@@ -1434,13 +1313,8 @@ object Dedup {
     */
   def minhashLshPairs(docs: DataFrame, numHashes: Int = 32,
                       bands: Int = 8): DataFrame =
-    lshPairsQuotiented(docs, bagClassFp,
+    lshPairsQuotiented(docs, bagKey,
       reps => minhashSignatures(reps, numHashes), numHashes, bands)
-
-  /** The word-MinHash quotient class key: the distinct token bag —
-    * exactly the signature's preimage. */
-  private def bagClassFp: Column = md5(concat_ws(" ",
-    sort_array(array_distinct(split(col("text"), " ")))))
 
   /** Forced RAW / forced-quotient paths regardless of what the corpus
     * would auto-select — the quotient-equivalence spec and the MinHash
@@ -1454,7 +1328,7 @@ object Dedup {
                                                   numHashes: Int = 32,
                                                   bands: Int = 8): DataFrame =
     lshPairsQuotientedCore(docs,
-      docs.select(col("doc_id"), bagClassFp.as("class_fp")),
+      docs.select(col("doc_id"), bagKey.as("class_fp")),
       reps => minhashSignatures(reps, numHashes), numHashes, bands)
 
   /** Distinct 40-bit character-shingle ids of a text column — FNV
@@ -2010,10 +1884,7 @@ object Dedup {
   private[graft] def lshPairsQuotientedCore(docs: DataFrame, keyed: DataFrame,
                                             sigsOf: DataFrame => DataFrame,
                                             numHashes: Int, bands: Int): DataFrame = {
-    val classes = keyed.groupBy("class_fp").agg(min("doc_id").as("rep"))
-    val members = keyed.join(classes, "class_fp")
-    val repDocs = members.filter(col("doc_id") === col("rep"))
-      .select("doc_id").join(docs, "doc_id")
+    val (members, repDocs) = quotient(keyed, "class_fp", docs)
     val repPairs = lshPairsOfSigs(sigsOf(repDocs), numHashes, bands)
     // d1 < d2 holds for rep pairs but not member-wise: a member of the
     // lower-rep class may outnumber one of the higher-rep class
@@ -2352,25 +2223,14 @@ object Dedup {
     * compare, the one float being the final division. */
   private def snmVerify(docs: DataFrame, cands: DataFrame,
                         thresholdTenths: Int): DataFrame = {
-    val t = thresholdTenths
-    val tok = tokenPostings(docs)
-      .select(col("doc_id"), xxhash64(col("token")).as("tid"))
-    val docToks = tok.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("tid"))).as("toks"),
-        count(lit(1)).as("n"))
-    cands
+    val docToks = idArrays(idPostings(docs), "doc_id")
+    jaccardVerify(cands
       .join(docToks.select(col("doc_id").as("da"), col("toks").as("toks1"),
         col("n").as("n1")), "da")
       .join(docToks.select(col("doc_id").as("db"), col("toks").as("toks2"),
-        col("n").as("n2")), "db")
-      .withColumn("inter", graft.functions.VectorFunctions
-        .sortedIntersectCount(col("toks1"), col("toks2")))
-      .withColumn("uni", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * 10 >= col("uni") * t)
-      .select(least(col("da"), col("db")).as("d1"),
-        greatest(col("da"), col("db")).as("d2"),
-        col("inter"), col("uni"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
+        col("n").as("n2")), "db"), thresholdTenths,
+      Seq(least(col("da"), col("db")).as("d1"),
+        greatest(col("da"), col("db")).as("d2")))
   }
 
   /** Edit-distance-≤1 fuzzy self-join over a string key — typo-pair

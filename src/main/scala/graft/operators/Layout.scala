@@ -417,7 +417,9 @@ object Layout {
       acc.filter(col(s"max_$c").cast("double") >= lo &&
         col(s"min_$c").cast("double") <= hi)
     }
-    val files = keep.select("file").collect().map(_.getString(0))
+    // sorted: the manifest's row order follows its paths' hashes, so an
+    // unsorted list would make the scan's file order run-dependent
+    val files = keep.select("file").collect().map(_.getString(0)).sorted
     val data =
       if (files.isEmpty) spark.read.parquet(dataPath).limit(0)
       else spark.read.parquet(files.toSeq: _*)

@@ -127,9 +127,7 @@ object TextOps {
     * two-level aggregation (distinct-bag level is partial-agg
     * friendly; no Expand). */
   def dupRateBySource(docs: DataFrame): DataFrame = {
-    val bagFp = md5(concat_ws(" ",
-      array_sort(array_distinct(split(col("text"), " ")))).cast("binary"))
-    docs.select(col("source"), bagFp.as("bag_fp"))
+    docs.select(col("source"), TokenSetKernel.bagKey.as("bag_fp"))
       .groupBy("source", "bag_fp").agg(count(lit(1)).as("c"))
       .groupBy("source")
       .agg(sum("c").as("docs"), count(lit(1)).as("distinct_bags"))
@@ -147,8 +145,7 @@ object TextOps {
     docs.select(
       col("doc_id"),
       md5(col("text").cast("binary")).as("exact_fp"),
-      md5(concat_ws(" ", array_sort(array_distinct(split(col("text"), " ")))).cast("binary"))
-        .as("bag_fp"))
+      TokenSetKernel.bagKey.as("bag_fp"))
 
   /** Canonical text normalization — the step CCNet-style pipelines run
     * BEFORE content hashing, so case/punctuation/numeral variants of
@@ -1621,9 +1618,7 @@ object TextOps {
     val splitCol = when(nibble.isin("0", "1"), "test")
       .when(nibble.isin("2", "3"), "val")
       .otherwise("train")
-    val bagFp = md5(concat_ws(" ",
-      array_sort(array_distinct(split(col("text"), " ")))).cast("binary"))
-    docs.select(bagFp.as("content_hash"), col("doc_id"), splitCol.as("split"))
+    docs.select(TokenSetKernel.bagKey.as("content_hash"), col("doc_id"), splitCol.as("split"))
       .groupBy("content_hash")
       .agg(count(lit(1)).as("docs"),
         min("doc_id").as("first_doc"),
@@ -1648,10 +1643,8 @@ object TextOps {
     * split, one member-wise join back — all equi-joins on the
     * fingerprint; strings never shuffle (the fingerprint is md5). */
   def leakFreeSplit(docs: DataFrame): DataFrame = {
-    val bagFp = md5(concat_ws(" ",
-      array_sort(array_distinct(split(col("text"), " ")))).cast("binary"))
     val assigned = hashSplit(docs).select("doc_id", "split")
-    val keyed = docs.select(col("doc_id"), bagFp.as("content_hash"))
+    val keyed = docs.select(col("doc_id"), TokenSetKernel.bagKey.as("content_hash"))
     val canon = keyed.groupBy("content_hash")
       .agg(min("doc_id").as("canon_id"))
       .join(assigned.withColumnsRenamed(

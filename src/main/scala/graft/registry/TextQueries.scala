@@ -1,10 +1,10 @@
 package graft
 package registry
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Dedup, TextOps}
+import graft.operators.{Curation, Dedup, TextOps, TokenSetKernel}
 
 import graft.SparkEntry._
 
@@ -69,6 +69,13 @@ private[graft] object TextQueries {
     * p90 (209) postings so the cap measurably bites — loss vs the
     * uncapped truth measured in TFIDF_SHARD_r13.json. */
   private val TfidfDfCeiling = 180L
+
+  /** `tfidf_cosine_sharded`'s operator call, shared with the scale
+    * smoke so both time the plan the registry declares. */
+  private[graft] def tfidfCosineSharded(docs: DataFrame): DataFrame =
+    TextOps.tfidfCosinePairs(docs, k = 10,
+      thresholdHundredths = 60, buildShards = 0,
+      maxBroadcastDocs = 10000000L, maxPairsPerShard = 2000000000L)
 
   /** `shard_balance` output shard count (query + oracle). */
   private val ShardBalanceN = 8
@@ -1136,10 +1143,7 @@ private[graft] object TextQueries {
     // declaration census lists it); Bench's min-of-k drops that first
     // repetition.
     QuerySpec("tfidf_cosine_sharded", (s, dir) =>
-      TextOps.tfidfCosinePairs(Tables.documents(s, dir), k = 10,
-        thresholdHundredths = 60, buildShards = 0,
-        maxBroadcastDocs = 10000000L, maxPairsPerShard = 2000000000L)
-        .orderBy("d1", "d2"),
+      tfidfCosineSharded(Tables.documents(s, dir)).orderBy("d1", "d2"),
       // sharded build plan, identical semantics — same oracle text
       oracle = TfidfCosineSql),
     // The mass-CAPPED tier (r13): candidates generate only through
@@ -1904,9 +1908,7 @@ private[graft] object TextQueries {
         .select("doc_id")
       val clean = docs.join(gated, "doc_id")
         .join(contaminated, Seq("doc_id"), "left_anti")
-      val bagFp = md5(concat_ws(" ",
-        array_sort(array_distinct(split(col("text"), " ")))).cast("binary"))
-      val w = Window.partitionBy(bagFp).orderBy(col("doc_id"))
+      val w = Window.partitionBy(TokenSetKernel.bagKey).orderBy(col("doc_id"))
       val deduped = clean.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).drop("rn")
       TextOps.reservoirSample(deduped, Map("en" -> 40, "de" -> 20),

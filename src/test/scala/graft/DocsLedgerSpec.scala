@@ -77,4 +77,22 @@ class DocsLedgerSpec extends AnyFunSuite {
     assert(builders === 1,
       "sessions are built only by GraftExtensions.session")
   }
+
+  test("the pair tiers' compares, prefix length and bag key are each written once") {
+    // oracle SQL (triple-quoted strings) states the same rules on purpose
+    val code = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => Files.readString(f).replaceAll("(?s)\"\"\".*?\"\"\"", ""))
+      .mkString("\n")
+    val decisions = Seq(
+      "Jaccard compare inter·10 ≥ uni·t" -> raw"""\*\s*10\s*>=\s*(?:col\(")?uni"?\)?\s*\*\s*t\b""",
+      "containment compare inter·10 ≥ n1·t" -> raw"""\*\s*10\s*>=\s*(?:col\(")?n1"?\)?\s*\*\s*t\b""",
+      "prefix length n − ⌈t·n⌉ + 1" -> raw"\+\s*9\s*\)\s*/\s*10\b",
+      "bag key md5(concat_ws(" -> raw"md5\(concat_ws\(")
+    for ((what, re) <- decisions) {
+      val n = re.r.findAllIn(code).size
+      assert(n === 1, s"$what is written $n times in src/main; " +
+        "call graft.operators.TokenSetKernel instead")
+    }
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import graft.operators.Layout
 
@@ -101,6 +102,15 @@ class LayoutSpec extends SparkSpec {
     assert(pruned.count() === 64L)
     assert(pruned.except(full).count() === 0L &&
       full.except(pruned).count() === 0L)
+    // the scan lists the kept files in path order, not in the
+    // manifest's row order (which follows the paths' hashes)
+    val half = Layout.manifestPrunedRead(spark, s"$base/data",
+      s"$base/manifest", Seq(("a", 0.0, 31.0)))
+    val scanned = half.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location.rootPaths.map(_.toString) }
+    assert(scanned.size === 1 && scanned.head.size >= 2)
+    assert(scanned.head === scanned.head.sorted)
     // empty-range arm: no file survives, the read returns zero rows
     // without erroring (parquet(Nil) is invalid — the limit(0) guard)
     val none = Layout.manifestPrunedRead(spark, s"$base/data",

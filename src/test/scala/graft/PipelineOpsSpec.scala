@@ -120,6 +120,91 @@ class PipelineOpsSpec extends SparkSpec {
         s"verify paths diverge at t=$t")
   }
 
+  test("every pair tier keeps pairs exactly at the threshold and drops the ones just below") {
+    import spark.implicits._
+    def toks(p: String, from: Int, to: Int) = (from to to).map(i => s"$p$i")
+    def words(ts: Seq[String]) = ts.mkString(" ")
+    // t = 0.9. (0,1): J = 9/10 and C(0→1) = 9/10, both exactly at t,
+    // with the length bound tight (9·9 ≤ 10·10, 10·9 ≤ 9·10); (2,3):
+    // J = 17/19, just below; (4,5): C(4→5) = 9/10 exactly; (6,7):
+    // C(6→7) = 17/19, just below; 8 is 0's bag in another lang; 9 is
+    // a bag-dup of 0.
+    val word = Seq(
+      (0L, words(toks("a", 1, 10)), "en"),
+      (1L, words(toks("a", 1, 9)), "en"),
+      (2L, words(toks("c", 1, 18)), "en"),
+      (3L, words(toks("c", 1, 17) :+ "d18"), "en"),
+      (4L, words(toks("g", 1, 10)), "en"),
+      (5L, words(toks("g", 1, 9) ++ toks("h", 1, 20)), "en"),
+      (6L, words(toks("k", 1, 19)), "en"),
+      (7L, words(toks("k", 1, 17) ++ toks("m", 1, 10)), "en"),
+      (8L, words(toks("a", 1, 10)), "de"),
+      (9L, words(toks("a", 10, 10) ++ toks("a", 1, 9)), "en"))
+    // the same boundaries over distinct characters, for the n = 1 tier
+    val chars = Seq(
+      (20L, "abcdefghij", "en"), (21L, "abcdefghi", "en"),
+      (22L, "ABCDEFGHIJKLMNOPQR", "en"), (23L, "ABCDEFGHIJKLMNOPQZ", "en"))
+    def df(rows: Seq[(Long, String, String)]) = rows
+      .map { case (id, t, l) => (id, t, l, "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    type Doc = (Long, String, String)
+    def wordSet(d: Doc) = d._2.split(" ").toSet
+    def charSet(d: Doc) = d._2.map(_.toString).toSet
+    // plain-Scala truth: (d1, d2, inter, uni) for J ≥ 0.9 and
+    // (d1, d2, inter, n1) for C(d1→d2) ≥ 0.9, same lang only
+    def jacTruth(as: Seq[Doc], bs: Seq[Doc], set: Doc => Set[String],
+                 ordered: Boolean) =
+      (for (a <- as; b <- bs if a._3 == b._3 && a._1 != b._1 &&
+             (!ordered || a._1 < b._1)) yield {
+        val i = (set(a) & set(b)).size.toLong
+        (a._1, b._1, i, set(a).size + set(b).size - i)
+      }).filter(p => p._3 * 10 >= p._4 * 9).toSet
+    def contTruth(as: Seq[Doc], bs: Seq[Doc]) =
+      (for (a <- as; b <- bs if a._3 == b._3 && a._1 != b._1) yield
+        (a._1, b._1, (wordSet(a) & wordSet(b)).size.toLong, wordSet(a).size.toLong))
+        .filter(p => p._3 * 10 >= p._4 * 9).toSet
+    def quad(d: org.apache.spark.sql.DataFrame, c: String) =
+      d.select(col("d1"), col("d2"), col("inter"), col(c)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+
+    val selfJ = jacTruth(word, word, wordSet, ordered = true)
+    assert(selfJ.contains((0L, 1L, 9L, 10L)) && !selfJ.exists(p => p._1 == 2L))
+    assert(quad(Dedup.jaccardPairs(df(word), 9), "uni") === selfJ)
+    assert(quad(Dedup.snmPairs(df(word), window = word.size, 9), "uni") === selfJ)
+
+    val (batch, corpus) = word.partition(d => Set(1L, 3L)(d._1))
+    val crossJ = jacTruth(batch, corpus, wordSet, ordered = false)
+    assert(crossJ.contains((1L, 0L, 9L, 10L)) && !crossJ.exists(p => p._1 == 3L))
+    assert(quad(Dedup.jaccardPairsAgainstCorpus(df(batch), df(corpus), 9),
+      "uni") === crossJ)
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_boundary_spec_").toString
+    Dedup.saveLshBandIndex(df(corpus), s"$base/lsh", numHashes = 32, bands = 8)
+    assert(quad(Dedup.jaccardPairsAgainstCorpusBanded(spark, df(batch),
+      df(corpus), s"$base/lsh", 9), "uni") === crossJ)
+
+    val charJ = jacTruth(chars, chars, charSet, ordered = true)
+    assert(charJ === Set((20L, 21L, 9L, 10L)))
+    assert(quad(Dedup.ngramJaccardPairs(df(chars), 1, 9), "uni") === charJ)
+    assert(quad(Dedup.ngramJaccardPairsBroadcast(df(chars), 1, 9), "uni") === charJ)
+
+    val selfC = contTruth(word, word)
+    assert(selfC.contains((0L, 1L, 9L, 10L)) && selfC.contains((4L, 5L, 9L, 10L)) &&
+      !selfC.exists(p => p._1 == 6L))
+    assert(quad(Dedup.containmentPairs(df(word), 9), "n1") === selfC)
+    val wordNoDup = df(word.filterNot(_._1 == 9L))
+    for (brute <- Seq(true, false))
+      assert(quad(Dedup.containmentPairsOf(wordNoDup, 9, bruteVerify = brute),
+        "n1") === contTruth(word.filterNot(_._1 == 9L), word.filterNot(_._1 == 9L)))
+
+    val (fresh, lake) = word.partition(d => Set(1L, 3L, 4L, 6L)(d._1))
+    val contained = contTruth(fresh, lake).map(_._1)
+    assert(contained === Set(1L, 3L, 4L))
+    val kept = Dedup.dedupAgainstCorpusContainment(df(fresh), df(lake), 9)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(kept === fresh.map(_._1).toSet -- contained)
+  }
+
   test("concat-and-chunk packing assigns by start offset and counts straddlers") {
     import spark.implicits._
     // three 3-token docs, budget 5: doc2 starts at offset 3 (chunk 0)
