@@ -10,7 +10,11 @@ Each seed makes one pair: one untraced run of `graftbench/run.py` in each
 tree, back to back. The order alternates from pair to pair (parent first on
 even pairs, change first on odd ones), so a drifting host load does not
 favour one side. Each tree builds into its own directory, passed to run.py
-as `CARGO_TARGET_DIR`, so neither rebuilds the other's classes. Every run's
+as `CARGO_TARGET_DIR`, so neither rebuilds the other's classes. The build
+directories sit under a new temp dir per invocation unless `--build-root`
+names one to reuse: run.py keeps a tree's build by its source hash, and a
+reused build of an extract that has since been deleted points at classes
+that are gone. Every run's
 host record is printed as it ends; then, for `setup_s` and `pass_s`, the
 medians and quartiles (`statistics.quantiles(n=4)`) of both sides, the
 number of pairs the change won (lower is better), the relative change of
@@ -71,13 +75,14 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
     ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--build-root", default=os.path.join(tempfile.gettempdir(), "graftbench_ab"),
-                    help="holds one build directory per side")
+    ap.add_argument("--build-root",
+                    help="holds one build directory per side (default: a new temp dir)")
     ap.add_argument("--out", help="append one JSON line per run to this file")
     args = ap.parse_args()
 
     trees = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
-    builds = {side: os.path.join(args.build_root, side) for side in trees}
+    root = args.build_root or tempfile.mkdtemp(prefix="graftbench_ab_")
+    builds = {side: os.path.join(root, side) for side in trees}
     vals = {side: {m: [] for m in METRICS} for side in trees}
     wins = {m: 0 for m in METRICS}
     bad = []

@@ -17,7 +17,10 @@ changes from run to run without a code change:
   - part-file names (`part-00019-<uuid>`): a file index lists a
     multi-file read in the order of its paths' hashes, and the paths
     hold the run's temp dir, so even which file is named first is
-    run-local.
+    run-local;
+  - the checkout directory in `file:` locations under its `src/` (the
+    bundled CSV fixtures are read by absolute path, so a parent
+    extracted elsewhere would differ only there).
 
 Prints the queries whose masked plans differ, or that only one side
 has, and exits 1 if there is any; `--diff` adds a unified diff each.
@@ -36,6 +39,7 @@ MASKS = [
                 r"|[A-Za-z0-9_]+?_\d{6,})"), "<tmpdir>"),
     (re.compile(r"(?:part-\d{5}-)?[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}"
                 r"-[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"(?<=file:)/[^\s\[\],]*?(?=/src/)"), "<tree>"),
     (re.compile(r"\b\w+\.scala:\d+"), "<callsite>"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),

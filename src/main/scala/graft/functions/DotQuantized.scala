@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
@@ -38,57 +37,37 @@ case class DotQuantized(left: Expression, right: Expression, scale: Int)
 
   override def nullable: Boolean = true
 
+  @transient private lazy val scan = KnownNoNullElements.mayHoldNull(left, right)
+
   protected override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
+    if (KnownNoNullElements.zipNull(a, b, scan)) null
+    else DotQuantized.compute(a, b, scale)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      if (graft.functions.KnownNoNullElements.zipNull($a, $b, $scan)) ${ev.isNull} = true;
+      else ${ev.value} = graft.functions.DotQuantized.compute($a, $b, $scale);""")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): DotQuantized =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotQuantized {
+  /** The loop, over equal-length arrays with no NULL element
+    * ([[KnownNoNullElements.zipNull]] rules those out first). */
+  def compute(a: ArrayData, b: ArrayData, scale: Int): Long = {
     val n = a.numElements()
-    if (n != b.numElements()) return null
     var acc = 0L
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
       acc += math.floor(a.getFloat(i).toDouble * scale).toLong *
         math.floor(b.getFloat(i).toDouble * scale).toLong
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val a = ctx.freshName("arrA")
-    val b = ctx.freshName("arrB")
-    val i = ctx.freshName("i")
-    val n = ctx.freshName("n")
-    val acc = ctx.freshName("acc")
-    val ok = ctx.freshName("ok")
-    val ad = classOf[ArrayData].getName
-    ev.copy(code =
-      code"""
-        ${leftGen.code}
-        ${rightGen.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = 0L;
-        if (!${leftGen.isNull} && !${rightGen.isNull}) {
-          $ad $a = ${leftGen.value};
-          $ad $b = ${rightGen.value};
-          int $n = $a.numElements();
-          if ($n == $b.numElements()) {
-            boolean $ok = true;
-            long $acc = 0L;
-            for (int $i = 0; $i < $n; $i++) {
-              if ($a.isNullAt($i) || $b.isNullAt($i)) { $ok = false; break; }
-              $acc += (long) Math.floor((double) $a.getFloat($i) * $scale)
-                    * (long) Math.floor((double) $b.getFloat($i) * $scale);
-            }
-            if ($ok) { ${ev.isNull} = false; ${ev.value} = $acc; }
-          }
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): DotQuantized =
-    copy(left = newLeft, right = newRight)
 }

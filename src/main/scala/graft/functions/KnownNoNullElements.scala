@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Narrows an array column's static element nullability to
   * `containsNull = false`, validating the claim at runtime.
@@ -58,4 +58,44 @@ object KnownNoNullElements {
     }
     a
   }
+
+  /** The type gate of the kernels that read `array<bigint>` elements
+    * with `getLong`: every input must be `containsNull = false`, else
+    * the failure names this wrapper as the fix. */
+  def checkLongArrays(kernel: String, corrupts: String,
+                      inputs: Expression*): TypeCheckResult = {
+    val types = inputs.map(_.dataType)
+    val longs = Seq(false, true).map(ArrayType(LongType, _))
+    if (types.forall(_ == longs.head)) TypeCheckResult.TypeCheckSuccess
+    else if (types.forall(longs.contains)) TypeCheckResult.TypeCheckFailure(
+      s"$kernel reads elements as primitive longs; a null element would " +
+        s"silently corrupt the $corrupts. Wrap nullable inputs in " +
+        "KnownNoNullElements (validated narrowing) first")
+    else TypeCheckResult.TypeCheckFailure(
+      s"$kernel requires array<bigint> inputs, got ${types.mkString(", ")}")
+  }
+
+  /** Whether any input's static type admits a NULL element. */
+  def mayHoldNull(inputs: Expression*): Boolean =
+    inputs.exists(_.dataType.asInstanceOf[ArrayType].containsNull)
+
+  /** The zip kernels' NULL rule, which both evaluation modes check
+    * before the kernel's loop: the lengths differ, or — scanned only
+    * when `scan`, i.e. [[mayHoldNull]] — either array holds a NULL
+    * element. */
+  def zipNull(a: ArrayData, b: ArrayData, scan: Boolean): Boolean = {
+    val n = a.numElements()
+    if (n != b.numElements()) return true
+    var i = 0
+    while (scan && i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** A kernel's `array<bigint>` result, or NULL where its loop
+    * returned none. */
+  def longsOrNull(r: Array[Long]): ArrayData =
+    if (r == null) null else new GenericArrayData(r)
 }

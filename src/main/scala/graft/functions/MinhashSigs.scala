@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** All K MinHash signature values of an `array<bigint>` id column in ONE
@@ -29,15 +28,7 @@ case class MinhashSigs(child: Expression, as_ : Seq[Long], bs: Seq[Long],
     "a/b parameter arrays must be same nonempty length")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
-      case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
-        "minhash_sigs reads elements as primitive longs; a null element " +
-          "would silently corrupt the signature. Wrap the input in " +
-          "KnownNoNullElements (validated narrowing) first")
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"minhash_sigs requires array<bigint> input, got $other")
-    }
+    KnownNoNullElements.checkLongArrays(prettyName, "signature", child)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
@@ -46,32 +37,17 @@ case class MinhashSigs(child: Expression, as_ : Seq[Long], bs: Seq[Long],
   @transient private lazy val aArr = as_.toArray
   @transient private lazy val bArr = bs.toArray
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val r = MinhashSigs.compute(input.asInstanceOf[ArrayData], aArr, bArr, prime)
-    if (r == null) null else new GenericArrayData(r)
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    KnownNoNullElements.longsOrNull(
+      MinhashSigs.compute(input.asInstanceOf[ArrayData], aArr, bArr, prime))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("mhA", aArr, "long[]")
     val bRef = ctx.addReferenceObj("mhB", bArr, "long[]")
-    val childGen = child.genCode(ctx)
-    val raw = ctx.freshName("raw")
-    val gad = classOf[GenericArrayData].getName
-    val ad = classOf[ArrayData].getName
-    val cls = "graft.functions.MinhashSigs"
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        $ad ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          long[] $raw = $cls.compute(${childGen.value}, $aRef, $bRef, ${prime}L);
-          if ($raw != null) {
-            ${ev.isNull} = false;
-            ${ev.value} = new $gad($raw);
-          }
-        }
-      """)
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.KnownNoNullElements.longsOrNull(
+        graft.functions.MinhashSigs.compute($c, $aRef, $bRef, ${prime}L));
+      ${ev.isNull} = ${ev.value} == null;""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinhashSigs =

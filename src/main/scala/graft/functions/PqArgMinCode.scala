@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -52,92 +50,15 @@ case class PqArgMinCode(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val vs = l.asInstanceOf[ArrayData]
-    val books = r.asInstanceOf[ArrayData]
-    val nb = books.numElements()
-    if (nb == 0) return null
-    val nd = vs.numElements()
-    var best = Long.MaxValue
-    var i = 0
-    while (i < nb) {
-      if (books.isNullAt(i)) return null
-      val b = books.getStruct(i, 2)
-      if (b.isNullAt(0) || b.isNullAt(1)) return null
-      val cs = b.getArray(1)
-      if (cs.numElements() != nd) return null
-      var acc = 0L
-      var j = 0
-      while (j < nd) {
-        if (vs.isNullAt(j) || cs.isNullAt(j)) return null
-        val d = vs.getLong(j) - cs.getLong(j)
-        acc += d * d
-        j += 1
-      }
-      PqArgMinCode.checkBounds(acc, b.getLong(0))
-      val packed = acc * PqArgMinCode.Pack + b.getLong(0)
-      if (packed < best) best = packed
-      i += 1
-    }
-    best
+    val best = PqArgMinCode.compute(l.asInstanceOf[ArrayData],
+      r.asInstanceOf[ArrayData])
+    if (best < 0L) null else best
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val vs = ctx.freshName("vs")
-    val books = ctx.freshName("books")
-    val b = ctx.freshName("bk")
-    val cs = ctx.freshName("cs")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val nb = ctx.freshName("nb")
-    val nd = ctx.freshName("nd")
-    val acc = ctx.freshName("acc")
-    val d = ctx.freshName("d")
-    val packed = ctx.freshName("packed")
-    val best = ctx.freshName("best")
-    val ok = ctx.freshName("ok")
-    val ad = classOf[ArrayData].getName
-    val ir = classOf[InternalRow].getName
-    ev.copy(code =
-      code"""
-        ${leftGen.code}
-        ${rightGen.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = 0L;
-        if (!${leftGen.isNull} && !${rightGen.isNull}) {
-          $ad $vs = ${leftGen.value};
-          $ad $books = ${rightGen.value};
-          int $nb = $books.numElements();
-          int $nd = $vs.numElements();
-          if ($nb > 0) {
-            boolean $ok = true;
-            long $best = Long.MAX_VALUE;
-            for (int $i = 0; $i < $nb; $i++) {
-              if ($books.isNullAt($i)) { $ok = false; break; }
-              $ir $b = $books.getStruct($i, 2);
-              if ($b.isNullAt(0) || $b.isNullAt(1)) { $ok = false; break; }
-              $ad $cs = $b.getArray(1);
-              if ($cs.numElements() != $nd) { $ok = false; break; }
-              long $acc = 0L;
-              for (int $j = 0; $j < $nd; $j++) {
-                if ($vs.isNullAt($j) || $cs.isNullAt($j)) { $ok = false; break; }
-                long $d = $vs.getLong($j) - $cs.getLong($j);
-                $acc += $d * $d;
-              }
-              if (!$ok) break;
-              graft.functions.PqArgMinCode.checkBounds($acc, $b.getLong(0));
-              long $packed = $acc * ${PqArgMinCode.Pack}L + $b.getLong(0);
-              if ($packed < $best) $best = $packed;
-            }
-            if ($ok) {
-              ${ev.isNull} = false;
-              ${ev.value} = $best;
-            }
-          }
-        }
-      """)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (vs, books) => s"""
+      ${ev.value} = graft.functions.PqArgMinCode.compute($vs, $books);
+      if (${ev.value} < 0L) ${ev.isNull} = true;""")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): PqArgMinCode =
@@ -185,5 +106,36 @@ object PqArgMinCode {
       s"pq_argmin: codeword label $label outside [0, 2^20) breaks the " +
         "(dist, label) pack — codeword ids must seed from non-negative " +
         "vec_id < cw <= 2^20")
+  }
+
+  /** The argmin loop, or −1 for NULL (an empty table, a length
+    * mismatch or a NULL anywhere): [[checkBounds]] keeps every real
+    * pack non-negative, so −1 is never a result. */
+  def compute(vs: ArrayData, books: ArrayData): Long = {
+    val nb = books.numElements()
+    if (nb == 0) return -1L
+    val nd = vs.numElements()
+    var best = Long.MaxValue
+    var i = 0
+    while (i < nb) {
+      if (books.isNullAt(i)) return -1L
+      val b = books.getStruct(i, 2)
+      if (b.isNullAt(0) || b.isNullAt(1)) return -1L
+      val cs = b.getArray(1)
+      if (cs.numElements() != nd) return -1L
+      var acc = 0L
+      var j = 0
+      while (j < nd) {
+        if (vs.isNullAt(j) || cs.isNullAt(j)) return -1L
+        val d = vs.getLong(j) - cs.getLong(j)
+        acc += d * d
+        j += 1
+      }
+      checkBounds(acc, b.getLong(0))
+      val packed = acc * Pack + b.getLong(0)
+      if (packed < best) best = packed
+      i += 1
+    }
+    best
   }
 }

@@ -3,9 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** SimHash fingerprint of a row-local `array<bigint>` of token hashes:
   * bit b of the result is set when Σ over hashes of (±1 by hash-bit b)
@@ -28,15 +27,7 @@ case class SimhashOfHashes(child: Expression, bits: Int)
   require(bits >= 1 && bits <= 63, s"bits must be in [1,63], got $bits")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
-      case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
-        "simhash_of reads elements as primitive longs; a null element " +
-          "would silently corrupt the fingerprint. Wrap the input in " +
-          "KnownNoNullElements (validated narrowing) first")
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"simhash_of requires array<bigint> input, got $other")
-    }
+    KnownNoNullElements.checkLongArrays(prettyName, "fingerprint", child)
 
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_of"

@@ -3,9 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** |A ∩ B| for two SORTED `array<bigint>` columns via a linear merge —
   * the verification kernel of prefix-filtered set-similarity joins
@@ -27,24 +26,26 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
   override def prettyName: String = "sorted_intersect_count"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckFailure(
-          "sorted_intersect_count reads elements as primitive longs; a " +
-            "null element would silently corrupt the count. Wrap nullable " +
-            "inputs in KnownNoNullElements (validated narrowing) first")
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"sorted_intersect_count requires two array<bigint> inputs, got $other")
-    }
+    KnownNoNullElements.checkLongArrays(prettyName, "count", left, right)
 
   override def nullable: Boolean = true
 
-  protected override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  protected override def nullSafeEval(l: Any, r: Any): Any =
+    SortedLongIntersectCount.compute(l.asInstanceOf[ArrayData],
+      r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.SortedLongIntersectCount.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): SortedLongIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedLongIntersectCount {
+  /** The merge: one pass over both sorted arrays, no allocation. */
+  def compute(a: ArrayData, b: ArrayData): Long = {
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0
@@ -59,46 +60,4 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val a = ctx.freshName("arrA")
-    val b = ctx.freshName("arrB")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val na = ctx.freshName("na")
-    val nb = ctx.freshName("nb")
-    val x = ctx.freshName("x")
-    val y = ctx.freshName("y")
-    val acc = ctx.freshName("acc")
-    val ad = classOf[ArrayData].getName
-    ev.copy(code =
-      code"""
-        ${leftGen.code}
-        ${rightGen.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = 0L;
-        if (!${leftGen.isNull} && !${rightGen.isNull}) {
-          $ad $a = ${leftGen.value};
-          $ad $b = ${rightGen.value};
-          int $na = $a.numElements();
-          int $nb = $b.numElements();
-          int $i = 0; int $j = 0;
-          long $acc = 0L;
-          while ($i < $na && $j < $nb) {
-            long $x = $a.getLong($i);
-            long $y = $b.getLong($j);
-            if ($x == $y) { $acc++; $i++; $j++; }
-            else if ($x < $y) { $i++; } else { $j++; }
-          }
-          ${ev.isNull} = false;
-          ${ev.value} = $acc;
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): SortedLongIntersectCount =
-    copy(left = newLeft, right = newRight)
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
@@ -41,62 +40,37 @@ case class SqDistQuantized(left: Expression, right: Expression, scale: Int)
 
   override def nullable: Boolean = true
 
+  @transient private lazy val scan = KnownNoNullElements.mayHoldNull(left, right)
+
   protected override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val c = r.asInstanceOf[ArrayData]
+    if (KnownNoNullElements.zipNull(a, c, scan)) null
+    else SqDistQuantized.compute(a, c, scale)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, c) => s"""
+      if (graft.functions.KnownNoNullElements.zipNull($a, $c, $scan)) ${ev.isNull} = true;
+      else ${ev.value} = graft.functions.SqDistQuantized.compute($a, $c, $scale);""")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): SqDistQuantized =
+    copy(left = newLeft, right = newRight)
+}
+
+object SqDistQuantized {
+  /** The loop, over equal-length arrays with no NULL element
+    * ([[KnownNoNullElements.zipNull]] rules those out first). */
+  def compute(a: ArrayData, c: ArrayData, scale: Int): Long = {
     val n = a.numElements()
-    if (n != c.numElements()) return null
     var acc = 0L
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i) || c.isNullAt(i)) return null
       val d = math.floor(a.getFloat(i).toDouble * scale).toLong - c.getLong(i)
       acc += d * d
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val a = ctx.freshName("arrA")
-    val c = ctx.freshName("arrC")
-    val i = ctx.freshName("i")
-    val n = ctx.freshName("n")
-    val acc = ctx.freshName("acc")
-    val d = ctx.freshName("d")
-    val ok = ctx.freshName("ok")
-    val ad = classOf[ArrayData].getName
-    ev.copy(code =
-      code"""
-        ${leftGen.code}
-        ${rightGen.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = 0L;
-        if (!${leftGen.isNull} && !${rightGen.isNull}) {
-          $ad $a = ${leftGen.value};
-          $ad $c = ${rightGen.value};
-          int $n = $a.numElements();
-          if ($n == $c.numElements()) {
-            boolean $ok = true;
-            long $acc = 0L;
-            for (int $i = 0; $i < $n; $i++) {
-              if ($a.isNullAt($i) || $c.isNullAt($i)) { $ok = false; break; }
-              long $d = (long) java.lang.Math.floor(
-                ((double) $a.getFloat($i)) * $scale) - $c.getLong($i);
-              $acc += $d * $d;
-            }
-            if ($ok) {
-              ${ev.isNull} = false;
-              ${ev.value} = $acc;
-            }
-          }
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): SqDistQuantized =
-    copy(left = newLeft, right = newRight)
 }

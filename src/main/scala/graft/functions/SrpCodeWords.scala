@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Native codegen'd signed-random-projection sketch over one
@@ -48,32 +47,16 @@ case class SrpCodeWords(child: Expression, planes: Seq[Long], dim: Int,
 
   @transient private lazy val planesArr = planes.toArray
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val r = SrpCodeWords.compute(input.asInstanceOf[ArrayData], planesArr,
-      dim, scale)
-    if (r == null) null else new GenericArrayData(r)
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    KnownNoNullElements.longsOrNull(SrpCodeWords.compute(
+      input.asInstanceOf[ArrayData], planesArr, dim, scale))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pRef = ctx.addReferenceObj("srpPlanes", planesArr, "long[]")
-    val childGen = child.genCode(ctx)
-    val raw = ctx.freshName("raw")
-    val gad = classOf[GenericArrayData].getName
-    val ad = classOf[ArrayData].getName
-    val cls = "graft.functions.SrpCodeWords"
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        $ad ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          long[] $raw = $cls.compute(${childGen.value}, $pRef, $dim, $scale);
-          if ($raw != null) {
-            ${ev.isNull} = false;
-            ${ev.value} = new $gad($raw);
-          }
-        }
-      """)
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.KnownNoNullElements.longsOrNull(
+        graft.functions.SrpCodeWords.compute($c, $pRef, $dim, $scale));
+      ${ev.isNull} = ${ev.value} == null;""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): SrpCodeWords =

@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Per-window minima of a row-local `array<bigint>` of ordered n-gram
@@ -34,44 +33,21 @@ case class WinnowMins(child: Expression, window: Int)
   require(window >= 1, s"window must be >= 1, got $window")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
-      case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
-        "winnow_mins reads elements as primitive longs; a null element " +
-          "would silently corrupt the fingerprint. Wrap the input in " +
-          "KnownNoNullElements (validated narrowing) first")
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"winnow_mins requires array<bigint> input, got $other")
-    }
+    KnownNoNullElements.checkLongArrays(prettyName, "fingerprint", child)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "winnow_mins"
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val r = WinnowMins.compute(input.asInstanceOf[ArrayData], window)
-    if (r == null) null else new GenericArrayData(r)
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    KnownNoNullElements.longsOrNull(
+      WinnowMins.compute(input.asInstanceOf[ArrayData], window))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val raw = ctx.freshName("raw")
-    val gad = classOf[GenericArrayData].getName
-    val ad = classOf[ArrayData].getName
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        $ad ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          long[] $raw = graft.functions.WinnowMins.compute(${childGen.value}, $window);
-          if ($raw != null) {
-            ${ev.isNull} = false;
-            ${ev.value} = new $gad($raw);
-          }
-        }
-      """)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.KnownNoNullElements.longsOrNull(
+        graft.functions.WinnowMins.compute($c, $window));
+      ${ev.isNull} = ${ev.value} == null;""")
 
   override protected def withNewChildInternal(newChild: Expression): WinnowMins =
     copy(child = newChild)

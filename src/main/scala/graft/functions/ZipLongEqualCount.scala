@@ -3,9 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Count of positions where two equal-length `array<bigint>` columns
   * agree — the MinHash similarity estimator (matching-signature
@@ -31,26 +30,32 @@ case class ZipLongEqualCount(left: Expression, right: Expression)
   override def prettyName: String = "zip_equal_count"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckFailure(
-          "zip_equal_count reads elements as primitive longs; a null " +
-            "element would silently corrupt the count. Wrap nullable " +
-            "inputs in KnownNoNullElements (validated narrowing) first")
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"zip_equal_count requires two array<bigint> inputs, got $other")
-    }
+    KnownNoNullElements.checkLongArrays(prettyName, "count", left, right)
 
   override def nullable: Boolean = true
 
+  // elements are non-null by type: only a length mismatch is NULL
   protected override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
+    if (KnownNoNullElements.zipNull(a, b, scan = false)) null
+    else ZipLongEqualCount.compute(a, b)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      if (graft.functions.KnownNoNullElements.zipNull($a, $b, false)) ${ev.isNull} = true;
+      else ${ev.value} = graft.functions.ZipLongEqualCount.compute($a, $b);""")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): ZipLongEqualCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object ZipLongEqualCount {
+  /** The loop, over two equal-length arrays. */
+  def compute(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
-    if (n != b.numElements()) return null
     var i = 0
     var acc = 0L
     while (i < n) {
@@ -59,39 +64,4 @@ case class ZipLongEqualCount(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val a = ctx.freshName("arrA")
-    val b = ctx.freshName("arrB")
-    val i = ctx.freshName("i")
-    val n = ctx.freshName("n")
-    val acc = ctx.freshName("acc")
-    val ad = classOf[ArrayData].getName
-    ev.copy(code =
-      code"""
-        ${leftGen.code}
-        ${rightGen.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = 0L;
-        if (!${leftGen.isNull} && !${rightGen.isNull}) {
-          $ad $a = ${leftGen.value};
-          $ad $b = ${rightGen.value};
-          int $n = $a.numElements();
-          if ($n == $b.numElements()) {
-            long $acc = 0L;
-            for (int $i = 0; $i < $n; $i++) {
-              if ($a.getLong($i) == $b.getLong($i)) $acc++;
-            }
-            ${ev.isNull} = false;
-            ${ev.value} = $acc;
-          }
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): ZipLongEqualCount =
-    copy(left = newLeft, right = newRight)
 }

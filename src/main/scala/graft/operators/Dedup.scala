@@ -914,6 +914,27 @@ object Dedup {
         col("n").as("n2")), "d2"), t)
   }
 
+  /** The (lang, distinct-token-bag) class quotient shared by
+    * [[containmentPairs]] and [[containmentCandidates]]: returns
+    * `(members, repDocs)` — every doc with its class key + rep, and the
+    * representative docs rejoined to the input relation. */
+  private def bagQuotient(docs: DataFrame): (DataFrame, DataFrame) = {
+    val (members0, repDocs0) = bagQuotientPlans(docs)
+    // members feeds both expansion joins + the intra self-join (and
+    // repDocs below); without materialization each consumer re-runs
+    // the corpus-wide class groupBy. Lazy: declaration stays jobless.
+    (members0.localCheckpoint(eager = false),
+      repDocs0.localCheckpoint(eager = false))
+  }
+
+  /** [[bagQuotient]]'s relations WITHOUT the checkpoints — a stable
+    * canonical plan per input, which is what makes the containment
+    * auto-switch's sizing stats memoizable across invocations
+    * ([[RelationStats]]; a checkpointed relation canonicalizes to a
+    * fresh RDD scan every call, so memo keys on it never hit). */
+  private[graft] def bagQuotientPlans(docs: DataFrame): (DataFrame, DataFrame) =
+    quotient(docs.select(col("doc_id"), bagLangKey.as("bag_fp")), "bag_fp", docs)
+
   /** ASYMMETRIC containment pairs: C(a→b) = |A∩B| / |A| ≥ t over
     * distinct-token sets, lang-blocked — the dedup mode symmetric
     * Jaccard misses by construction: a short document quoted inside a
@@ -964,27 +985,6 @@ object Dedup {
     * grows SLOWER than measured candidate volume. The cost rides the
     * 4.2 M-candidate / 2.1 M-output volume: inherent pair-emission
     * work, not a plan defect. */
-  /** The (lang, distinct-token-bag) class quotient shared by
-    * [[containmentPairs]] and [[containmentCandidates]]: returns
-    * `(members, repDocs)` — every doc with its class key + rep, and the
-    * representative docs rejoined to the input relation. */
-  private def bagQuotient(docs: DataFrame): (DataFrame, DataFrame) = {
-    val (members0, repDocs0) = bagQuotientPlans(docs)
-    // members feeds both expansion joins + the intra self-join (and
-    // repDocs below); without materialization each consumer re-runs
-    // the corpus-wide class groupBy. Lazy: declaration stays jobless.
-    (members0.localCheckpoint(eager = false),
-      repDocs0.localCheckpoint(eager = false))
-  }
-
-  /** [[bagQuotient]]'s relations WITHOUT the checkpoints — a stable
-    * canonical plan per input, which is what makes the containment
-    * auto-switch's sizing stats memoizable across invocations
-    * ([[RelationStats]]; a checkpointed relation canonicalizes to a
-    * fresh RDD scan every call, so memo keys on it never hit). */
-  private[graft] def bagQuotientPlans(docs: DataFrame): (DataFrame, DataFrame) =
-    quotient(docs.select(col("doc_id"), bagLangKey.as("bag_fp")), "bag_fp", docs)
-
   def containmentPairs(docs: DataFrame, thresholdTenths: Int): DataFrame = {
     val (members, repDocs) = bagQuotient(docs)
     val repPairs = containmentPairsOf(repDocs, thresholdTenths,
@@ -1226,10 +1226,6 @@ object Dedup {
     newDocs.join(matched, Seq("doc_id"), "left_anti")
   }
 
-  /** MinHash signatures: K independent hash functions simulated as
-    * xxhash64(k, token); signature element k = min over the doc's tokens.
-    * One explode + one groupBy — the sketch costs O(tokens·1) with K
-    * aggregates, not K passes. */
   /** Modulus of the affine MinHash family: the first prime above 2^40.
     * With 40-bit token ids and 20-bit multipliers, a·tid + b stays under
     * 2^61 — exact in SIGNED 64-bit arithmetic in every engine (DuckDB
@@ -1283,6 +1279,10 @@ object Dedup {
   def minhashSigColumn(text: Column, numHashes: Int): Column =
     minhashSigOfIds(tokenIdsColumn(text), numHashes)
 
+  /** MinHash signatures: K independent hash functions simulated as
+    * xxhash64(k, token); signature element k = min over the doc's tokens.
+    * One explode + one groupBy — the sketch costs O(tokens·1) with K
+    * aggregates, not K passes. */
   def minhashSignatures(docs: DataFrame, numHashes: Int): DataFrame =
     docs
       // spread first: the docs scan is one input split, and everything

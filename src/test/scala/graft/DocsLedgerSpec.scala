@@ -95,4 +95,20 @@ class DocsLedgerSpec extends AnyFunSuite {
         "call graft.operators.TokenSetKernel instead")
     }
   }
+
+  test("no doGenCode in functions/ writes a loop; the companion's loop serves both modes") {
+    // a doGenCode body runs to the next line indented as a class member
+    val body = raw"(?s)def doGenCode\b.*?(?=\n  \S|\n\}|\z)".r
+    val bodies = Files.list(Paths.get("src/main/scala/graft/functions"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(f => body.findAllIn(Files.readString(f))
+        .map(f.getFileName.toString -> _)).toSeq
+    assert(bodies.size >= 14, s"found only ${bodies.size} doGenCode bodies")
+    val looping = bodies.collect {
+      case (f, b) if b.contains("for (") || b.contains("while (") => f
+    }
+    assert(looping.isEmpty, s"doGenCode writes its own loop in " +
+      s"${looping.mkString(", ")}; call the loop in the kernel's companion " +
+      "object, which nullSafeEval calls too")
+  }
 }

@@ -198,6 +198,108 @@ class KernelTypeSpec extends SparkSpec {
     assert(got / pack === 50L)
   }
 
+  test("every kernel evaluates the same interpreted and generated") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      Expression, InterpretedUnsafeProjection, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions._
+
+    def arr(xs: Any*): ArrayData = new GenericArrayData(xs.toArray)
+    def longs(nullable: Boolean) = ArrayType(LongType, nullable)
+    def floats(nullable: Boolean) = ArrayType(FloatType, nullable)
+    def in(ordinal: Int, t: DataType) = BoundReference(ordinal, t, nullable = true)
+    def rows(cells: Seq[Any]*): Seq[InternalRow] = cells.map(InternalRow.fromSeq)
+    val books = ArrayType(StructType(Seq(StructField("label", LongType),
+      StructField("cs", longs(true)))))
+    def book(label: Any, cs: ArrayData): InternalRow = InternalRow(label, cs)
+
+    // a NULL array, a length mismatch, a NULL element and an empty input
+    // on every kernel that can see them; the merge and zip counts also
+    // get unsorted, duplicate and disjoint arrays
+    val pairs = rows(Seq(null, arr(1L)), Seq(arr(1L), null),
+      Seq(arr(1L, 2L, 3L), arr(2L, 3L, 4L)), Seq(arr(3L, 1L, 2L), arr(2L, 1L, 3L)),
+      Seq(arr(1L, 1L, 2L, 2L), arr(1L, 2L, 2L, 5L)), Seq(arr(1L, 2L), arr(3L, 4L)),
+      Seq(arr(1L, 2L), arr(1L, 2L, 3L)), Seq(arr(), arr()), Seq(arr(), arr(7L)))
+    val nullablePairs = pairs ++ rows(Seq(arr(1L, null), arr(1L, 2L)),
+      Seq(arr(4L, 5L), arr(null, 5L)))
+    val floatPairs = rows(Seq(null, arr(1f)), Seq(arr(0.5f, -1.25f), arr(2f, 3.5f)),
+      Seq(arr(0.001f, -0.0019f), arr(1e-4f, 7f)), Seq(arr(1f), arr(1f, 2f)),
+      Seq(arr(1f, null), arr(1f, 2f)), Seq(arr(), arr()))
+    val floatLongPairs = rows(Seq(null, arr(1L)), Seq(arr(0.5f, -1.25f), arr(2L, -3L)),
+      Seq(arr(0.001f, -0.0019f), arr(1L, 7L)), Seq(arr(1f), arr(1L, 2L)),
+      Seq(arr(1f, null), arr(1L, 2L)), Seq(arr(1f, 2f), arr(null, 2L)), Seq(arr(), arr()))
+    val idArrays = rows(Seq(null), Seq(arr()), Seq(arr(5L)), Seq(arr(9L, 3L, 3L, 7L, 1L, 8L)),
+      Seq(arr((1L to 40L).map(i => (i * 7919L) % 101L): _*)))
+    val nullableIds = idArrays ++ rows(Seq(arr(1L, null, 3L)))
+    val texts = rows(Seq(null), Seq(UTF8String.fromString("")),
+      Seq(UTF8String.fromString("a  b the quick the")),
+      Seq(UTF8String.fromString("üñïçødé tökens üñïçødé")))
+    val planes = Seq(3L, -2L, 1L, -1L, 0L, 4L, 2L, 2L, -5L)
+    val pq = rows(Seq(null, arr(book(1L, arr(0L)))), Seq(arr(1L, 2L), null),
+      Seq(arr(5L, 5L), arr(book(7L, arr(10L, 10L)), book(3L, arr(0L, 0L)))),
+      Seq(arr(1L, 2L), arr()), Seq(arr(1L, 2L), arr(book(1L, arr(5L)))),
+      Seq(arr(1L, null), arr(book(1L, arr(5L, 5L)))),
+      Seq(arr(1L, 2L), arr(book(1L, arr(5L, 5L)), null)),
+      Seq(arr(1L, 2L), arr(book(null, arr(5L, 5L)))),
+      Seq(arr(1L, 2L), arr(book(1L, arr(0L, 0L)), book(2L, arr(null, 0L)))),
+      Seq(arr(3037000500L), arr(book(0L, arr(0L)))),
+      Seq(arr(1L), arr(book(1L << 20, arr(1L)))))
+
+    val cases: Seq[(Expression, Seq[InternalRow])] = Seq(
+      DotQuantized(in(0, floats(true)), in(1, floats(true)), 1000) -> floatPairs,
+      DotQuantized(in(0, floats(false)), in(1, floats(false)), 1000) ->
+        floatPairs.take(4),
+      SqDistQuantized(in(0, floats(true)), in(1, longs(true)), 1000) -> floatLongPairs,
+      SqDistLong(in(0, longs(true)), in(1, longs(true))) -> nullablePairs,
+      SqDistLong(in(0, longs(false)), in(1, longs(false))) -> pairs,
+      SortedLongIntersectCount(in(0, longs(false)), in(1, longs(false))) -> pairs,
+      ZipLongEqualCount(in(0, longs(false)), in(1, longs(false))) -> pairs,
+      PqArgMinCode(in(0, longs(true)), in(1, books)) -> pq,
+      MinhashSigs(in(0, longs(false)), Seq(3L, 17L, 1021L), Seq(1L, 5L, 99L),
+        (1L << 31) - 1) -> idArrays,
+      SimhashOfHashes(in(0, longs(false)), 16) -> idArrays,
+      WinnowMins(in(0, longs(false)), 3) -> idArrays,
+      SrpCodeWords(in(0, floats(true)), planes, 3, 1000) -> rows(Seq(null),
+        Seq(arr(0.5f, -1.25f, 2f)), Seq(arr(1f, 2f)), Seq(arr(1f, null, 2f))),
+      KnownNoNullElements(in(0, longs(true))) -> nullableIds,
+      Md5TokenIds(in(0, StringType)) -> texts,
+      NgramFnv(in(0, StringType), 3) -> texts,
+      Fnv64(in(0, BinaryType)) -> rows(Seq(null), Seq(Array.emptyByteArray),
+        Seq("graft".getBytes("UTF-8"))))
+
+    // a result as a plain value, or the failure it raised
+    def outcome(v: => Any): Any = scala.util.Try(v).fold(
+      e => s"${e.getClass.getName}: ${e.getMessage}",
+      {
+        case a: ArrayData => a.toLongArray().toSeq
+        case x => x
+      })
+    SparkSession.setActiveSession(spark)
+    val mode = SQLConf.CODEGEN_FACTORY_MODE.key
+    val saved = spark.conf.getOption(mode)
+    spark.conf.set(mode, "CODEGEN_ONLY")
+    try {
+      for ((e, inputs) <- cases) {
+        assert(e.checkInputDataTypes().isSuccess, e)
+        val generated = UnsafeProjection.create(Seq(e))
+        assert(!generated.isInstanceOf[InterpretedUnsafeProjection], e)
+        for (row <- inputs) {
+          val interpreted = outcome(e.eval(row))
+          val gen = outcome {
+            val out = generated(row)
+            if (out.isNullAt(0)) null else out.get(0, e.dataType)
+          }
+          assert(gen === interpreted, s"${e.prettyName} on $row")
+        }
+      }
+    } finally saved.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
+  }
+
   test("a violated no-null claim fails loudly instead of corrupting") {
     import spark.implicits._
     val df = Seq((1L, Seq(1L, 2L, 3L))).toDF("id", "xs")
