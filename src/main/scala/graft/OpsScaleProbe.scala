@@ -74,8 +74,7 @@ object OpsScaleProbe {
     val assign = Dedup.jaccardComponents(corpus, 9).localCheckpoint()
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft_bandedcost_").toString
-    Dedup.saveLshBandIndex(Dedup.bagClassReps(corpus), idxPath,
-      numHashes = 32, bands = 8)
+    Dedup.saveLshBandIndex(Dedup.bagClassReps(corpus), idxPath, bands = 8)
     val (tIdx, nIdx) = minOf2Long(
       spark.read.parquet(s"$idxPath/bands").count())
     val (tCand, nCand) = minOf2Long {
@@ -126,7 +125,7 @@ object OpsScaleProbe {
     val batch = mk(nBatch, 9000000L, "y").localCheckpoint()
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft_hotband_probe_").toString
-    Dedup.saveLshBandIndex(corpus, idxPath, numHashes = 32, bands = 8)
+    Dedup.saveLshBandIndex(corpus, idxPath, bands = 8)
     // candidate mass per regime — count BEFORE distinct (the join's
     // raw output is what explodes; distinct is damage already done)
     def candMass(capV: Long): Long = {

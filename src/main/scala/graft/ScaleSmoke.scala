@@ -125,11 +125,11 @@ object ScaleSmoke {
       Op("dedup_exact_normalized", TextOps.dedupExactNormalized, "doc"),
       Op("doc_repetition", TextOps.repetitionSignals, "doc"),
       Op("corpus_ngrams", d => TextOps.corpusNgrams(d, 3, 50), "doc"),
-      Op("doc_novelty", d => TextOps.docNovelty(d, 3), "doc"),
+      Op("doc_novelty", d => TextOps.docNovelty(d), "doc"),
       Op("ctfidf_keywords", d => TextOps.ctfidfKeywords(d, 5), "doc"),
       Op("bpe_merges", d => TextOps.bpeMerges(d, 3), "doc"),
       Op("bpe_encode", d => TextOps.bpeEncode(d, 3), "doc"),
-      Op("contamination_hits", d => TextOps.contaminationHits(d, 5), "doc"),
+      Op("contamination_hits", d => TextOps.contaminationHits(d), "doc"),
       // multimodal plumbing rides the doc replica like the text ops:
       // payloads derive from text bytes (stubbed codec), never shuffle
       Op("media_features", d => Multimodal.decodeAndFeaturize(spark,
@@ -152,7 +152,7 @@ object ScaleSmoke {
       // corpus-side assignment stays linear — that is the index build)
       Op("media_ann_ivf", d => Multimodal.mediaAnnIvf(spark,
         Multimodal.fromDocuments(d), numQueries = 6, k = 5,
-        kPerKind = 4, rounds = 1, probes = 1), "doc"),
+        kPerKind = 4, probes = 1), "doc"),
       // frame explode + two hash aggs — linear in frame volume
       Op("media_frame_dup", d => Multimodal.frameDupReport(
         Multimodal.fromDocuments(d), frameBytes = 64), "doc"),
@@ -213,7 +213,7 @@ object ScaleSmoke {
       Op("ann_srp_rerank", e =>
         Similarity.annSrpRerank(e, 25, 5, 50, bits = 256), "emb"),
       Op("hard_negatives", e =>
-        Similarity.hardNegatives(spark, e, 25, 5, probes = 2), "emb"),
+        Similarity.hardNegatives(spark, e, 25, 5), "emb"),
       // SemDeDup: replica copies are EXACT embedding dups (only ids
       // shift), so every copy lands in its original's cluster and
       // intra-cluster pair work grows factor² by construction — the
@@ -319,7 +319,7 @@ object ScaleSmoke {
       // temperature mixing: one metadata-scale aggregate over a
       // row-local token count — expect overhead-flat at any factor
       Op("mix_temperature", d =>
-        TextOps.mixTemperature(d, budgetPct = 50), "doc"),
+        TextOps.mixTemperature(d), "doc"),
       // r16: passage retrieval = chunk explode (row-local, ×expansion
       // volume) + the bm25 pipeline over passages — expect ~linear
       // like bm25_topk with the chunk fan-out constant
@@ -441,7 +441,7 @@ object ScaleSmoke {
       // recall audit: one exact pass + two probe chains, query-count
       // output — prices the ground-truth scan's growth
       Op("ann_recall_ivf", e => Similarity.annRecallAudit(spark, e,
-        numQueries = 5, k = 5, probesList = Seq(1, 2)), "emb"),
+        numQueries = 5, k = 5), "emb"),
       // the quantized-tier recall audit at the declared r11 knobs:
       // two exact truth passes + all four trained-quantizer chains —
       // the quality numbers and the 10×-growth bands in ONE artifact
@@ -452,7 +452,7 @@ object ScaleSmoke {
       // prices the worst (dup-heavy) case like the pair tiers
       Op("dedup_substring_spans", d => TextOps.substringSpans(d, 8), "doc"),
       Op("cdc_chunks", d => TextOps.cdcChunks(d, 16, 6), "doc"),
-      Op("dedup_minhash_lsh", d => Dedup.minhashLshPairs(d), "pair"),
+      Op("dedup_minhash_lsh", d => Dedup.minhashLshPairs(d, bands = 4), "pair"),
       Op("dedup_recall_lsh", d => Dedup.lshRecallAudit(d), "pair"),
       // the linear-candidate tier: candidates = window*N by construction
       Op("dedup_snm", d => Dedup.snmPairs(d, 4, 9), "pair",
@@ -464,11 +464,11 @@ object ScaleSmoke {
       // tiers see the full replicated corpus — the smoke prices the
       // cascade's worst case, not its exact-collapse best case
       Op("dedup_cascade", d => Dedup.dedupCascade(d, 4, 9, 9), "pair"),
-      Op("dedup_winnow_pairs", d => TextOps.winnowPairs(d, 12, 8, 2, 50), "pair"),
-      Op("tfidf_cosine_pairs", d => TextOps.tfidfCosinePairs(d, 10, 60), "pair",
+      Op("dedup_winnow_pairs", d => TextOps.winnowPairs(d, 50), "pair"),
+      Op("tfidf_cosine_pairs", d => TextOps.tfidfCosinePairs(d, 60), "pair",
         // threshold 0 keeps every candidate: tf·idf weights are
         // non-negative, so cos ≥ 0 admits the whole dot relation
-        cand = Some(d => TextOps.tfidfCosinePairs(d, 10, 0))),
+        cand = Some(d => TextOps.tfidfCosinePairs(d, 0))),
       Op("tfidf_cosine_sharded", registry.TextQueries.tfidfCosineSharded, "pair"),
       Op("dedup_components", d => Dedup.jaccardComponents(d, 9), "pair"),
       Op("dedup_containment", d => Dedup.containmentPairs(d, 9), "pair",
@@ -627,19 +627,19 @@ object ScaleSmoke {
     // is the `growth` leg of TFIDF_SHARD_r13.json, where
     // postings DO grow. ----
     val perturbedOps: Seq[Op] = Seq(
-      Op("tfidf_cosine_pairs", d => TextOps.tfidfCosinePairs(d, 10, 60),
-        "pdoc", cand = Some(d => TextOps.tfidfCosinePairs(d, 10, 0))),
+      Op("tfidf_cosine_pairs", d => TextOps.tfidfCosinePairs(d, 60),
+        "pdoc", cand = Some(d => TextOps.tfidfCosinePairs(d, 0))),
       Op("tfidf_cosine_sharded", registry.TextQueries.tfidfCosineSharded, "pdoc"),
-      Op("tfidf_cosine_capped", d => TextOps.tfidfCosinePairsCapped(d, 10,
-        60, maxPostings = 2300L), "pdoc"),
+      Op("tfidf_cosine_capped", d => TextOps.tfidfCosinePairsCapped(d,
+        maxPostings = 2300L), "pdoc"),
       // the shipped DEFAULT (r14): ceiling auto-sited at the salient-
       // postings p99 — must reproduce the r13 re-sited measurement
       // (~5.7x at x10, zero loss) with no knob typed
       Op("tfidf_cosine_capped_auto",
-        d => TextOps.tfidfCosinePairsCapped(d, 10, 60), "pdoc"),
+        d => TextOps.tfidfCosinePairsCapped(d), "pdoc"),
       Op("dedup_containment", d => Dedup.containmentPairs(d, 9), "pdoc",
         cand = Some(d => Dedup.containmentCandidates(d, 9))),
-      Op("dedup_minhash_lsh", d => Dedup.minhashLshPairs(d), "pdoc"))
+      Op("dedup_minhash_lsh", d => Dedup.minhashLshPairs(d, bands = 4), "pdoc"))
     val perturbedWanted = only match {
       case None => perturbedOps.map(_.name).toSet
       case Some(ns) => perturbedOps.map(_.name).toSet & ns

@@ -307,13 +307,11 @@ object Curation {
     * text-derived target, so the classifier genuinely can learn it
     * from the hashed features (count of the stop buckets + bias is a
     * separating hyperplane). */
-  def perceptronLabels(docs: DataFrame,
-                       minStopHits: Int = GopherThresholds().minStopHits)
-      : DataFrame = {
+  def perceptronLabels(docs: DataFrame): DataFrame = {
     val stopList = GopherStopWords.map(w => s"'$w'").mkString(", ")
     docs.select(col("doc_id"),
       when(expr(s"size(filter(split(text, ' '), w -> w IN ($stopList)))")
-        >= minStopHits, lit(1L)).otherwise(lit(-1L)).as("y"))
+        >= GopherThresholds().minStopHits, lit(1L)).otherwise(lit(-1L)).as("y"))
   }
 
   /** Distributed full-batch perceptron training (Rosenblatt 1958; the

@@ -186,12 +186,11 @@ object Dedup {
   def jaccardPairsAgainstCorpusBanded(
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, corpus: DataFrame, bandIndexPath: String,
-      thresholdTenths: Int, numHashes: Int = 32,
-      bands: Int = 8, maxBandPostings: Long = 100000L): DataFrame = {
+      thresholdTenths: Int, maxBandPostings: Long = 100000L): DataFrame = {
     val t = thresholdTenths
     val width = bandPfxWidthOf(spark, bandIndexPath)
-    val qb = lshBandFpRows(minhashSignatures(batch, numHashes),
-        numHashes, bands)
+    val qb = lshBandFpRows(minhashSignatures(batch, NumHashes),
+        NumHashes, 8)
       .withColumn("fp_pfx", substring(col("band_fp"), 1, width))
       .select(col("fp_pfx"), col("band_fp"), col("doc_id").as("d1"))
     val idx = LakeMaintenance.readPartitionedString(
@@ -248,10 +247,9 @@ object Dedup {
     * prune: batch band rows are row-local, the count aggregation is
     * semi-restricted to probed bands. */
   def bandedHotBands(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, bandIndexPath: String, maxBandPostings: Long,
-      numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    val qb = lshBandFpRows(minhashSignatures(batch, numHashes),
-        numHashes, bands)
+      batch: DataFrame, bandIndexPath: String, maxBandPostings: Long): DataFrame = {
+    val qb = lshBandFpRows(minhashSignatures(batch, NumHashes),
+        NumHashes, 8)
       .withColumn("fp_pfx", substring(col("band_fp"), 1,
         bandPfxWidthOf(spark, bandIndexPath)))
       .select(col("fp_pfx"), col("band_fp"), col("doc_id"))
@@ -359,13 +357,11 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       assign: DataFrame, corpus: DataFrame, batch: DataFrame,
       bandIndexPath: String, thresholdTenths: Int,
-      numHashes: Int = 32, bands: Int = 8,
       maxBandPostings: Long = 100000L): DataFrame = {
     val b = batch.localCheckpoint(eager = true)
     val bb = jaccardPairs(b, thresholdTenths).select("d1", "d2")
     val bc = jaccardPairsAgainstCorpusBanded(spark, b, corpus,
-      bandIndexPath, thresholdTenths, numHashes, bands,
-      maxBandPostings).select("d1", "d2")
+      bandIndexPath, thresholdTenths, maxBandPostings).select("d1", "d2")
     foldComponents(assign, bb, bc)
   }
 
@@ -569,8 +565,8 @@ object Dedup {
     * labels, every edge's endpoints share one), so an oversized
     * partition's inexact seed falls through to the rounds, whose joins
     * and aggregations spill. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    seededComponents(pairs, maxIter, seedParts = 0)._1
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    seededComponents(pairs, 20, seedParts = 0)._1
 
   /** Nodes one seed task holds in its union-find map: at most about
     * 16 MB of heap (up to four 12-byte `LongMap` slots per node plus a
@@ -1233,11 +1229,16 @@ object Dedup {
     * be overflow-free by construction, not by wrapping). */
   val MinhashPrime: Long = 1099511627791L
 
+  /** Signature length K of the MinHash tiers: every operator here
+    * bands a 32-hash signature, and the oracle's SQL mins
+    * (`DedupQueries`) are generated for the same K. */
+  val NumHashes = 32
+
   /** Deterministic (a_k, b_k) parameters of the affine family
     * h_k(x) = (a_k·x + b_k) mod [[MinhashPrime]] — seeded so the DuckDB
     * oracle can be generated with the same constants. */
-  def minhashParams(numHashes: Int, seed: Long = 2024L): IndexedSeq[(Long, Long)] = {
-    val rng = new scala.util.Random(seed)
+  def minhashParams(numHashes: Int): IndexedSeq[(Long, Long)] = {
+    val rng = new scala.util.Random(2024L)
     IndexedSeq.fill(numHashes)(
       (rng.nextInt((1 << 20) - 1).toLong + 1L,
         rng.nextLong() & ((1L << 40) - 1)))
@@ -1311,25 +1312,21 @@ object Dedup {
     * the sketch does not block by lang), so exact/bag-equal duplicates
     * band once via their class representative instead of |class| times.
     */
-  def minhashLshPairs(docs: DataFrame, numHashes: Int = 32,
-                      bands: Int = 8): DataFrame =
+  def minhashLshPairs(docs: DataFrame, bands: Int = 8): DataFrame =
     lshPairsQuotiented(docs, bagKey,
-      reps => minhashSignatures(reps, numHashes), numHashes, bands)
+      reps => minhashSignatures(reps, NumHashes), NumHashes, bands)
 
   /** Forced RAW / forced-quotient paths regardless of what the corpus
     * would auto-select — the quotient-equivalence spec and the MinHash
     * scale probe measure through these (the per-tier candidate-mass
     * decomposition lives in MINHASH_PROBE_r07.json from the retired
     * MinhashProbe main). */
-  private[graft] def minhashLshPairsRaw(docs: DataFrame, numHashes: Int = 32,
-                                        bands: Int = 8): DataFrame =
-    lshPairsOfSigs(minhashSignatures(docs, numHashes), numHashes, bands)
-  private[graft] def minhashLshPairsForceQuotient(docs: DataFrame,
-                                                  numHashes: Int = 32,
-                                                  bands: Int = 8): DataFrame =
+  private[graft] def minhashLshPairsRaw(docs: DataFrame): DataFrame =
+    lshPairsOfSigs(minhashSignatures(docs, NumHashes), NumHashes, 8)
+  private[graft] def minhashLshPairsForceQuotient(docs: DataFrame): DataFrame =
     lshPairsQuotientedCore(docs,
       docs.select(col("doc_id"), bagKey.as("class_fp")),
-      reps => minhashSignatures(reps, numHashes), numHashes, bands)
+      reps => minhashSignatures(reps, NumHashes), NumHashes, 8)
 
   /** Distinct 40-bit character-shingle ids of a text column — FNV
     * window hashes ([[graft.functions.NgramFnv]]) masked into the
@@ -1347,20 +1344,18 @@ object Dedup {
   }
 
   /** The brief's literal shingle→minhash→band→bucket-join pipeline:
-    * MinHash over character `n`-gram shingles instead of word tokens —
+    * MinHash over 12-character shingles instead of word tokens —
     * robust to tokenization-breaking edits (joined/split words). The
     * signature is row-local (no postings explode at all: shingle ids
     * materialize as their own projection, then K affine mins fold each
     * row's array), then the same band bucket-join as
     * [[minhashLshPairs]]. */
-  def minhashShingleLshPairs(docs: DataFrame, n: Int = 12,
-                             numHashes: Int = 32,
-                             bands: Int = 4): DataFrame =
+  def minhashShingleLshPairs(docs: DataFrame): DataFrame =
     // quotient key = the raw text (the shingle set is order-SENSITIVE,
     // so the token-bag key of the word tier would over-merge here;
     // exact-text classes are where the dup mass lives anyway)
     lshPairsQuotiented(docs, md5(col("text").cast("binary")),
-      shingleSigsOf(n, numHashes), numHashes, bands)
+      shingleSigsOf(12, NumHashes), NumHashes, 4)
 
   /** The shingle tier's signature builder (shared by the auto path and
     * the probe hooks): spread the single-split scan before the per-char
@@ -1424,7 +1419,7 @@ object Dedup {
     * per-band counts; consumers SUM per band, so the relation is
     * mergeable the way every sketch here is. */
   def saveLshBandIndex(docs: DataFrame, path: String,
-                       numHashes: Int = 32, bands: Int = 4): Unit = {
+                       bands: Int = 4): Unit = {
     // SCALE-ADAPTIVE prefix width (r18 optimization round, guide §6 /
     // §2: derive partitioning from input size, not a constant tuned
     // for either local mode or the cluster): the 2-hex 256-cell layout
@@ -1440,7 +1435,7 @@ object Dedup {
     // yields identical join results — layout only, results unchanged.
     val n = docs.count() * bands // save-time action: offline, like writeBandStats
     val width = bandPfxWidthForRows(n)
-    lshBandFpRows(minhashSignatures(docs, numHashes), numHashes, bands)
+    lshBandFpRows(minhashSignatures(docs, NumHashes), NumHashes, bands)
       .withColumn("fp_pfx", substring(col("band_fp"), 1, width))
       // cluster by the partition value so each directory is written by
       // exactly ONE task — 1 file per dir per save instead of
@@ -1508,12 +1503,12 @@ object Dedup {
     * semantics). Idempotence is the caller's offsets problem, as with
     * every lake append. */
   def appendToLshBandIndex(batch: DataFrame, path: String,
-                           numHashes: Int = 32, bands: Int = 4): Unit = {
+                           bands: Int = 4): Unit = {
     // appends must keep the SAVED width — a batch-sized width rule
     // here would fork the directory scheme mid-index
     val width = bandPfxWidthOf(batch.sparkSession, path)
-    val rows = lshBandFpRows(minhashSignatures(batch, numHashes),
-        numHashes, bands)
+    val rows = lshBandFpRows(minhashSignatures(batch, NumHashes),
+        NumHashes, bands)
       .withColumn("fp_pfx", substring(col("band_fp"), 1, width))
       .localCheckpoint(eager = true)
     rows.write.mode("append").partitionBy("fp_pfx")
@@ -1560,7 +1555,7 @@ object Dedup {
     * only text read is the batch's), joins the index on
     * (fp_pfx, band_fp), and every candidate pair scores with the
     * native exact signature-overlap kernel — `max_matches` of
-    * `numHashes` minhashes agreeing, the same estimate the batch LSH
+    * [[NumHashes]] minhashes agreeing, the same estimate the batch LSH
     * tier thresholds. Per batch doc: candidate count, best overlap,
     * twin count at `minMatches`, and the keep verdict (no candidate ⇒
     * keep, novel content must survive). Corpus vectors of the lake:
@@ -1598,21 +1593,19 @@ object Dedup {
   def dedupAgainstCorpusLshIndexed(spark: org.apache.spark.sql.SparkSession,
                                    batch: DataFrame, path: String,
                                    minMatches: Int,
-                                   numHashes: Int = 32,
-                                   bands: Int = 4,
                                    broadcastMaxDocs: Long = 1000000L): DataFrame = {
     // the 8x headroom the regime decision leans on is ENFORCED by
     // CLAMPING, not by throwing (r18, the r17 ADVICE item — the r17
     // require hard-failed on the configured cap even when the actual
-    // batch was tiny and safe): the broadcast side carries `bands`
+    // batch was tiny and safe): the broadcast side carries 4 band
     // rows per doc against the 512M-row broadcast hard limit, so the
-    // point-regime decision compares against min(caller cap, 64M/bands)
+    // point-regime decision compares against min(caller cap, 64M/4)
     // — a generous caller cap with small batches keeps working, and a
     // batch past the bound takes the shuffled regime with identical
     // output instead of an error
-    val safeMaxDocs = math.min(broadcastMaxDocs, 512000000L / 8 / bands)
-    val q = lshBandFpRows(minhashSignatures(batch, numHashes), numHashes,
-        bands)
+    val safeMaxDocs = math.min(broadcastMaxDocs, 512000000L / 8 / 4)
+    val q = lshBandFpRows(minhashSignatures(batch, NumHashes), NumHashes,
+        4)
       .withColumn("fp_pfx", substring(col("band_fp"), 1,
         bandPfxWidthOf(spark, path)))
       .select(col("fp_pfx"), col("band_fp"), col("doc_id").as("qid"),
@@ -1673,7 +1666,7 @@ object Dedup {
     * `media_recall_ivf`): the probabilistic tier's quality as a
     * checked NUMBER, not an S-curve formula quoted in a docstring.
     *
-    * Truth = [[jaccardPairs]] at `minTenths` (prefix-filtered, recall
+    * Truth = [[jaccardPairs]] at J ≥ 0.8 (prefix-filtered, recall
     * exact by the Bayardo theorem), bucketed by integer Jaccard band
     * `⌊10·inter/union⌋` (exact duplicates land in band 10). Each true
     * pair either surfaces among the LSH candidates or does not; per
@@ -1691,11 +1684,10 @@ object Dedup {
     * the lower threshold (what the audit exists to pay) + the declared
     * LSH pass + one pair-keyed join, all shuffle-bounded by the pair
     * relations themselves. */
-  def lshRecallAudit(docs: DataFrame, numHashes: Int = 32, bands: Int = 4,
-                     minTenths: Int = 8, sampleMod: Int = 4): DataFrame = {
+  def lshRecallAudit(docs: DataFrame, sampleMod: Int = 4): DataFrame = {
     val s = sampleDocs(docs, sampleMod)
-    recallAuditOf(jaccardPairs(langFree(s), minTenths),
-      minhashLshPairs(s, numHashes, bands))
+    recallAuditOf(jaccardPairs(langFree(s), 8),
+      minhashLshPairs(s, bands = 4))
   }
 
   /** Systematic audit sample: every `mod`-th doc_id. The audits pay
@@ -1729,12 +1721,10 @@ object Dedup {
     * Shingle sets are much larger than word-token sets (one per
     * character position), so the estimate variance per band is lower
     * and the measured curve should sit at or above the word tier's. */
-  def shingleRecallAudit(docs: DataFrame, n: Int = 12,
-                         numHashes: Int = 32, bands: Int = 4,
-                         minTenths: Int = 8, sampleMod: Int = 4): DataFrame = {
+  def shingleRecallAudit(docs: DataFrame, sampleMod: Int = 4): DataFrame = {
     val s = sampleDocs(docs, sampleMod)
-    recallAuditOf(ngramJaccardPairs(langFree(s), n, minTenths),
-      minhashShingleLshPairs(s, n, numHashes, bands))
+    recallAuditOf(ngramJaccardPairs(langFree(s), 12, 8),
+      minhashShingleLshPairs(s))
   }
 
   /** Precision twin of [[lshRecallAudit]]: recall prices what the
@@ -1742,19 +1732,17 @@ object Dedup {
     * LSH candidate pair, bucketed by its estimated-Jaccard band
     * `⌊10·est⌋` (exact: est = k/32 and 10k/32 are binary fractions, so
     * the floor is the integer `(10·match_cnt) div 32` on both
-    * engines), left-joined against the exact J ≥ `minTenths`/10 truth:
+    * engines), left-joined against the exact J ≥ 0.8 truth:
     * per band the audit reports `candidates`, `true_hits`, and
     * `precision_milli`. At 100 TB the candidate relation is the cost
     * the banding knobs control — a band whose precision reads near
     * zero is pure wasted verify work, and the measured histogram is
     * what justifies (or indicts) the declared (K, bands) point. */
-  def lshPrecisionAudit(docs: DataFrame, numHashes: Int = 32,
-                        bands: Int = 4, minTenths: Int = 8,
-                        sampleMod: Int = 4): DataFrame = {
+  def lshPrecisionAudit(docs: DataFrame, sampleMod: Int = 4): DataFrame = {
     val s = sampleDocs(docs, sampleMod)
-    val truth = jaccardPairs(langFree(s), minTenths)
+    val truth = jaccardPairs(langFree(s), 8)
       .select(col("d1"), col("d2"), lit(1L).as("hit"))
-    minhashLshPairs(s, numHashes, bands)
+    minhashLshPairs(s, bands = 4)
       .select(col("d1"), col("d2"),
         floor(col("est_jaccard") * 10).cast("int").as("est_band"))
       .join(truth, Seq("d1", "d2"), "left")
@@ -1971,9 +1959,8 @@ object Dedup {
     * be a coarse quantizer cell rather than a label. Quantized integer
     * dot products make the cosine (and the ≥ comparison) engine-exact.
     */
-  def embeddingNearDupPairs(emb: DataFrame, thresholdHundredths: Int,
-                            scale: Int = 100): DataFrame =
-    Similarity.pairCosinesPerLabel(emb, scale)
+  def embeddingNearDupPairs(emb: DataFrame, thresholdHundredths: Int): DataFrame =
+    Similarity.pairCosinesPerLabel(emb, 100)
       .filter(col("cos") >= thresholdHundredths / 100.0)
       .select(col("label"), col("id_a").as("d1"), col("id_b").as("d2"), col("cos"))
 
@@ -2161,18 +2148,16 @@ object Dedup {
     * normalized to (min, max) and deduplicated before ONE shared
     * verify — still linear: ≤ passes·window·N rows. */
   def snmPairsMultiPass(docs: DataFrame, window: Int,
-                        thresholdTenths: Int,
-                        prefixChars: Int = 4): DataFrame =
-    snmVerify(docs, snmMultiPassCandidates(docs, window, prefixChars),
+                        thresholdTenths: Int): DataFrame =
+    snmVerify(docs, snmMultiPassCandidates(docs, window),
       thresholdTenths)
 
   /** The multi-pass candidate relation (normalized, deduplicated) —
     * public so scale smokes measure candidate volume directly. */
-  def snmMultiPassCandidates(docs: DataFrame, window: Int,
-                             prefixChars: Int = 4): DataFrame = {
+  def snmMultiPassCandidates(docs: DataFrame, window: Int): DataFrame = {
     val passes = Seq(col("text"), reverse(col("text")))
     passes.map { key =>
-      snmCandidatesBy(docs, key, window, prefixChars)
+      snmCandidatesBy(docs, key, window, 4)
         .select(least(col("da"), col("db")).as("da"),
           greatest(col("da"), col("db")).as("db"))
     }.reduce(_.unionByName(_)).distinct()

@@ -68,13 +68,13 @@ object EventOps {
   }
 
   /** Robust per-group outlier audit via median absolute deviation
-    * (Hampel's rule): flag x where |x − median| > k·MAD — the
+    * (Hampel's rule): flag x where |x − median| > 3·MAD — the
     * heavy-tail-safe filter a mean/stddev z-score is not (one extreme
     * value drags the mean AND inflates sigma; the median and MAD
     * ignore it). Engine-exact despite doubles: both medians are
     * `percentile_disc` PICKS of existing values (no interpolation),
     * the deviation is one subtraction of exactly-representable
-    * doubles, and the k·MAD compare is one correctly-rounded multiply
+    * doubles, and the 3·MAD compare is one correctly-rounded multiply
     * — no summation order anywhere.
     *
     * Plan shape: two group-sorted median aggregations over the corpus
@@ -82,8 +82,8 @@ object EventOps {
     * output is one row per group. At 100 TB the exact medians are the
     * audit path — the serving path reads the same quantiles off
     * [[Sketches.kmvQuantileSketch]]'s mergeable sample. */
-  def madOutliers(events: DataFrame, group: String, valueCol: String,
-                  k: Int = 3): DataFrame = {
+  def madOutliers(events: DataFrame, group: String,
+                  valueCol: String): DataFrame = {
     val med = events.groupBy(group)
       .agg(expr(s"percentile_disc(0.5) WITHIN GROUP (ORDER BY $valueCol)")
         .as("med"))
@@ -96,7 +96,7 @@ object EventOps {
       .groupBy(group)
       .agg(count(lit(1)).as("n"), max("med").as("med"),
         max("mad").as("mad"),
-        sum(when(col("adev") > lit(k.toDouble) * col("mad"), lit(1L))
+        sum(when(col("adev") > lit(3.0) * col("mad"), lit(1L))
           .otherwise(lit(0L))).as("n_outliers"))
       .withColumn("outlier_ppm",
         expr("CAST(n_outliers * 1000000 div n AS BIGINT)"))

@@ -35,10 +35,10 @@ object Graph {
     * fixed small `iters`.
     */
   def pagerankInt(edges: DataFrame, iters: Int,
-                  scale: Long = 1000000000000L,
-                  dampingPct: Int = 85): DataFrame = {
-    require(iters >= 1 && dampingPct > 0 && dampingPct < 100 && scale > 0,
-      s"bad pagerank params: iters=$iters damping=$dampingPct scale=$scale")
+                  scale: Long = 1000000000000L): DataFrame = {
+    require(iters >= 1 && scale > 0,
+      s"bad pagerank params: iters=$iters scale=$scale")
+    val dampingPct = 85
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
     val nodes = e.select(col("src").as("node"))

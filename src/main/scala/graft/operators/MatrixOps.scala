@@ -143,8 +143,8 @@ object MatrixOps {
     * physical detail Catalyst owns; logically it is the same join with the
     * contraction on BT's j.
     */
-  def multiplyTransposed(a: DataFrame, bt: DataFrame, broadcastRight: Boolean = false): DataFrame =
-    multiply(a, transpose(bt), broadcastRight)
+  def multiplyTransposed(a: DataFrame, bt: DataFrame): DataFrame =
+    multiply(a, transpose(bt))
 
   /** A^k by left-to-right chaining. Chained multiplies reuse the
     * contraction-key partitioning: each product is already hash-
@@ -152,9 +152,9 @@ object MatrixOps {
     * contraction index is the only exchange between steps — the pattern
     * iterative algorithms (PageRank-style walks, reachability) hit at
     * scale. */
-  def power(a: DataFrame, k: Int, broadcastRight: Boolean = false): DataFrame = {
+  def power(a: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "power requires k >= 1")
-    (2 to k).foldLeft(a)((acc, _) => multiply(acc, a, broadcastRight))
+    (2 to k).foldLeft(a)((acc, _) => multiply(acc, a))
   }
 
   /** Boolean-semiring closure step: cap every stored cell at 1.0. Chained

@@ -338,13 +338,13 @@ object Multimodal {
   final case class MediaIvfIndex(fps: DataFrame, book: DataFrame,
                                  assigned: DataFrame)
 
-  def mediaIvfIndex(spark: SparkSession, media: DataFrame, kPerKind: Int,
-                    rounds: Int = 1): MediaIvfIndex = {
+  def mediaIvfIndex(spark: SparkSession, media: DataFrame,
+                    kPerKind: Int): MediaIvfIndex = {
     val fps = withHistN(mediaFingerprints(spark, media)
         .select("media_id", "kind", "n_bytes", "hist", "nsq"))
       .select("media_id", "kind", "hist", "nsq", "histn")
       .localCheckpoint(eager = false)
-    val book = mediaIvfBook(spark, fps, kPerKind, rounds)
+    val book = mediaIvfBook(spark, fps, kPerKind)
       .localCheckpoint(eager = false)
     // the assignment ends in a shuffle aggregation, so a plain pin
     // would freeze AQE's coalesced layout for every broadcast-probed
@@ -435,8 +435,8 @@ object Multimodal {
     * SQL oracle's bucket-intersection SUM. */
   def mediaAnnIvf(spark: SparkSession, media: DataFrame,
                   numQueries: Int, k: Int, kPerKind: Int = 4,
-                  rounds: Int = 1, probes: Int = 1): DataFrame =
-    mediaAnnIvfSearch(mediaIvfIndex(spark, media, kPerKind, rounds),
+                  probes: Int = 1): DataFrame =
+    mediaAnnIvfSearch(mediaIvfIndex(spark, media, kPerKind),
       numQueries, k, probes)
 
   /** The QUERY side of [[mediaAnnIvf]] against a prebuilt
@@ -491,9 +491,8 @@ object Multimodal {
     * exact-cosine rerank needs — [[mediaAnnIvfFromIndex]] never
     * touches media payloads for the corpus side. */
   def saveMediaIvfIndex(spark: SparkSession, media: DataFrame,
-                        path: String, kPerKind: Int = 4,
-                        rounds: Int = 1): Unit = {
-    val idx = mediaIvfIndex(spark, media, kPerKind, rounds)
+                        path: String, kPerKind: Int = 4): Unit = {
+    val idx = mediaIvfIndex(spark, media, kPerKind)
     idx.book.write.mode("overwrite").parquet(s"$path/book")
     idx.assigned
       .join(idx.fps.select("media_id", "hist", "nsq"), "media_id")
@@ -585,13 +584,12 @@ object Multimodal {
     * top-k windows. */
   def mediaRecallAudit(spark: SparkSession, media: DataFrame,
                        numQueries: Int, k: Int, kPerKind: Int = 4,
-                       rounds: Int = 1,
                        probesList: Seq[Int] = Seq(1, 2)): DataFrame = {
     // ONE index build (fps + book + assignment, each lazily pinned)
     // shared by every probe leg AND by the ground-truth pass — the
     // audit's cost is |probesList| query-side passes over one index,
     // not |probesList| index rebuilds (the r9-advice hoist)
-    val idx = mediaIvfIndex(spark, media, kPerKind, rounds)
+    val idx = mediaIvfIndex(spark, media, kPerKind)
     val truth = mediaKnnFromFps(idx.fps, numQueries, k)
       .select(col("qid"), col("media_id"))
       .localCheckpoint(eager = false)

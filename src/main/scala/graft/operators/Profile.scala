@@ -50,10 +50,9 @@ object Profile {
   def tableProfile(df: DataFrame, cols: Seq[String]): DataFrame =
     statRows(df, cols, c => countDistinct(col(c)))
 
-  /** The 100 TB form: HLL distinct estimates (relative error `rsd`,
-    * default 2 %), single pass, no Expand replication — every other
-    * stat identical to [[tableProfile]]. */
-  def tableProfileApprox(df: DataFrame, cols: Seq[String],
-                         rsd: Double = 0.02): DataFrame =
-    statRows(df, cols, c => approx_count_distinct(col(c), rsd))
+  /** The 100 TB form: HLL distinct estimates (relative error 2 %),
+    * single pass, no Expand replication — every other stat identical
+    * to [[tableProfile]]. */
+  def tableProfileApprox(df: DataFrame, cols: Seq[String]): DataFrame =
+    statRows(df, cols, c => approx_count_distinct(col(c), 0.02))
 }

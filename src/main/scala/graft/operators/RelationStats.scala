@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Session-lifetime memo of auto-sizing relation counts.
   *
   * Several operators pick a physical strategy from a data-dependent
-  * scalar — tf·idf's shard count ([[TextOps.autoBuildShards]]), the
-  * LSH quotient short-circuit ([[Dedup.minhashLshPairs]]) — and that
+  * scalar — the doc count behind tf·idf's auto build-shard count
+  * ([[TextOps.autoBuildShards]]), the LSH quotient short-circuit
+  * ([[Dedup.minhashLshPairs]]) — and that
   * sizing action used to re-run on EVERY invocation: a bench loop
   * paid a fresh count job per repetition for a number that cannot
   * change within the session (sources are driver-generated immutable
@@ -37,29 +38,6 @@ object RelationStats {
     memo.computeIfAbsent(
       (df.sparkSession, df.queryExecution.analyzed.canonicalized),
       _ => df.first().getLong(0))
-
-  private val scalarTagged = new ConcurrentHashMap[
-    (SparkSession, LogicalPlan, String), java.lang.Long]()
-
-  /** A scalar memoized under (session, SOURCE plan, tag) with the
-    * value computed by an arbitrary action — for sizing scalars whose
-    * natural computation runs over a checkpoint-PINNED derived relation
-    * (each invocation's checkpoint canonicalizes to a fresh LogicalRDD,
-    * so keying on the computation plan — [[memoScalar]] — would never
-    * hit across invocations; keying on the stable source plan does).
-    * get + putIfAbsent like [[memoRelation]]: tolerates nesting. */
-  def memoScalarTagged(source: DataFrame, tag: String)
-                      (build: => Long): Long = {
-    val key = (source.sparkSession,
-      source.queryExecution.analyzed.canonicalized, tag)
-    val existing = scalarTagged.get(key)
-    if (existing != null) existing.longValue()
-    else {
-      val built = java.lang.Long.valueOf(build)
-      val prior = scalarTagged.putIfAbsent(key, built)
-      (if (prior != null) prior else built).longValue()
-    }
-  }
 
   private val rel = new ConcurrentHashMap[
     (SparkSession, LogicalPlan, String), DataFrame]()
@@ -99,7 +77,7 @@ object RelationStats {
     * re-counts; distinct sessions never collide — the session is part
     * of the key). */
   private[graft] def reset(): Unit = {
-    memo.clear(); rel.clear(); scalarTagged.clear()
+    memo.clear(); rel.clear()
   }
 
   /** A lazy local checkpoint stored at EXECUTOR WIDTH — for pinned

@@ -18,19 +18,27 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
+  /** The quantization scale of every quantized tier: a component x
+    * enters the integer kernels as floor(x · Scale). One value, because
+    * the Lloyd cells ([[lloydBook]], [[assignToBook]]), the PQ books and
+    * the queries probing them must quantize alike for a distance
+    * between them to rank the right cell. The k-means round and the
+    * Gram power iteration keep a `scale` parameter of their own: their
+    * tests run them at a small scale to check exact integer values. */
+  val Scale = 1000
+
   /** Brute-force top-k neighbors by quantized dot product for each query
     * vector (`vec_id < numQueries`). Deterministic: integer scores,
     * vec_id tie-break.
     */
-  def knnBruteForce(emb: DataFrame, numQueries: Int, k: Int,
-                    scale: Int = 1000): DataFrame = {
+  def knnBruteForce(emb: DataFrame, numQueries: Int, k: Int): DataFrame = {
     val queries = broadcast(
       emb.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
     val scored = queries.crossJoin(emb.select(col("vec_id"), col("embedding")))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        dotQuantized(col("qe"), col("embedding"), scale).as("score"))
+        dotQuantized(col("qe"), col("embedding"), Scale).as("score"))
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
@@ -40,7 +48,7 @@ object Similarity {
     * quantized cosine, so truth and candidate rankings share one
     * metric; [[knnBruteForce]]'s raw dot is a different ranking). */
   private[graft] def knnExactCosine(emb: DataFrame, numQueries: Int,
-                                    k: Int, scale: Int = 1000): DataFrame = {
+                                    k: Int): DataFrame = {
     val queries = broadcast(
       emb.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
@@ -48,7 +56,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         graft.functions.VectorFunctions.cosineQuantized(
-          col("qe"), col("embedding"), scale).as("cos"))
+          col("qe"), col("embedding"), Scale).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
@@ -63,14 +71,14 @@ object Similarity {
     * miss the whole truth set still emit (left join, hits = 0). All
     * relations are query-count-scale after their top-k windows. */
   def annRecallAudit(spark: SparkSession, emb: DataFrame, numQueries: Int,
-                     k: Int, probesList: Seq[Int] = Seq(1, 2),
+                     k: Int,
                      cells: Int = 10, cellRounds: Int = 2): DataFrame = {
     val truth = knnExactCosine(emb, numQueries, k)
       .select(col("qid"), col("vec_id"))
       .localCheckpoint(eager = false)
     val qids = emb.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("qid"))
-    probesList.map { p =>
+    Seq(1, 2).map { p =>
       val hits = annIvf(spark, emb, numQueries, k, probes = p,
           cells = cells, cellRounds = cellRounds)
         .select(col("qid"), col("vec_id"))
@@ -91,7 +99,7 @@ object Similarity {
     * measured in the metric it serves (the SRP tier, which serves
     * ANGLE, audits against [[knnExactCosine]] instead). */
   private[graft] def knnExactL2(emb: DataFrame, numQueries: Int,
-                                k: Int, scale: Int = 1000): DataFrame = {
+                                k: Int): DataFrame = {
     // query side pre-quantizes (numQueries rows — interpreted transform
     // is fine there); the corpus scan runs the native sqdist_q kernel
     // (float→floor→diff²→sum in one codegen loop) instead of the
@@ -101,11 +109,11 @@ object Similarity {
       emb.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("qid"),
           transform(col("embedding"),
-            x => floor(x.cast("double") * scale).cast("long")).as("qq")))
+            x => floor(x.cast("double") * Scale).cast("long")).as("qq")))
     val scored = queries.crossJoin(emb.select(col("vec_id"), col("embedding")))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        sqDistQuantized(col("embedding"), col("qq"), scale).as("dist"))
+        sqDistQuantized(col("embedding"), col("qq"), Scale).as("dist"))
     val w = Window.partitionBy("qid").orderBy(col("dist"), col("vec_id"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
@@ -125,7 +133,7 @@ object Similarity {
                          numQueries: Int, k: Int, pqM: Int = 16,
                          pqCw: Int = 256, rpqM: Int = 32, rpqCw: Int = 128,
                          rounds: Int = 2, prefilter: Int = 50,
-                         bits: Int = 256, probes: Int = 2,
+                         bits: Int = 256,
                          cells: Int = 10, cellRounds: Int = 2,
                          rerankPrefilter: Int = 25): DataFrame = {
     val truthCos = knnExactCosine(emb, numQueries, k)
@@ -147,19 +155,19 @@ object Similarity {
             .cast("long").as("recall_milli"))
     }
     Seq(
-      leg("ivfpq", annIvfPq(spark, emb, numQueries, k, pqM, probes = probes,
+      leg("ivfpq", annIvfPq(spark, emb, numQueries, k, pqM, probes = 2,
         cw = pqCw, rounds = rounds, cells = cells, cellRounds = cellRounds),
         truthL2),
       // the two-stage serving tier (r13): ADC shortlist + exact
       // re-rank — the audit row that shows the re-rank recovering the
       // raw-ADC tier's quantization loss up to the coarse-probe ceiling
       leg("ivfpq_rr", annIvfPqRerank(spark, emb, numQueries, k,
-        rerankPrefilter, pqM, probes = probes, cw = pqCw, rounds = rounds,
+        rerankPrefilter, pqM, probes = 2, cw = pqCw, rounds = rounds,
         cells = cells, cellRounds = cellRounds), truthL2),
       leg("pq", annPq(spark, emb, numQueries, k, pqM, cw = pqCw,
         rounds = rounds), truthL2),
       leg("rpq", annIvfRpq(spark, emb, numQueries, k, rpqM, rpqCw,
-        probes = probes, rounds = rounds, cells = cells,
+        probes = 2, rounds = rounds, cells = cells,
         cellRounds = cellRounds), truthL2),
       leg("srp", annSrpRerank(emb, numQueries, k, prefilter, bits), truthCos)
     ).reduce(_ unionByName _)
@@ -192,10 +200,9 @@ object Similarity {
             sqrt(col("nb").cast("double")))).as("cos"))
   }
 
-  def nearestPairsPerLabel(emb: DataFrame, pairsPerLabel: Int,
-                           scale: Int = 100): DataFrame = {
+  def nearestPairsPerLabel(emb: DataFrame, pairsPerLabel: Int): DataFrame = {
     val w = Window.partitionBy("label").orderBy(col("cos").desc, col("id_a"), col("id_b"))
-    pairCosinesPerLabel(emb, scale)
+    pairCosinesPerLabel(emb, 100)
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= pairsPerLabel)
   }
 
@@ -285,9 +292,10 @@ object Similarity {
     * stays inside signed-64. Convergence: max|v| = vecScale by
     * construction each round; the direction stabilizes in O(log gap)
     * rounds like any power method. */
-  def gramPowerIteration(emb: DataFrame, rounds: Int = 3, dims: Int = 64,
-                         scale: Int = 1000,
-                         vecScale: Long = 1000L): DataFrame = {
+  def gramPowerIteration(emb: DataFrame, dims: Int = 64,
+                         scale: Int = 1000): DataFrame = {
+    val rounds = 3
+    val vecScale = 1000L
     val upper = gramMatrix(emb, scale)
     // full symmetric coordinate form from the upper triangle
     // lazy: the Gram subtree materializes on the first action, not at
@@ -403,13 +411,13 @@ object Similarity {
     // (~2× per query). On a cluster: `checkpoint` to reliable
     // storage, or persist the book as the lake's offline artifact —
     // the memo is exactly that artifact's session-local stand-in.
-    RelationStats.memoRelation(emb, s"lloydBook:$k:$rounds:1000") {
+    RelationStats.memoRelation(emb, s"lloydBook:$k:$rounds") {
       val seeds = emb.orderBy("vec_id").limit(k)
         .select(col("vec_id").as("cluster"),
           transform(col("embedding"),
-            x => floor(x.cast("double") * 1000).cast("long")).as("cq"))
+            x => floor(x.cast("double") * Scale).cast("long")).as("cq"))
       (1 to rounds).foldLeft(seeds: DataFrame)((book, _) =>
-        bookOfRound(lloydStep(emb, book, 1000)))
+        bookOfRound(lloydStep(emb, book, Scale)))
         .localCheckpoint(eager = false)
     }
   }
@@ -565,7 +573,7 @@ object Similarity {
     * broadcast-ready `(cluster, cq: array<long>)`. */
   private[graft] def coarseBook(spark: SparkSession, emb: DataFrame,
                          dim: Int): DataFrame =
-    labelCentroids(spark, emb, dim, scale = 1000)
+    labelCentroids(spark, emb, dim)
       .select(col("label").as("cluster"),
         expr("transform(sum_q, s -> s div n)").as("cq"))
 
@@ -580,7 +588,7 @@ object Similarity {
     val dists = emb.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(book))
       .select(col("vec_id"), col("cluster"),
-        sqDistQuantized(col("embedding"), col("cq"), 1000).as("dist"))
+        sqDistQuantized(col("embedding"), col("cq"), Scale).as("dist"))
     // argmin as a min-struct hash aggregation, not a rank window (the
     // pqCodesOf idiom): the broadcast cross-probe leaves every vec_id's
     // k rows complete within one partition, so the partial agg
@@ -674,9 +682,8 @@ object Similarity {
     * (id_a < id_b) pair the verdict dot must score. The denominator a
     * scale smoke judges the pair stage's time ratio against. */
   def semDedupCandidates(spark: SparkSession, emb: DataFrame,
-                         dim: Int = 64, k: Int = 0,
-                         rounds: Int = 1): DataFrame = {
-    val assigned = semDedupAssignments(spark, emb, dim, k, rounds)
+                         k: Int = 0, rounds: Int = 1): DataFrame = {
+    val assigned = semDedupAssignments(spark, emb, 64, k, rounds)
     val a = assigned.select(col("cluster"), col("vec_id").as("id_a"))
     val b = assigned.select(col("cluster"), col("vec_id").as("id_b"))
     a.join(b, "cluster").filter(col("id_a") < col("id_b"))
@@ -685,9 +692,8 @@ object Similarity {
   /** [[semDedupAgainstCorpus]]'s pre-verdict candidate relation — every
     * same-cluster batch×corpus pair the verdict dot must score. */
   def semDedupIncrementalCandidates(spark: SparkSession, batch: DataFrame,
-                                    corpus: DataFrame,
-                                    dim: Int = 64): DataFrame = {
-    val book = coarseBook(spark, corpus, dim)
+                                    corpus: DataFrame): DataFrame = {
+    val book = coarseBook(spark, corpus, 64)
     assignToBook(batch, book).select(col("vec_id"), col("cluster"))
       .join(assignToBook(corpus, book)
         .select(col("vec_id").as("id_c"), col("cluster")), "cluster")
@@ -725,13 +731,12 @@ object Similarity {
     * vs) with `vs` the subspace's `dim / m` quantized dims — built
     * row-locally (transform + slice over the quantized array; no
     * shuffle, no window). */
-  private def quantizedSubvectors(emb: DataFrame, m: Int, dim: Int,
-                                  scale: Int): DataFrame = {
+  private def quantizedSubvectors(emb: DataFrame, m: Int, dim: Int): DataFrame = {
     require(dim % m == 0, s"m ($m) must divide dim ($dim)")
     val sub = dim / m
     emb.select(col("vec_id"),
         transform(col("embedding"),
-          x => floor(x.cast("double") * scale).cast("long")).as("q"))
+          x => floor(x.cast("double") * Scale).cast("long")).as("q"))
       .select(col("vec_id"), posexplode(expr(
         s"transform(sequence(0, ${m - 1}), s -> slice(q, s * $sub + 1, $sub))"))
         .as(Seq("subspace", "vs")))
@@ -805,15 +810,14 @@ object Similarity {
     * every serving query of the family shares ONE build, exactly the
     * [[lloydBook]] memo rule). */
   private[graft] def pqCodebookTrained(emb: DataFrame, m: Int, cw: Int,
-                                       rounds: Int, dim: Int,
-                                       scale: Int): DataFrame =
-    RelationStats.memoRelation(emb, s"pqBook:$m:$cw:$rounds:$dim:$scale") {
+                                       rounds: Int, dim: Int): DataFrame =
+    RelationStats.memoRelation(emb, s"pqBook:$m:$cw:$rounds:$dim") {
       // the subvector pin feeds ×cw broadcast fan-out per training
       // round with no re-exchange — width-pinned, not plain-pinned
       // (RelationStats.pinnedWide: 10× measured, RPQ_COST_PROBE_r11)
       trainedSubspaceBook(
         RelationStats.pinnedWide(
-          quantizedSubvectors(emb, m, dim, scale), col("vec_id")),
+          quantizedSubvectors(emb, m, dim), col("vec_id")),
         cw, rounds)
         .localCheckpoint(eager = false)
     }
@@ -822,11 +826,11 @@ object Similarity {
     * subspace, code, dist), memoized beside the book (ann_pq, both
     * IVF-ADC probes, and the recall audit all read the same codes). */
   private def pqCodesMemo(emb: DataFrame, m: Int, cw: Int, rounds: Int,
-                          dim: Int, scale: Int): DataFrame =
-    RelationStats.memoRelation(emb, s"pqCodes:$m:$cw:$rounds:$dim:$scale") {
+                          dim: Int): DataFrame =
+    RelationStats.memoRelation(emb, s"pqCodes:$m:$cw:$rounds:$dim") {
       RelationStats.pinnedWide(
-        pqCodesOf(quantizedSubvectors(emb, m, dim, scale),
-          pqCodebookTrained(emb, m, cw, rounds, dim, scale)),
+        pqCodesOf(quantizedSubvectors(emb, m, dim),
+          pqCodebookTrained(emb, m, cw, rounds, dim)),
         col("vec_id"))
     }
 
@@ -881,10 +885,10 @@ object Similarity {
     * reads the corpus at encode time. Output (vec_id, subspace, code,
     * dist), the [[pqCodes]] contract. */
   def pqIncrementalCodes(batch: DataFrame, corpus: DataFrame, m: Int = 8,
-                         dim: Int = 64, scale: Int = 1000, cw: Int = 64,
+                         dim: Int = 64, cw: Int = 64,
                          rounds: Int = 2): DataFrame =
-    pqCodesOf(quantizedSubvectors(batch, m, dim, scale),
-      pqCodebookTrained(corpus, m, cw, rounds, dim, scale))
+    pqCodesOf(quantizedSubvectors(batch, m, dim),
+      pqCodebookTrained(corpus, m, cw, rounds, dim))
 
   /** The ADC family's coarse cell assignment — every vector to its
     * nearest [[lloydBook]] centroid, memoized like the book itself
@@ -910,7 +914,7 @@ object Similarity {
     * Returns (qid, qe, cell). */
   private def probedCells(spark: SparkSession, emb: DataFrame,
                           numQueries: Int, probes: Int, cells: Int,
-                          cellRounds: Int, scale: Int): DataFrame = {
+                          cellRounds: Int): DataFrame = {
     val book = broadcast(lloydBook(spark, emb, cells, cellRounds)
       .select(col("cluster").as("cell"), col("cq")))
     val queries = broadcast(
@@ -918,7 +922,7 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
     val scored = queries.crossJoin(book)
       .select(col("qid"), col("qe"), col("cell"),
-        sqDistQuantized(col("qe"), col("cq"), scale).as("cdist"))
+        sqDistQuantized(col("qe"), col("cq"), Scale).as("cdist"))
     val w = Window.partitionBy("qid").orderBy(col("cdist"), col("cell"))
     scored.withColumn("crn", row_number().over(w))
       .filter(col("crn") <= probes)
@@ -940,15 +944,15 @@ object Similarity {
     * N·m·cw candidate relation never materializes. The corpus never
     * shuffles wider than (vec_id, subspace) rows. */
   def pqCodes(spark: SparkSession, emb: DataFrame, m: Int = 8,
-              dim: Int = 64, scale: Int = 1000, cw: Int = 64,
+              dim: Int = 64, cw: Int = 64,
               rounds: Int = 2): DataFrame =
     // the assignment subtree stays VISIBLE (only the trained book is
     // memo-checkpointed): the declared relation's plan shape — the
     // broadcast packed-book probe + fused pq_argmin kernel — is
     // PlanAuditSpec-asserted, and a memoized checkpoint here would
     // hide it behind a Scan ExistingRDD
-    pqCodesOf(quantizedSubvectors(emb, m, dim, scale),
-      pqCodebookTrained(emb, m, cw, rounds, dim, scale))
+    pqCodesOf(quantizedSubvectors(emb, m, dim),
+      pqCodebookTrained(emb, m, cw, rounds, dim))
 
   /** ANN search over PQ codes by asymmetric distance computation (ADC):
     * each query precomputes its exact squared-L2 to every codeword per
@@ -965,12 +969,12 @@ object Similarity {
     * WindowGroupLimit-pruned. */
   def annPq(spark: SparkSession, emb: DataFrame, numQueries: Int = 5,
             k: Int = 10, m: Int = 8, dim: Int = 64,
-            scale: Int = 1000, cw: Int = 64, rounds: Int = 2): DataFrame = {
-    val book = pqCodebookTrained(emb, m, cw, rounds, dim, scale)
-    val codes = pqCodesMemo(emb, m, cw, rounds, dim, scale)
+            cw: Int = 64, rounds: Int = 2): DataFrame = {
+    val book = pqCodebookTrained(emb, m, cw, rounds, dim)
+    val codes = pqCodesMemo(emb, m, cw, rounds, dim)
       .select("vec_id", "subspace", "code")
     val qtab = subspaceDists(
-        quantizedSubvectors(emb.filter(col("vec_id") < numQueries), m, dim, scale),
+        quantizedSubvectors(emb.filter(col("vec_id") < numQueries), m, dim),
         book)
       .select(col("vec_id").as("qid"), col("subspace").cast("long").as("subspace"),
         col("label").cast("long").as("code"), col("dist").as("qdist"))
@@ -1003,19 +1007,19 @@ object Similarity {
     * candidates for that recall. */
   def annIvfPq(spark: SparkSession, emb: DataFrame, numQueries: Int,
                k: Int, m: Int = 8, dim: Int = 64,
-               scale: Int = 1000, probes: Int = 1, cw: Int = 64,
+               probes: Int = 1, cw: Int = 64,
                rounds: Int = 2, cells: Int = 10,
                cellRounds: Int = 2): DataFrame = {
-    val book = pqCodebookTrained(emb, m, cw, rounds, dim, scale)
-    val codes = pqCodesMemo(emb, m, cw, rounds, dim, scale)
+    val book = pqCodebookTrained(emb, m, cw, rounds, dim)
+    val codes = pqCodesMemo(emb, m, cw, rounds, dim)
       .select("vec_id", "subspace", "code")
     val qtab = subspaceDists(
-        quantizedSubvectors(emb.filter(col("vec_id") < numQueries), m, dim, scale),
+        quantizedSubvectors(emb.filter(col("vec_id") < numQueries), m, dim),
         book)
       .select(col("vec_id").as("qid"), col("subspace").cast("long").as("subspace"),
         col("label").cast("long").as("code"), col("dist").as("qdist"))
     val probed = probedCells(spark, emb, numQueries, probes, cells,
-      cellRounds, scale).select(col("qid"), col("cell"))
+      cellRounds).select(col("qid"), col("cell"))
     val asg = ivfAssignments(spark, emb, cells, cellRounds)
     val cand = broadcast(probed).join(asg, "cell")
       .filter(col("vec_id") =!= col("qid"))
@@ -1054,14 +1058,14 @@ object Similarity {
     * the query-time half that never sees raw vectors. */
   def savePqIndex(spark: SparkSession, corpus: DataFrame, path: String,
                   m: Int = 8, dim: Int = 64,
-                  scale: Int = 1000, cw: Int = 64, rounds: Int = 2,
+                  cw: Int = 64, rounds: Int = 2,
                   cells: Int = 10, cellRounds: Int = 2): Unit = {
-    pqCodebookTrained(corpus, m, cw, rounds, dim, scale)
+    pqCodebookTrained(corpus, m, cw, rounds, dim)
       .write.mode("overwrite").parquet(s"$path/book")
     lloydBook(spark, corpus, cells, cellRounds)
       .write.mode("overwrite").parquet(s"$path/cells")
     ivfAssignments(spark, corpus, cells, cellRounds)
-      .join(pqCodes(spark, corpus, m, dim, scale, cw, rounds)
+      .join(pqCodes(spark, corpus, m, dim, cw, rounds)
         .select("vec_id", "subspace", "code"), "vec_id")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/postings")
@@ -1079,13 +1083,12 @@ object Similarity {
     * Idempotence is the caller's offsets problem (exactly-once
     * ingestion dedups upstream), as with every lake append. */
   def appendToPqIndex(spark: SparkSession, batch: DataFrame, path: String,
-                      m: Int = 8, dim: Int = 64,
-                      scale: Int = 1000): Unit = {
+                      m: Int = 8, dim: Int = 64): Unit = {
     val book = spark.read.parquet(s"$path/book")
     val cellBook = spark.read.parquet(s"$path/cells")
     assignToBook(batch, cellBook)
       .select(col("vec_id"), col("cluster").as("cell"))
-      .join(pqCodesOf(quantizedSubvectors(batch, m, dim, scale), book)
+      .join(pqCodesOf(quantizedSubvectors(batch, m, dim), book)
         .select("vec_id", "subspace", "code"), "vec_id")
       .select("vec_id", "subspace", "code", "cell")
       .write.mode("append").partitionBy("cell").parquet(s"$path/postings")
@@ -1117,8 +1120,7 @@ object Similarity {
     * corpus vectors appear nowhere. */
   def annIvfPqFromIndex(spark: SparkSession, queries: DataFrame,
                         path: String, k: Int, probes: Int = 1,
-                        m: Int = 8, dim: Int = 64,
-                        scale: Int = 1000): DataFrame = {
+                        m: Int = 8, dim: Int = 64): DataFrame = {
     val book = spark.read.parquet(s"$path/book")
     val cellBook = broadcast(spark.read.parquet(s"$path/cells")
       .select(col("cluster").as("cell"), col("cq")))
@@ -1126,11 +1128,11 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
       .crossJoin(cellBook)
       .select(col("qid"), col("cell"),
-        sqDistQuantized(col("qe"), col("cq"), scale).as("cdist"))
+        sqDistQuantized(col("qe"), col("cq"), Scale).as("cdist"))
     val cw0 = Window.partitionBy("qid").orderBy(col("cdist"), col("cell"))
     val probed = scored.withColumn("crn", row_number().over(cw0))
       .filter(col("crn") <= probes).select("qid", "cell")
-    val qtab = subspaceDists(quantizedSubvectors(queries, m, dim, scale),
+    val qtab = subspaceDists(quantizedSubvectors(queries, m, dim),
         book)
       .select(col("vec_id").as("qid"),
         col("subspace").cast("long").as("subspace"),
@@ -1168,9 +1170,7 @@ object Similarity {
     * — dedup must never drop a row it could not compare). */
   def dedupIncrementalFromIndex(spark: SparkSession, batch: DataFrame,
                                 path: String, maxAdist: Long,
-                                probes: Int = 1, m: Int = 8,
-                                dim: Int = 64,
-                                scale: Int = 1000): DataFrame = {
+                                m: Int = 8): DataFrame = {
     require(maxAdist >= 0, s"maxAdist must be >= 0: $maxAdist")
     // BATCH-REGIME plan shape, not [[annIvfPqFromIndex]]'s: the LUT
     // form broadcasts a (queries·m·cw)-row distance table — right for
@@ -1189,10 +1189,10 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
       .crossJoin(cellBook)
       .select(col("qid"), col("qe"), col("cell"),
-        sqDistQuantized(col("qe"), col("cq"), scale).as("cdist"))
+        sqDistQuantized(col("qe"), col("cq"), Scale).as("cdist"))
     val cw0 = Window.partitionBy("qid").orderBy(col("cdist"), col("cell"))
     val probed = scored.withColumn("crn", row_number().over(cw0))
-      .filter(col("crn") <= probes).select("qid", "qe", "cell")
+      .filter(col("crn") <= 1).select("qid", "qe", "cell")
     val postings = spark.read.parquet(s"$path/postings")
     // decode ONCE per distinct candidate vector in any probed cell
     val vhat = broadcast(probed.select("cell").distinct())
@@ -1209,7 +1209,7 @@ object Similarity {
       .select(col("qid"),
         graft.functions.VectorFunctions.sqDistLong(
           transform(col("qe"),
-            x => floor(x.cast("double") * scale).cast("long")),
+            x => floor(x.cast("double") * Scale).cast("long")),
           col("vhat")).as("adist"))
       .groupBy("qid").agg(min(col("adist")).as("adist"))
       .filter(col("adist") <= maxAdist)
@@ -1244,23 +1244,23 @@ object Similarity {
     * directly comparable against [[knnExactL2]] truth. */
   def annIvfPqRerank(spark: SparkSession, emb: DataFrame, numQueries: Int,
                      k: Int, prefilter: Int, m: Int = 8, dim: Int = 64,
-                     scale: Int = 1000, probes: Int = 1, cw: Int = 64,
+                     probes: Int = 1, cw: Int = 64,
                      rounds: Int = 2, cells: Int = 10,
                      cellRounds: Int = 2): DataFrame = {
     require(prefilter >= k, s"prefilter ($prefilter) must cover k ($k)")
-    val cands = annIvfPq(spark, emb, numQueries, prefilter, m, dim, scale,
+    val cands = annIvfPq(spark, emb, numQueries, prefilter, m, dim,
         probes, cw, rounds, cells, cellRounds)
       .select(col("qid"), col("vec_id"))
     val queries = broadcast(
       emb.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("qid"),
           transform(col("embedding"),
-            x => floor(x.cast("double") * scale).cast("long")).as("qq")))
+            x => floor(x.cast("double") * Scale).cast("long")).as("qq")))
     val w = Window.partitionBy("qid").orderBy(col("dist"), col("vec_id"))
     broadcast(cands).join(emb, "vec_id")
       .join(queries, "qid")
       .select(col("qid"), col("vec_id"),
-        sqDistQuantized(col("embedding"), col("qq"), scale).as("dist"))
+        sqDistQuantized(col("embedding"), col("qq"), Scale).as("dist"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
   }
@@ -1271,9 +1271,9 @@ object Similarity {
     * broadcasts. Memoized: the residual relation feeds both the
     * residual-book training and the corpus coding. */
   private def residualSubMemo(spark: SparkSession, emb: DataFrame, m: Int,
-                              dim: Int, scale: Int, cells: Int,
+                              dim: Int, cells: Int,
                               cellRounds: Int): DataFrame =
-    RelationStats.memoRelation(emb, s"rpqSub:$m:$dim:$scale:$cells:$cellRounds") {
+    RelationStats.memoRelation(emb, s"rpqSub:$m:$dim:$cells:$cellRounds") {
       val sub = dim / m
       val book = broadcast(lloydBook(spark, emb, cells, cellRounds)
         .select(col("cluster").as("cell"), col("cq")))
@@ -1282,7 +1282,7 @@ object Similarity {
         .select(col("vec_id"), col("cell"),
           zip_with(
             transform(col("embedding"),
-              x => floor(x.cast("double") * scale).cast("long")),
+              x => floor(x.cast("double") * Scale).cast("long")),
             col("cq"), (a, b) => a - b).as("rq"))
         .select(col("vec_id"), col("cell"), posexplode(expr(
           s"transform(sequence(0, ${m - 1}), s -> slice(rq, s * $sub + 1, $sub))"))
@@ -1301,12 +1301,12 @@ object Similarity {
     * Memoized beside the residual relation. */
   private def residualBookMemo(spark: SparkSession, emb: DataFrame, m: Int,
                                groups: Int, rounds: Int, dim: Int,
-                               scale: Int, cells: Int,
+                               cells: Int,
                                cellRounds: Int): DataFrame =
     RelationStats.memoRelation(emb,
-      s"rpqBook:$m:$groups:$rounds:$dim:$scale:$cells:$cellRounds") {
+      s"rpqBook:$m:$groups:$rounds:$dim:$cells:$cellRounds") {
       trainedSubspaceBook(
-        residualSubMemo(spark, emb, m, dim, scale, cells, cellRounds)
+        residualSubMemo(spark, emb, m, dim, cells, cellRounds)
           .select("vec_id", "subspace", "vs"), groups, rounds)
         .localCheckpoint(eager = false)
     }
@@ -1325,12 +1325,12 @@ object Similarity {
     * fused `pq_argmin` kernel. */
   def pqResidualCodes(spark: SparkSession, emb: DataFrame, m: Int = 8,
                       groups: Int = 16, dim: Int = 64,
-                      scale: Int = 1000, rounds: Int = 2, cells: Int = 10,
+                      rounds: Int = 2, cells: Int = 10,
                       cellRounds: Int = 2): DataFrame =
     pqCodesOf(
-      residualSubMemo(spark, emb, m, dim, scale, cells, cellRounds)
+      residualSubMemo(spark, emb, m, dim, cells, cellRounds)
         .select("vec_id", "subspace", "vs"),
-      residualBookMemo(spark, emb, m, groups, rounds, dim, scale, cells,
+      residualBookMemo(spark, emb, m, groups, rounds, dim, cells,
         cellRounds))
 
   /** IVF-ADC with RESIDUAL codes — the paper-exact composition: probe
@@ -1350,28 +1350,28 @@ object Similarity {
     * passes. */
   def annIvfRpq(spark: SparkSession, emb: DataFrame, numQueries: Int,
                 k: Int, m: Int = 8, groups: Int = 16, dim: Int = 64,
-                scale: Int = 1000, probes: Int = 1, rounds: Int = 2,
+                probes: Int = 1, rounds: Int = 2,
                 cells: Int = 10, cellRounds: Int = 2): DataFrame = {
     val sub = dim / m
     val cellBook = lloydBook(spark, emb, cells, cellRounds)
       .select(col("cluster").as("cell"), col("cq"))
-    val book = residualBookMemo(spark, emb, m, groups, rounds, dim, scale,
+    val book = residualBookMemo(spark, emb, m, groups, rounds, dim,
       cells, cellRounds)
     val codes = pqCodesOf(
-      residualSubMemo(spark, emb, m, dim, scale, cells, cellRounds)
+      residualSubMemo(spark, emb, m, dim, cells, cellRounds)
         .select("vec_id", "subspace", "vs"), book)
       .select("vec_id", "subspace", "code")
     // coarse probe: `probes` nearest Lloyd cells by exact integer
     // query-to-centroid squared-L2 (the serving metric)
     val probed = probedCells(spark, emb, numQueries, probes, cells,
-      cellRounds, scale)
+      cellRounds)
     // query residual vs EACH probed cell's centroid, sliced per
     // subspace — the table keys on (qid, cell): every probed cell is
     // its own residual frame
     val qres = probed.join(broadcast(cellBook), "cell")
       .select(col("qid"), col("cell"),
         zip_with(
-          transform(col("qe"), x => floor(x.cast("double") * scale).cast("long")),
+          transform(col("qe"), x => floor(x.cast("double") * Scale).cast("long")),
           col("cq"), (a, b) => a - b).as("rq"))
       .select(
         // pack (query, cell) as the dist-table probe id so the shared
@@ -1413,13 +1413,13 @@ object Similarity {
     * align with embedding-space neighborhoods, which no amount of
     * probing fixes at serving-credible probe counts. */
   def annIvf(spark: SparkSession, emb: DataFrame, numQueries: Int, k: Int,
-             dim: Int = 64, scale: Int = 1000, probes: Int = 1,
+             dim: Int = 64, probes: Int = 1,
              cells: Int = 10, cellRounds: Int = 2): DataFrame = {
     // multi-probe: rerank inside the `probes` best cells — the
     // standard IVF recall knob (boundary vectors live in a neighbor
     // cell; probing P cells trades P× candidates for recall)
     val probed = probedCells(spark, emb, numQueries, probes, cells,
-      cellRounds, scale)
+      cellRounds)
     val asg = ivfAssignments(spark, emb, cells, cellRounds)
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     broadcast(probed).join(asg, "cell")
@@ -1428,7 +1428,7 @@ object Similarity {
       .select(col("qid"), col("cell"), col("vec_id"),
         // quantized cosine: integer dot + one sqrt + one division, so
         // the rerank ordering (and the SQL oracle) is bit-exact
-        cosineQuantized(col("qe"), col("embedding"), scale).as("cos"))
+        cosineQuantized(col("qe"), col("embedding"), Scale).as("cos"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
   }
@@ -1439,15 +1439,14 @@ object Similarity {
     * — near misses, the examples a contrastive loss learns most from.
     * Rides the IVF machinery rather than a brute scan: the anchor
     * scores the broadcast centroid table restricted to FOREIGN cells
-    * (label ≠ anchor's), probes the `probes` best, and reranks only
+    * (label ≠ anchor's), probes the 2 best, and reranks only
     * those cells' members by quantized cosine. At 100 TB that is the
     * serving shape — candidates per anchor are bounded by probed-cell
     * population, never corpus size, and the corpus-side join is a
     * plain equi-join on the cell key. */
   def hardNegatives(spark: SparkSession, emb: DataFrame, numQueries: Int,
-                    k: Int, dim: Int = 64, scale: Int = 1000,
-                    probes: Int = 2): DataFrame = {
-    val cents = broadcast(labelCentroids(spark, emb, dim, scale))
+                    k: Int): DataFrame = {
+    val cents = broadcast(labelCentroids(spark, emb))
     val queries = broadcast(
       emb.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -1456,19 +1455,19 @@ object Similarity {
       .filter(col("label") =!= col("qlabel")) // foreign cells only
       .select(col("qid"), col("qe"), col("qlabel"), col("label"),
         (aggregate(zip_with(col("qe"), col("sum_q"),
-          (x, y) => floor(x.cast("double") * scale).cast("long") * y),
+          (x, y) => floor(x.cast("double") * Scale).cast("long") * y),
           lit(0L), (acc, x) => acc + x).cast("double") / col("n")).as("cscore"))
     val wBest = Window.partitionBy("qid")
       .orderBy(col("cscore").desc, col("label"))
     val probed = scored.withColumn("crn", row_number().over(wBest))
-      .filter(col("crn") <= probes)
+      .filter(col("crn") <= 2)
       .select(col("qid"), col("qe"), col("qlabel"), col("label"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     probed.join(emb, "label")
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("qlabel"), col("label").as("neg_label"),
         col("vec_id"),
-        cosineQuantized(col("qe"), col("embedding"), scale).as("cos"))
+        cosineQuantized(col("qe"), col("embedding"), Scale).as("cos"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
   }
@@ -1494,11 +1493,10 @@ object Similarity {
   }
 
   def annLshBucketed(spark: SparkSession, emb: DataFrame, numQueries: Int,
-                     k: Int, numPlanes: Int = 6, dim: Int = 64,
-                     seed: Long = 42L, scale: Int = 1000): DataFrame = {
-    val planes = lshPlanesQuantized(numPlanes, dim, seed)
+                     k: Int, numPlanes: Int = 6, dim: Int = 64): DataFrame = {
+    val planes = lshPlanesQuantized(numPlanes, dim)
     val bucketed = emb.select(col("vec_id"), col("embedding"),
-      hyperplaneBucketQuantized(col("embedding"), planes, scale).as("bucket"))
+      hyperplaneBucketQuantized(col("embedding"), planes, Scale).as("bucket"))
     val queries = broadcast(
       bucketed.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -1506,7 +1504,7 @@ object Similarity {
     val scored = queries.join(bucketed, col("bucket") === col("qbucket"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"), col("bucket"),
-        cosineQuantized(col("qe"), col("embedding"), scale).as("cos"))
+        cosineQuantized(col("qe"), col("embedding"), Scale).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
@@ -1541,16 +1539,15 @@ object Similarity {
     * scan. Production sketches are 128-256 bits for exactly this
     * resolution reason (Charikar 2002 §3). */
   def annSrpHamming(emb: DataFrame, numQueries: Int, k: Int,
-                    bits: Int = 32, dim: Int = 64, seed: Long = 42L,
-                    scale: Int = 1000): DataFrame = {
-    val planes = lshPlanesQuantized(bits, dim, seed)
+                    bits: Int = 32, dim: Int = 64): DataFrame = {
+    val planes = lshPlanesQuantized(bits, dim)
     val numWords = (bits + 61) / 62
     // ONE native pass emits every word ([[graft.functions.SrpCodeWords]]
     // — r11: the per-word zip_with/aggregate chain was interpreted and
     // re-read the vector twice per plane, which at 256 bits made this
     // projection the suite's most expensive stage)
     val codes = emb.select(col("vec_id"),
-      srpCodeWords(col("embedding"), planes, scale).as("code"))
+      srpCodeWords(col("embedding"), planes, Scale).as("code"))
     val queries = broadcast(codes.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("qid"), col("code").as("qcode")))
     val w = Window.partitionBy("qid").orderBy(col("hamming"), col("vec_id"))
@@ -1578,11 +1575,11 @@ object Similarity {
     * survivors (broadcast — queries·prefilter rows) against the
     * embedding relation once. */
   def annSrpRerank(emb: DataFrame, numQueries: Int, k: Int,
-                   prefilter: Int = 20, bits: Int = 32, dim: Int = 64,
-                   seed: Long = 42L, scale: Int = 1000): DataFrame = {
+                   prefilter: Int = 20, bits: Int = 32,
+                   dim: Int = 64): DataFrame = {
     require(prefilter >= k, s"prefilter ($prefilter) must cover k ($k)")
-    val cands = annSrpHamming(emb, numQueries, prefilter, bits, dim,
-      seed, scale).select("qid", "vec_id", "hamming")
+    val cands = annSrpHamming(emb, numQueries, prefilter, bits, dim)
+      .select("qid", "vec_id", "hamming")
     val queries = broadcast(
       emb.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
@@ -1590,7 +1587,7 @@ object Similarity {
     broadcast(cands).join(emb, "vec_id")
       .join(queries, "qid")
       .select(col("qid"), col("vec_id"), col("hamming"),
-        cosineQuantized(col("qe"), col("embedding"), scale).as("cos"))
+        cosineQuantized(col("qe"), col("embedding"), Scale).as("cos"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
   }

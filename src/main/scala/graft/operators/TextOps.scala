@@ -350,14 +350,13 @@ object TextOps {
     * floor-division.
     *
     * Per language: corpus tokens, weight in ppm, the token allocation
-    * at a `budgetPct` total budget, and `epochs_milli` =
+    * at a 50% total budget, and `epochs_milli` =
     * alloc/corpus — the number that shows a low-resource language
     * sampling past one epoch (the known cost of temperature mixing
     * that practitioners cap). One metadata-scale aggregate over a
     * row-local token count: no shuffle carries more than |langs| rows.
     */
-  def mixTemperature(docs: DataFrame, budgetPct: Int = 50): DataFrame = {
-    require(budgetPct >= 0 && budgetPct <= 100, s"budgetPct: $budgetPct")
+  def mixTemperature(docs: DataFrame): DataFrame = {
     val byLang = docs
       .select(col("lang"), tokenCount(col("text")).as("toks"))
       .groupBy("lang").agg(sum("toks").as("toks_lang"))
@@ -369,7 +368,7 @@ object TextOps {
       .withColumn("weight_ppm",
         expr("(sq_milli * 1000000) div z"))
       .withColumn("alloc_toks",
-        expr(s"(((toks_total * $budgetPct) div 100) * weight_ppm) div 1000000"))
+        expr("(((toks_total * 50) div 100) * weight_ppm) div 1000000"))
       .withColumn("epochs_milli",
         expr("(alloc_toks * 1000) div toks_lang"))
       .select("lang", "toks_lang", "weight_ppm", "alloc_toks",
@@ -411,9 +410,9 @@ object TextOps {
     * sort materializes. */
   def topTerms(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // corpus size is one driver-side scalar (metadata-scale, same as
-    // dedup_incremental's split point)
-    val total = docs.count()
+    // N as a one-row broadcast aggregate, as in [[salientVectors]], so
+    // declaring the query runs no job
+    val n = docs.agg(count(lit(1)).as("n"))
     val tok = docs.select(col("doc_id"),
       explode(split(col("text"), " ")).as("token"))
     val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
@@ -422,13 +421,17 @@ object TextOps {
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("token"))
     tf.join(df, "token")
+      .crossJoin(broadcast(n))
       .withColumn("score",
-        col("tf").cast("double") * (lit(total).cast("double") / col("df")))
+        col("tf").cast("double") * (col("n").cast("double") / col("df")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("doc_id"), col("rnk"), col("token"), col("tf"),
         col("df"), col("score"))
   }
+
+  /** Salient terms per document in the tf·idf pair tiers' vectors. */
+  val SalientK = 10
 
   /** Per-document salient-term tf·idf vectors in INTEGER weight space:
     * weight = tf · ((N·100) div df) — integer division, so the weight,
@@ -471,35 +474,6 @@ object TextOps {
     math.max(1L, (docCount + maxBroadcastDocs - 1) / maxBroadcastDocs).toInt
   }
 
-  /** The dot-relation CANDIDATE MASS of [[tfidfCosinePairs]]: Σ over
-    * salient tokens of (postings count)² — the number of joined rows
-    * the candidate self-join emits before aggregation, i.e. the
-    * query's actual cost driver (hot salient terms emit |bucket|²
-    * pairs; doc count alone cannot see that skew).
-    *
-    * NOT metadata-scale on first evaluation: the aggregation sits on
-    * the full salient-vector build (corpus token explode, tf·idf
-    * weights, per-doc top-k window). That is why [[tfidfCosinePairs]]
-    * computes it over its own checkpoint-PINNED `vec` (the overload) —
-    * the sizing action then MATERIALIZES the checkpoint the query
-    * itself reuses, so the pass is shared, not extra. Memoized under
-    * the stable (docs, k) key ([[RelationStats.memoScalarTagged]] —
-    * each invocation's checkpoint canonicalizes to a fresh LogicalRDD,
-    * so a plan-keyed memo would never hit across invocations); after
-    * the first evaluation the dial is a lookup. */
-  def tfidfCandidateMass(docs: DataFrame, k: Int): Long =
-    tfidfCandidateMass(docs, k, salientVectors(docs, k))
-
-  /** [[tfidfCandidateMass]] over a caller-supplied (typically
-    * checkpoint-pinned) salient-vector relation for `docs`. */
-  def tfidfCandidateMass(docs: DataFrame, k: Int, vec: DataFrame): Long =
-    RelationStats.memoScalarTagged(docs, s"tfidfCandMass:$k") {
-      vec.groupBy("token")
-        .agg(count(lit(1)).as("c"))
-        .agg(coalesce(sum(col("c") * col("c")), lit(0L)).as("m"))
-        .first().getLong(0)
-    }
-
   /** Sparse tf·idf cosine pairs over [[salientVectors]] — the IR-style
     * text-similarity tier (the embedding-free twin of
     * [[Dedup.embeddingNearDupPairs]]): candidates are documents sharing
@@ -510,17 +484,14 @@ object TextOps {
     * dot / (√na·√nb) — written as the identical three-step expression
     * in the SQL oracle, so the ≥ threshold comparison is
     * engine-deterministic. */
-  def tfidfCosinePairs(docs: DataFrame, k: Int = 10,
+  def tfidfCosinePairs(docs: DataFrame,
                        thresholdHundredths: Int = 60,
                        buildShards: Int = 0,
-                       maxBroadcastDocs: Long = 10000000L,
-                       maxPairsPerShard: Long = 2000000000L): DataFrame = {
+                       maxBroadcastDocs: Long = 10000000L): DataFrame = {
     require(buildShards >= 0,
       s"buildShards must be >= 0 (0 = auto-size): $buildShards")
     require(maxBroadcastDocs >= 1,
       s"maxBroadcastDocs must be >= 1: $maxBroadcastDocs")
-    require(maxPairsPerShard >= 1,
-      s"maxPairsPerShard must be >= 1: $maxPairsPerShard")
     // The vector relation is consumed three times (both self-join sides
     // + norms) and its subtree is the expensive part (full token
     // explode, two aggregations, a window); materialize it once — it is
@@ -528,7 +499,7 @@ object TextOps {
     // On a cluster: `checkpoint` to reliable storage instead. Lazy
     // (eager = false): materializes on first ACTION, so declaring the
     // query — plan audits, explain — runs no jobs.
-    val vec = salientVectors(docs, k).localCheckpoint(eager = false)
+    val vec = salientVectors(docs, SalientK).localCheckpoint(eager = false)
     // Spread the PROBE side of the candidate join explicitly: the
     // checkpointed vector relation is tiny (k rows/doc), so AQE
     // coalesces it to ~one partition — and the join's cost is the
@@ -577,32 +548,20 @@ object TextOps {
         col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         (col("a.wq") * col("b.wq")).as("w"))
-    // buildShards = 0 auto-sizes from TWO measured scalars, taking the
-    // max: (a) shards = ceil(docs / maxBroadcastDocs) — the broadcast-
-    // memory bound (the vectors of one shard must fit one broadcast);
-    // (b) shards = ceil(candidateMass / maxPairsPerShard) — the
-    // measured DOT-RELATION bound ([[tfidfCandidateMass]]: hot salient
-    // terms emit |bucket|² joined rows, which doc count cannot see), so
-    // a skew-heavy corpus engages sharding before its per-pass pair
-    // stream outgrows a comfortable shuffle even when the broadcast
-    // would still fit. The doc count is metadata-scale; the mass is
-    // NOT — it aggregates the salient-vector build — so it runs over
-    // the PINNED `vec` (r11, the r10 ADVICE item): the sizing action
-    // materializes the same checkpoint the query reuses, one corpus
-    // pass total instead of two. Both scalars are MEMOIZED per session
-    // ([[RelationStats]], the mass under the stable (docs, k) tag) so
-    // a bench loop pays them once, not per repetition; pass an
-    // explicit buildShards to keep declaration action-free.
-    // Calibration: TFIDF_SHARD_r11.json records mass and per-shard-
-    // count timings at sf0.1 — the defaults keep this corpus single-
-    // broadcast (mass ≪ bound) and engage the mass rule only where one
-    // pass's pair stream reaches shuffle-spill scale (~2·10⁹ rows ≈
-    // 50 GB of (d1, d2, w) triples).
+    // buildShards = 0 auto-sizes from the doc count alone: shards =
+    // ceil(docs / maxBroadcastDocs), the broadcast-memory bound (the
+    // vectors of one shard must fit one broadcast). That broadcast is
+    // the one thing the shard count changes: the shards' joined rows
+    // union into ONE (d1, d2) aggregation below, so the pair stream and
+    // its shuffle are the same at any shard count (a 3x tagged replica
+    // of sf0.1, 15k docs and 1.55 M output pairs, ran 51.2 s at 1
+    // shard, 56.7 s at 2 and 53.0 s at 5, medians of 5 rounds on
+    // local[4]). The count is memoized per session ([[RelationStats]]),
+    // so a bench loop pays it once; pass an explicit buildShards to
+    // keep declaration action-free.
     val shards =
       if (buildShards >= 1) buildShards
-      else math.max(
-        autoBuildShards(RelationStats.memoCount(docs), maxBroadcastDocs),
-        autoBuildShards(tfidfCandidateMass(docs, k, vec), maxPairsPerShard))
+      else autoBuildShards(RelationStats.memoCount(docs), maxBroadcastDocs)
     // every candidate pair (d1, d2) lands in exactly ONE shard (the
     // shard is a function of d2 alone), so the shard branches' joined
     // outputs union into a SINGLE dot aggregation — one exchange for
@@ -730,21 +689,21 @@ object TextOps {
     * the auto-sited prune actually ENGAGED (a corpus whose p99 lands
     * on the postings max runs with an empty hot set, and a zero-loss
     * hash match there proves only the capped plan, not the prune). */
-  def autoHotTokens(docs: DataFrame, k: Int = 10): DataFrame = {
-    val vec = salientVectors(docs, k)
+  def autoHotTokens(docs: DataFrame): DataFrame = {
+    val vec = salientVectors(docs, SalientK)
     val counts = vec.groupBy("token").agg(count(lit(1)).as("pc"))
     salientPostingsSplit(counts, 0L)._2
   }
 
-  def tfidfCosinePairsCapped(docs: DataFrame, k: Int = 10,
-                             thresholdHundredths: Int = 60,
+  def tfidfCosinePairsCapped(docs: DataFrame,
                              maxPostings: Long = 0L,
                              buildShards: Int = 1): DataFrame = {
     require(maxPostings >= 0,
       s"maxPostings must be >= 1, or 0 = auto (salient-postings p99): " +
         s"$maxPostings")
     require(buildShards >= 1, s"buildShards must be >= 1: $buildShards")
-    val vec = salientVectors(docs, k).localCheckpoint(eager = false)
+    val threshold = 0.6
+    val vec = salientVectors(docs, SalientK).localCheckpoint(eager = false)
     val spread = vec.repartition(
       docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
     // tokens under/over the ceiling, counted in SALIENT space
@@ -814,7 +773,7 @@ object TextOps {
           sqrt(coalesce(col("h1"), lit(0L)).cast("double")) *
             sqrt(coalesce(col("h2"), lit(0L)).cast("double"))) /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))) >=
-        thresholdHundredths / 100.0 - 1e-9)
+        threshold - 1e-9)
     // (pre feeds both the hot-completion join and the final assembly;
     // the shared dot_rare exchange is REUSED by Spark's ReuseExchange
     // rule, so no pin: a localCheckpoint here measured SLOWER — it
@@ -830,7 +789,7 @@ object TextOps {
       .withColumn("cos",
         (col("dot_rare") + coalesce(col("dot_hot"), lit(0L))).cast("double") /
           (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-      .filter(col("cos") >= thresholdHundredths / 100.0)
+      .filter(col("cos") >= threshold)
       .select(col("d1"), col("d2"), col("cos"))
   }
 
@@ -988,7 +947,7 @@ object TextOps {
     * over training grams is a map-side semi-join — no shuffle of the
     * corpus side at all until the tiny per-doc count aggregation.
     */
-  def contaminationHits(docs: DataFrame, n: Int = 5): DataFrame = {
+  def contaminationHits(docs: DataFrame): DataFrame = {
     val nib = substring(md5(col("doc_id").cast("string").cast("binary")), 1, 1)
     // per-doc distinct grams: the (doc_id, gram) aggregation is
     // exchange-free because gramRows' repartition(doc_id) already
@@ -1003,7 +962,7 @@ object TextOps {
     // under no-collision, the same budget the md5/fnv idioms spend),
     // so the checkpointed relation is (long, long) + one nibble and
     // the eval broadcast shrinks ~10×
-    val grams = gramRows(docs, Seq(n))
+    val grams = gramRows(docs, Seq(5))
       .select(col("doc_id"), xxhash64(col("gram")).as("gh")).distinct()
       .withColumn("h", nib)
       .localCheckpoint(eager = false)
@@ -1209,7 +1168,7 @@ object TextOps {
     * mechanics is the passage key, packed as doc_id·10⁵ + chunk so
     * the shared single-column pipeline applies and unpacked in the
     * output (valid while chunks/doc < 10⁵ — ~3 M tokens per doc at
-    * the default stride; a corpus past that packs into a wider long
+    * the 24-token stride; a corpus past that packs into a wider long
     * or a struct key). The validity bound is ENFORCED row-locally
     * (r17, the r16 ADVICE item): a doc with ≥10⁵ chunks or a doc_id
     * outside [0, ⌊Long.Max/10⁵⌋) would silently collide passages
@@ -1218,8 +1177,7 @@ object TextOps {
     * every in-domain row. Top-k per query via the same
     * WindowGroupLimit map-side prune. */
   def bm25Passages(docs: DataFrame, queries: Seq[(String, Seq[String])],
-                   k: Int, sizeToks: Int = 32,
-                   strideToks: Int = 24): DataFrame = {
+                   k: Int): DataFrame = {
     val maxDocId = Long.MaxValue / 100000L // 9.2e13: pack can't overflow
     val packed = when(
       col("chunk") < 100000L && col("doc_id").between(0L, maxDocId - 1),
@@ -1230,7 +1188,7 @@ object TextOps {
         col("chunk").cast("string"),
         lit(s" (need chunk < 100000 and 0 <= doc_id < $maxDocId — use a" +
           " struct key past that)"))))
-    val passages = chunkDocs(docs, sizeToks, strideToks)
+    val passages = chunkDocs(docs, 32, 24)
       .select(packed.as("doc_id"), col("chunk_text").as("text"))
     bm25TopK(passages, queries, k)
       .select(col("query_id"),
@@ -1261,7 +1219,7 @@ object TextOps {
     * unchanged).
     *
     * Engine-exact fusion: each arm's contribution is
-    * floor(10⁶/(rrfK + rank)) — one correctly-rounded double division
+    * floor(10⁶/(60 + rank)) — one correctly-rounded double division
     * then floor, summed as BIGINTs — so the fused score is
     * cross-engine bit-exact and tie-breaks (score desc, doc_id) are
     * total. Output carries both arm ranks (NULL where an arm did not
@@ -1309,22 +1267,21 @@ object TextOps {
   }
 
   def hybridRrfTopK(docs: DataFrame, emb: DataFrame, numQueries: Int,
-                    kArm: Int, k: Int, rrfK: Int = 60): DataFrame =
+                    kArm: Int, k: Int): DataFrame =
     rrfFuse(
       lexicalDocAsQueryTopK(docs, numQueries, kArm),
       Similarity.knnBruteForce(emb, numQueries, kArm)
         .select(col("qid"), col("vec_id").as("doc_id"),
           col("rn").cast("long").as("den_rnk")),
-      k, rrfK)
+      k)
 
   /** The RRF fusion shared by the scan-tier and index-served hybrids:
     * full-outer on (qid, doc_id) over the two rank lists — ≤ 2·kArm
     * rows per query, corpus-size-independent — summing integer
-    * floor(10⁶/(rrfK + rank)) contributions. */
-  private def rrfFuse(lex: DataFrame, den: DataFrame, k: Int,
-                      rrfK: Int): DataFrame = {
+    * floor(10⁶/(60 + rank)) contributions (the RRF paper's k = 60). */
+  private def rrfFuse(lex: DataFrame, den: DataFrame, k: Int): DataFrame = {
     def rrfMicro(rank: org.apache.spark.sql.Column) =
-      coalesce(floor(lit(1000000.0) / (lit(rrfK) + rank)).cast("long"),
+      coalesce(floor(lit(1000000.0) / (lit(60) + rank)).cast("long"),
         lit(0L))
     val wf = Window.partitionBy("query_id")
       .orderBy(col("rrf_micro").desc, col("doc_id"))
@@ -1545,15 +1502,14 @@ object TextOps {
     * thing an index can't hold. */
   def hybridRrfTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       queries: DataFrame, lexIndexPath: String, pqIndexPath: String,
-      numQueries: Int, kArm: Int, k: Int, rrfK: Int = 60,
-      m: Int = 8, probes: Int = 1): DataFrame =
+      numQueries: Int, kArm: Int, k: Int, m: Int = 8): DataFrame =
     rrfFuse(
       bm25DocAsQueryFromIndex(spark, lexIndexPath, numQueries, kArm),
       Similarity.annIvfPqFromIndex(spark, queries, pqIndexPath,
-          k = kArm, probes = probes, m = m)
+          k = kArm, m = m)
         .select(col("qid"), col("vec_id").as("doc_id"),
           col("rn").cast("long").as("den_rnk")),
-      k, rrfK)
+      k)
 
   /** Measured RECALL@k of the hybrid tier and BOTH its arms against
     * exact-cosine ground truth — the quality audit every approximate
@@ -1870,10 +1826,11 @@ object TextOps {
 
   /** Winnowing-style rolling-hash fingerprint on the engine's native
     * fnv64 expression (codegen'd — graft.GraftExtensions must be on the
-    * session): hash every k-token shingle, keep the minimum plus the
+    * session): hash every 3-token shingle, keep the minimum plus the
     * shingle count. The min-of-rolling-hashes survives edits outside one
     * window — the classic plagiarism/near-dup fingerprint. */
-  def rollingFingerprints(docs: DataFrame, k: Int = 3): DataFrame = {
+  def rollingFingerprints(docs: DataFrame): DataFrame = {
+    val k = 3
     val tokens = split(col("text"), " ")
     val shingles = transform(
       sequence(lit(1), greatest(size(tokens) - (k - 1), lit(1))),
@@ -1899,6 +1856,11 @@ object TextOps {
       Bridge.expression(grams40), w)))
   }
 
+  /** Character-gram length `k` of [[winnowFingerprints]]. */
+  val WinnowK = 12
+  /** Window `w` of [[winnowFingerprints]], in grams. */
+  val WinnowW = 8
+
   /** Full winnowing fingerprint set (Schleimer/Wilkerson/Aiken,
     * SIGMOD'03): character-`k`-gram FNV hashes in POSITION ORDER (no
     * distinct — winnowing is positional), then the minimum of every
@@ -1919,8 +1881,7 @@ object TextOps {
     * Pure row-local projection + explode — shuffle-free at any corpus
     * size; the downstream postings join (who shares a fingerprint) is
     * where the first exchange would appear. */
-  def winnowFingerprints(docs: DataFrame, k: Int = 12,
-                         w: Int = 8): DataFrame =
+  def winnowFingerprints(docs: DataFrame): DataFrame =
     docs
       // spread the single-split docs scan before the per-char gram hash
       // + winnow kernel (explicit count — AQE would coalesce on bytes
@@ -1928,10 +1889,10 @@ object TextOps {
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_id"))
       .select(col("doc_id"),
-        explode(winnowFpsColumn(col("text"), k, w)).as("fp"))
+        explode(winnowFpsColumn(col("text"), WinnowK, WinnowW)).as("fp"))
 
   /** MOSS-style overlap pairs over [[winnowFingerprints]]: documents
-    * sharing ≥ `minShared` fingerprints, with the shared count — the
+    * sharing ≥ 2 fingerprints, with the shared count — the
     * copy-detection join run on winnowed samples instead of full gram
     * postings (~2/(w+1) of the volume).
     *
@@ -1943,13 +1904,12 @@ object TextOps {
     * runs only on discriminative buckets. Every survivor bucket has
     * ≤ dfCap rows, bounding candidate fan-out per fingerprint at
     * dfCap², independent of corpus size. */
-  def winnowPairs(docs: DataFrame, k: Int = 12, w: Int = 8,
-                  minShared: Int = 2, dfCap: Int = 50): DataFrame = {
+  def winnowPairs(docs: DataFrame, dfCap: Int = 50): DataFrame = {
     // the fingerprint relation is consumed three times (df aggregation
     // + both self-join sides) and its subtree re-hashes every char of
     // the corpus per execution; materialize the skinny (doc, fp) rows
     // once
-    val fps = winnowFingerprints(docs, k, w).localCheckpoint(eager = false)
+    val fps = winnowFingerprints(docs).localCheckpoint(eager = false)
     val rare = fps.join(
       fps.groupBy("fp").agg(count(lit(1)).as("df"))
         .filter(col("df") <= dfCap).select("fp"),
@@ -1964,7 +1924,7 @@ object TextOps {
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .groupBy("d1", "d2").agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= minShared)
+      .filter(col("shared_fps") >= 2)
   }
 
   /** Content-defined chunking + chunk-level dedup report — the
@@ -2344,8 +2304,8 @@ object TextOps {
     * only smear counts), so this op pays string keys for exactness.
     * Everything is equi-join + hash aggregation, linear in gram
     * volume. */
-  def docNovelty(docs: DataFrame, n: Int = 3): DataFrame = {
-    val perDoc = gramRows(docs, Seq(n))
+  def docNovelty(docs: DataFrame): DataFrame = {
+    val perDoc = gramRows(docs, Seq(3))
       .groupBy("gram", "doc_id").agg(count(lit(1)).as("c"))
       .localCheckpoint(eager = false)
     // A gram contributes to unique_grams iff its df is 1 — and a df-1

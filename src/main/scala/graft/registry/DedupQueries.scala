@@ -116,8 +116,7 @@ private[graft] object DedupQueries {
       // (bag-equal members share their rep's component, so contracted
       // edges are identical; Dedup.bagClassReps scaladoc) and the
       // measured lever against self-similar candidate mass
-      Dedup.saveLshBandIndex(Dedup.bagClassReps(corpus), p,
-        numHashes = 32, bands = 8)
+      Dedup.saveLshBandIndex(Dedup.bagClassReps(corpus), p, bands = 8)
     }
 
   /** Standing assignment over the id-lower 90% for the banded row —
@@ -299,7 +298,8 @@ private[graft] object DedupQueries {
     * ids `tid` ([[Dedup.minhashParams]], [[Dedup.MinhashPrime]]), its
     * 4×8 banding test and its agreeing-hash count between signature
     * rows `l` and `r`. */
-  private val SqlSigMins: String = Dedup.minhashParams(32).map { case (a, b) =>
+  private val SqlSigMins: String =
+    Dedup.minhashParams(Dedup.NumHashes).map { case (a, b) =>
     s"min((tid * $a + $b) % ${Dedup.MinhashPrime})" }.mkString("[", ", ", "]")
   private def sqlBandEq(l: String, r: String): String = (0 until 4).map { b =>
     val lo = b * 8 + 1; val hi = b * 8 + 8
@@ -649,7 +649,7 @@ private[graft] object DedupQueries {
     // similarity corpus wider bands would admit ~30% of ALL pairs as
     // candidates, which is the LSH failure mode at scale.
     QuerySpec("dedup_minhash_lsh", (s, dir) =>
-      Dedup.minhashLshPairs(Tables.documents(s, dir), numHashes = 32,
+      Dedup.minhashLshPairs(Tables.documents(s, dir),
         bands = 4).orderBy("d1", "d2"),
       oracle = {
       // generated with the same seeded affine-family constants as
@@ -677,8 +677,7 @@ private[graft] object DedupQueries {
     // Runs on the mod-4 systematic sample (the exact truth pass is
     // the audit's whole cost; pair mass scales 1/mod²).
     QuerySpec("dedup_recall_lsh", (s, dir) =>
-      Dedup.lshRecallAudit(Tables.documents(s, dir), numHashes = 32,
-        bands = 4, minTenths = 8).orderBy("band"),
+      Dedup.lshRecallAudit(Tables.documents(s, dir)).orderBy("band"),
       oracle = {
       // truth = the dedup_jaccard_pairs CTEs at t=8 WITHOUT the lang
       // block (the sketch bands corpus-wide, so its audit truth is
@@ -709,8 +708,7 @@ private[graft] object DedupQueries {
     // lower estimator variance → the curve should sit at or above the
     // word tier's reading.
     QuerySpec("dedup_recall_shingle", (s, dir) =>
-      Dedup.shingleRecallAudit(Tables.documents(s, dir), n = 12,
-        numHashes = 32, bands = 4, minTenths = 8).orderBy("band"),
+      Dedup.shingleRecallAudit(Tables.documents(s, dir)).orderBy("band"),
       oracle = {
       // truth = the dedup_ngram_jaccard CTEs at t=8 without the lang
       // block (corpus-wide, matching the sketch); candidates = the
@@ -746,8 +744,7 @@ private[graft] object DedupQueries {
     // band vs the exact J >= 0.8 truth — the measured cost of the
     // banding knobs (a near-zero band is pure wasted verify work).
     QuerySpec("dedup_precision_lsh", (s, dir) =>
-      Dedup.lshPrecisionAudit(Tables.documents(s, dir), numHashes = 32,
-        bands = 4, minTenths = 8).orderBy("est_band"),
+      Dedup.lshPrecisionAudit(Tables.documents(s, dir)).orderBy("est_band"),
       oracle = {
       // candidates with their estimated-J band (integer-exact:
       // floor(10·k/32) — 10k/32 is a binary fraction) vs the exact
@@ -816,8 +813,7 @@ private[graft] object DedupQueries {
     // Shingle-based MinHash LSH: sketch over character 12-grams — the
     // tokenization-robust sibling of dedup_minhash_lsh.
     QuerySpec("dedup_minhash_shingle", (s, dir) =>
-      Dedup.minhashShingleLshPairs(Tables.documents(s, dir), n = 12,
-        numHashes = 32, bands = 4).orderBy("d1", "d2"),
+      Dedup.minhashShingleLshPairs(Tables.documents(s, dir)).orderBy("d1", "d2"),
       oracle = {
       // same seeded affine family as the Spark sketch, over FNV window
       // hashes masked to 40 bits (fold reproduced in HUGEINT mod 2^64;
@@ -1170,8 +1166,7 @@ private[graft] object DedupQueries {
     QuerySpec("dedup_incremental_indexed", (s, dir) => {
       val (batch, _) = halvesByMaxId(Tables.embeddings(s, dir), "vec_id")
       Similarity.dedupIncrementalFromIndex(s, batch,
-          pqHalfIndexFor(s, dir), maxAdist = IncIndexedMaxAdist,
-          probes = 1, m = PqM)
+          pqHalfIndexFor(s, dir), maxAdist = IncIndexedMaxAdist, m = PqM)
         .orderBy("vec_id")
     },
       // Index-served incremental dedup: the ann_ivf_pq training chain

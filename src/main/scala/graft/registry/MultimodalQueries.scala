@@ -20,7 +20,7 @@ private[graft] object MultimodalQueries {
     persisted(dir + "#media_ivf") { p =>
       Multimodal.saveMediaIvfIndex(s,
         Multimodal.fromDocuments(Tables.documents(s, dir)), p,
-        kPerKind = MediaIvfK, rounds = 1)
+        kPerKind = MediaIvfK)
     }
 
   /** Media dedup thresholds (query + oracle, the [[IncContainTenths]]
@@ -403,8 +403,7 @@ private[graft] object MultimodalQueries {
     QuerySpec("media_ann_ivf", (s, dir) =>
       Multimodal.mediaAnnIvf(s,
         Multimodal.fromDocuments(Tables.documents(s, dir)),
-        numQueries = MediaKnnQ, k = MediaKnnK, kPerKind = MediaIvfK,
-        rounds = 1, probes = 1)
+        numQueries = MediaKnnQ, k = MediaKnnK, kPerKind = MediaIvfK, probes = 1)
         .orderBy("qid", "rn"),
       oracle = sqlMediaAnnIvf(p = 1)),
     // Media IVF served FROM the persisted index (r18, the r17 verdict
@@ -425,8 +424,7 @@ private[graft] object MultimodalQueries {
     QuerySpec("media_ann_ivf_probe2", (s, dir) =>
       Multimodal.mediaAnnIvf(s,
         Multimodal.fromDocuments(Tables.documents(s, dir)),
-        numQueries = MediaKnnQ, k = MediaKnnK, kPerKind = MediaIvfK,
-        rounds = 1, probes = 2)
+        numQueries = MediaKnnQ, k = MediaKnnK, kPerKind = MediaIvfK, probes = 2)
         .orderBy("qid", "rn"),
       oracle = sqlMediaAnnIvf(p = 2)),
     // Measured recall@k of the media IVF tier vs the brute kind-blocked
@@ -436,7 +434,7 @@ private[graft] object MultimodalQueries {
       Multimodal.mediaRecallAudit(s,
         Multimodal.fromDocuments(Tables.documents(s, dir)),
         numQueries = MediaKnnQ, k = MediaKnnK, kPerKind = MediaIvfK,
-        rounds = 1, probesList = Seq(1, 2))
+        probesList = Seq(1, 2))
         .orderBy("qid", "probes"),
       oracle = sqlMediaRecallIvf),
     // Media capstone: per-kind funnel total → exact (md5, kind-blocked)

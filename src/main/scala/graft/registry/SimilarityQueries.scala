@@ -494,7 +494,7 @@ private[graft] object SimilarityQueries {
     // first PCA direction: 3 declarative power-iteration rounds on the
     // Gram matrix, integer matvec + truncating-div L∞ rescale.
     QuerySpec("gram_power_iteration", (s, dir) =>
-      Similarity.gramPowerIteration(Tables.embeddings(s, dir), rounds = 3),
+      Similarity.gramPowerIteration(Tables.embeddings(s, dir)),
       oracle =
       """WITH q AS (
         |  SELECT vec_id, CAST(s.k AS BIGINT) AS d,
@@ -856,7 +856,7 @@ private[graft] object SimilarityQueries {
     // knob's recall gain as an in-engine number, not a narrative).
     QuerySpec("ann_recall_ivf", (s, dir) =>
       Similarity.annRecallAudit(s, Tables.embeddings(s, dir),
-        numQueries = 5, k = 5, probesList = Seq(1, 2), cells = IvfCells,
+        numQueries = 5, k = 5, cells = IvfCells,
         cellRounds = IvfCellRounds)
         .orderBy("qid", "probes"),
       oracle = sqlAnnRecall),
@@ -871,7 +871,7 @@ private[graft] object SimilarityQueries {
       Similarity.annRecallQuantized(s, Tables.embeddings(s, dir),
         numQueries = 5, k = 5, pqM = PqM, pqCw = PqCw, rpqM = RpqM,
         rpqCw = RpqGroups, rounds = PqRounds, prefilter = SrpPrefilter,
-        bits = SrpBits, probes = 2, cells = IvfCells,
+        bits = SrpBits, cells = IvfCells,
         cellRounds = IvfCellRounds, rerankPrefilter = PqRerankPrefilter)
         .orderBy("tier", "qid"),
       oracle = sqlAnnRecallQuantized),
@@ -879,7 +879,7 @@ private[graft] object SimilarityQueries {
     // DIFFERENT-label vectors per anchor, via foreign-cell IVF probing.
     QuerySpec("hard_negatives", (s, dir) =>
       Similarity.hardNegatives(s, Tables.embeddings(s, dir),
-        numQueries = 5, k = 5, probes = 2)
+        numQueries = 5, k = 5)
         .select(col("qid"), col("qlabel").cast("long").as("qlabel"),
           col("neg_label").cast("long").as("neg_label"), col("vec_id"),
           col("cos"), col("rn").cast("long").as("rn"))

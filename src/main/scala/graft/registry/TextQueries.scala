@@ -73,9 +73,9 @@ private[graft] object TextQueries {
   /** `tfidf_cosine_sharded`'s operator call, shared with the scale
     * smoke so both time the plan the registry declares. */
   private[graft] def tfidfCosineSharded(docs: DataFrame): DataFrame =
-    TextOps.tfidfCosinePairs(docs, k = 10,
+    TextOps.tfidfCosinePairs(docs,
       thresholdHundredths = 60, buildShards = 0,
-      maxBroadcastDocs = 10000000L, maxPairsPerShard = 2000000000L)
+      maxBroadcastDocs = 10000000L)
 
   /** `shard_balance` output shard count (query + oracle). */
   private val ShardBalanceN = 8
@@ -549,7 +549,7 @@ private[graft] object TextQueries {
     // integer-quantized BEFORE the normalizing sum, so the whole chain
     // is order-free integer math the oracle replays exactly.
     QuerySpec("mix_temperature", (s, dir) =>
-      TextOps.mixTemperature(Tables.documents(s, dir), budgetPct = 50)
+      TextOps.mixTemperature(Tables.documents(s, dir))
         .orderBy("lang"),
       oracle =
       """WITH t AS (
@@ -1066,7 +1066,7 @@ private[graft] object TextQueries {
     // positional char-12-gram hashes via the native O(G) deque kernel;
     // any shared substring of length ≥ 19 must surface a shared fp.
     QuerySpec("doc_winnow", (s, dir) =>
-      TextOps.winnowFingerprints(Tables.documents(s, dir), k = 12, w = 8)
+      TextOps.winnowFingerprints(Tables.documents(s, dir))
         .orderBy("doc_id", "fp"),
       oracle = {
       // same char-12-gram FNV → 40-bit ids as the minhash-shingle oracle;
@@ -1089,8 +1089,7 @@ private[graft] object TextQueries {
     // MOSS-style copy-detection pairs on the winnowed samples: shared
     // discriminative (df ≤ 50) fingerprints, ≥ 2 to pair.
     QuerySpec("dedup_winnow_pairs", (s, dir) =>
-      TextOps.winnowPairs(Tables.documents(s, dir), k = 12, w = 8,
-        minShared = 2, dfCap = 50)
+      TextOps.winnowPairs(Tables.documents(s, dir), dfCap = 50)
         .orderBy("d1", "d2"),
       oracle = {
       val winFnv40 =
@@ -1118,30 +1117,26 @@ private[graft] object TextQueries {
     // sparse tf·idf cosine ≥ 0.6 over top-10 salient-term integer
     // vectors — the embedding-free text-similarity tier.
     QuerySpec("tfidf_cosine_pairs", (s, dir) =>
-      TextOps.tfidfCosinePairs(Tables.documents(s, dir), k = 10,
+      TextOps.tfidfCosinePairs(Tables.documents(s, dir),
         thresholdHundredths = 60)
         .orderBy("d1", "d2"),
       oracle = TfidfCosineSql),
     // The SHARDED-build continuation of the same operator, declared
     // through the AUTO-SIZING rule (r19, the r18 verdict #6 — was a
-    // pinned buildShards = 4): shards = max(ceil(docs / maxBroadcastDocs),
-    // ceil(measured candidate mass / maxPairsPerShard)), both scalars
-    // memoized per session. The fixture corpus (5k docs, mass 8.6e7)
-    // merits the single-broadcast plan, and the pinned 4 paid three
-    // extra broadcast-build jobs + probe streams for nothing (same-
-    // session bench: 3.54 s pinned-4 vs 2.67 s single; TFIDF_SHARD
-    // probes measure shard count itself a wash in-JVM); a >10⁷-doc or
-    // mass-heavy corpus (×10 replicas → mass 8.6e9 → 5 shards) engages
-    // disjoint doc_id-hash shards from the SAME declaration. The
-    // budgets are spelled out here so the declaration documents the
-    // rule it runs. Multi-shard ≡ single-broadcast stays CI-pinned:
-    // PipelineOpsSpec proves sharded-vs-single equality and forced-
-    // small-budget engagement, PlanAuditSpec audits the 4-shard plan
-    // shape at the operator altitude, and the shared uncapped oracle
-    // re-proves the auto rule's output each round. Declaring it runs
-    // the (docs, k) sizing jobs once per session (PlanAuditSpec's
-    // declaration census lists it); Bench's min-of-k drops that first
-    // repetition.
+    // pinned buildShards = 4): shards = ceil(docs / maxBroadcastDocs),
+    // the doc count memoized per session. Shards bound the per-shard
+    // broadcast, not time: their joined rows union into ONE (d1, d2)
+    // aggregation (see TextOps.tfidfCosinePairs). The fixture corpus
+    // (5k docs) merits the single-broadcast plan; a >10⁷-doc corpus
+    // engages disjoint doc_id-hash shards from the SAME declaration. The budget is spelled out here so the
+    // declaration documents the rule it runs. Multi-shard ≡ single-
+    // broadcast stays CI-pinned: PipelineOpsSpec proves sharded-vs-
+    // single equality and forced-small-budget engagement, PlanAuditSpec
+    // audits the 4-shard plan shape at the operator altitude, and the
+    // shared uncapped oracle re-proves the auto rule's output each
+    // round. Declaring it runs the doc-count job once per session
+    // (PlanAuditSpec's declaration census lists it); Bench's min-of-k
+    // drops that first repetition.
     QuerySpec("tfidf_cosine_sharded", (s, dir) =>
       tfidfCosineSharded(Tables.documents(s, dir)).orderBy("d1", "d2"),
       // sharded build plan, identical semantics — same oracle text
@@ -1154,8 +1149,8 @@ private[graft] object TextQueries {
     // (drops the 7 hottest-term-only pairs of 2081), not an
     // accidental equality with the uncapped tier.
     QuerySpec("tfidf_cosine_capped", (s, dir) =>
-      TextOps.tfidfCosinePairsCapped(Tables.documents(s, dir), k = 10,
-        thresholdHundredths = 60, maxPostings = TfidfDfCeiling)
+      TextOps.tfidfCosinePairsCapped(Tables.documents(s, dir),
+        maxPostings = TfidfDfCeiling)
         .orderBy("d1", "d2"),
       oracle = TfidfCosineCappedSql),
     // The AUTO-SITED capped tier (r14): maxPostings = 0 derives the
@@ -1165,8 +1160,7 @@ private[graft] object TextQueries {
     // truth pair is hot-only, so the hash match IS the zero-loss-at-
     // the-auto-ceiling proof (the tfidf_cosine_sharded rule).
     QuerySpec("tfidf_cosine_capped_auto", (s, dir) =>
-      TextOps.tfidfCosinePairsCapped(Tables.documents(s, dir), k = 10,
-        thresholdHundredths = 60)
+      TextOps.tfidfCosinePairsCapped(Tables.documents(s, dir))
         .orderBy("d1", "d2"),
       // the auto-sited ceiling (salient-postings p99) drops NO pair at
       // the verify SF — the uncapped oracle is the zero-loss proof
@@ -1183,8 +1177,7 @@ private[graft] object TextQueries {
     // the engaged prune. PipelineOpsSpec pins hot-set non-emptiness.
     QuerySpec("tfidf_cosine_capped_auto_hot", (s, dir) =>
       TextOps.tfidfCosinePairsCapped(
-        TextOps.withRunawayFixture(Tables.documents(s, dir)), k = 10,
-        thresholdHundredths = 60)
+        TextOps.withRunawayFixture(Tables.documents(s, dir)))
         .orderBy("d1", "d2"),
       oracle = TfidfCosineAutoHotSql),
     // GPT-style concat-and-chunk packing per language stream: 4096-token
@@ -1245,7 +1238,7 @@ private[graft] object TextQueries {
     // GPT-3-style decontamination: train-split docs sharing a distinct
     // 5-gram with the eval (test) split; eval gram set broadcasts.
     QuerySpec("contamination_hits", (s, dir) =>
-      TextOps.contaminationHits(Tables.documents(s, dir), n = 5)
+      TextOps.contaminationHits(Tables.documents(s, dir))
         .orderBy("doc_id"),
       oracle =
       """WITH t AS (SELECT doc_id,
@@ -1279,7 +1272,7 @@ private[graft] object TextQueries {
     // Per-doc trigram novelty: ppm of gram occurrences no other doc
     // carries — low marks boilerplate/template mass.
     QuerySpec("doc_novelty", (s, dir) =>
-      TextOps.docNovelty(Tables.documents(s, dir), n = 3)
+      TextOps.docNovelty(Tables.documents(s, dir))
         .orderBy("doc_id"),
       oracle =
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
@@ -1391,7 +1384,7 @@ private[graft] object TextQueries {
     // granularity. Same query set as bm25_topk, k=10, 32/24 chunking.
     QuerySpec("bm25_passages", (s, dir) =>
       TextOps.bm25Passages(Tables.documents(s, dir), Bm25Queries,
-          k = PassageK, sizeToks = 32, strideToks = 24)
+          k = PassageK)
         .orderBy("query_id", "rnk"),
       // the chunk CTE replays doc_chunks' integer arithmetic at 32/24,
       // then the bm25_topk scoring replays over passages under the
@@ -1904,7 +1897,7 @@ private[graft] object TextQueries {
     QuerySpec("pipeline_curate_v2", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val gated = TextOps.qualityGate(docs).select("doc_id")
-      val contaminated = TextOps.contaminationHits(docs, n = 5)
+      val contaminated = TextOps.contaminationHits(docs)
         .select("doc_id")
       val clean = docs.join(gated, "doc_id")
         .join(contaminated, Seq("doc_id"), "left_anti")

@@ -112,12 +112,11 @@ object VecStream {
     * caller-owned lifecycle ([[DocStream.fuzzyIngestStream]]'s
     * rule). */
   def pqEncodeStream(vecs: DataFrame, corpus: DataFrame, m: Int = 8,
-                     dim: Int = 64, scale: Int = 1000, cw: Int = 64,
+                     dim: Int = 64, cw: Int = 64,
                      rounds: Int = 2): DataFrame = {
     val sub = dim / m
     val pack = graft.functions.PqArgMinCode.Pack
-    val book = Similarity.pqCodebookTrained(corpus, m, cw, rounds, dim,
-      scale)
+    val book = Similarity.pqCodebookTrained(corpus, m, cw, rounds, dim)
     // books[s + 1] = subspace s's codeword list: every subspace holds
     // ≥ 1 codeword (a vector always assigns somewhere, so the
     // empty-cluster drop can never empty a whole subspace), so the
@@ -134,7 +133,7 @@ object VecStream {
       .withColumn("one", lit(1))
       .join(broadcast(packed), "one")
       .withColumn("q", transform(col("embedding"),
-        x => floor(x.cast("double") * scale).cast("long")))
+        x => floor(x.cast("double") * Similarity.Scale).cast("long")))
       .select(col("vec_id"), col("ts"), posexplode(expr(
         s"""transform(sequence(0, ${m - 1}), s -> pq_argmin(
            |  slice(q, s * $sub + 1, $sub), element_at(books, s + 1)))"""
@@ -193,7 +192,7 @@ object VecStream {
     * unpersist the superseded set when re-serving a new corpus
     * snapshot. */
   def adcServeStream(queries: DataFrame, corpus: DataFrame, m: Int = 8,
-                     dim: Int = 64, scale: Int = 1000, cw: Int = 64,
+                     dim: Int = 64, cw: Int = 64,
                      rounds: Int = 2, cells: Int = 10, cellRounds: Int = 2,
                      watermark: String = "1 hour"): DataFrame = {
     val spark = corpus.sparkSession
@@ -203,8 +202,7 @@ object VecStream {
         .as("cellbook"))
       .withColumn("one", lit(1))
       .persist()
-    val book = Similarity.pqCodebookTrained(corpus, m, cw, rounds, dim,
-      scale)
+    val book = Similarity.pqCodebookTrained(corpus, m, cw, rounds, dim)
     // corpus side: cell + the DECODED reconstruction v̂ (each code's
     // codeword slice, concatenated in subspace order). ADC algebra:
     // Σ_s ‖q_s − cs_s‖² = ‖q − v̂‖² because subspaces partition the
@@ -218,7 +216,7 @@ object VecStream {
     val corpusSide = Similarity.ivfAssignments(spark, corpus, cells,
         cellRounds)
       .select(col("vec_id").as("id_c"), col("cell").as("c_cell"))
-      .join(Similarity.pqCodes(spark, corpus, m, dim, scale, cw, rounds)
+      .join(Similarity.pqCodes(spark, corpus, m, dim, cw, rounds)
         .select(col("vec_id").as("id_c"), col("subspace"), col("code")),
         "id_c")
       .join(broadcast(book.select(col("subspace"),
@@ -235,7 +233,7 @@ object VecStream {
       .withColumn("one", lit(1))
       .join(broadcast(cellPacked), "one")
       .withColumn("q", transform(col("embedding"),
-        x => floor(x.cast("double") * scale).cast("long")))
+        x => floor(x.cast("double") * Similarity.Scale).cast("long")))
       // cell argmin via the SQL-registered native sqdist_l kernel (the
       // [[pqEncodeStream]] pq_argmin rule — lambda contexts can't bind
       // Column-API expressions, and the interpreted zip_with +

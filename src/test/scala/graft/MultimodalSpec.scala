@@ -224,7 +224,7 @@ class MultimodalSpec extends SparkSpec {
     // mediaKnn's zip_with formulation
     val media = Multimodal.fromDocuments(ivfDocs)
     val ivf = Multimodal.mediaAnnIvf(spark, media, numQueries = 6, k = 3,
-        kPerKind = 3, rounds = 1, probes = 3)
+        kPerKind = 3, probes = 3)
       .select("qid", "media_id", "cos", "rn").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .sortBy(t => (t._1, t._4))
@@ -240,7 +240,7 @@ class MultimodalSpec extends SparkSpec {
     val base = java.nio.file.Files
       .createTempDirectory("graft_media_ivf_spec_").toString
     Multimodal.saveMediaIvfIndex(spark, media, s"$base/full",
-      kPerKind = 3, rounds = 1)
+      kPerKind = 3)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "cluster", "media_id", "kind", "cos", "rn")
         .collect()
@@ -250,7 +250,7 @@ class MultimodalSpec extends SparkSpec {
     val served = Multimodal.mediaAnnIvfFromIndex(spark, media,
       s"$base/full", numQueries = 6, k = 3, probes = 2)
     val scan = Multimodal.mediaAnnIvf(spark, media, numQueries = 6,
-      k = 3, kPerKind = 3, rounds = 1, probes = 2)
+      k = 3, kPerKind = 3, probes = 2)
     // serve == scan BIT-IDENTICALLY (same centroids, same probe rank,
     // same polarization-identity cosine)
     assert(rows(served) === rows(scan))
@@ -269,7 +269,7 @@ class MultimodalSpec extends SparkSpec {
     val lower = media.filter(col("media_id") < 15)
     val upper = media.filter(col("media_id") >= 15)
     Multimodal.saveMediaIvfIndex(spark, lower, s"$base/half",
-      kPerKind = 3, rounds = 1)
+      kPerKind = 3)
     Multimodal.appendToMediaIvfIndex(spark, upper, s"$base/half")
     val servedAppended = Multimodal.mediaAnnIvfFromIndex(spark, media,
       s"$base/half", numQueries = 6, k = 3, probes = 3)
@@ -300,7 +300,7 @@ class MultimodalSpec extends SparkSpec {
   test("media recall audit reports full recall at full probing, bounded below it") {
     val media = Multimodal.fromDocuments(ivfDocs)
     val rows = Multimodal.mediaRecallAudit(spark, media, numQueries = 6,
-        k = 3, kPerKind = 3, rounds = 1, probesList = Seq(1, 3))
+        k = 3, kPerKind = 3, probesList = Seq(1, 3))
       .collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("probes")) ->
         r.getAs[Long]("recall_milli")).toMap

@@ -179,7 +179,7 @@ class PipelineOpsSpec extends SparkSpec {
       "uni") === crossJ)
     val base = java.nio.file.Files
       .createTempDirectory("graft_boundary_spec_").toString
-    Dedup.saveLshBandIndex(df(corpus), s"$base/lsh", numHashes = 32, bands = 8)
+    Dedup.saveLshBandIndex(df(corpus), s"$base/lsh", bands = 8)
     assert(quad(Dedup.jaccardPairsAgainstCorpusBanded(spark, df(batch),
       df(corpus), s"$base/lsh", 9), "uni") === crossJ)
 
@@ -265,7 +265,7 @@ class PipelineOpsSpec extends SparkSpec {
       (3L, "syntax parser compiler token lexer grammar ast codegen emit"),
       (4L, "completely other subject matter entirely different domain words")
     ).toDF("doc_id", "text")
-    val pairs = graft.operators.TextOps.tfidfCosinePairs(d, k = 10,
+    val pairs = graft.operators.TextOps.tfidfCosinePairs(d,
       thresholdHundredths = 60).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs.keySet === Set((1L, 2L)),
@@ -288,10 +288,9 @@ class PipelineOpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val uncapped = rows(TextOps.tfidfCosinePairs(d, k = 10,
+    val uncapped = rows(TextOps.tfidfCosinePairs(d,
       thresholdHundredths = 60))
-    val capped = rows(TextOps.tfidfCosinePairsCapped(d, k = 10,
-      thresholdHundredths = 60, maxPostings = 5L))
+    val capped = rows(TextOps.tfidfCosinePairsCapped(d, maxPostings = 5L))
     assert(uncapped.keySet === Set((1L, 2L), (3L, 4L)))
     // the ceiling excludes `hot` from GENERATION: the hot-only pair
     // drops, pairs reachable through sub-ceiling tokens survive
@@ -319,8 +318,7 @@ class PipelineOpsSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val capped = rows(TextOps.tfidfCosinePairsCapped(d, k = 10,
-      thresholdHundredths = 60, maxPostings = 8L))
+    val capped = rows(TextOps.tfidfCosinePairsCapped(d, maxPostings = 8L))
     // every adjacent pair shares a rare token and its true cosine is
     // ~0.999 (hot dominates both norms) — all 59 must survive
     val adjacent = (0 until 59).map(i => (i.toLong, i.toLong + 1)).toSet
@@ -328,7 +326,7 @@ class PipelineOpsSpec extends SparkSpec {
       "overflowed prune bound dropped correct pairs")
     // ...with cosines EXACT vs the uncapped truth (hot included in
     // completion; uncapped also pairs non-neighbors through hot itself)
-    val uncapped = rows(TextOps.tfidfCosinePairs(d, k = 10,
+    val uncapped = rows(TextOps.tfidfCosinePairs(d,
       thresholdHundredths = 60))
     adjacent.foreach(p => assert(capped(p) === uncapped(p)))
   }
@@ -351,10 +349,9 @@ class PipelineOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val uncapped = rows(TextOps.tfidfCosinePairs(d, k = 10,
+    val uncapped = rows(TextOps.tfidfCosinePairs(d,
       thresholdHundredths = 60))
-    val auto = rows(TextOps.tfidfCosinePairsCapped(d, k = 10,
-      thresholdHundredths = 60)) // maxPostings = 0 → p99 siting
+    val auto = rows(TextOps.tfidfCosinePairsCapped(d)) // maxPostings = 0 → p99 siting
     val chain =
       (0 until 99).map(i => (i.toLong, i.toLong + 1)).toSet + ((0L, 99L))
     assert(uncapped.keySet === chain + ((200L, 201L)))
@@ -375,10 +372,8 @@ class PipelineOpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val one = rows(TextOps.tfidfCosinePairsCapped(d, k = 10,
-      thresholdHundredths = 60, maxPostings = 5L))
-    val three = rows(TextOps.tfidfCosinePairsCapped(d, k = 10,
-      thresholdHundredths = 60, maxPostings = 5L, buildShards = 3))
+    val one = rows(TextOps.tfidfCosinePairsCapped(d, maxPostings = 5L))
+    val three = rows(TextOps.tfidfCosinePairsCapped(d, maxPostings = 5L, buildShards = 3))
     assert(one.nonEmpty)
     assert(three === one)
   }
@@ -401,10 +396,10 @@ class PipelineOpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val single = rows(TextOps.tfidfCosinePairs(d, k = 10,
+    val single = rows(TextOps.tfidfCosinePairs(d,
       thresholdHundredths = 60, buildShards = 1))
     // budget 2 docs over a 5-doc corpus → auto picks 3 build shards
-    val autoDf = TextOps.tfidfCosinePairs(d, k = 10,
+    val autoDf = TextOps.tfidfCosinePairs(d,
       thresholdHundredths = 60, buildShards = 0, maxBroadcastDocs = 2)
     // the sharded build is a union of per-shard dot relations — its
     // presence proves the auto path ENGAGED shards, not just sized them
@@ -629,14 +624,14 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("minhash LSH candidates include true near-dups, estimates bounded") {
-    val pairs = Dedup.minhashLshPairs(docs, numHashes = 32, bands = 8)
+    val pairs = Dedup.minhashLshPairs(docs, bands = 8)
     val m = pairs.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(m.contains((0L, 1L)) && m((0L, 1L)) === 1.0) // identical docs: all minhashes equal
     assert(m.keySet.contains((0L, 3L)))                 // near-dup surfaces as candidate
     assert(m.values.forall(j => j >= 0.0 && j <= 1.0))
     // non-divisible banding would silently drop signature rows
     assertThrows[IllegalArgumentException] {
-      Dedup.minhashLshPairs(docs, numHashes = 32, bands = 5)
+      Dedup.minhashLshPairs(docs, bands = 5)
     }
   }
 
@@ -652,8 +647,7 @@ class PipelineOpsSpec extends SparkSpec {
       .unionByName(docs.limit(1)
         .withColumn("doc_id", col("doc_id") + lit(200L))
         .withColumn("lang", lit("fr")))
-    val audit = Dedup.lshRecallAudit(dupy, numHashes = 32, bands = 4,
-      minTenths = 8, sampleMod = 1).collect()
+    val audit = Dedup.lshRecallAudit(dupy, sampleMod = 1).collect()
     val byBand = audit.map(r => r.getInt(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     // identical token bags share the full signature: recall is
@@ -930,7 +924,7 @@ class PipelineOpsSpec extends SparkSpec {
       Dedup.jaccardPairsAgainstCorpus(batch, corpus, thresholdTenths = 9,
         maxBroadcastRows = 1L)
     }
-    Dedup.saveLshBandIndex(corpus, s"$base/lsh", numHashes = 32,
+    Dedup.saveLshBandIndex(corpus, s"$base/lsh",
       bands = 8)
     val foldBanded = setOf(Dedup.jaccardComponentsIncrementalBanded(
       spark, loaded, corpus, batch, s"$base/lsh", thresholdTenths = 9))
@@ -946,8 +940,7 @@ class PipelineOpsSpec extends SparkSpec {
     val assignQ = Dedup.jaccardComponents(corpusQ, thresholdTenths = 9)
     val fullQ = setOf(Dedup.jaccardComponents(
       corpusQ.unionByName(batch), thresholdTenths = 9))
-    Dedup.saveLshBandIndex(Dedup.bagClassReps(corpusQ), s"$base/lshq",
-      numHashes = 32, bands = 8)
+    Dedup.saveLshBandIndex(Dedup.bagClassReps(corpusQ), s"$base/lshq", bands = 8)
     val foldQ = setOf(Dedup.jaccardComponentsIncrementalBanded(
       spark, assignQ, corpusQ, batch, s"$base/lshq", thresholdTenths = 9))
     assert(foldQ === fullQ,
@@ -973,7 +966,7 @@ class PipelineOpsSpec extends SparkSpec {
       (200L + i, s"$core y${i}a y${i}b")))
     val base = java.nio.file.Files
       .createTempDirectory("graft_hotband_").toString
-    Dedup.saveLshBandIndex(corpus, s"$base/lsh", numHashes = 32, bands = 8)
+    Dedup.saveLshBandIndex(corpus, s"$base/lsh", bands = 8)
     // premise: the fixture genuinely produces hot bands at cap=5
     val audit = Dedup.bandedHotBands(spark, batch, s"$base/lsh",
       maxBandPostings = 5L).collect()
@@ -1004,7 +997,7 @@ class PipelineOpsSpec extends SparkSpec {
     // a NORMAL corpus never trips the default cap: the audit is empty
     val normal = mk(Seq((0L, "a1 a2 a3 a4 a5"), (1L, "b1 b2 b3 b4 b5"),
       (2L, "c1 c2 c3 c4 c5")))
-    Dedup.saveLshBandIndex(normal, s"$base/lsh_n", numHashes = 32,
+    Dedup.saveLshBandIndex(normal, s"$base/lsh_n",
       bands = 8)
     assert(Dedup.bandedHotBands(spark, batch, s"$base/lsh_n",
       maxBandPostings = 100000L).isEmpty)
@@ -1030,9 +1023,9 @@ class PipelineOpsSpec extends SparkSpec {
       "stats-served and postings-derived prunes must serve identically")
     // an APPEND keeps stats sum-mergeable: appending half the corpus
     // again doubles every audited posting length
-    Dedup.saveLshBandIndex(corpus, s"$base/lsh_a", numHashes = 32,
+    Dedup.saveLshBandIndex(corpus, s"$base/lsh_a",
       bands = 8)
-    Dedup.appendToLshBandIndex(corpus, s"$base/lsh_a", numHashes = 32,
+    Dedup.appendToLshBandIndex(corpus, s"$base/lsh_a",
       bands = 8)
     val doubled = Dedup.bandedHotBands(spark, batch, s"$base/lsh_a",
         maxBandPostings = 5L).collect()
@@ -1211,8 +1204,7 @@ class PipelineOpsSpec extends SparkSpec {
     // day 0: cluster the lake, persist assignment + band index
     Dedup.saveComponentsAssign(
       Dedup.jaccardComponents(corpus, 9), s"$base/assign")
-    Dedup.saveLshBandIndex(Dedup.bagClassReps(corpus), s"$base/lsh",
-      numHashes = 32, bands = 8)
+    Dedup.saveLshBandIndex(Dedup.bagClassReps(corpus), s"$base/lsh", bands = 8)
     // day 1: fold via the BANDED tier, save the assignment back,
     // append the day's docs to the band index (plain append — reps
     // are an optimization; members only add duplicate candidates)
@@ -1220,7 +1212,7 @@ class PipelineOpsSpec extends SparkSpec {
       Dedup.loadComponentsAssign(spark, s"$base/assign"),
       corpus, day1, s"$base/lsh", thresholdTenths = 9)
     Dedup.saveComponentsAssign(fold1, s"$base/assign")
-    Dedup.appendToLshBandIndex(day1, s"$base/lsh", numHashes = 32,
+    Dedup.appendToLshBandIndex(day1, s"$base/lsh",
       bands = 8)
     val lake1 = corpus.unionByName(day1)
     assert(setOf(Dedup.loadComponentsAssign(spark, s"$base/assign"))
@@ -1441,7 +1433,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("ann recall audit: perfect recall on clustered data, more probes never hurt") {
     val out = Similarity.annRecallAudit(spark, ivfFixture, numQueries = 1,
-      k = 2, probesList = Seq(1, 2), cells = 2, cellRounds = 1)
+      k = 2, cells = 2, cellRounds = 1)
       .collect().map(r => r.getAs[Long]("probes") ->
         ((r.getAs[Long]("hits"), r.getAs[Long]("recall_milli")))).toMap
     // query 0's exact top-2 (vecs 2, 3) live in its own cell:
@@ -1623,7 +1615,7 @@ class PipelineOpsSpec extends SparkSpec {
     val emb = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(1.0f, 1.0f)))
       .toDF("vec_id", "embedding")
     val v3 = graft.operators.Similarity.gramPowerIteration(
-      emb, rounds = 3, dims = 2, scale = 10, vecScale = 1000L)
+      emb, dims = 2, scale = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(v3 === Seq((1L, 1000L), (2L, 618L)))
   }
@@ -1696,7 +1688,7 @@ class PipelineOpsSpec extends SparkSpec {
       (id, s.toLong) -> ((scored._2, scored._1))
     }).toMap
     val got = Similarity.pqResidualCodes(spark, e, m = m, groups = groups,
-        dim = 4, scale = scale, rounds = rounds, cells = cells,
+        dim = 4, rounds = rounds, cells = cells,
         cellRounds = cellRounds)
       .collect().map(row => (row.getAs[Long]("vec_id"),
         row.getAs[Long]("subspace")) ->
@@ -1827,7 +1819,7 @@ class PipelineOpsSpec extends SparkSpec {
       (trainIds(1), "totally fresh text nothing shared here", "en", "s0", 38L),
       (valId, shared, "en", "s0", 27L)                        // val: not scanned
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val hits = TextOps.contaminationHits(corpus, n = 5).collect()
+    val hits = TextOps.contaminationHits(corpus).collect()
     assert(hits.map(_.getAs[Long]("doc_id")).toSeq === Seq(trainIds(0)))
     assert(hits.head.getAs[Double]("hit_frac") === 1.0)
   }
@@ -2282,8 +2274,7 @@ class PipelineOpsSpec extends SparkSpec {
       (3L, v(1 -> 1.0), 2),             // orthogonal, label 2
       (4L, v(0 -> 0.95), 0)             // same label: must NEVER appear
     ).toDF("vec_id", "embedding", "label")
-    val out = Similarity.hardNegatives(spark, emb, numQueries = 1, k = 3,
-      probes = 2).collect()
+    val out = Similarity.hardNegatives(spark, emb, numQueries = 1, k = 3).collect()
     assert(out.nonEmpty)
     // no same-label vector ever mined as a negative
     assert(out.forall(r => r.getAs[Int]("neg_label") != r.getAs[Int]("qlabel")))
@@ -2301,7 +2292,7 @@ class PipelineOpsSpec extends SparkSpec {
       (1L, "a b c"), (2L, "a b c"), (3L, "x y z"),
       (4L, "a b c a b c")   // grams: abc, bca, cab, abc -> abc df>1
     ).toDF("doc_id", "text")
-    val out = TextOps.docNovelty(docs, n = 3).collect()
+    val out = TextOps.docNovelty(docs).collect()
       .map(r => r.getLong(0) -> (r.getAs[Long]("grams"),
         r.getAs[Long]("unique_grams"), r.getAs[Long]("novelty_ppm"))).toMap
     assert(out(1L) === ((1L, 0L, 0L)))          // shared with 2 and 4
@@ -2505,7 +2496,7 @@ class PipelineOpsSpec extends SparkSpec {
       (0 until 400).map(i => (i.toLong, "w " * 24 + "w", "en")) ++
       (0 until 4).map(i => (1000L + i, "w " * 24 + "w", "mi"))
     ).toDF("doc_id", "text", "lang")
-    val m = TextOps.mixTemperature(docs, budgetPct = 50)
+    val m = TextOps.mixTemperature(docs)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val (enToks, enPpm, _, enEp) = m("en")
@@ -2557,10 +2548,9 @@ class PipelineOpsSpec extends SparkSpec {
     assert(hot.contains("zhot"),
       s"the runaway token must be above the p99 ceiling, hot=${hot.toSeq}")
     // zero loss THROUGH the engaged prune: auto-capped == uncapped
-    val auto = TextOps.tfidfCosinePairsCapped(docs, k = 10,
-      thresholdHundredths = 60).select("d1", "d2").collect()
+    val auto = TextOps.tfidfCosinePairsCapped(docs).select("d1", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = TextOps.tfidfCosinePairs(docs, k = 10,
+    val uncapped = TextOps.tfidfCosinePairs(docs,
       thresholdHundredths = 60).select("d1", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto === uncapped && auto.nonEmpty,

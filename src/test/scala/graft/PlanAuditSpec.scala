@@ -68,14 +68,15 @@ class PlanAuditSpec extends SparkSpec {
     // fixture scale — candidate join + 2 norm probes, all broadcast);
     // the >10⁷-doc 4-shard SHAPE is audited at the operator altitude
     // (the salientVectors pattern), since the declared plan only
-    // engages shards past the broadcast/mass budgets by design.
+    // engages shards past the broadcast budget (maxBroadcastDocs) by
+    // design.
     val p = plan("tfidf_cosine_sharded")
     val bhj = "BroadcastHashJoin".r.findAllIn(p).length
     assert(bhj >= 3, s"expected >= 3 broadcast joins (candidates + 2 norms), got $bhj, plan:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"auto-sized build must not fall back to a shuffle join, plan:\n$p")
     val p4 = graft.operators.TextOps.tfidfCosinePairs(
-      Tables.documents(spark, dir), k = 10, thresholdHundredths = 60,
+      Tables.documents(spark, dir), thresholdHundredths = 60,
       buildShards = 4)
       .queryExecution.executedPlan.toString
     val bhj4 = "BroadcastHashJoin".r.findAllIn(p4).length
@@ -493,10 +494,9 @@ class PlanAuditSpec extends SparkSpec {
       "dedup_substring_spans" -> "a localCheckpoint pin (TextOps.substringSpans)",
       "dedup_spans_rewrite" -> "a localCheckpoint pin (TextOps.dedupSpansRewrite)",
       "cdc_chunks" -> "a localCheckpoint pin (TextOps.cdcChunks)",
-      "doc_top_terms" -> "a count (TextOps.topTerms)",
       "dedup_winnow_pairs" -> "a localCheckpoint pin (TextOps.winnowPairs)",
-      "tfidf_cosine_pairs" -> "the per-session (docs, k) memoCount sizing plus a pin (TextOps.tfidfCosinePairs)",
-      "tfidf_cosine_sharded" -> "the (docs, k) sizing, once per session (Bench's min-of-k drops that first repetition), plus a pin",
+      "tfidf_cosine_pairs" -> "the per-session doc-count memoCount sizing plus a pin (TextOps.tfidfCosinePairs)",
+      "tfidf_cosine_sharded" -> "the doc-count memoCount sizing, once per session (Bench's min-of-k drops that first repetition), plus a pin",
       "tfidf_cosine_capped" -> "localCheckpoint pins (TextOps.tfidfCosinePairsCapped)",
       "tfidf_cosine_capped_auto" -> "localCheckpoint pins (TextOps.tfidfCosinePairsCapped)",
       "tfidf_cosine_capped_auto_hot" -> "localCheckpoint pins (TextOps.tfidfCosinePairsCapped)",

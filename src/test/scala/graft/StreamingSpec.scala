@@ -406,7 +406,7 @@ class StreamingSpec extends SparkSpec {
       (100L, "a protected reference passage long enough to winnow fully"),
       (101L, "another reference document with entirely different words"))
       .toDF("doc_id", "text")
-    val refFps = graft.operators.TextOps.winnowFingerprints(ref, 12, 8)
+    val refFps = graft.operators.TextOps.winnowFingerprints(ref)
     val docs = Seq(
       Doc(1, ts("10:01"), "prefix a protected reference passage long enough to winnow fully suffix"),
       Doc(2, ts("10:00"), "totally unrelated incoming content sharing no substring at all"))
@@ -430,7 +430,7 @@ class StreamingSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // batch twin: same fingerprint join + count + threshold
       val batch = graft.operators.TextOps.winnowFingerprints(
-          docs.toDF().select(col("doc_id"), col("text")), 12, 8)
+          docs.toDF().select(col("doc_id"), col("text")))
         .join(broadcast(refFps.select("fp").distinct()), "fp")
         .groupBy("doc_id").agg(count(lit(1)).as("shared_fps"))
         .filter(col("shared_fps") >= 2)

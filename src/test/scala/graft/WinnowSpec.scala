@@ -69,7 +69,7 @@ class WinnowSpec extends SparkSpec {
       (1L, s"prefix one entirely different $shared and then a distinct tail"),
       (2L, s"unrelated opening words here $shared closing with other text")
     ).toDF("doc_id", "text")
-    val fps = TextOps.winnowFingerprints(docs, k = 12, w = 8)
+    val fps = TextOps.winnowFingerprints(docs)
       .collect().groupBy(_.getLong(0)).view
       .mapValues(_.map(_.getLong(1)).toSet).toMap
     assert((fps(1L) & fps(2L)).nonEmpty,
@@ -90,8 +90,7 @@ class WinnowSpec extends SparkSpec {
       (3L to 8L).map(i => (i, s"$header totally distinct content $i" * 3))
     ).toDF("doc_id", "text")
     // dfCap=2: header fps (df=8) are dropped; passage fps (df=2) survive
-    val pairs = TextOps.winnowPairs(docs, k = 12, w = 8,
-      minShared = 2, dfCap = 2).collect()
+    val pairs = TextOps.winnowPairs(docs, dfCap = 2).collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)),
       "only the passage-sharing pair may survive the df cap")
     assert(pairs.head.getAs[Long]("shared_fps") >= 2L)
