@@ -17,8 +17,13 @@ a fixpoint over forwarding chains. In tests, a local `val x = <literal>`
 passed as `x` counts as that literal; a registry constant counts as a
 setting. Numeric literals compare by value (`1000L` == `1000`).
 
+Also lists every defaulted parameter whose name never occurs in its
+`def`'s body (comments masked, string interpolations read): an option a
+caller can set that does nothing.
+
 Exits 1 when an option no caller varies is not on the keep list
-(`KEEP`: capacity bounds, which are deployment settings), else 0.
+(`KEEP`: capacity bounds, which are deployment settings) or when an
+option is never read, else 0.
 `--quiet` prints only the summary. The Scala compiler is the final
 census: it rejects any call that still passes a removed parameter.
 """
@@ -150,9 +155,10 @@ def indent_at(src, i):
 
 
 class Def:
-    def __init__(self, path, obj, name, pos, indent, lists):
+    def __init__(self, path, obj, name, pos, indent, lists, body):
         self.path, self.obj, self.name, self.pos, self.indent = path, obj, name, pos, indent
         self.lists = lists  # [[(param, default-or-None)]]
+        self.body = body  # (start, end) of the body, None for an abstract def
 
     def params(self):
         return {p for lst in self.lists for p, _ in lst}
@@ -176,6 +182,42 @@ def body_of(m, j):
         else:
             j += 1
     return None
+
+
+def def_body(m, j, indent):
+    """(start, end) of the body of the `def` indented `indent` whose
+    parameter lists end at `j`: a `{...}` block, or an expression that
+    runs to the next non-blank line indented no deeper than the def.
+    None for an abstract def."""
+    n = len(m)
+    while j < n and not (m[j] == "=" and m[j + 1:j + 2] != ">"):
+        if m[j] in "([":
+            j = close_of(m, j)
+            continue
+        if m[j] == "\n":
+            nxt = re.compile(r"[ \t]*\S").search(m, j + 1)
+            if nxt is None or indent_at(m, nxt.start()) <= indent:
+                return None
+        j += 1
+    if j >= n:
+        return None
+    k = j + 1
+    while k < n and m[k] in " \t":
+        k += 1
+    if m[k:k + 1] == "{":
+        return (k, close_of(m, k))
+    for line in re.finditer(r"\n([ \t]*)(\S)", m[j:]):
+        if len(line.group(1)) <= indent:
+            return (j + 1, j + line.start())
+    return (j + 1, n)
+
+
+def reads(src, m, body, param):
+    """Whether `param` occurs in the body: as code, or interpolated into
+    a string literal (which `mask` blanks)."""
+    lo, hi = body
+    return bool(re.search(r"\b" + param + r"\b", m[lo:hi]) or
+                re.search(r"\$(?:" + param + r"\b|\{[^}]*\b" + param + r"\b)", src[lo:hi]))
 
 
 DEF_RE = re.compile(r"\bdef\s+(\w+)\s*")
@@ -213,7 +255,8 @@ def parse_defs(path, src, m):
             lists.append(params)
             j = e
         obj = next((name for lo, hi, name in reversed(objs) if lo < d.start() < hi), "?")
-        defs.append(Def(path, obj, d.group(1), d.start(), indent_at(m, d.start()), lists))
+        indent = indent_at(m, d.start())
+        defs.append(Def(path, obj, d.group(1), d.start(), indent, lists, def_body(m, j, indent)))
     return defs
 
 
@@ -407,6 +450,9 @@ def main(argv):
         for u in unmatched:
             print(f"unmatched call: {u}", file=sys.stderr)
         print()
+    by_id = {id(d): d for d in ops}
+    unread = [k for k in options if k[0] in reported and by_id[k[0]].body is not None
+              and not reads(*files[by_id[k[0]].path], by_id[k[0]].body, label[k][2])]
     bad = [k for k in never if label[k][:3] not in KEEP]
     print(f"{sum(k[0] in reported for k in options)} defaulted operator parameters; "
           f"{len(never)} never varied ({len(never) - len(bad)} kept bounds, "
@@ -415,7 +461,11 @@ def main(argv):
         obj, fn, p, rel = label[k]
         tag = "keep" if (obj, fn, p) in KEEP else "REMOVE"
         print(f"  {tag:6s} {obj}.{fn}.{p} = {default_of[k]}  ({rel})")
-    return 1 if bad else 0
+    print(f"{len(unread)} defaulted operator parameters never read")
+    for k in unread:
+        obj, fn, p, rel = label[k]
+        print(f"  UNREAD {obj}.{fn}.{p} = {default_of[k]}  ({rel})")
+    return 1 if bad or unread else 0
 
 
 if __name__ == "__main__":

@@ -1938,8 +1938,7 @@ object Dedup {
   def simhashFingerprints(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     val occHashes = graft.functions.VectorFunctions.noNullElements(
-      transform(split(col("text"), " "),
-        t => conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long")))
+      transform(split(col("text"), " "), Sketches.hash60(_)))
     docs
       // spread the single-split docs scan; downstream pair joins
       // inherit this parallelism. Explicit count: AQE coalesces a bare

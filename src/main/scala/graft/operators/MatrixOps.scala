@@ -3,10 +3,16 @@ package graft.operators
 import scala.collection.mutable
 
 import dev.ludovic.netlib.blas.BLAS
-import org.apache.spark.SparkEnv
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.{Dependency, HashPartitioner, OneToOneDependency, Partition, SparkEnv, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD, UnionRDD}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
+import org.apache.spark.sql.execution.UnsafeRowSerializer
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Distributed matrix algebra over coordinate-form DataFrames.
   *
@@ -226,18 +232,18 @@ object MatrixOps {
     *
     * The (n/BS)³ block products form a cube, cut into a `pr×pc×pk` grid
     * of cuboids ([[Grid]]), one Spark task each:
-    *   1. every input partition folds its cells into partial BS×BS
+    *   1. every input partition folds its cell rows into partial BS×BS
     *      blocks ([[Partial]]: sparse cells until they would outweigh the
     *      dense block, then dense) and sends each straight to the cuboids
     *      that read it — an A block to the `pc` cuboids of its row
     *      group, a B block to the `pr` cuboids of its column group;
-    *   2. ONE exchange, `repartition(T, key)` with keys that hash to
-    *      distinct partitions ([[cuboidKeys]]): one cuboid per task;
+    *   2. ONE shuffle, keyed by cuboid id, that puts cuboid `t` in
+    *      partition `t`: one cuboid per task;
     *   3. each task sums its partial blocks and multiplies its A and B
     *      strips block by block with BLAS `dgemm`, then emits the nonzero
     *      cells of each output block. With `pk > 1` it emits partial
-    *      output blocks instead, summed per output block after a second
-    *      exchange.
+    *      output blocks instead, summed per output block by one keyed
+    *      reduce.
     *
     * Memory: [[chooseGrid]] picks the grid that replicates the fewest
     * bytes among those with at least one task per core whose resident set
@@ -291,7 +297,7 @@ object MatrixOps {
 
   /** Group of block index `b` when `nb` blocks split into `p` groups
     * whose sizes differ by at most one. */
-  private def group(b: Int, p: Int, nb: Int): Int = (b.toLong * p / nb).toInt
+  private[graft] def group(b: Int, p: Int, nb: Int): Int = (b.toLong * p / nb).toInt
 
   /** FuseME's cost model. Replicated bytes: A goes to `pc` cuboids, B to
     * `pr`, and with `pk > 1` each output block is written `pk` times
@@ -332,66 +338,79 @@ object MatrixOps {
     executors.values.map(_._1).min / cores / 2
   }
 
-  /** Keys for `repartition(tasks, key)` under which key `t` lands on
-    * partition `t`. Spark hash-partitions an int key to
-    * `pmod(murmur3(key, seed 42), tasks)`, so the cuboid ids themselves
-    * collide; scanning the non-negative ints and keeping the first that
-    * hits each partition makes placement a bijection (pinned by
-    * MatrixOpsSpec against the real exchange). */
-  private[graft] def cuboidKeys(tasks: Int): Array[Int] = {
-    val keys = Array.fill(tasks)(-1)
-    var found = 0
-    var k = 0
-    while (found < tasks) {
-      val p = Math.floorMod(Murmur3_x86_32.hashInt(k, 42), tasks)
-      if (keys(p) < 0) { keys(p) = k; found += 1 }
-      k += 1
-    }
-    keys
-  }
-
   /** The cuboid product under a given grid; [[multiplyBlocked]] picks the
-    * grid, specs force one. */
+    * grid, specs force one. Rows stay Catalyst rows end to end: the fold
+    * reads the inputs' rows, blocks cross the exchange as `UnsafeRow`s
+    * and output cells are written straight into one reused `UnsafeRow`.
+    * Declaring it runs no job: the inputs are planned on first use. */
   private[graft] def multiplyCuboid(spark: SparkSession, a: DataFrame, b: DataFrame,
                                     n: Long, bs: Int, grid: Grid): DataFrame = {
-    import spark.implicits._
-    val parts = blockParts(spark, a, b, n, bs, grid).repartition(grid.tasks, col("key"))
-    val cells =
-      if (grid.pk == 1) parts.mapPartitions(cuboidProducts(_, bs).flatMap(blockCells(bs)))
-      else parts.mapPartitions(cuboidProducts(_, bs))
-        .repartition(grid.tasks, col("_1"), col("_2"))
-        .sortWithinPartitions("_1", "_2")
-        .mapPartitions(sumPartials(_).flatMap(blockCells(bs)))
-    cells.toDF("i", "j", "v")
+    val products = cuboidExchange(a, b, n, bs, grid)
+      .mapPartitions(parts => cuboidProducts(parts.map(_._2), bs))
+    val blocks =
+      if (grid.pk == 1) products
+      else products.map { case (bi, bj, blk) => (bi.toLong << 32 | bj, blk) }
+        .combineByKeyWithClassTag[Array[Double]]((blk: Array[Double]) => blk, addInto _, addInto _,
+          new HashPartitioner(grid.tasks), mapSideCombine = false)
+        .map { case (key, blk) => ((key >>> 32).toInt, key.toInt, blk) }
+    Bridge.dataFrame(spark, blocks.mapPartitions(blockCells(bs)), CellSchema)
   }
 
-  /** The partial blocks of A and B, one copy per cuboid that reads them:
-    * what the cuboid exchange carries. */
-  private[graft] def blockParts(spark: SparkSession, a: DataFrame, b: DataFrame,
-                                n: Long, bs: Int, grid: Grid): Dataset[BlockPart] = {
-    import spark.implicits._
+  /** The one shuffle of partial blocks: an Int key `t < tasks` hashes to
+    * partition `t`, so cuboid `t` is computed in partition `t`. */
+  private[graft] def cuboidExchange(a: DataFrame, b: DataFrame, n: Long, bs: Int,
+                                    grid: Grid): RDD[(Int, UnsafeRow)] =
+    new ShuffledRDD[Int, UnsafeRow, UnsafeRow](blockParts(a, b, n, bs, grid),
+      new HashPartitioner(grid.tasks)).setSerializer(new UnsafeRowSerializer(PartFields))
+
+  private val CellSchema = StructType(Seq(StructField("i", LongType, nullable = false),
+    StructField("j", LongType, nullable = false), StructField("v", DoubleType, nullable = false)))
+
+  /** The rows of `df`'s plan, planned when the RDD is first used: under
+    * AQE `queryExecution.toRdd` runs the plan's shuffle stages as it is
+    * called, which would put jobs into a product's declaration. */
+  private[graft] final class PlannedRows(@transient df: DataFrame)
+      extends RDD[InternalRow](df.sparkSession.sparkContext, Nil) {
+    @transient private lazy val rows = df.queryExecution.toRdd
+
+    override protected def getDependencies: Seq[Dependency[_]] = Seq(new OneToOneDependency(rows))
+
+    override protected def getPartitions: Array[Partition] = rows.partitions
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      firstParent[InternalRow].iterator(split, context)
+  }
+
+  /** The partial blocks of A and B, keyed by the cuboid that reads them,
+    * one copy per such cuboid: what the cuboid exchange carries. */
+  private[graft] def blockParts(a: DataFrame, b: DataFrame, n: Long, bs: Int,
+                                grid: Grid): RDD[(Int, UnsafeRow)] = {
     val nb = blocksPerSide(n, bs)
-    val keys = cuboidKeys(grid.tasks)
-    def side(m: DataFrame, isA: Boolean): Dataset[BlockPart] =
-      m.select(col("i").cast("long"), col("j").cast("long"), col("v").cast("double"))
-        .filter(col("v").isNotNull)
-        .as[(Long, Long, Double)]
-        .mapPartitions(partialBlocks(_, n, bs, FlushBytes).flatMap { case (r, c, part) =>
-          val cuboids =
-            if (isA) Iterator.range(0, grid.pc)
-              .map(cg => grid.id(group(r, grid.pr, nb), cg, group(c, grid.pk, nb)))
-            else Iterator.range(0, grid.pr)
-              .map(rg => grid.id(rg, group(c, grid.pc, nb), group(r, grid.pk, nb)))
-          val (pos, vals) = part.payload
-          cuboids.map(t => BlockPart(keys(t), t, isA, r, c, pos, vals))
-        })
-    side(a, isA = true).union(side(b, isA = false))
+    def side(m: DataFrame, isA: Boolean): RDD[(Int, UnsafeRow)] =
+      new PlannedRows(m.select(col("i").cast("long"), col("j").cast("long"), col("v").cast("double"))
+        .filter(col("v").isNotNull))
+        .mapPartitions { rows =>
+          val out = new PartWriter
+          partialBlocks(rows, n, bs, FlushBytes).flatMap { case (r, c, part) =>
+            val cuboids =
+              if (isA) Iterator.range(0, grid.pc)
+                .map(cg => grid.id(group(r, grid.pr, nb), cg, group(c, grid.pk, nb)))
+              else Iterator.range(0, grid.pr)
+                .map(rg => grid.id(rg, group(c, grid.pc, nb), group(r, grid.pk, nb)))
+            // the shuffle writer serializes each record as it takes it,
+            // so every copy can share the one row
+            val row = out.write(isA, r, c, part)
+            cuboids.map(t => (t, row))
+          }
+        }
+    // UnionRDD directly: SparkContext.union asks each side for its partitions
+    new UnionRDD(a.sparkSession.sparkContext, Seq(side(a, isA = true), side(b, isA = false)))
   }
 
-  /** Folds a partition's cells into partial blocks and yields them as
-    * (row block, column block, partial), all it holds each time that
-    * reaches `flushBytes`; the cuboid tasks sum the partials. */
-  private[graft] def partialBlocks(cells: Iterator[(Long, Long, Double)], n: Long, bs: Int,
+  /** Folds a partition's `(i, j, v)` rows into partial blocks and yields
+    * them as (row block, column block, partial), all it holds each time
+    * that reaches `flushBytes`; the cuboid tasks sum the partials. */
+  private[graft] def partialBlocks(rows: Iterator[InternalRow], n: Long, bs: Int,
                                    flushBytes: Long): Iterator[(Int, Int, Partial)] =
     new Iterator[(Int, Int, Partial)] {
       private val held = mutable.LongMap.empty[Partial]
@@ -403,8 +422,11 @@ object MatrixOps {
 
       private def fill(): Unit = {
         var bytes = 0L
-        while (bytes < flushBytes && cells.hasNext) {
-          val (i, j, v) = cells.next()
+        while (bytes < flushBytes && rows.hasNext) {
+          val row = rows.next()
+          require(!row.isNullAt(0) && !row.isNullAt(1), "a cell with a null index")
+          val i = row.getLong(0)
+          val j = row.getLong(1)
           require(i >= 0 && i < n && j >= 0 && j < n, s"cell ($i, $j) outside the ${n}x$n index space")
           val key = (i / bs) << 32 | (j / bs)
           var part = held.getOrNull(key)
@@ -413,7 +435,7 @@ object MatrixOps {
             held.update(key, part)
             bytes += part.bytes
           }
-          bytes += part.add((i % bs * bs + j % bs).toInt, v)
+          bytes += part.add((i % bs * bs + j % bs).toInt, row.getDouble(2))
         }
         out = held.toArray.iterator.map { case (key, part) => ((key >>> 32).toInt, key.toInt, part) }
         held.clear()
@@ -458,24 +480,56 @@ object MatrixOps {
         vals = java.util.Arrays.copyOf(vals, cap)
       }
 
-    /** The positions, each minus the one before (empty for a dense
+    /** Writes the positions, each minus the one before (none for a dense
       * block), and the values to send. Cells that arrive in row order
       * give runs of equal steps, which the shuffle's compression all but
       * removes. */
-    def payload: (Array[Int], Array[Double]) =
-      if (pos == null) (Array.emptyIntArray, vals)
-      else (Array.tabulate(size)(q => if (q == 0) pos(0) else pos(q) - pos(q - 1)),
-        java.util.Arrays.copyOf(vals, size))
+    def writeTo(steps: UnsafeArrayWriter, values: UnsafeArrayWriter, row: UnsafeRowWriter): Unit = {
+      val cells = if (pos == null) 0 else size
+      var start = row.cursor()
+      steps.initialize(cells)
+      var q = 0
+      while (q < cells) { steps.write(q, if (q == 0) pos(0) else pos(q) - pos(q - 1)); q += 1 }
+      row.setOffsetAndSizeFromPreviousCursor(PartSteps, start)
+      start = row.cursor()
+      val count = if (pos == null) area else size
+      values.initialize(count)
+      q = 0
+      while (q < count) { values.write(q, vals(q)); q += 1 }
+      row.setOffsetAndSizeFromPreviousCursor(PartValues, start)
+    }
   }
 
-  /** Products of every cuboid in a partition, as (row block, column block,
-    * block) per output block with at least one block product. Placement
-    * puts one cuboid in each partition; keying by cuboid keeps the result
-    * right even if it did not. */
-  private def cuboidProducts(parts: Iterator[BlockPart], bs: Int): Iterator[(Int, Int, Array[Double])] = {
-    val cuboids = mutable.LongMap.empty[Cuboid]
-    parts.foreach(p => cuboids.getOrElseUpdate(p.cuboid, new Cuboid(bs)).add(p))
-    cuboids.valuesIterator.flatMap(_.products)
+  /** A partial block crosses the exchange as the row `(isA, r, c, steps,
+    * values)`: block `(r, c)` of A (`isA`) or B, holding `values` at the
+    * row-major positions whose successive differences are `steps`, or the
+    * dense block `values` when `steps` is empty. */
+  private val PartFields = 5
+  private val PartSteps = 3
+  private val PartValues = 4
+
+  /** Writes partial blocks as exchange rows into one reused buffer. */
+  private[graft] final class PartWriter {
+    private val row = new UnsafeRowWriter(PartFields)
+    private val steps = new UnsafeArrayWriter(row, 4)
+    private val values = new UnsafeArrayWriter(row, 8)
+
+    def write(isA: Boolean, r: Int, c: Int, part: Partial): UnsafeRow = {
+      row.reset()
+      row.write(0, isA)
+      row.write(1, r)
+      row.write(2, c)
+      part.writeTo(steps, values, row)
+      row.getRow
+    }
+  }
+
+  /** Products of the cuboid in a partition, as (row block, column block,
+    * block) per output block with at least one block product. */
+  private def cuboidProducts(parts: Iterator[UnsafeRow], bs: Int): Iterator[(Int, Int, Array[Double])] = {
+    val cuboid = new Cuboid(bs)
+    parts.foreach(cuboid.add)
+    cuboid.products
   }
 
   /** One cuboid's A and B strips, partials summed on arrival. */
@@ -486,20 +540,28 @@ object MatrixOps {
 
     private def pack(r: Int, c: Int): Long = r.toLong << 32 | c
 
-    def add(p: BlockPart): Unit =
-      if (p.isA) sumInto(aRows.getOrElseUpdate(p.r, mutable.LongMap.empty), p.c, p)
-      else { sumInto(bBlocks, pack(p.r, p.c), p); bCols += p.c }
+    /** Sums in one exchange row; the row's buffer is reused after this. */
+    def add(p: UnsafeRow): Unit = {
+      val c = p.getInt(2)
+      if (p.getBoolean(0)) sumInto(aRows.getOrElseUpdate(p.getInt(1), mutable.LongMap.empty), c, p)
+      else { sumInto(bBlocks, pack(p.getInt(1), c), p); bCols += c }
+    }
 
-    private def sumInto(m: mutable.LongMap[Array[Double]], key: Long, p: BlockPart): Unit =
-      if (p.pos.isEmpty) m.get(key) match {
-        case Some(acc) => addInto(acc, p.vals)
-        case None => m.update(key, p.vals)
+    private def sumInto(m: mutable.LongMap[Array[Double]], key: Long, p: UnsafeRow): Unit = {
+      val steps = p.getArray(PartSteps)
+      val values = p.getArray(PartValues)
+      var acc = m.getOrNull(key)
+      if (steps.numElements == 0 && acc == null) m.update(key, values.toDoubleArray)
+      else if (steps.numElements == 0) {
+        var q = 0
+        while (q < acc.length) { acc(q) += values.getDouble(q); q += 1 }
       } else {
-        val acc = m.getOrElseUpdate(key, new Array[Double](bs * bs))
+        if (acc == null) { acc = new Array[Double](bs * bs); m.update(key, acc) }
         var q = 0
         var at = 0
-        while (q < p.pos.length) { at += p.pos(q); acc(at) += p.vals(q); q += 1 }
+        while (q < steps.numElements) { at += steps.getInt(q); acc(at) += values.getDouble(q); q += 1 }
       }
+    }
 
     def products: Iterator[(Int, Int, Array[Double])] = for {
       (bi, row) <- aRows.iterator
@@ -519,9 +581,10 @@ object MatrixOps {
     }
   }
 
-  private def addInto(acc: Array[Double], x: Array[Double]): Unit = {
+  private def addInto(acc: Array[Double], x: Array[Double]): Array[Double] = {
     var p = 0
     while (p < acc.length) { acc(p) += x(p); p += 1 }
+    acc
   }
 
   /** out += x·y on row-major bs×bs blocks. A row-major product is the
@@ -531,32 +594,34 @@ object MatrixOps {
   private def gemm(bs: Int, x: Array[Double], y: Array[Double], out: Array[Double]): Unit =
     BLAS.getInstance().dgemm("N", "N", bs, bs, bs, 1.0, y, bs, x, bs, 1.0, out, bs)
 
-  /** Sums runs of partial blocks of the same output block; the input is
-    * sorted by (row block, column block). */
-  private def sumPartials(parts: Iterator[(Int, Int, Array[Double])]): Iterator[(Int, Int, Array[Double])] = {
-    val in = parts.buffered
-    new Iterator[(Int, Int, Array[Double])] {
-      def hasNext: Boolean = in.hasNext
+  /** The nonzero cells of each output block (bi, bj) as `(i, j, v)` rows,
+    * all written into one reused `UnsafeRow`: a consumer copies a row
+    * before it asks for the next. */
+  private def blockCells(bs: Int)(blocks: Iterator[(Int, Int, Array[Double])]): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private val row = new UnsafeRowWriter(3)
+      private var bi = 0
+      private var bj = 0
+      private var blk = Array.emptyDoubleArray
+      private var pos = 0
 
-      def next(): (Int, Int, Array[Double]) = {
-        val (bi, bj, acc) = in.next()
-        while (in.hasNext && in.head._1 == bi && in.head._2 == bj) addInto(acc, in.next()._3)
-        (bi, bj, acc)
+      def hasNext: Boolean = {
+        while (pos < blk.length && blk(pos) == 0.0) pos += 1
+        while (pos == blk.length && blocks.hasNext) {
+          val (r, c, next) = blocks.next()
+          bi = r; bj = c; blk = next; pos = 0
+          while (pos < blk.length && blk(pos) == 0.0) pos += 1
+        }
+        pos < blk.length
+      }
+
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("no cells left")
+        row.write(0, bi.toLong * bs + pos / bs)
+        row.write(1, bj.toLong * bs + pos % bs)
+        row.write(2, blk(pos))
+        pos += 1
+        row.getRow
       }
     }
-  }
-
-  /** The nonzero cells of output block (bi, bj). */
-  private def blockCells(bs: Int)(out: (Int, Int, Array[Double])): Iterator[(Long, Long, Double)] = {
-    val (bi, bj, blk) = out
-    Iterator.range(0, blk.length).filter(blk(_) != 0.0)
-      .map(pos => (bi.toLong * bs + pos / bs, bj.toLong * bs + pos % bs, blk(pos)))
-  }
 }
-
-/** A partial block on its way to cuboid `cuboid`: `key` routes it there,
-  * `(r, c)` is its block position in A (`isA`) or B. It holds the cells
-  * `vals` at the row-major positions whose successive differences are
-  * `pos`, or the dense block `vals` when `pos` is empty. */
-private[graft] final case class BlockPart(key: Int, cuboid: Int, isA: Boolean,
-                                          r: Int, c: Int, pos: Array[Int], vals: Array[Double])

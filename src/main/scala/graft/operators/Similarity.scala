@@ -1169,8 +1169,7 @@ object Similarity {
     * cells hold no postings has no ADC score and SURVIVES (fail-open
     * — dedup must never drop a row it could not compare). */
   def dedupIncrementalFromIndex(spark: SparkSession, batch: DataFrame,
-                                path: String, maxAdist: Long,
-                                m: Int = 8): DataFrame = {
+                                path: String, maxAdist: Long): DataFrame = {
     require(maxAdist >= 0, s"maxAdist must be >= 0: $maxAdist")
     // BATCH-REGIME plan shape, not [[annIvfPqFromIndex]]'s: the LUT
     // form broadcasts a (queries·m·cw)-row distance table — right for
@@ -1413,8 +1412,7 @@ object Similarity {
     * align with embedding-space neighborhoods, which no amount of
     * probing fixes at serving-credible probe counts. */
   def annIvf(spark: SparkSession, emb: DataFrame, numQueries: Int, k: Int,
-             dim: Int = 64, probes: Int = 1,
-             cells: Int = 10, cellRounds: Int = 2): DataFrame = {
+             probes: Int = 1, cells: Int = 10, cellRounds: Int = 2): DataFrame = {
     // multi-probe: rerank inside the `probes` best cells — the
     // standard IVF recall knob (boundary vectors live in a neighbor
     // cell; probing P cells trades P× candidates for recall)

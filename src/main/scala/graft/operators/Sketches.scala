@@ -23,10 +23,11 @@ object Sketches {
 
   /** 60-bit uniform hash shared with the SQL oracle (and the streaming
     * sketch twin): the first 15 hex nibbles of md5 — positive, fits
-    * signed 64-bit. */
-  def hash60(key: Column): Column =
-    conv(substring(md5(key.cast("string").cast("binary")), 1, 15), 16, 10)
-      .cast("long")
+    * signed 64-bit. One native kernel ([[graft.functions.Md5Hash60]]). */
+  def hash60(key: Column): Column = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    Bridge.column(graft.functions.Md5Hash60(Bridge.expression(key.cast("string"))))
+  }
 
   /** Per-group KMV distinct-count estimate for `key`, alongside the
     * exact count for validation.

@@ -1065,8 +1065,7 @@ object TextOps {
                       default: Int): DataFrame = {
     require((default +: quotas.values.toSeq).forall(_ >= 0), "quotas are counts")
     val maxQuota = (default +: quotas.values.toSeq).max
-    val rk = conv(substring(md5(concat(lit("resv:"),
-      col("doc_id").cast("string")).cast("binary")), 1, 15), 16, 10).cast("long")
+    val rk = Sketches.hash60(concat(lit("resv:"), col("doc_id").cast("string")))
     val quota = quotas.foldLeft(lit(default.toLong)) {
       case (acc, (k, q)) => when(col("lang") === k, lit(q.toLong)).otherwise(acc)
     }
@@ -2011,8 +2010,7 @@ object TextOps {
     * to the corpus even at millions of domains) and broadcasts. */
   def sourceCap(docs: DataFrame, cap: Int): DataFrame = {
     require(cap >= 1, s"cap must be >= 1: $cap")
-    val rk = conv(substring(md5(concat(lit("cap:"),
-      col("doc_id").cast("string")).cast("binary")), 1, 15), 16, 10).cast("long")
+    val rk = Sketches.hash60(concat(lit("cap:"), col("doc_id").cast("string")))
     val sizes = docs.groupBy("source").agg(count(lit(1)).as("n_source"))
     val w = Window.partitionBy("source").orderBy(col("rk"), col("doc_id"))
     docs.select(col("doc_id"), col("source"), rk.as("rk"))

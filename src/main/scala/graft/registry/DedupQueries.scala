@@ -1166,7 +1166,7 @@ private[graft] object DedupQueries {
     QuerySpec("dedup_incremental_indexed", (s, dir) => {
       val (batch, _) = halvesByMaxId(Tables.embeddings(s, dir), "vec_id")
       Similarity.dedupIncrementalFromIndex(s, batch,
-          pqHalfIndexFor(s, dir), maxAdist = IncIndexedMaxAdist, m = PqM)
+          pqHalfIndexFor(s, dir), maxAdist = IncIndexedMaxAdist)
         .orderBy("vec_id")
     },
       // Index-served incremental dedup: the ann_ivf_pq training chain

@@ -42,6 +42,22 @@ class KernelTypeSpec extends SparkSpec {
     assert(native.flatten.forall(id => id >= 0L && id < (1L << 40)))
   }
 
+  test("md5_hash60 equals conv(substring(md5(x), 1, 15), 16, 10)") {
+    import spark.implicits._
+    import graft.operators.Sketches
+    // NULL, empty, ASCII, non-ASCII and digests whose 16th nibble is
+    // anything: the kernel drops exactly the nibble substring drops
+    val keys = Seq(None, Some(""), Some("a"), Some("resv:42"), Some("üñïçødé")) ++
+      (0 until 200).map(i => Some(s"k$i"))
+    val df = keys.toDF("key")
+    val viaSql = df.select(conv(substring(md5(col("key").cast("binary")), 1, 15), 16, 10)
+      .cast("long")).collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    val native = df.select(Sketches.hash60(col("key")))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    assert(native.toSeq === viaSql.toSeq)
+    assert(native.head.isEmpty && native.flatten.forall(h => h >= 0L && h < (1L << 60)))
+  }
+
   test("kernels reject containsNull=true arrays at analysis") {
     import spark.implicits._
     // a nullable lambda body types the array containsNull=true —
@@ -268,6 +284,7 @@ class KernelTypeSpec extends SparkSpec {
         Seq(arr(0.5f, -1.25f, 2f)), Seq(arr(1f, 2f)), Seq(arr(1f, null, 2f))),
       KnownNoNullElements(in(0, longs(true))) -> nullableIds,
       Md5TokenIds(in(0, StringType)) -> texts,
+      Md5Hash60(in(0, StringType)) -> texts,
       NgramFnv(in(0, StringType), 3) -> texts,
       Fnv64(in(0, BinaryType)) -> rows(Seq(null), Seq(Array.emptyByteArray),
         Seq("graft".getBytes("UTF-8"))))

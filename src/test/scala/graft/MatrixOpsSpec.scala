@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.operators.MatrixOps
 
@@ -102,17 +103,41 @@ class MatrixOpsSpec extends SparkSpec {
     assert(MatrixOps.chooseGrid(1, bs, 4, 1L << 30) === MatrixOps.Grid(1, 1, 1))
   }
 
-  test("cuboid keys land on distinct partitions of repartition(T, key)") {
-    import spark.implicits._
-    // the kernel's one-cuboid-per-task placement rests on Spark's hash
-    // partitioning; a change to it must fail here, not silently pile two
-    // cuboids onto one core
-    for (t <- Seq(1, 2, 3, 4, 8, 12, 27, 64)) {
-      val keys = MatrixOps.cuboidKeys(t)
-      val placed = keys.toSeq.toDF("key").repartition(t, col("key"))
-        .select(col("key"), spark_partition_id()).as[(Int, Int)].collect().toMap
-      assert(keys.indices.forall(c => placed(keys(c)) == c), s"T=$t placed $placed")
+  test("cuboid t is computed in partition t") {
+    // the kernel's one-cuboid-per-task placement rests on the exchange's
+    // partitioner; a change to it must fail here, not silently pile two
+    // cuboids onto one core or hand a cuboid another one's blocks
+    val (nb, bs) = (6, 4)
+    val n = nb.toLong * bs
+    val a = MatrixOps.genDense(spark, n, seed = 13)
+    val b = MatrixOps.genDense(spark, n, seed = 14)
+    def in(blk: Int, g: Int, p: Int): Boolean = MatrixOps.group(blk, p, nb) == g
+    for (g <- Seq(MatrixOps.Grid(1, 1, 1), MatrixOps.Grid(2, 3, 1),
+        MatrixOps.Grid(3, 2, 2), MatrixOps.Grid(2, 2, 3))) {
+      val exchange = MatrixOps.cuboidExchange(a, b, n, bs, g)
+      assert(exchange.getNumPartitions == g.tasks)
+      // the exchange reuses one row buffer: read each row as it comes
+      val placed = exchange.mapPartitionsWithIndex { (part, rows) =>
+        rows.map { case (_, p) => (part, p.getBoolean(0), p.getInt(1), p.getInt(2)) }
+      }.collect().toSet
+      val want = for {
+        rg <- 0 until g.pr; cg <- 0 until g.pc; kg <- 0 until g.pk
+        r <- 0 until nb; c <- 0 until nb
+        isA <- Seq(true, false)
+        if (if (isA) in(r, rg, g.pr) && in(c, kg, g.pk) else in(r, kg, g.pk) && in(c, cg, g.pc))
+      } yield (g.id(rg, cg, kg), isA, r, c)
+      assert(placed === want.toSet, s"grid $g")
     }
+  }
+
+  /** (i, j, v) cells as the Catalyst rows the fold reads. */
+  private def rows(in: Seq[(Long, Long, Double)]): Iterator[InternalRow] =
+    in.iterator.map { case (i, j, v) => InternalRow(i, j, v) }
+
+  /** A partial block's steps and values as the exchange row carries them. */
+  private def sent(p: MatrixOps.Partial): (Array[Int], Array[Double]) = {
+    val row = new MatrixOps.PartWriter().write(isA = true, 0, 0, p)
+    (row.getArray(3).toIntArray, row.getArray(4).toDoubleArray)
   }
 
   test("map-side fold: scattered cells flush as sparse parts that sum back to the input") {
@@ -122,8 +147,8 @@ class MatrixOpsSpec extends SparkSpec {
     val in = Seq.fill(600)((rnd.nextInt(n.toInt).toLong, rnd.nextInt(n.toInt).toLong,
       rnd.nextInt(9) - 4.0))
     // a budget of a few blocks forces many flushes
-    val parts = MatrixOps.partialBlocks(in.iterator, n, bs, 2048).map { case (r, c, p) =>
-      val (pos, vals) = p.payload
+    val parts = MatrixOps.partialBlocks(rows(in), n, bs, 2048).map { case (r, c, p) =>
+      val (pos, vals) = sent(p)
       (r, c, pos, vals)
     }.toSeq
     assert(parts.size > parts.map(p => (p._1, p._2)).distinct.size, "expected repeated flushes")
@@ -140,8 +165,22 @@ class MatrixOpsSpec extends SparkSpec {
   test("map-side fold: a partition holding whole blocks sends them dense") {
     val (n, bs) = (16L, 8)
     val in = for (i <- 0L until n; j <- 0L until n) yield (i, j, 1.0)
-    val parts = MatrixOps.partialBlocks(in.iterator, n, bs, 1L << 20).map(_._3.payload).toSeq
+    val parts = MatrixOps.partialBlocks(rows(in), n, bs, 1L << 20).map(p => sent(p._3)).toSeq
     assert(parts.size == 4 && parts.forall { case (pos, vals) => pos.isEmpty && vals.length == 64 })
+  }
+
+  test("multiplyBlocked over AQE inputs runs no job until the product is consumed") {
+    // fromTable aggregates, so each input plan has a shuffle stage that
+    // AQE runs as soon as its rows are asked for
+    val ids = spark.range(500).toDF()
+    def m(salt: Int) = MatrixOps.fromTable(ids, pmod(col("id") * 7 + salt, lit(20)),
+      pmod(col("id") * 3 + salt, lit(20)), col("id") % 5 + 1)
+    var product: DataFrame = null
+    val declared = jobsDuring { product = MatrixOps.multiplyBlocked(spark, m(1), m(2), 20, 8) }
+    assert(declared.isEmpty, declared.mkString("declaring the product ran jobs:\n", "\n---\n", ""))
+    var got = Seq.empty[(Long, Long, Double)]
+    assert(jobsDuring { got = cells(product) }.nonEmpty)
+    assert(got === cells(MatrixOps.multiply(m(1), m(2))).filter(_._3 != 0.0))
   }
 
   test("hash-partitioned fromTable input: the cuboid exchange carries sparse cells, not dense blocks") {
@@ -157,8 +196,9 @@ class MatrixOpsSpec extends SparkSpec {
     val (aCells, bCells) = (a.count(), b.count())
     val grid = MatrixOps.Grid(2, 2, 1)
     val copies = (aCells + bCells) * 2
-    val payload = MatrixOps.blockParts(spark, a, b, n, bs, grid)
-      .select(sum(size(col("pos")) * 4 + size(col("vals")) * 8)).first().getLong(0)
+    val payload = MatrixOps.blockParts(a, b, n, bs, grid)
+      .map { case (_, p) => p.getArray(3).numElements * 4L + p.getArray(4).numElements * 8L }
+      .fold(0L)(_ + _)
     // sparse parts carry 12 bytes per cell copy; dense partial blocks
     // would carry 8 KB per partition and block, about 130 times more here
     assert(payload <= 12 * copies, s"payload $payload B for $copies cell copies")

@@ -1424,7 +1424,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("ivf ann probes the best cluster and reranks by exact cosine") {
     val out = Similarity.annIvf(spark, ivfFixture, numQueries = 1, k = 2,
-        dim = 4, cells = 2, cellRounds = 1)
+        cells = 2, cellRounds = 1)
       .orderBy("rn").collect()
     // probed its own cell (cell id 0 = seed vec 0), never the antipode's
     assert(out.map(_.getAs[Long]("cell")).forall(_ == 0L))

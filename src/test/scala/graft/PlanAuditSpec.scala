@@ -568,17 +568,18 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("blocked matmul declares without jobs and plans one cuboid exchange") {
-    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.{Dependency, ShuffleDependency}
+    import org.apache.spark.rdd.{CoGroupedRDD, RDD, UnionRDD}
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    // exchanges between the kernel and the map-side block folds (the
-    // MapPartitions below it), whose inputs are the callers' own plans
-    def blockedExchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case _: MapPartitionsExec => Nil
-      case e: ShuffleExchangeExec => e +: e.children.flatMap(blockedExchanges)
-      case other => other.children.flatMap(blockedExchanges)
+    import graft.operators.MatrixOps
+    // the dependencies between the product's rows and its inputs' plans
+    // (PlannedRows); a UnionRDD's own dependencies would plan the inputs
+    def between(r: RDD[_]): Seq[Dependency[_]] = r match {
+      case _: MatrixOps.PlannedRows => Nil
+      case u: UnionRDD[_] => u.rdds.flatMap(between)
+      case other => other.dependencies.flatMap(d => d +: between(d.rdd))
     }
     for (q <- Seq("matmul_blocked", "matmul_large")) {
       var exec: SparkPlan = null
@@ -588,20 +589,20 @@ class PlanAuditSpec extends SparkSpec {
       assert(jobs.isEmpty,
         s"constructing $q must submit no jobs, got ${jobs.size}:\n" + jobs.mkString("\n---\n"))
       val p = exec.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
-      val kernel = p.collectFirst { case m: MapPartitionsExec => m }
-        .getOrElse(fail(s"$q has no MapPartitions kernel, plan:\n$p"))
+      assert(p.collect { case j: BaseJoinExec => j }.isEmpty, s"$q must not join blocks, plan:\n$p")
+      val scan = p.collectFirst { case s: RDDScanExec => s }
+        .getOrElse(fail(s"$q does not scan the product's rows, plan:\n$p"))
+      val deps = between(scan.rdd)
+      val lineage = deps.map(d => s"${d.getClass.getSimpleName} on ${d.rdd}").mkString("\n")
+      assert(deps.count(_.rdd.isInstanceOf[MatrixOps.PlannedRows]) == 2,
+        s"$q must read both input plans, lineage:\n$lineage")
       // 4 cores and 4 (matmul_blocked) or 8 (matmul_large) blocks a side
-      // choose a 2x2x1 grid, so no second exchange sums partial blocks
-      val ex = kernel.children.flatMap(blockedExchanges)
-      assert(ex.size == 1 && (ex.head.outputPartitioning match {
-        case h: HashPartitioning => h.numPartitions == 4
-        case _ => false
-      }), s"$q must route blocks through one hash exchange of 4 cuboids, plan:\n$p")
-      assert(kernel.collect { case j: BaseJoinExec => j }.isEmpty,
-        s"$q must not join blocks, plan:\n$p")
-      assert(kernel.collect {
-        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
-      }.isEmpty, s"$q must not range-partition blocks, plan:\n$p")
+      // choose a 2x2x1 grid, so no second shuffle sums partial blocks
+      val shuffles = deps.collect { case s: ShuffleDependency[_, _, _] => s }
+      assert(shuffles.size == 1 && shuffles.head.partitioner.numPartitions == 4,
+        s"$q must route blocks through one shuffle of 4 cuboids, lineage:\n$lineage")
+      assert(!deps.exists(_.rdd.isInstanceOf[CoGroupedRDD[_]]),
+        s"$q must not join blocks, lineage:\n$lineage")
     }
   }
 
