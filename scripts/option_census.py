@@ -21,18 +21,27 @@ Also lists every defaulted parameter whose name never occurs in its
 `def`'s body (comments masked, string interpolations read): an option a
 caller can set that does nothing.
 
+Also lists every `def` under `operators/`, `functions/` and `streaming/`
+whose name occurs nowhere in `src/main`, `src/test` or `graftbench/src`
+outside its own definition and Scaladoc links (`[[...]]`): code nothing
+calls. Overrides and `apply`/`unapply` are called by name elsewhere
+(Spark, the compiler) and are skipped.
+
 Exits 1 when an option no caller varies is not on the keep list
-(`KEEP`: capacity bounds, which are deployment settings) or when an
-option is never read, else 0.
+(`KEEP`: capacity bounds, which are deployment settings), when an
+option is never read, or when a def is unreferenced and not on
+`KEEP_UNREFERENCED`, else 0.
 `--quiet` prints only the summary. The Scala compiler is the final
 census: it rejects any call that still passes a removed parameter.
 """
 import os
 import re
 import sys
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEF_DIRS = ["src/main/scala/graft/operators", "src/main/scala/graft/functions"]
+REF_DIRS = DEF_DIRS + ["src/main/scala/graft/streaming"]
 CALL_DIRS = ["src/main", "src/test", "graftbench/src"]
 
 # Capacity bounds: deployment settings a caller may need to raise, kept as
@@ -44,6 +53,12 @@ KEEP = {
     ("BloomJoin", "semiJoinBloom", "fpp"),
     ("Layout", "compactManifestLake", "staleLockMs"),
     ("Dedup", "saveComponentsAssignVersioned", "numFiles"),
+}
+
+# Defs kept although nothing references them, with the work that needs them.
+KEEP_UNREFERENCED = {
+    # postings compaction for appended BM25 indexes (ROADMAP #6)
+    ("TextOps", "compactLexicalIndex"),
 }
 
 OPEN = {"(": ")", "[": "]", "{": "}"}
@@ -296,6 +311,28 @@ def local_literal(m, src, pos, ident):
     return found
 
 
+def unreferenced(files, all_defs):
+    """(object, name, file:line) of each def under `REF_DIRS` whose name
+    occurs in no scanned file except at its own definition or inside a
+    Scaladoc link."""
+    uses = Counter()
+    for src, _ in files.values():
+        uses.update(re.findall(r"\w+", re.sub(r"\[\[[^\]]*\]\]", " ", src)))
+    found = []
+    for path, defs in all_defs.items():
+        if not any(path.startswith(os.path.join(ROOT, r)) for r in REF_DIRS):
+            continue
+        m = files[path][1]
+        for d in defs:
+            if d.name in ("apply", "unapply") or re.search(
+                    r"\boverride\s+(?:\w+\s+)*$", m[max(0, d.pos - 40):d.pos]):
+                continue
+            if uses[d.name] <= 1:  # the definition itself
+                found.append((d.obj, d.name,
+                              f"{os.path.relpath(path, ROOT)}:{m.count(chr(10), 0, d.pos) + 1}"))
+    return found
+
+
 def main(argv):
     quiet = "--quiet" in argv
     files = {}
@@ -465,7 +502,14 @@ def main(argv):
     for k in unread:
         obj, fn, p, rel = label[k]
         print(f"  UNREAD {obj}.{fn}.{p} = {default_of[k]}  ({rel})")
-    return 1 if bad or unread else 0
+    unref = unreferenced(files, all_defs)
+    dead = [u for u in unref if u[:2] not in KEEP_UNREFERENCED]
+    print(f"{len(unref)} operator/function/streaming defs referenced nowhere "
+          f"({len(unref) - len(dead)} kept, {len(dead)} not on the keep list)")
+    for obj, name, where in unref:
+        tag = "keep" if (obj, name) in KEEP_UNREFERENCED else "UNUSED"
+        print(f"  {tag:6s} {obj}.{name}  ({where})")
+    return 1 if bad or unread or dead else 0
 
 
 if __name__ == "__main__":

@@ -1304,29 +1304,13 @@ object Dedup {
     * r = K/bands rows; docs sharing any band hash become candidates;
     * estimated Jaccard = matching signature fraction. The band groupBy
     * is the LSH trick that keeps candidate generation linear-ish at
-    * scale (only same-bucket docs ever meet).
-    *
-    * Runs QUOTIENTED by distinct-token-bag class (see
-    * [[lshPairsQuotiented]]): the signature is a pure function of the
-    * doc's distinct token set (no lang term — unlike the Jaccard tiers,
-    * the sketch does not block by lang), so exact/bag-equal duplicates
-    * band once via their class representative instead of |class| times.
+    * scale (only same-bucket docs ever meet). Bands the raw corpus:
+    * banding one representative per exact class instead was slower on
+    * every corpus the repository builds but one, and chosen on none
+    * (docs/THROUGHPUT.md, "One LSH plan").
     */
   def minhashLshPairs(docs: DataFrame, bands: Int = 8): DataFrame =
-    lshPairsQuotiented(docs, bagKey,
-      reps => minhashSignatures(reps, NumHashes), NumHashes, bands)
-
-  /** Forced RAW / forced-quotient paths regardless of what the corpus
-    * would auto-select — the quotient-equivalence spec and the MinHash
-    * scale probe measure through these (the per-tier candidate-mass
-    * decomposition lives in MINHASH_PROBE_r07.json from the retired
-    * MinhashProbe main). */
-  private[graft] def minhashLshPairsRaw(docs: DataFrame): DataFrame =
-    lshPairsOfSigs(minhashSignatures(docs, NumHashes), NumHashes, 8)
-  private[graft] def minhashLshPairsForceQuotient(docs: DataFrame): DataFrame =
-    lshPairsQuotientedCore(docs,
-      docs.select(col("doc_id"), bagKey.as("class_fp")),
-      reps => minhashSignatures(reps, NumHashes), NumHashes, 8)
+    lshPairsOfSigs(minhashSignatures(docs, NumHashes), NumHashes, bands)
 
   /** Distinct 40-bit character-shingle ids of a text column — FNV
     * window hashes ([[graft.functions.NgramFnv]]) masked into the
@@ -1351,30 +1335,26 @@ object Dedup {
     * row's array), then the same band bucket-join as
     * [[minhashLshPairs]]. */
   def minhashShingleLshPairs(docs: DataFrame): DataFrame =
-    // quotient key = the raw text (the shingle set is order-SENSITIVE,
-    // so the token-bag key of the word tier would over-merge here;
-    // exact-text classes are where the dup mass lives anyway)
-    lshPairsQuotiented(docs, md5(col("text").cast("binary")),
-      shingleSigsOf(12, NumHashes), NumHashes, 4)
+    lshPairsOfSigs(shingleSignatures(docs), NumHashes, 4)
 
-  /** The shingle tier's signature builder (shared by the auto path and
-    * the probe hooks): spread the single-split scan before the per-char
-    * shingle hash + K-hash sketch (explicit count — AQE would coalesce
-    * on bytes). */
-  private def shingleSigsOf(n: Int, numHashes: Int): DataFrame => DataFrame =
-    reps => reps
-      .repartition(reps.sparkSession.sparkContext.defaultParallelism,
+  /** The shingle tier's signatures over 12-character shingles: spread
+    * the single-split scan before the per-char shingle hash + K-hash
+    * sketch (explicit count — AQE would coalesce on bytes). */
+  private def shingleSignatures(docs: DataFrame): DataFrame =
+    docs
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_id"))
-      .select(col("doc_id"), shingleIdsColumn(col("text"), n).as("tids"))
+      .select(col("doc_id"), shingleIdsColumn(col("text"), 12).as("tids"))
       .select(col("doc_id"),
-        minhashSigOfIds(col("tids"), numHashes).as("sig"))
+        minhashSigOfIds(col("tids"), NumHashes).as("sig"))
 
   // --------------------------------------------------------------------
   // Persisted LSH band index — the near-dup tier's lake index lifecycle
   // (the minhash sibling of Similarity.savePqIndex/appendToPqIndex)
   // --------------------------------------------------------------------
 
-  /** One (doc_id, band_fp, sig) row per signature band: `band_fp` =
+  /** One row per signature band of each `sigs` row (its columns kept,
+    * plus `band_fp`): `band_fp` =
     * md5 of `"band|v1,v2,…,vr"` over the band's r-long slice — a
     * SCALAR band key (arrays can't drive partition layout), engine-
     * reproducible in the oracle (same string, same md5). A true band
@@ -1382,13 +1362,15 @@ object Dedup {
     * tier's; an fp collision can only ADD a candidate, which the
     * exact `sig`-overlap verify then scores truthfully — and the
     * oracle replays the same fp construction, so even that behavior
-    * is bit-shared across engines. */
+    * is bit-shared across engines. The one spelling of the fp: the
+    * persisted index, its batch probes and the ingest stream's probes
+    * ([[graft.streaming.DocStream.lshIndexIngestStream]]) all call it. */
   private[graft] def lshBandFpRows(sigs: DataFrame, numHashes: Int,
                                    bands: Int): DataFrame = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
     val r = numHashes / bands
-    sigs.select(col("doc_id"), col("sig"),
+    sigs.select(col("*"),
       explode(array((0 until bands).map { b =>
         md5(concat(lit(s"$b|"),
           array_join(transform(slice(col("sig"), b * r + 1, r),
@@ -1766,129 +1748,6 @@ object Dedup {
       .agg(count(lit(1)).as("true_pairs"),
         sum(coalesce(col("hit"), lit(0L))).as("lsh_hits"))
       .withColumn("recall_milli", expr("lsh_hits * 1000 DIV true_pairs"))
-
-  /** LSH on the CLASS-QUOTIENT corpus — the [[containmentPairs]]
-    * exact-before-near collapse applied to signature banding. `classFp`
-    * must fingerprint exactly the signature's preimage (the distinct
-    * token bag for word MinHash, the raw text for shingle MinHash):
-    * then every member of a class has its representative's signature,
-    * so the rep-level band join reproduces the full corpus's candidate
-    * set and estimates exactly —
-    *
-    *   - cross-class member pairs inherit the rep pair's est_jaccard
-    *     verbatim (the estimate is a function of the two signatures);
-    *   - intra-class pairs have identical signatures: candidates via
-    *     every band, match_cnt = numHashes, est_jaccard exactly 1.0 —
-    *     emitted directly, zero banding or verify work.
-    *
-    * Without the quotient every member of an exact-dup class enters
-    * every band bucket separately and the candidate estimate work grows
-    * |class|² — on dup-heavy corpora (the 100 TB crawl case) that
-    * quadratic term dominates. Output is row-identical to banding the
-    * raw corpus (the oracle runs the unquotiented form).
-    *
-    * SHORT-CIRCUIT (purely physical — the two paths are row-identical
-    * by the rewrite above, so this is a plan choice, not a semantics
-    * one): the quotient trades a fixed wrap (class aggregation, a
-    * rep-subset join, two member-wise expand joins) for savings in the
-    * band bucket-join, whose work scales with the BUCKET CANDIDATE
-    * MASS Σ_buckets c(c−1)/2, of which the class collapse removes a
-    * ≈(1 − (nClasses/nDocs)²) fraction (every bucket shrinks by the
-    * collapse factor; the join term is quadratic in bucket size).
-    * Mean class size alone does NOT predict the crossover — the r7
-    * probes hold the collapse FIXED at 1.27 (sf0.1 word classes
-    * 3935/5000; ×3 replica 11805/15000) and flip the winner: sf0.1
-    * word tier (candMass 23.8M ≈ 4.8k/doc) raw and quotient are
-    * within noise of each other (1.6-2.5 s vs 1.4-3.3 s across runs),
-    * while the ×3-replica corpus (candMass 189M ≈ 12.6k/doc — near-dup
-    * copies collide in band buckets, no extra exact collapse) has the
-    * quotient clearly winning, 4.6 s vs 8.6 s (2× on a quiet host;
-    * same direction under load). What decides is how much quadratic
-    * join work there IS to save, so the rule measures it: estimated
-    * savings candMass·(1 − (nC/nD)²) per doc ≥ [[QuotientGainPerDoc]]
-    * engages the quotient — calibrated at the geometric midpoint of
-    * the two measured corpora (sf0.1 savings ≈ 1.8k/doc stays raw,
-    * replica ≈ 4.8k/doc engages; MINHASH_CANDMASS_r07.json carries
-    * both probe lines). All three sizing scalars are memoized
-    * per session ([[RelationStats]]), so bench repetitions pay only
-    * the selected path; the first invocation pays one extra
-    * signature projection for the bucket-count aggregation (row-local
-    * build, metadata-scale agg — never the pair join itself). */
-  private def lshPairsQuotiented(docs: DataFrame, classFp: Column,
-                                 sigsOf: DataFrame => DataFrame,
-                                 numHashes: Int, bands: Int): DataFrame = {
-    val keyed = docs.select(col("doc_id"), classFp.as("class_fp"))
-    val nDocs = RelationStats.memoCount(docs)
-    val nClasses = RelationStats.memoCount(keyed.select("class_fp").distinct())
-    if (nClasses >= nDocs) // no exact dups: zero collapse, zero savings
-      return lshPairsOfSigs(sigsOf(docs), numHashes, bands)
-    val candMass = RelationStats.memoScalar(
-      bandCandMass(sigsOf(docs), numHashes, bands))
-    if (quotientEngages(nDocs, nClasses, candMass))
-      lshPairsQuotientedCore(docs, keyed, sigsOf, numHashes, bands)
-    else lshPairsOfSigs(sigsOf(docs), numHashes, bands)
-  }
-
-  /** The auto-rule's pure decision function (spec-pinnable without
-    * running a corpus): engage the class quotient when the estimated
-    * saved bucket-join rows per document clear the calibrated
-    * threshold. */
-  private[graft] def quotientEngages(nDocs: Long, nClasses: Long,
-                                     candMass: Long): Boolean = {
-    if (nClasses >= nDocs) return false
-    val r = nClasses.toDouble / nDocs
-    candMass * (1.0 - r * r) >= QuotientGainPerDoc.toDouble * nDocs
-  }
-
-  /** Quotient crossover threshold: estimated saved bucket-join rows
-    * per document. Calibrated from MINHASH_CANDMASS_r07.json — the
-    * geometric midpoint √(1814 · 4802) ≈ 2950 of the two measured
-    * corpora (see [[lshPairsQuotiented]]'s Scaladoc). */
-  private[graft] val QuotientGainPerDoc = 2950L
-
-  /** Band-bucket candidate mass of a signature relation: Σ over band
-    * buckets of c(c−1)/2 — the number of same-bucket ordered pairs the
-    * banding self-join must touch (an upper bound on emitted
-    * candidates, counting multi-band duplicates). One row-local band
-    * explode + one hash aggregation over bucket keys: metadata-scale
-    * next to the join it predicts. Returns a 1-row relation for
-    * [[RelationStats.memoScalar]]. */
-  private def bandCandMass(sigs: DataFrame, numHashes: Int,
-                           bands: Int): DataFrame = {
-    val r = numHashes / bands
-    sigs.select(posexplode(array((0 until bands).map(b =>
-        slice(col("sig"), b * r + 1, r)): _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-      .groupBy("band", "band_hash").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(expr("(c * (c - 1)) div 2")), lit(0L))
-        .as("cand_mass"))
-  }
-
-  /** The engaged quotient path of [[lshPairsQuotiented]] (also the
-    * spec hook behind [[minhashLshPairsForceQuotient]] — the
-    * quotient ≡ raw equivalence is pinned there; the retired
-    * MinhashProbe's raw-vs-quotient timing lives in
-    * MINHASH_PROBE_r07.json). */
-  private[graft] def lshPairsQuotientedCore(docs: DataFrame, keyed: DataFrame,
-                                            sigsOf: DataFrame => DataFrame,
-                                            numHashes: Int, bands: Int): DataFrame = {
-    val (members, repDocs) = quotient(keyed, "class_fp", docs)
-    val repPairs = lshPairsOfSigs(sigsOf(repDocs), numHashes, bands)
-    // d1 < d2 holds for rep pairs but not member-wise: a member of the
-    // lower-rep class may outnumber one of the higher-rep class
-    val cross = repPairs
-      .join(members.select(col("rep").as("d1"), col("doc_id").as("a1")), "d1")
-      .join(members.select(col("rep").as("d2"), col("doc_id").as("a2")), "d2")
-      .select(least(col("a1"), col("a2")).as("d1"),
-        greatest(col("a1"), col("a2")).as("d2"), col("est_jaccard"))
-    val intra = members.as("x")
-      .join(members.as("y"),
-        col("x.class_fp") === col("y.class_fp") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-        lit(1.0).as("est_jaccard"))
-    cross.unionByName(intra)
-  }
 
   /** Band bucket-join + estimate over any `(doc_id, sig)` signature
     * relation (see [[minhashLshPairs]] for the algorithm notes). */

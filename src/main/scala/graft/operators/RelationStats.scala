@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session-lifetime memo of auto-sizing relation counts.
   *
-  * Several operators pick a physical strategy from a data-dependent
+  * Two operators pick a physical strategy from a data-dependent
   * scalar — the doc count behind tf·idf's auto build-shard count
-  * ([[TextOps.autoBuildShards]]), the LSH quotient short-circuit
-  * ([[Dedup.minhashLshPairs]]) — and that
+  * ([[TextOps.autoBuildShards]]) and the containment tier's
+  * brute/prefix verify choice (`Dedup.containmentBruteWins`) — and that
   * sizing action used to re-run on EVERY invocation: a bench loop
   * paid a fresh count job per repetition for a number that cannot
   * change within the session (sources are driver-generated immutable

@@ -19,8 +19,7 @@ private[graft] object TokenSetKernel {
     * to each other and indistinguishable to every lang-blocked tier. */
   def bagLangKey: Column = md5(concat_ws("\u0000", col("lang"), bagText))
 
-  /** Bag-class key without lang: the word-MinHash signature's preimage
-    * and the "same bag of words" fingerprint. */
+  /** Bag-class key without lang: the "same bag of words" fingerprint. */
   def bagKey: Column = md5(bagText)
 
   /** The class quotient of a keyed `(doc_id, key)` relation: `members`

@@ -259,9 +259,6 @@ object DocStream {
                            bands: Int = 4,
                            watermark: String = "1 hour"): DataFrame = {
     import graft.functions.VectorFunctions.{noNullElements, zipEqualCount}
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val r = numHashes / bands
     val idx = graft.operators.LakeMaintenance
       .readPartitionedString(spark, s"$path/bands", "fp_pfx")
       .select(col("band_fp"), col("doc_id").as("corpus_id"),
@@ -270,16 +267,12 @@ object DocStream {
     // and a micro-batch of all-novel docs must still advance event
     // time (they register at the source-side watermark node, then die
     // in the join — the fail-open arm can't stall finalization)
-    val banded = docs
+    val banded = Dedup.lshBandFpRows(docs
       .withWatermark("ts", watermark)
       .withColumn("tids", Dedup.tokenIdsColumn(col("text")))
-      .withColumn("sig", Dedup.minhashSigOfIds(col("tids"), numHashes))
-      .select(col("doc_id"), col("ts"), col("sig"),
-        explode(array((0 until bands).map { b =>
-          md5(concat(lit(s"$b|"),
-            array_join(transform(slice(col("sig"), b * r + 1, r),
-              x => x.cast("string")), ",")).cast("binary"))
-        }: _*)).as("band_fp"))
+      .select(col("doc_id"), col("ts"),
+        Dedup.minhashSigOfIds(col("tids"), numHashes).as("sig")),
+      numHashes, bands)
     banded.join(idx, "band_fp")
       .filter(zipEqualCount(noNullElements(col("sig")),
         noNullElements(col("csig"))) >= minMatches)

@@ -692,33 +692,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(prec.values.map(_._2).sum === byBand.values.map(_._2).sum)
   }
 
-  test("lsh quotient decision follows the calibrated candidate-mass rule") {
-    import graft.operators.RelationStats
-    RelationStats.reset()
-    // no exact dups → zero collapse → never engage, at any mass
-    assert(!Dedup.quotientEngages(1000, 1000, Long.MaxValue / 4))
-    // the two CALIBRATION corpora (MINHASH_CANDMASS_r07.json) must
-    // classify with margin: sf0.1 word tier stays raw, ×3 replica
-    // engages — both at the SAME 1.27 collapse, so the rule is
-    // provably keyed on candidate mass, not mean class size
-    assert(!Dedup.quotientEngages(5000, 3935, 23830706L))
-    assert(Dedup.quotientEngages(15000, 11805, 189186932L))
-    // toy corpora never clear a threshold of thousands of saved
-    // bucket-join rows per doc → the auto path bands raw (no quotient
-    // machinery in the plan), even when every doc has an exact copy
-    val dupy = docs.unionByName(
-      docs.withColumn("doc_id", col("doc_id") + lit(100L)))
-    val auto = Dedup.minhashLshPairs(dupy)
-    assert(!auto.queryExecution.analyzed.toString.contains("class_fp"),
-      "toy corpus must band raw under the per-doc mass threshold")
-    // the switch is purely physical: the forced quotient emits
-    // row-identically to raw banding on the same corpus
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(Dedup.minhashLshPairsForceQuotient(dupy)) ===
-      rows(Dedup.minhashLshPairsRaw(dupy)))
-  }
-
   test("connected components equal a union-find oracle on a seeded graph") {
     import spark.implicits._
     import graft.operators.Dedup

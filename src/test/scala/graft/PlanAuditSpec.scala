@@ -526,10 +526,6 @@ class PlanAuditSpec extends SparkSpec {
       "fuzzy_components" -> "a pin plus the components seed (Dedup.editDistanceComponents)",
       "dedup_incremental_fuzzy" -> "a localCheckpoint pin (Dedup.fuzzyMatchAgainstCorpus)",
       "dedup_containment" -> "bag-quotient pins and memoCount sizing (Dedup.bagQuotient, RelationStats)",
-      "dedup_minhash_lsh" -> "memoCount sizing (RelationStats)",
-      "dedup_recall_lsh" -> "memoCount sizing (RelationStats)",
-      "dedup_recall_shingle" -> "memoCount sizing (RelationStats)",
-      "dedup_minhash_shingle" -> "memoCount sizing (RelationStats)",
       "semdedup" -> "a localCheckpoint pin of the semantic tier (Similarity)",
       "semdedup_components" -> "the components seed (Dedup.seededComponents)",
       "pipeline_d4" -> "a localCheckpoint pin (Similarity.d4Funnel)",
